@@ -11,6 +11,8 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[4]")
+      // Bench's extension set: the rewrite-tier rows need their rules
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")

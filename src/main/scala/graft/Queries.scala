@@ -3337,6 +3337,9 @@ object ParityQueries {
     "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0")
 
   /** Run `body` with `confs` set, restoring the prior values after.
+    * The prior values come from `getAll` (explicitly set keys only):
+    * a key unset before the window is unset again after it, never
+    * pinned to its default.
     *
     * NOT concurrency-isolated: the confs mutate the SHARED session,
     * so any query planned on the same SparkSession during the window
@@ -3347,12 +3350,11 @@ object ParityQueries {
     */
   private[graft] def withConfs[T](
       s: SparkSession, confs: Seq[(String, String)])(body: => T): T = {
-    val saved = confs.map { case (k, _) => k -> s.conf.getOption(k) }
+    val saved = s.conf.getAll
     confs.foreach { case (k, v) => s.conf.set(k, v) }
     try body
-    finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
+    finally confs.foreach { case (k, _) =>
+      saved.get(k).fold(s.conf.unset(k))(s.conf.set(k, _))
     }
   }
 

@@ -16,9 +16,23 @@ object Dashboard {
 
   /** S5+S7: read the ETL sink back and cache before query fan-out
     * (app.py:28-33).
+    *
+    * A sink no larger than `spark.sql.autoBroadcastJoinThreshold` —
+    * Spark's own "small enough to handle whole in one task" bound —
+    * is cached as ONE partition. The cached scan then reports
+    * SinglePartition, which satisfies the clustered, ordered and
+    * all-tuples distributions the interactions need, so every
+    * interaction plans with no Exchange and runs as one one-task job
+    * instead of a shuffle round per widget. The size is the read's
+    * file-size estimate (no job). A larger sink, or a threshold of -1,
+    * keeps the scan's partitioning.
     */
-  def load(spark: SparkSession, path: String): DataFrame =
-    Sink.cached(Sink.readParquet(spark, path))
+  def load(spark: SparkSession, path: String): DataFrame = {
+    val df = Sink.readParquet(spark, path)
+    val small = df.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      spark.sessionState.conf.autoBroadcastJoinThreshold
+    Sink.cached(if (small) df.coalesce(1) else df)
+  }
 
   /** "Total Hospitals Analyzed" (app.py:47). */
   def totalHospitals(df: DataFrame): DataFrame =

@@ -10,12 +10,13 @@ import graft.ops._
   * join → load, in the reference's order
   * (reference etl_app/etl_script.py:49-168).
   *
-  * Everything is a lazy DataFrame chain: Catalyst fuses the whole
-  * pipeline into one job (scan → filter/project pushed into the CSV
-  * read → broadcast join → write), so unlike the eager pandas
-  * original there are no materialized intermediates. hospital_info is
-  * dimension-sized (~5k rows in the real dataset) and is broadcast;
-  * the readmissions fact side never shuffles.
+  * Everything is a lazy DataFrame chain that runs as two jobs: the
+  * broadcast build of hospital_info, then the write (scan →
+  * filter/project pushed into the CSV read → broadcast join → write),
+  * so unlike the eager pandas original there are no materialized
+  * intermediates. hospital_info is dimension-sized (~5k rows in the
+  * real dataset) and is broadcast; the readmissions fact side never
+  * shuffles.
   */
 object HeartFailureEtl {
 
@@ -101,7 +102,9 @@ object HeartFailureEtl {
   }
 
   /** Full pipeline: CSV extract (fail-fast on missing inputs, S3) →
-    * transform → overwrite load (S4).
+    * transform → overwrite load (S4). The returned frame reads the
+    * sink back with the schema just written: the same files from the
+    * same process, so no footer-inference job is needed.
     */
   def run(spark: SparkSession, readmissionsCsv: String, hospitalCsv: String,
       outPath: String): DataFrame = {
@@ -109,6 +112,6 @@ object HeartFailureEtl {
       Ingest.csvChecked(spark, readmissionsCsv, readmissionsSchema),
       Ingest.csvChecked(spark, hospitalCsv, hospitalInfoSchema))
     Sink.writeParquet(result, outPath)
-    Sink.readParquet(spark, outPath)
+    spark.read.schema(result.schema).parquet(outPath)
   }
 }

@@ -2,6 +2,10 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+
 import graft.pipeline.{Dashboard, HeartFailureEtl}
 
 /** Golden end-to-end test (SURVEY §5.2 item 3): miniature hospital
@@ -69,6 +73,15 @@ class PipelineSpec extends SparkSpec {
     assert(second.count() == 2)
   }
 
+  test("golden E2E: the ETL run starts exactly two jobs, broadcast build and write") {
+    val (readmCsv, hospCsv) = fixtures
+    val out = Files.createTempDirectory("graft_golden_jobs").resolve("hf").toString
+    val (jobs, result) = jobsStarted(HeartFailureEtl.run(spark, readmCsv, hospCsv, out))
+    assert(jobs == 2, "the sink read-back must not run a schema-inference job")
+    // the schema pinned on the read-back is the one the files carry
+    assert(result.schema == spark.read.parquet(out).schema)
+  }
+
   test("golden E2E: fully-filtered input yields an empty frame with intact schema") {
     val dir = Files.createTempDirectory("graft_golden_empty")
     val readm = writeCsv(dir, "readmissions.csv",
@@ -107,6 +120,59 @@ class PipelineSpec extends SparkSpec {
     } finally df.unpersist()
   }
 
+  test("dashboard over a small sink: one partition, no Exchange, one job per interaction") {
+    val (readmCsv, hospCsv) = fixtures
+    val out = Files.createTempDirectory("graft_golden_dash").resolve("hf").toString
+    HeartFailureEtl.run(spark, readmCsv, hospCsv, out)
+    val interactions: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "total" -> Dashboard.totalHospitals,
+      "avg" -> Dashboard.averageRatio,
+      "by_state" -> Dashboard.ratioByState,
+      "by_ownership" -> Dashboard.ratioByOwnership,
+      "top" -> (Dashboard.topHospitals(_, highest = true, 1)),
+      "bottom" -> (Dashboard.topHospitals(_, highest = false, 1)))
+    object Plans extends AdaptiveSparkPlanHelper
+    // per interaction: (shuffle Exchanges in the executed plan, jobs, rows)
+    def session(s: SparkSession): Map[String, (Int, Int, Seq[Row])] = {
+      val df = Dashboard.load(s, out)
+      try {
+        df.count() // the app's first render fills the cache
+        interactions.map { case (name, f) =>
+          val q = f(df)
+          val (jobs, rows) = jobsStarted(q.collect().toSeq)
+          val shuffles = Plans.collect(q.queryExecution.executedPlan) {
+            case e: ShuffleExchangeLike => e
+          }.size
+          name -> ((shuffles, jobs, rows))
+        }.toMap
+      } finally df.unpersist()
+    }
+    val single = session(spark)
+    for ((name, (shuffles, jobs, _)) <- single) {
+      assert(shuffles == 0, s"$name plans a shuffle over the one-partition cache")
+      assert(jobs == 1, s"$name ran $jobs jobs")
+    }
+    // with the threshold off, the cache keeps the scan's partitioning
+    // and the shuffled interactions keep their Exchanges
+    val unbounded = spark.newSession()
+    unbounded.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val partitioned = session(unbounded)
+    for (name <- Seq("total", "avg", "by_state", "by_ownership"))
+      assert(partitioned(name)._1 > 0, s"$name lost its Exchange with the threshold off")
+    // both paths give the same answers: counts, keys and top-N
+    // exactly, means within 1e-12
+    def cellsMatch(a: Any, b: Any): Boolean = (a, b) match {
+      case (x: Double, y: Double) => math.abs(x - y) <= 1e-12
+      case _ => a == b
+    }
+    for ((name, _) <- interactions) {
+      val (a, b) = (single(name)._3, partitioned(name)._3)
+      assert(a.size == b.size && a.zip(b).forall { case (r, t) =>
+        r.length == t.length && r.toSeq.zip(t.toSeq).forall((cellsMatch _).tupled)
+      }, s"$name: $a vs $b")
+    }
+  }
+
   test("observed pipeline: stage counts ride the write action, no extra jobs") {
     val (readmCsv, hospCsv) = fixtures
     val (result, probes) = HeartFailureEtl.transformObserved(
@@ -118,21 +184,13 @@ class PipelineSpec extends SparkSpec {
     // by the ONE write job above: 3 records survive coerce+dropna+
     // measure filter (010001, 050002, 070004); 070004 then drops in
     // the join (no hospital match) -> 2 final rows
-    var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    // reading the metrics must run NO job — the accumulators were
+    // filled by the write action
+    val (jobs, _) = jobsStarted {
       assert(probes.keySet == Set("hf_filtered", "final"))
       assert(probes("hf_filtered").get("n_rows") == 3L)
       assert(probes("final").get("n_rows") == 2L)
-      // reading the metrics must run NO job — the accumulators were
-      // filled by the write action (listener added after the write, so
-      // it only sees jobs started by the get() calls above)
-      Thread.sleep(300) // listener delivery is async
-      assert(jobs == 0, s"Observation.get triggered $jobs Spark job(s)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs == 0, s"Observation.get triggered $jobs Spark job(s)")
   }
 }

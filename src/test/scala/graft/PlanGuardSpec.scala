@@ -793,6 +793,20 @@ class PlanGuardSpec extends SparkSpec {
     assert(bottomJoinLeaves(cbo = true) == Set(ct, nt))
   }
 
+  test("withConfs restores the session conf exactly, also when the body throws") {
+    // a fresh session: no earlier window has set the CBO keys
+    val s = spark.newSession()
+    val before = s.conf.getAll
+    ParityQueries.withConfs(s, ParityQueries.j16Confs) {}
+    assert(s.conf.getAll == before)
+    // an explicitly set key gets its value back, an unset one is unset
+    val confs = ParityQueries.j16Confs :+ ("spark.sql.shuffle.partitions" -> "7")
+    intercept[IllegalStateException] {
+      ParityQueries.withConfs(s, confs) { throw new IllegalStateException("body failed") }
+    }
+    assert(s.conf.getAll == before)
+  }
+
   test("j15_join_size_profile: histogram-to-histogram join, never the join output") {
     val p = planOf("j15_join_size_profile")
     // both sides pre-reduce map-side (partial_count under each scan)

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,4 +24,23 @@ object TestSpark {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** `body`'s result and the number of Spark jobs started while it
+    * ran. The listener bus is drained on both sides, so no earlier
+    * job is counted and no job of `body` is missed.
+    */
+  def jobsStarted[T](body: => T): (Int, T) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      ListenerBusDrain(sc)
+      (jobs.get, r)
+    } finally sc.removeSparkListener(listener)
+  }
 }
