@@ -1,20 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import GraftSession.cpus
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // same extension set as Verify: j8_range_auto benches the
-      // RangeJoinRule-rewritten plan, not a nested-loop join
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     // Warm-up: a small scan+agg job absorbs JVM/codegen/parquet-footer
     // startup so it doesn't land on the alphabetically-first query
     // (r2 showed ~5s of warm-up attributed to a1_count).

@@ -1,23 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan of selected
   * registered queries so scan pruning (PushedFilters/ReadSchema),
   * join strategies (broadcast vs shuffle) and codegen coverage can be
   * reviewed against the 100 TB design intents documented per
-  * operator. Run: `sbt "runMain graft.PlanAudit [query ...]"`.
+  * operator, in Bench's session ([[GraftSession]]). Run:
+  * `sbt "runMain graft.PlanAudit [query ...]"`.
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      // Bench's extension set: the rewrite-tier rows need their rules
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.01"
     val names =

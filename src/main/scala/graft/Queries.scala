@@ -3526,17 +3526,19 @@ object ParityQueries {
   // scan. The oracle RUNS the join — values can only match because
   // the constraint actually holds, which is the soundness argument
   // made bit-exact. At 100 TB: the largest shuffle in the plan is
-  // deleted outright.
-  private val j18FkCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  def j18JoinElim(s: SparkSession, dir: String): DataFrame = {
-    j18FkCache.computeIfAbsent(dir, _ => {
+  // deleted outright. The registered FK is a standing artifact shared
+  // with j19 and j21.
+  private def ordersCustomerFk(s: SparkSession, dir: String): Unit = {
+    Sink.standing("orders_customer_fk", dir) { p =>
       graft.plans.FkCatalog.register(
-        s, s"orders_customer_fk_${math.abs(dir.hashCode)}",
+        s, Sink.artifactName(p),
         Tables.orders(s, dir), col("o_custkey"),
         Tables.customer(s, dir), col("c_custkey"))
-      "registered"
-    })
+    }
+    ()
+  }
+  def j18JoinElim(s: SparkSession, dir: String): DataFrame = {
+    ordersCustomerFk(s, dir)
     val out = Sink.scratchDir(s"join_elim_${math.abs(dir.hashCode)}")
     withConfs(s, Seq(graft.plans.JoinEliminationRule.EnabledKey -> "true")) {
       val q = Tables.orders(s, dir)
@@ -3570,23 +3572,14 @@ object ParityQueries {
   // real two-join chain, so green means the constraints actually
   // hold. At 100 TB the plan's two largest shuffles are deleted
   // outright — the dim chain costs zero whether it is 2 or 5 hops.
-  private val j21FkCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   def j21ChainElim(s: SparkSession, dir: String): DataFrame = {
-    j18FkCache.computeIfAbsent(dir, _ => {
+    ordersCustomerFk(s, dir)
+    Sink.standing("customer_nation_fk", dir) { p =>
       graft.plans.FkCatalog.register(
-        s, s"orders_customer_fk_${math.abs(dir.hashCode)}",
-        Tables.orders(s, dir), col("o_custkey"),
-        Tables.customer(s, dir), col("c_custkey"))
-      "registered"
-    })
-    j21FkCache.computeIfAbsent(dir, _ => {
-      graft.plans.FkCatalog.register(
-        s, s"customer_nation_fk_${math.abs(dir.hashCode)}",
+        s, Sink.artifactName(p),
         Tables.customer(s, dir), col("c_nationkey"),
         Tables.nation(s, dir), col("n_nationkey"))
-      "registered"
-    })
+    }
     val out = Sink.scratchDir(s"chain_elim_${math.abs(dir.hashCode)}")
     withConfs(s, Seq(graft.plans.JoinEliminationRule.EnabledKey -> "true")) {
       val q = Tables.orders(s, dir)
@@ -3806,12 +3799,7 @@ object ParityQueries {
   // observes; the law suite drives exactly that data shape). The
   // oracle runs the real LEFT JOIN.
   def j20LeftElim(s: SparkSession, dir: String): DataFrame = {
-    s45UqCache.computeIfAbsent(dir, _ => {
-      graft.plans.FkCatalog.registerUnique(
-        s, s"customer_pk_${math.abs(dir.hashCode)}",
-        Tables.customer(s, dir), col("c_custkey"))
-      "registered"
-    })
+    customerPk(s, dir)
     val out = Sink.scratchDir(s"left_elim_${math.abs(dir.hashCode)}")
     withConfs(s, Seq(graft.plans.JoinEliminationRule.EnabledKey -> "true")) {
       val q = Tables.orders(s, dir)
@@ -3843,12 +3831,7 @@ object ParityQueries {
   // count(DISTINCT), so the rewrite is sound only because uniqueness
   // actually holds.
   def s48CountDistinctElim(s: SparkSession, dir: String): DataFrame = {
-    s45UqCache.computeIfAbsent(dir, _ => {
-      graft.plans.FkCatalog.registerUnique(
-        s, s"customer_pk_${math.abs(dir.hashCode)}",
-        Tables.customer(s, dir), col("c_custkey"))
-      "registered"
-    })
+    customerPk(s, dir)
     val out = Sink.scratchDir(s"cd_elim_${math.abs(dir.hashCode)}")
     withConfs(s, Seq(graft.plans.JoinEliminationRule.EnabledKey -> "true")) {
       val q = Tables.customer(s, dir)
@@ -3885,13 +3868,7 @@ object ParityQueries {
   // 100 TB a BI-generated star query becomes an O(|rollup|) scan with
   // no human rewriting anything.
   def j19ElimThenMv(s: SparkSession, dir: String): DataFrame = {
-    j18FkCache.computeIfAbsent(dir, _ => {
-      graft.plans.FkCatalog.register(
-        s, s"orders_customer_fk_${math.abs(dir.hashCode)}",
-        Tables.orders(s, dir), col("o_custkey"),
-        Tables.customer(s, dir), col("c_custkey"))
-      "registered"
-    })
+    ordersCustomerFk(s, dir)
     s30MvDir(s, dir)
     val out = Sink.scratchDir(s"elim_mv_${math.abs(dir.hashCode)}")
     withConfs(s, Seq(
@@ -3941,18 +3918,14 @@ object ParityQueries {
   // custkeys); saturation at any scale flips exactOk and the gate row
   // fails STRUCTURALLY (require), never numerically.
   private val S50K = 4096
-  private val s50NdvCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def s50NdvDir(s: SparkSession, dir: String): String =
-    s50NdvCache.computeIfAbsent(dir, _ => {
-      val path = Sink.scratchDir(s"ndv_mv_${math.abs(dir.hashCode)}") + "/month_cust"
+    Sink.standing("ndv_mv", dir) { p =>
       graft.plans.NdvCatalog.create(
-        s, s"orders_month_custndv_${math.abs(dir.hashCode)}",
+        s, Sink.artifactName(p),
         Tables.orders(s, dir),
         Seq(date_trunc("MONTH", col("o_orderdate")) -> "month"),
-        col("o_custkey"), S50K, path)
-      path
-    })
+        col("o_custkey"), S50K, s"$p/month_cust")
+    }
 
   // ---- S51: NDV metastore round-trip -----------------------------------------
   // s43's survival story for the NDV tier: definitions die with the
@@ -4224,15 +4197,12 @@ object ParityQueries {
   // NULL-extension is why uniqueness alone is NOT enough (a nullable
   // unique key would let a real null-key group merge with outer-join
   // null-extended rows); the nonNull validation closes it.
-  private val s54PkCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   def s54FdPrune(s: SparkSession, dir: String): DataFrame = {
-    s54PkCache.computeIfAbsent(dir, _ => {
+    Sink.standing("customer_pknn", dir) { p =>
       graft.plans.FkCatalog.registerUnique(
-        s, s"customer_pknn_${math.abs(dir.hashCode)}",
+        s, Sink.artifactName(p),
         Tables.customer(s, dir), col("c_custkey"), validate = true, nonNull = true)
-      "registered"
-    })
+    }
     val out = Sink.scratchDir(s"fd_prune_${math.abs(dir.hashCode)}")
     withConfs(s, Seq(graft.plans.JoinEliminationRule.EnabledKey -> "true")) {
       val q = Tables.orders(s, dir)
@@ -4355,16 +4325,17 @@ object ParityQueries {
   // every output a grouped attribute or a first(attr) alias) to a
   // bare Project — the in-query require proves no Aggregate remains.
   // The oracle is the table itself: under uniqueness, dedup-by-key is
-  // the identity, which the bit-exact match proves.
-  private val s45UqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  def s45DistinctElim(s: SparkSession, dir: String): DataFrame = {
-    s45UqCache.computeIfAbsent(dir, _ => {
+  // the identity, which the bit-exact match proves. The registered key
+  // is a standing artifact shared with j20 and s48.
+  private def customerPk(s: SparkSession, dir: String): Unit = {
+    Sink.standing("customer_pk", dir) { p =>
       graft.plans.FkCatalog.registerUnique(
-        s, s"customer_pk_${math.abs(dir.hashCode)}",
-        Tables.customer(s, dir), col("c_custkey"))
-      "registered"
-    })
+        s, Sink.artifactName(p), Tables.customer(s, dir), col("c_custkey"))
+    }
+    ()
+  }
+  def s45DistinctElim(s: SparkSession, dir: String): DataFrame = {
+    customerPk(s, dir)
     val out = Sink.scratchDir(s"distinct_elim_${math.abs(dir.hashCode)}")
     withConfs(s, Seq(graft.plans.JoinEliminationRule.EnabledKey -> "true")) {
       val q = Tables.customer(s, dir)
@@ -4430,20 +4401,16 @@ object ParityQueries {
   // in-query require proves the OPTIMIZED plan reads only the MV
   // (the fact relation is gone). AVG needs no aggregate rewrite —
   // it derives after aggregation as two exact BIGINTs dividing,
-  // bit-identical in every engine. The MV artifact builds once per
-  // (JVM, sf-dir), the knn-graph lifecycle; refreshes would ride
-  // Materialize.refreshInto without re-registration (path identity).
+  // bit-identical in every engine. The MV is a standing artifact;
+  // refreshes would ride Materialize.refreshInto without
+  // re-registration (path identity).
   private val s30Cents = floor(col("o_totalprice") * 100).cast("long")
-  private val s30MvCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def s30MvDir(s: SparkSession, dir: String): String =
-    s30MvCache.computeIfAbsent(dir, _ => {
-      val path = Sink.scratchDir(s"mv_orders_${math.abs(dir.hashCode)}") + "/cust_cents"
+    Sink.standing("mv_orders", dir) { p =>
       graft.plans.MvCatalog.create(
-        s, s"orders_cust_cents_${math.abs(dir.hashCode)}",
-        Tables.orders(s, dir), col("o_custkey"), "o_custkey", s30Cents, path)
-      path
-    })
+        s, Sink.artifactName(p),
+        Tables.orders(s, dir), col("o_custkey"), "o_custkey", s30Cents, s"$p/cust_cents")
+    }
 
   private[graft] def s30UserQuery(s: SparkSession, dir: String): DataFrame =
     Tables.orders(s, dir)
@@ -4496,11 +4463,9 @@ object ParityQueries {
   // the rewrite. A distinct key from s30's custkey MV keeps the two
   // registered MVs unambiguous on the shared fact scan.
   private val s31Day = date_trunc("DAY", col("o_orderdate"))
-  private val s31MvCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def s31MvDir(s: SparkSession, dir: String): String =
-    s31MvCache.computeIfAbsent(dir, _ => {
-      val stored = Sink.scratchDir(s"mv_daily_${math.abs(dir.hashCode)}") + "/daily"
+    Sink.standing("mv_daily", dir) { p =>
+      val stored = s"$p/daily"
       val facts = Tables.orders(s, dir).select(
         s31Day.as("day"), s30Cents.as("m"))
       val cut = lit(S19Cutoff).cast("timestamp")
@@ -4509,10 +4474,9 @@ object ParityQueries {
       Materialize.refreshInto(s, stored,
         Materialize.rollup(facts.filter(col("day") >= cut), "day", col("m")), "day")
       graft.plans.MvCatalog.register(
-        s, s"orders_daily_cents_${math.abs(dir.hashCode)}",
+        s, Sink.artifactName(p),
         Tables.orders(s, dir), s31Day, "day", s30Cents, stored)
-      stored
-    })
+    }
 
   def s31MvRefresh(s: SparkSession, dir: String): DataFrame = {
     s31MvDir(s, dir)
@@ -4554,17 +4518,13 @@ object ParityQueries {
   // deterministic against s31's registered day-keyed MV on the same
   // fact scan: that MV cannot answer a custkey filter, so the rule
   // must prove and pick the tuple-keyed one.
-  private val s33MvCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def s33MvDir(s: SparkSession, dir: String): String =
-    s33MvCache.computeIfAbsent(dir, _ => {
-      val path = Sink.scratchDir(s"mv_daycust_${math.abs(dir.hashCode)}") + "/day_cust"
+    Sink.standing("mv_daycust", dir) { p =>
       graft.plans.MvCatalog.create(
-        s, s"orders_day_cust_${math.abs(dir.hashCode)}",
+        s, Sink.artifactName(p),
         Tables.orders(s, dir),
-        Seq(s31Day -> "day", col("o_custkey") -> "o_custkey"), s30Cents, path)
-      path
-    })
+        Seq(s31Day -> "day", col("o_custkey") -> "o_custkey"), s30Cents, s"$p/day_cust")
+    }
 
   def s33MvMultikey(s: SparkSession, dir: String): DataFrame = {
     s33MvDir(s, dir)
@@ -4833,18 +4793,14 @@ object ParityQueries {
   // fact's history is never rescanned and the dim is joined only
   // against the delta. Oracle: the full join aggregate, so
   // maintained ≡ rebuilt or the row flips.
-  private val s37MvCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def s37MvDir(s: SparkSession, dir: String): String =
-    s37MvCache.computeIfAbsent(dir, _ => {
-      val path = Sink.scratchDir(s"mv_joined_${math.abs(dir.hashCode)}") + "/nation_cents"
+    Sink.standing("mv_joined", dir) { p =>
       graft.plans.MvCatalog.createJoined(
-        s, s"orders_cust_nation_${math.abs(dir.hashCode)}",
+        s, Sink.artifactName(p),
         Tables.orders(s, dir), Tables.customer(s, dir),
         col("o_custkey"), col("c_custkey"),
-        Seq(col("c_nationkey") -> "c_nationkey"), s30Cents, path)
-      path
-    })
+        Seq(col("c_nationkey") -> "c_nationkey"), s30Cents, s"$p/nation_cents")
+    }
 
   def s37MvJoin(s: SparkSession, dir: String): DataFrame = {
     s37MvDir(s, dir)
@@ -4878,11 +4834,9 @@ object ParityQueries {
       |FROM orders JOIN customer ON o_custkey = c_custkey
       |GROUP BY 1""".stripMargin
 
-  private val s38MvCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def s38MvDir(s: SparkSession, dir: String): String =
-    s38MvCache.computeIfAbsent(dir, _ => {
-      val stored = Sink.scratchDir(s"mv_joinedref_${math.abs(dir.hashCode)}") + "/nation_cents"
+    Sink.standing("mv_joinedref", dir) { p =>
+      val stored = s"$p/nation_cents"
       val cut = lit(S19Cutoff).cast("timestamp")
       val dim = Tables.customer(s, dir)
       def slice(pred: Column) = Tables.orders(s, dir).filter(pred)
@@ -4894,12 +4848,11 @@ object ParityQueries {
         Materialize.rollup(slice(col("o_orderdate") >= cut), "c_mktsegment", col("m")),
         "c_mktsegment")
       graft.plans.MvCatalog.registerJoined(
-        s, s"orders_cust_nation_ref_${math.abs(dir.hashCode)}",
+        s, Sink.artifactName(p),
         Tables.orders(s, dir), dim,
         col("o_custkey"), col("c_custkey"),
         Seq(col("c_mktsegment") -> "c_mktsegment"), s30Cents, stored)
-      stored
-    })
+    }
 
   def s38MvJoinRefresh(s: SparkSession, dir: String): DataFrame = {
     s38MvDir(s, dir)

@@ -1,21 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke runner mirroring the driver's t1 check: run
   * `SparkEntry.entry` on sf0.001 and print the row count.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

@@ -68,10 +68,11 @@ object StreamQueries {
     */
   private val SentinelRounds = 1
 
-  /** The events slice every event-sourced gate query streams from,
-    * staged ONCE per (JVM, sfDir) and shared: r11's bench showed each
-    * of the 6 event-sourced streaming queries paying its own staging
-    * write of the same table (a fixed ~1-2 s × 6 inside the 64.5 s
+  private[graft] val eventCols = Seq("event_id", "ts", "user_id", "event_type", "value")
+  /** The events slice every event-sourced gate query streams from, a
+    * standing artifact: r11's bench showed each of the 6
+    * event-sourced streaming queries paying its own staging write of
+    * the same table (a fixed ~1-2 s × 6 inside the 64.5 s
     * tier). Queries now project/filter IN-STREAM (a stateless select
     * before the watermark — plan-identical state shapes) instead of
     * staging per-query slices.
@@ -87,17 +88,11 @@ object StreamQueries {
     * initial one (0), so every real row is admitted before any
     * sentinel takes effect.
     */
-  private val stageCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] val eventCols = Seq("event_id", "ts", "user_id", "event_type", "value")
-  private def sharedEventsStage(s: SparkSession, dir: String): String = {
-    val tag = "evshare_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-    stageCache.computeIfAbsent(dir, _ => {
-      val p = Sink.scratchDir(tag)
+  private def sharedEventsStage(s: SparkSession, dir: String): String =
+    Sink.standing("evshare", dir) { p =>
       Tables.events(s, dir).select(eventCols.map(col): _*)
         .write.mode("overwrite").parquet(p)
-      p
-    })
-  }
+    }
   private def eventsStageSchema(s: SparkSession, dir: String) =
     Tables.events(s, dir).select(eventCols.map(col): _*).schema
 
@@ -835,8 +830,8 @@ object StreamQueries {
   // verbatim. No state, no watermark, no shuffle.
   def e7RankStream(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select(col("doc_id"))
-    // standing keep-rate artifact (r21): built once per (JVM, sf-dir)
-    // from the frozen rank, probed here — see ExtQueries.hostKeepRatesDir
+    // the standing keep-rate artifact (r21), probed here — see
+    // ExtQueries.hostKeepRatesDir
     val rates = s.read.parquet(s"${ExtQueries.hostKeepRatesDir(s, dir)}/rates")
     val in = fresh("e7rs_in"); val out = fresh("e7rs_out"); val ck = fresh("e7rs_ck")
     docs.coalesce(2).write.mode("overwrite").parquet(in)

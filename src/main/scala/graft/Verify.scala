@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,22 +9,7 @@ object Verify {
     // iteration on a subset (the driver always runs the full set)
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
     def selected(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // the engine's extension (native SQL functions + RangeJoinRule):
-      // j8_range_auto is a bare theta-join that RELIES on the
-      // optimizer rule for its plan, so the rule runs — and is
-      // oracle-checked — on every driver round
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet stores TIMESTAMP(NANOS); Spark only reads it as
-      // a long under this flag (Tables.events converts back).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     new java.io.File(outDir).mkdirs()
     // streaming queries persist per-batch sink forensics here (batch
     // ids / row counts / id stats) so a red driver row is diagnosable;

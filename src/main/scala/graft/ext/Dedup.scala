@@ -144,8 +144,6 @@ object Dedup {
     // while it fits (near-dup graphs are sparse — active vertices ≤
     // 2·|pairs| no matter the corpus size), shuffle join beyond.
     val broadcastLabels = activeCount < 1000000L
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] init done n=$activeCount ${System.nanoTime()}")
     var iter = 0
     var converged = false
     // Scope the loop's execution config to the ACTIVE SUBGRAPH, not
@@ -174,8 +172,6 @@ object Dedup {
         prevSum = nextSum
         labels = next
         iter += 1
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          System.err.println(s"[cc] iter $iter converged=$converged ${System.nanoTime()}")
       }
     } finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)

@@ -62,14 +62,6 @@ object MinHash {
           i => array_join(slice(tkv, i, lit(n)), " ")))
     }
 
-  /** Per-shingle hash values reduced mod P (md5 computed ONCE per
-    * shingle; the H permutations below reuse these). String-shingle
-    * variant — see [[shingleHashesFromTokens]] for the production
-    * path that skips string materialization entirely.
-    */
-  def shingleHashes(sh: Column): Column =
-    transform(sh, s => TextOps.md5Int32(s) % P)
-
   /** Position-mix constants for string-free shingle hashing
     * (mixConst(j) weights the j-th token of the window so "a b" and
     * "b a" hash differently). All < P, so products stay < 2^60.

@@ -32,20 +32,11 @@ object Similarity {
     * element. Implemented as a native codegen'd Expression
     * ([[graft.functions.FloatDotProduct]]): Catalyst lambda functions
     * evaluate interpreted per element, which dominates runtime at
-    * 64 dims × millions of candidate pairs. [[dotHof]] is the
-    * built-in-only formulation with identical (bit-exact) semantics.
+    * 64 dims × millions of candidate pairs.
     */
   def dot(a: Column, b: Column): Column =
     ColumnBridge.column(FloatDotProduct(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** Higher-order-function dot product — same fold, same result, no
-    * custom expression; kept as the portable reference formulation.
-    */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
 
   /** Squared L2 norm (same fold as [[dot]] with a=b). */
   def norm2(a: Column): Column = dot(a, a)

@@ -42,16 +42,6 @@ object Ingest {
       .schema(schema)
       .csv(path)
 
-  /** S1/S2 variant matching the reference's inferred-with-overrides
-    * mode for ad-hoc reads; not for production paths (extra pass).
-    */
-  def csvInferred(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .option("header", "true")
-      .option("encoding", "UTF-8")
-      .option("inferSchema", "true")
-      .csv(path)
-
   /** S3: missing-file handling. The reference catches
     * `FileNotFoundError`, logs, and exits (etl_script.py:43-57); we
     * surface Spark's `AnalysisException` with a clear message and let

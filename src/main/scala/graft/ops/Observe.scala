@@ -31,19 +31,4 @@ object Observe {
     val obs = Observation(name)
     (df.observe(obs, count(lit(1)).as("n_rows")), obs)
   }
-
-  /** Row count plus per-column null counts and min/max range — the
-    * dropna/coercion audit a production intake logs per stage (which
-    * rows did the cast kill?), again for free on the action's pass.
-    */
-  def stageProfile(
-      df: DataFrame, name: String, cols: Seq[String]): (DataFrame, Observation) = {
-    val obs = Observation(name)
-    val aggs = count(lit(1)).as("n_rows") +:
-      cols.flatMap(c => Seq(
-        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"n_null_$c"),
-        min(col(c)).as(s"min_$c"),
-        max(col(c)).as(s"max_$c")))
-    (df.observe(obs, aggs.head, aggs.tail: _*), obs)
-  }
 }

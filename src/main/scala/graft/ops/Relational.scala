@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Projection / filter / join operators (SURVEY §2.2 P4–P6, §2.3 J1).
@@ -52,10 +52,6 @@ object Relational {
     val r = if (broadcastRight) broadcast(right) else right
     left.join(r, keys, "inner")
   }
-
-  /** General join with an arbitrary condition (used by extensions). */
-  def joinOn(left: DataFrame, right: DataFrame, cond: Column, how: String): DataFrame =
-    left.join(right, cond, how)
 
   /** Key-join with explicit type: left/right/full outer, left_semi,
     * left_anti — the full relational join surface beyond the

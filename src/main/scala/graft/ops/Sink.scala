@@ -158,14 +158,59 @@ object Sink {
   }
 
   /** Collision-proof scratch tag for a path-keyed artifact: md5 hex
-    * of the full path bytes. `math.abs(path.hashCode)` tags (the old
-    * scheme) can collide across two dirs in one JVM and silently
-    * cross-serve artifacts keyed by them.
+    * of the full path bytes. `math.abs(path.hashCode)` tags can
+    * collide across two dirs in one JVM (`"Aa".hashCode ==
+    * "BB".hashCode`) and silently cross-serve artifacts keyed by them.
     */
   def pathTag(path: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(path.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .map("%02x".format(_)).mkString
+
+  /** The standing-artifact lifecycle: the artifact `name` derived
+    * from the sf dir `dir` (a saved index, a rollup, a catalog
+    * registration) that every later query probes instead of
+    * rebuilding.
+    *
+    *  - Built ONCE per (JVM, name, dir): concurrent first touches run
+    *    `build` exactly once; the others wait for it and share the
+    *    result.
+    *  - SNAPSHOT-FROZEN: the artifact reflects `dir` as of first
+    *    touch; a dir rewritten later in the same JVM keeps serving the
+    *    old artifact (growth is an explicit append, never a silent
+    *    rebuild).
+    *  - Placed at `scratchDir(s"${name}_${pathTag(dir)}")`, an md5 tag
+    *    of the full dir, so two dirs never share an artifact. The
+    *    path is passed to `build` and returned; a catalog entry is
+    *    registered under the same tag ([[artifactName]]).
+    *  - A build that throws is not remembered: the next call rebuilds.
+    *
+    * Builds may nest (an artifact derived from another calls
+    * `standing` inside its build), so a build runs under its own
+    * per-artifact lock, never inside the registry map's update.
+    */
+  def standing(name: String, dir: String)(build: String => Unit): String = {
+    val path = scratchDir(s"${name}_${pathTag(dir)}")
+    standingBuilds.computeIfAbsent((name, dir), _ => new BuildOnce).run(build(path))
+    path
+  }
+
+  /** The catalog name of the standing artifact at `path`: its tag
+    * `${name}_${pathTag(dir)}`. Catalogs pick among equal-cost
+    * entries by name, so the name carries no per-JVM part.
+    */
+  def artifactName(path: String): String =
+    new java.io.File(path).getName.stripPrefix("graft_").stripSuffix(scratchSuffix)
+
+  private final class BuildOnce {
+    private var built = false
+    def run(build: => Unit): Unit = synchronized {
+      if (!built) { build; built = true }
+    }
+  }
+
+  private val standingBuilds =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), BuildOnce]()
 
   /** Per-JVM random token appended to every scratch path. PID alone
     * is NOT collision-free across runs: Linux defaults pid_max to
@@ -182,6 +227,8 @@ object Sink {
   private val jvmToken: String =
     java.util.UUID.randomUUID().toString.substring(0, 8)
 
+  private val scratchSuffix = s"_${ProcessHandle.current.pid}_$jvmToken"
+
   /** PID+token-qualified scratch directory for round-trip queries:
     * concurrent runners (Bench + Verify over the same sf dir) write to
     * distinct paths, and a JVM shutdown hook deletes each dir so
@@ -190,8 +237,7 @@ object Sink {
     * hard kill, pre-token) is removed eagerly on first issue.
     */
   def scratchDir(tag: String): String = {
-    val path =
-      s"${sys.props("java.io.tmpdir")}/graft_${tag}_${ProcessHandle.current.pid}_$jvmToken"
+    val path = s"${sys.props("java.io.tmpdir")}/graft_$tag$scratchSuffix"
     if (scratchRegistered.putIfAbsent(path, java.lang.Boolean.TRUE) == null) {
       deleteRecursively(new java.io.File(path))
       sys.addShutdownHook(deleteRecursively(new java.io.File(path)))
