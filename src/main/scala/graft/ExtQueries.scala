@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ext._
 import graft.ops.{Ranking, Sink}
+import graft.streaming.StreamDrive
 
 /** Extension query registry (SURVEY §2.8 E1–E5): LLM-data-pipeline
   * operators over the `documents` / `embeddings` testdata, each with
@@ -1249,21 +1250,14 @@ object ExtQueries {
   // occur in-harness; a deployment makes the append idempotent with
   // the writeBatchIdempotent partition-overwrite recipe.
   def e3IvfStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.OutputMode
     val emb = Tables.embeddings(s, dir)
     val ix = annScratch("ivfstr")
     AnnIndex.writeIvf(emb.filter(col("vec_id") % 7 =!= 3), KmK, KmIters, ix)
     val delta = emb.filter(col("vec_id") % 7 === 3)
-    val in = annScratch("ivfstr_in"); val ck = annScratch("ivfstr_ck")
-    delta.write.mode("overwrite").parquet(in)
-    val q = s.readStream.schema(delta.schema).parquet(in)
-      .writeStream
-      .foreachBatch((b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        AnnIndex.appendIvf(b, ix))
-      .option("checkpointLocation", ck)
-      .outputMode(OutputMode.Append)
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    StreamDrive.run(s, "e3_ivf_stream",
+        StreamDrive.staged(delta, annScratch("ivfstr_in")))(identity) {
+      (b, _) => AnnIndex.appendIvf(b, ix)
+    }
     AnnIndex.probeIvf(emb.filter(col("vec_id") < AnnQueries), ix, AnnK)
       .select(col("query_id"), col("vec_id"), col("cos_sim"), col("rk"))
   }
@@ -4895,12 +4889,9 @@ object ExtQueries {
     "e5_lid_saved" -> (e5LidSaved _),
     "e3_sq8_incremental" -> (e3Sq8Incremental _),
     "e3_pq_incremental" -> (e3PqIncremental _),
-    // runs under the streaming tier's 8-partition state window
-    // (StreamQueries.tuned rationale: commit fan-out ∝ stores)
+    // runs under the drives' state-partition window
     "e3_ivf_stream" -> ((s: SparkSession, d: String) =>
-      ParityQueries.withConfs(s, Seq("spark.sql.shuffle.partitions" -> "8")) {
-        e3IvfStream(s, d)
-      }),
+      StreamDrive.window(s)(e3IvfStream(s, d))),
     "e2_containment" -> (e2Containment _),
     "e2_knn_communities" -> (e2KnnCommunities _),
     "e3_kcenter" -> (e3Kcenter _),

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One SparkSession for the whole forked test JVM (suites share it;
@@ -42,5 +43,27 @@ abstract class SparkSpec extends AnyFunSuite {
       ListenerBusDrain(sc)
       (jobs.get, r)
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** `body`'s result and the number of streaming micro-batches it ran:
+    * distinct (run, batchId) progress events, with the listener bus
+    * drained on both sides as in [[jobsStarted]].
+    */
+  def microBatches[T](body: => T): (Int, T) = {
+    val sc = spark.sparkContext
+    val batches = java.util.concurrent.ConcurrentHashMap.newKeySet[(java.util.UUID, Long)]()
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        { batches.add((e.progress.runId, e.progress.batchId)); () }
+      def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    ListenerBusDrain(sc)
+    spark.streams.addListener(listener)
+    try {
+      val r = body
+      ListenerBusDrain(sc)
+      (batches.size, r)
+    } finally spark.streams.removeListener(listener)
   }
 }
