@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import GraftSession.cpus
 object Bench {
@@ -64,13 +65,30 @@ object Bench {
     // plan regression still slows both samples. Raw per-pass times and
     // wall-clock start timestamps are emitted for after-the-fact
     // correlation with external box load.
-    def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+    // Spark jobs per row and pass. A row's jobs carry its name in the
+    // local property `graft.query` (and its pass in `graft.pass`);
+    // threads the row starts inherit both. Not the job group:
+    // Jobs.runConcurrently sets its own on its pool threads.
+    val sc = spark.sparkContext
+    val jobCounts = new java.util.concurrent.ConcurrentHashMap[(String, String), Integer]
+    sc.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          Option(p.getProperty("graft.query")).foreach { q =>
+            jobCounts.merge((q, p.getProperty("graft.pass")), 1, (a: Integer, b: Integer) => a + b)
+          }
+        }
+    })
+    def timeOne(name: String, pass: Int, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Option[String], Long) = {
       val startMs = System.currentTimeMillis()
+      sc.setLocalProperty("graft.query", name)
+      sc.setLocalProperty("graft.pass", pass.toString)
       val t0 = System.nanoTime()
       val err: Option[String] =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
         catch { case e: Throwable => Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}") }
+        finally { sc.setLocalProperty("graft.query", null); sc.setLocalProperty("graft.pass", null) }
       val t = (System.nanoTime() - t0) / 1e9
       // Inter-query hygiene (r4: the j*/f* family ran 3.7-6.1x slower in the
       // full suite than isolated — identical plans, so the cost was leaked
@@ -93,12 +111,12 @@ object Bench {
       Thread.sleep(100)
       (t, err, startMs)
     }
-    def runPass(): Seq[(String, Double, Option[String], Long)] =
+    def runPass(pass: Int): Seq[(String, Double, Option[String], Long)] =
       ordered.map { case (name, fn) =>
-        val (t, err, s0) = timeOne(fn); (name, t, err, s0)
+        val (t, err, s0) = timeOne(name, pass, fn); (name, t, err, s0)
       }
-    val pass1 = runPass()
-    val pass2 = runPass()
+    val pass1 = runPass(1)
+    val pass2 = runPass(2)
     val results = pass1.zip(pass2).map { case ((name, t1, e1, s1), (_, t2, e2, s2)) =>
       // min over SUCCESSFUL runs only (r9 ADVICE): an errored run's
       // elapsed is a fast-failure time, not a measurement — never let it
@@ -153,8 +171,15 @@ object Bench {
     val tailFields =
       s""""prewarm_sec":$pw,"errors":$errs,"cpus":$cpus,"parallelism":${spark.sparkContext.defaultParallelism},"n_queries":${results.size},"n_errors":${results.count(_._3.isDefined)},"value":$total}"""
     val head = s"""{"metric":"total","unit":"sec","sf":"$sfDir","timing":"min_of_2_interleaved","""
-    val line = head + s""""runs":$runs,"start_ms":$starts,"queries":$qs,""" + tailFields
     println(head + s""""queries":$qs,""" + tailFields)
+    // stopping drains the listener bus, so every row's job count is in
+    spark.stop()
+    // jobs per row as [pass 1, pass 2], beside the seconds (file only)
+    def jobsOf(k: String, pass: Int): Int =
+      Option(jobCounts.get((k, pass.toString))).fold(0)(_.intValue)
+    val jobs = results.map { case (k, _, _, _, _, _) => jstr(k) + s":[${jobsOf(k, 1)},${jobsOf(k, 2)}]" }
+      .mkString("{", ",", "}")
+    val line = head + s""""runs":$runs,"start_ms":$starts,"queries":$qs,"jobs":$jobs,""" + tailFields
     // Full-suite runs at the default SF archive to BENCH_full.json —
     // the baseline future rounds diff against. Anything else must
     // NEVER clobber it (r7 ADVICE: a 46-query isolation run overwrote
@@ -169,6 +194,5 @@ object Bench {
         else s"BENCH_full_$sfName.json")
       java.nio.file.Files.write(p, line.getBytes("UTF-8"))
     } catch { case scala.util.control.NonFatal(_) => () }
-    spark.stop()
   }
 }

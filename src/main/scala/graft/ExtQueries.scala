@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ext._
-import graft.ops.{Ranking, Sink}
+import graft.ops.{Ingest, Ranking, Sink}
 import graft.streaming.StreamDrive
 
 /** Extension query registry (SURVEY §2.8 E1–E5): LLM-data-pipeline
@@ -2196,7 +2196,7 @@ object ExtQueries {
     }
 
   def e5LidModel(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${lidPredsDir(s, dir)}/preds")
+    Ingest.parquet(s, s"${lidPredsDir(s, dir)}/preds")
 
   /** The trainable core of e5_lid_model over any (doc_id, lang, text)
     * frame — exposed for law tests on corpora with real language
@@ -2315,7 +2315,7 @@ object ExtQueries {
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ix = annScratch("lid")
     lidProfilesFromDt(dt).write.mode("overwrite").parquet(s"$ix/profiles")
-    lidScoreDt(dt, s.read.parquet(s"$ix/profiles"))
+    lidScoreDt(dt, Ingest.parquet(s, s"$ix/profiles"))
   }
   val e5rSql: String =
     s"""WITH tris AS (SELECT doc_id, lang, unnest([substr(p, i, 3) for i in range(1, greatest(len(p) - 2, 0) + 1)]) AS tri
@@ -2571,7 +2571,7 @@ object ExtQueries {
   // replays the full produce-then-consume composition: the e2hr rank
   // chain as a CTE, joined to each doc's canonical authority.
   def e6HostQuality(s: SparkSession, dir: String): DataFrame = {
-    val rank = s.read.parquet(s"${hostRankDir(s, dir)}/rank")
+    val rank = Ingest.parquet(s, s"${hostRankDir(s, dir)}/rank")
     Tables.documents(s, dir)
       .select(col("doc_id"),
         TextOps.urlHost(TextOps.canonicalizeUrl(TextOps.urlWrap(col("doc_id"))))
@@ -2613,7 +2613,7 @@ object ExtQueries {
     // derives from the STANDING rank (below) — parquet round-trips the
     // (string, double) rank rows bit-exactly, so the rates are
     // bit-identical to deriving from an in-query rank build
-    val rank = s.read.parquet(s"${hostRankDir(s, dir)}/rank")
+    val rank = Ingest.parquet(s, s"${hostRankDir(s, dir)}/rank")
     rank
       .crossJoin(broadcast(rank.agg(max(col("pr")).as("pr_max"))))
       .select(col("host").as("src_host"),
@@ -2648,7 +2648,7 @@ object ExtQueries {
     }
 
   def e7RankWeighted(s: SparkSession, dir: String): DataFrame = {
-    val rates = s.read.parquet(s"${hostKeepRatesDir(s, dir)}/rates")
+    val rates = Ingest.parquet(s, s"${hostKeepRatesDir(s, dir)}/rates")
     Tables.documents(s, dir)
       .select(col("doc_id"),
         TextOps.urlHost(TextOps.canonicalizeUrl(TextOps.urlWrap(col("doc_id"))))

@@ -2090,7 +2090,7 @@ object ParityQueries {
     val stored = Sink.scratchDir("s19_rollup") + "/daily"
     Materialize.rollup(facts.filter(col("day") < cut), "day", col("cents"))
       .write.mode("overwrite").parquet(stored)
-    val base = s.read.parquet(stored)
+    val base = Ingest.parquet(s, stored)
     val delta = Materialize.rollup(facts.filter(col("day") >= cut), "day", col("cents"))
     Materialize.merge(base, delta, "day")
   }
@@ -2125,7 +2125,7 @@ object ParityQueries {
     val delta = Materialize.ndvSketch(
       facts.filter(col("month") >= cut), "month", "o_custkey", S21K)
     Materialize.ndvEstimate(
-      Materialize.mergeNdv(s.read.parquet(stored), delta, "month", S21K),
+      Materialize.mergeNdv(Ingest.parquet(s, stored), delta, "month", S21K),
       "month", S21K)
   }
   val s21Sql =
@@ -2171,7 +2171,7 @@ object ParityQueries {
     val delta = Materialize.quantileSketch(
       facts.filter(col("month") >= cut), "month", "o_orderkey", "cents", S32K)
     Materialize.quantileEstimate(
-      Materialize.mergeQuantile(s.read.parquet(stored), delta, "month", S32K),
+      Materialize.mergeQuantile(Ingest.parquet(s, stored), delta, "month", S32K),
       "month")
   }
   val s32Sql =
@@ -2214,7 +2214,7 @@ object ParityQueries {
       facts.filter(col("o_orderdate") >= cut).drop("o_orderdate"),
       "o_orderpriority", "cents", "o_orderkey", S42K)
     Materialize.mergeTopk(
-      s.read.parquet(stored), delta, "o_orderpriority", "cents", "o_orderkey", S42K)
+      Ingest.parquet(s, stored), delta, "o_orderpriority", "cents", "o_orderkey", S42K)
       .select(col("o_orderpriority"), col("o_orderkey"), col("cents"),
         col("rk").cast("long").as("rk"))
   }
@@ -2857,7 +2857,7 @@ object ParityQueries {
       col("event_id"), col("user_id"), col("value"), col("event_type"))
     val path = Sink.scratchDir(s"part_prune_${math.abs(dir.hashCode)}")
     out.write.mode("overwrite").partitionBy("event_type").parquet(path)
-    s.read.parquet(path)
+    Ingest.parquet(s, path)
       .filter(col("event_type").isin("click", "purchase"))
       .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
   }
@@ -2982,7 +2982,7 @@ object ParityQueries {
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
         col("o_orderpriority"))
       .write.mode("overwrite").parquet(s"$base/gen2")
-    s.read.option("mergeSchema", "true").parquet(s"$base/gen1", s"$base/gen2")
+    Ingest.parquetMergedSchema(s, s"$base/gen1", s"$base/gen2")
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
         col("o_orderpriority"))
   }
@@ -3075,7 +3075,7 @@ object ParityQueries {
       .write.mode("overwrite").parquet(man)
     // interval-overlap probe of the manifest (shared with s24 and
     // LayoutSpec): keep a file unless it provably cannot match
-    Layout.zonemapProbe(s, man, s.read.parquet(data).schema,
+    Layout.zonemapProbe(s, man, Ingest.parquet(s, data).schema,
       "o_orderdate", Layout.ZonemapLo, Layout.ZonemapHi,
       Seq("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"))
   }
@@ -3105,7 +3105,7 @@ object ParityQueries {
       .write.mode("overwrite").parquet(data)
     Layout.compactWithManifest(s, data, cdata, man,
       targetFiles = 3, zCol = "o_orderdate")
-    Layout.zonemapProbe(s, man, s.read.parquet(cdata).schema,
+    Layout.zonemapProbe(s, man, Ingest.parquet(s, cdata).schema,
       "o_orderdate", Layout.ZonemapLo, Layout.ZonemapHi,
       Seq("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"))
   }
@@ -3141,9 +3141,9 @@ object ParityQueries {
     Layout.bloomManifestRows(s, data, "o_custkey")
       .write.mode("overwrite").parquet(man)
     // probed key: min custkey (1-row metadata collect, SF-invariant)
-    val key = s.read.parquet(data)
+    val key = Ingest.parquet(s, data)
       .agg(min(col("o_custkey"))).collect()(0).getLong(0)
-    Layout.bloomProbe(s, man, s.read.parquet(data).schema,
+    Layout.bloomProbe(s, man, Ingest.parquet(s, data).schema,
       "o_custkey", key,
       Seq("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"))
   }
@@ -3177,7 +3177,7 @@ object ParityQueries {
       .write.mode("overwrite").parquet(zman)
     Layout.bloomManifestRows(s, data, "o_custkey")
       .write.mode("overwrite").parquet(bman)
-    val key = s.read.parquet(data)
+    val key = Ingest.parquet(s, data)
       .filter(col("o_orderdate") >= lit(Layout.ZonemapLo) &&
         col("o_orderdate") < lit(Layout.ZonemapHi))
       .agg(min(col("o_custkey"))).collect()(0).getLong(0)
@@ -3185,7 +3185,7 @@ object ParityQueries {
       Layout.zonemapCandidateFiles(s, zman, Layout.ZonemapLo, Layout.ZonemapHi)
         .toSet.intersect(Layout.bloomCandidateFiles(s, bman, key).toSet)
     Layout.readFilesOrEmpty(s, files.toIndexedSeq.sorted,
-        s.read.parquet(data).schema)
+        Ingest.parquet(s, data).schema)
       .filter(col("o_custkey") === lit(key) &&
         col("o_orderdate") >= lit(Layout.ZonemapLo) &&
         col("o_orderdate") < lit(Layout.ZonemapHi))
@@ -3363,7 +3363,7 @@ object ParityQueries {
     withConfs(s, j14Confs) {
       j14JoinPlan(s, dir).write.mode("overwrite").parquet(out)
     }
-    s.read.parquet(out)
+    Ingest.parquet(s, out)
   }
 
   // ---- J17: AQE skew-join split (runtime re-plan) ---------------------------
@@ -3419,8 +3419,8 @@ object ParityQueries {
         .agg(sum(col("cents")).as("flag_cents"))
         .write.mode("overwrite").parquet(dimP)
     }
-    val f = s.read.parquet(factP)
-    val d = s.read.parquet(dimP)
+    val f = Ingest.parquet(s, factP)
+    val d = Ingest.parquet(s, dimP)
     f.join(d, Seq("l_returnflag"))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(count(lit(1)).as("n"),
@@ -3432,7 +3432,7 @@ object ParityQueries {
     withConfs(s, j17Confs) {
       j17JoinPlan(s, dir).write.mode("overwrite").parquet(out)
     }
-    s.read.parquet(out)
+    Ingest.parquet(s, out)
   }
   val j17Sql =
     """WITH f AS (SELECT l_returnflag, l_linestatus,
@@ -3503,7 +3503,7 @@ object ParityQueries {
     withConfs(s, j16Confs) {
       j16JoinPlan(s, dir).write.mode("overwrite").parquet(out)
     }
-    s.read.parquet(out)
+    Ingest.parquet(s, out)
   }
   val j16Sql =
     """SELECT n_name, CAST(count(*) AS BIGINT) AS n_orders,
@@ -3552,7 +3552,7 @@ object ParityQueries {
         s"join elimination removed the wrong side; scans: $scans")
       q.write.mode("overwrite").parquet(out)
     }
-    s.read.parquet(out)
+    Ingest.parquet(s, out)
   }
   val j18Sql =
     """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
@@ -3595,7 +3595,7 @@ object ParityQueries {
         s"chain elimination removed the fact side; scans: $scans")
       q.write.mode("overwrite").parquet(out)
     }
-    s.read.parquet(out)
+    Ingest.parquet(s, out)
   }
   val j21Sql =
     """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
@@ -3623,14 +3623,14 @@ object ParityQueries {
         floor(col("o_totalprice") * 100).cast("long").as("cents"))
       .repartition(8)
       .write.mode("overwrite").parquet(base + "/data")
-    def withPos = s.read.parquet(base + "/data")
+    def withPos = Ingest.parquet(s, base + "/data")
       .withColumn("__f", col("_metadata.file_path"))
       .withColumn("__p", col("_metadata.row_index"))
     withPos.filter(col("o_custkey") % 10 === 3).select(col("__f"), col("__p"))
       .write.mode("overwrite").parquet(base + "/dv")
-    val dv = s.read.parquet(base + "/dv")
+    val dv = Ingest.parquet(s, base + "/dv")
     val nDel = dv.count()
-    val nAll = s.read.parquet(base + "/data").count()
+    val nAll = Ingest.parquet(s, base + "/data").count()
     require(nDel > 0 && nDel < nAll,
       s"deletion vector is trivial: $nDel deleted of $nAll")
     withPos.join(broadcast(dv), Seq("__f", "__p"), "left_anti")
@@ -3814,7 +3814,7 @@ object ParityQueries {
         s"left-join elimination removed the wrong side; scans: $scans")
       q.write.mode("overwrite").parquet(out)
     }
-    s.read.parquet(out)
+    Ingest.parquet(s, out)
   }
   val j20Sql =
     """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
@@ -3849,7 +3849,7 @@ object ParityQueries {
         s"count(DISTINCT pk) kept its distinct aggregation: $distincts")
       q.write.mode("overwrite").parquet(out)
     }
-    s.read.parquet(out)
+    Ingest.parquet(s, out)
   }
   val s48Sql =
     """SELECT c_nationkey, CAST(count(DISTINCT c_custkey) AS BIGINT) AS n_cust,
@@ -3887,7 +3887,7 @@ object ParityQueries {
         s"a base scan survived the two-step collapse; scans: $scans")
       q.write.mode("overwrite").parquet(out)
     }
-    s.read.parquet(out)
+    Ingest.parquet(s, out)
   }
   val j19Sql =
     """SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders,
@@ -3965,7 +3965,7 @@ object ParityQueries {
         s"loaded NDV rewrite left a fact scan; scans: $post")
       q.write.mode("overwrite").parquet(out)
     }
-    s.read.parquet(out)
+    Ingest.parquet(s, out)
   }
 
   def s50NdvRewrite(s: SparkSession, dir: String): DataFrame = {
@@ -3982,7 +3982,7 @@ object ParityQueries {
         s"the fact scan survived the count-DISTINCT rewrite; scans: $scans")
       q.write.mode("overwrite").parquet(out)
     }
-    s.read.parquet(out)
+    Ingest.parquet(s, out)
   }
   val s50Sql =
     """SELECT date_trunc('month', o_orderdate) AS month,
@@ -4022,7 +4022,7 @@ object ParityQueries {
     val delta = graft.ops.Materialize
       .bitmapSketch(facts.filter(col("month") >= cut), Seq("month"), "o_custkey")
     graft.ops.Materialize.bitmapCounts(
-      graft.ops.Materialize.mergeBitmap(s.read.parquet(stored), delta, Seq("month")),
+      graft.ops.Materialize.mergeBitmap(Ingest.parquet(s, stored), delta, Seq("month")),
       Seq("month"))
   }
   val s52Sql =
@@ -4081,7 +4081,7 @@ object ParityQueries {
           s"the fact scan survived the bitmap count-DISTINCT rewrite; scans: $scans")
         val out = Sink.scratchDir(s"s53_out_${math.abs(dir.hashCode)}")
         q.write.mode("overwrite").parquet(out)
-        s.read.parquet(out)
+        Ingest.parquet(s, out)
       } finally {
         graft.plans.NdvCatalog.unregister(s"s53_kmv_${math.abs(dir.hashCode)}")
         graft.plans.NdvCatalog.unregister(s"s53_bm_${math.abs(dir.hashCode)}")
@@ -4153,7 +4153,7 @@ object ParityQueries {
     Tables.orders(s, dir)
       .select(col("o_orderdate"), col("o_orderpriority"), col("o_custkey"))
       .write.mode("overwrite").parquet(base + "/fact")
-    val fact = s.read.parquet(base + "/fact")
+    val fact = Ingest.parquet(s, base + "/fact")
     graft.plans.NdvCatalog.createBitmap(
       s, s"s55_bm_${math.abs(dir.hashCode)}", fact,
       Seq(date_trunc("MONTH", col("o_orderdate")) -> "month",
@@ -4171,7 +4171,7 @@ object ParityQueries {
         s"the GLOBAL count-DISTINCT (lattice bottom) kept the fact scan: $gScans")
       val out = Sink.scratchDir(s"s55_out_${math.abs(dir.hashCode)}")
       q.crossJoin(g).write.mode("overwrite").parquet(out)
-      s.read.parquet(out)
+      Ingest.parquet(s, out)
     }
   }
   val s55Sql =
@@ -4217,7 +4217,7 @@ object ParityQueries {
         s"FD prune did not narrow the grouping to the key; grouping arities: $aggs")
       q.write.mode("overwrite").parquet(out)
     }
-    s.read.parquet(out)
+    Ingest.parquet(s, out)
   }
   val s54Sql =
     """SELECT c_custkey, c_name, c_mktsegment,
@@ -4285,23 +4285,23 @@ object ParityQueries {
       .repartition(8)
       .write.mode("overwrite").parquet(base + "/data")
     val hit = col("o_custkey") % 7 === 2
-    def withPos = s.read.parquet(base + "/data")
+    def withPos = Ingest.parquet(s, base + "/data")
       .withColumn("__f", col("_metadata.file_path"))
       .withColumn("__p", col("_metadata.row_index"))
     // UPDATE ... SET cents = cents + 100 WHERE o_custkey % 7 = 2, as a
     // position-delete of the old versions plus an appended post-image
     withPos.filter(hit).select(col("__f"), col("__p"))
       .write.mode("overwrite").parquet(base + "/dv")
-    s.read.parquet(base + "/data").filter(hit)
+    Ingest.parquet(s, base + "/data").filter(hit)
       .withColumn("cents", col("cents") + 100)
       .write.mode("overwrite").parquet(base + "/delta")
-    val dv = s.read.parquet(base + "/dv")
+    val dv = Ingest.parquet(s, base + "/dv")
     val nDel = dv.count()
     require(nDel > 0 && nDel < withPos.count(),
       s"upsert batch is trivial: $nDel of ${withPos.count()} rows")
     withPos.join(broadcast(dv), Seq("__f", "__p"), "left_anti")
       .drop("__f", "__p")
-      .unionByName(s.read.parquet(base + "/delta"))
+      .unionByName(Ingest.parquet(s, base + "/delta"))
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("sum_cents"),
         max(col("cents")).as("max_cents"))
@@ -4348,7 +4348,7 @@ object ParityQueries {
         s"distinct elimination left an aggregate in the plan:\n${q.queryExecution.optimizedPlan}")
       q.write.mode("overwrite").parquet(out)
     }
-    s.read.parquet(out)
+    Ingest.parquet(s, out)
   }
   val s45Sql =
     "SELECT c_custkey, c_nationkey, c_acctbal FROM customer"
@@ -4371,7 +4371,7 @@ object ParityQueries {
     withConfs(s, Seq(
       "spark.sql.parquet.aggregatePushdown" -> "true",
       "spark.sql.sources.useV1SourceList" -> "")) {
-      val q = s.read.parquet(s"$dir/orders.parquet")
+      val q = Ingest.parquet(s, s"$dir/orders.parquet")
         .agg(count(lit(1)).as("n_orders"),
           min(col("o_orderkey")).as("min_key"),
           max(col("o_orderkey")).as("max_key"))
@@ -4380,7 +4380,7 @@ object ParityQueries {
         s"aggregate was not pushed to the parquet scan:\n$plan")
       q.write.mode("overwrite").parquet(out)
     }
-    s.read.parquet(out)
+    Ingest.parquet(s, out)
   }
   val s44Sql =
     """SELECT CAST(count(*) AS BIGINT) AS n_orders,
@@ -4444,7 +4444,7 @@ object ParityQueries {
         s"MV rewrite left a fact scan in the plan; scans: $scans")
       q.write.mode("overwrite").parquet(out)
     }
-    s.read.parquet(out)
+    Ingest.parquet(s, out)
   }
   // ---- S31: incremental refresh ⊕ MV rewrite, end-to-end --------------------
   // s19 proves the rollup refreshes in O(delta); s30 proves queries
@@ -4500,7 +4500,7 @@ object ParityQueries {
         s"refresh-MV rewrite left a fact scan; scans: $scans")
       q.write.mode("overwrite").parquet(out)
     }
-    s.read.parquet(out)
+    Ingest.parquet(s, out)
   }
 
   // ---- S33/S34: multi-key MV + lattice coarsening ---------------------------
@@ -4544,7 +4544,7 @@ object ParityQueries {
         s"multi-key MV rewrite left a fact scan; scans: $scans")
       q.write.mode("overwrite").parquet(out)
     }
-    s.read.parquet(out)
+    Ingest.parquet(s, out)
   }
 
   def s34MvCoarsen(s: SparkSession, dir: String): DataFrame = {
@@ -4566,7 +4566,7 @@ object ParityQueries {
         s"coarsening MV rewrite left a fact scan; scans: $scans")
       q.write.mode("overwrite").parquet(out)
     }
-    s.read.parquet(out)
+    Ingest.parquet(s, out)
   }
 
   // ---- S41: cost-based MV choice across the lattice --------------------------
@@ -4603,7 +4603,7 @@ object ParityQueries {
         s"MV choice left a fact scan in the plan; scans: $scans")
       q.write.mode("overwrite").parquet(out)
     }
-    s.read.parquet(out)
+    Ingest.parquet(s, out)
   }
 
   // ---- S43: MV catalog persistence (metastore round-trip) --------------------
@@ -4643,7 +4643,7 @@ object ParityQueries {
         s"loaded rewrite left a fact scan; scans: $post")
       q.write.mode("overwrite").parquet(out)
     }
-    s.read.parquet(out)
+    Ingest.parquet(s, out)
   }
   val s43Sql =
     """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
@@ -4683,7 +4683,7 @@ object ParityQueries {
         s"avg MV rewrite left a fact scan in the plan; scans: $scans")
       q.write.mode("overwrite").parquet(out)
     }
-    s.read.parquet(out)
+    Ingest.parquet(s, out)
   }
 
   val s35Sql =
@@ -4740,11 +4740,11 @@ object ParityQueries {
           .select((col("day") + expr("INTERVAL 7 DAYS")).as("day"))))
       .distinct()
     val affN = affected.count()
-    val allN = s.read.parquet(stored).count()
+    val allN = Ingest.parquet(s, stored).count()
     require(affN > 0 && affN.toDouble < 0.25 * allN,
       s"CDC maintenance was not partial: $affN affected of $allN groups")
     Materialize.maintainKeys(
-      s.read.parquet(stored), post, Seq("day"), col("cents"), affected)
+      Ingest.parquet(s, stored), post, Seq("day"), col("cents"), affected)
   }
 
   val s36Sql =
@@ -4822,7 +4822,7 @@ object ParityQueries {
         s"joined MV rewrite left a base scan in the plan; scans: $scans")
       q.write.mode("overwrite").parquet(out)
     }
-    s.read.parquet(out)
+    Ingest.parquet(s, out)
   }
 
   val s37Sql =
@@ -4874,7 +4874,7 @@ object ParityQueries {
         s"refreshed joined-MV rewrite left a base scan; scans: $scans")
       q.write.mode("overwrite").parquet(out)
     }
-    s.read.parquet(out)
+    Ingest.parquet(s, out)
   }
 
   val s38Sql =
@@ -4923,11 +4923,11 @@ object ParityQueries {
         .select(newNation.as("c_nationkey")))
       .distinct()
     val affN = affected.count()
-    val allN = s.read.parquet(stored).count()
+    val allN = Ingest.parquet(s, stored).count()
     require(affN > 0 && affN < allN,
       s"dim-CDC maintenance was not partial: $affN affected of $allN groups")
     Materialize.maintainKeys(
-      s.read.parquet(stored), joined(dimPost), Seq("c_nationkey"), col("m"), affected)
+      Ingest.parquet(s, stored), joined(dimPost), Seq("c_nationkey"), col("m"), affected)
   }
 
   val s40Sql =
@@ -5035,7 +5035,7 @@ object ParityQueries {
       col("event_id"), col("user_id"), col("value"), col("event_type"))
     val path = Sink.scratchDir(s"dpp_${math.abs(dir.hashCode)}")
     out.write.mode("overwrite").partitionBy("event_type").parquet(path)
-    val fact = s.read.parquet(path)
+    val fact = Ingest.parquet(s, path)
     val dim = Tables.events(s, dir)
       .groupBy(col("event_type")).agg(count(lit(1)).as("n_type"))
       .filter(col("n_type") % 2 === 1)

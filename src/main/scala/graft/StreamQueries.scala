@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ext.{QualityModel, TextOps}
-import graft.ops.{Aggregates, Materialize, Sink}
+import graft.ops.{Aggregates, Ingest, Materialize, Sink}
 import graft.streaming.{CorpusStream, EventStream, StreamDrive}
 import graft.streaming.StreamDrive.{fresh, Input, OneFilePerTrigger, OneTrigger}
 
@@ -467,7 +467,7 @@ object StreamQueries {
     graft.ext.SuffixArray.cutsFromSpans(
       graft.ext.SuffixArray.readSpans(s, ExtQueries.spanReportDir(s, dir)))
       .write.mode("overwrite").parquet(cutsDir)
-    val cuts = s.read.parquet(cutsDir)
+    val cuts = Ingest.parquet(s, cutsDir)
     docStream(s, "e1_scrub_stream",
         Tables.documents(s, dir).select(col("doc_id"), col("text"))) {
       graft.ext.SuffixArray.applyCuts(_, "doc_id", "text", cuts)
@@ -506,7 +506,7 @@ object StreamQueries {
   // the fixed rate table, so the batch e7_rank_weighted oracle replays
   // verbatim. No state, no watermark, no shuffle.
   def e7RankStream(s: SparkSession, dir: String): DataFrame = {
-    val rates = s.read.parquet(s"${ExtQueries.hostKeepRatesDir(s, dir)}/rates")
+    val rates = Ingest.parquet(s, s"${ExtQueries.hostKeepRatesDir(s, dir)}/rates")
     docStream(s, "e7_rank_stream", Tables.documents(s, dir).select(col("doc_id"))) {
       _.select(col("doc_id"),
           graft.ext.TextOps.urlHost(graft.ext.TextOps.canonicalizeUrl(
@@ -546,11 +546,11 @@ object StreamQueries {
       else StreamDrive.staged(corpus, fresh("e8s_in"))
     StreamDrive.run(s, "e8_decontam_stream", in)(identity) { (b, id) =>
       val clean = graft.ext.CorpusPipeline.bloomDecontaminatedWith(
-        b, "doc_id", "text", b.sparkSession.read.parquet(benchDir), mask)
+        b, "doc_id", "text", Ingest.parquet(b.sparkSession, benchDir), mask)
       EventStream.writeBatchIdempotent(
         clean.select(col("doc_id"), col("source"), col("n_chars")), id, out)
     }
-    s.read.parquet(out).select(col("doc_id"), col("source"), col("n_chars"))
+    Ingest.parquet(s, out).select(col("doc_id"), col("source"), col("n_chars"))
   }
 
   // ---- W9s: streaming exact dedup ----------------------------------------
@@ -758,7 +758,7 @@ object StreamQueries {
     maintain(s, "s19_rollup_stream", facts.filter(col("day") >= cut)) { b =>
       Materialize.refreshInto(s, stored, Materialize.rollup(b, "day", col("cents")), "day")
     }
-    s.read.parquet(stored)
+    Ingest.parquet(s, stored)
   }
 
   // ---- S32s: STREAMING quantile-sketch maintenance --------------------------
@@ -788,7 +788,7 @@ object StreamQueries {
       Materialize.refreshQuantileInto(s, stored,
         Materialize.quantileSketch(b, "month", "o_orderkey", "cents", k), "month", k)
     }
-    Materialize.quantileEstimate(s.read.parquet(stored), "month")
+    Materialize.quantileEstimate(Ingest.parquet(s, stored), "month")
   }
 
   // ---- S52s: STREAMING exact-bitmap NDV maintenance --------------------------
@@ -813,7 +813,7 @@ object StreamQueries {
       Materialize.refreshBitmapInto(s, stored,
         Materialize.bitmapSketch(b, Seq("month"), "o_custkey"), Seq("month"))
     }
-    Materialize.bitmapCounts(s.read.parquet(stored), Seq("month"))
+    Materialize.bitmapCounts(Ingest.parquet(s, stored), Seq("month"))
   }
 
   // ---- S42s: STREAMING leaderboard maintenance -------------------------------
@@ -842,7 +842,7 @@ object StreamQueries {
         Materialize.topkRollup(b, "o_orderpriority", "cents", "o_orderkey", k),
         "o_orderpriority", "cents", "o_orderkey", k)
     }
-    s.read.parquet(stored)
+    Ingest.parquet(s, stored)
       .select(col("o_orderpriority"), col("o_orderkey"), col("cents"),
         col("rk").cast("long").as("rk"))
   }
@@ -877,7 +877,7 @@ object StreamQueries {
       Materialize.refreshInto(s, stored,
         Materialize.rollup(joined(b), "c_nationkey", col("m")), "c_nationkey")
     }
-    s.read.parquet(stored)
+    Ingest.parquet(s, stored)
   }
 
   val s39sSql: String =
@@ -929,7 +929,7 @@ object StreamQueries {
       (b, _) =>
         val batch = b.cache()
         try {
-          val cur = s.read.parquet(dimCur)
+          val cur = Ingest.parquet(s, dimCur)
           val affected = cur.join(
               batch.select(col("c_custkey").as("bk")),
               col("c_custkey") === col("bk"), "left_semi")
@@ -945,13 +945,13 @@ object StreamQueries {
               coalesce(col("new_nationkey"), col("c_nationkey")).as("c_nationkey"))
           Materialize.replaceInto(s, dimCur, next)
           Materialize.maintainKeysInto(
-            s, stored, joined(s.read.parquet(dimCur)),
+            s, stored, joined(Ingest.parquet(s, dimCur)),
             Seq("c_nationkey"), col("m"), affected)
           affected.unpersist()
           ()
         } finally { batch.unpersist(); () }
     }
-    s.read.parquet(stored)
+    Ingest.parquet(s, stored)
   }
 
   // ---- S24s: STREAMING zone-map manifest maintenance -----------------------
@@ -977,7 +977,7 @@ object StreamQueries {
       .sortWithinPartitions(col("o_orderdate"))
       .write.mode("overwrite").parquet(data)
     val man = fresh("s24_man")
-    val schema = s.read.parquet(data).schema
+    val schema = Ingest.parquet(s, data).schema
     StreamDrive.run(s, "s24_manifest_stream", Input(data, schema, OneFilePerTrigger)) {
       _.select(col("_metadata.file_path").as("file"), col("o_orderdate"))
     } { (b, id) =>
@@ -988,7 +988,7 @@ object StreamQueries {
           count(lit(1)).as("n_rows")),
         id, man)
     }
-    sinkForensics("s24_manifest_stream", s.read.parquet(man), None)
+    sinkForensics("s24_manifest_stream", Ingest.parquet(s, man), None)
     // shared probe (Layout.zonemapProbe): overlap-filter the manifest,
     // pruned re-read with the residual predicate — one home for the
     // skip-soundness contract with s22 and LayoutSpec
@@ -1031,14 +1031,14 @@ object StreamQueries {
     // runs on the driver, so a plain var is the commit log
     val current = new java.util.concurrent.atomic.AtomicReference[String](s"$st/v0")
     StreamDrive.run(s, "s29_cdc_stream",
-        Input(in, s.read.parquet(in).schema, OneFilePerTrigger))(identity) { (b, id) =>
+        Input(in, Ingest.parquet(s, in).schema, OneFilePerTrigger))(identity) { (b, id) =>
       val next = s"$st/v${id + 1}"
       graft.ops.Relational.cdcApply(
-        s.read.parquet(current.get()), b, Seq("o_orderkey"), "op")
+        Ingest.parquet(s, current.get()), b, Seq("o_orderkey"), "op")
         .write.mode("overwrite").parquet(next)
       current.set(next)
     }
-    s.read.parquet(current.get())
+    Ingest.parquet(s, current.get())
   }
 
   /** Every row runs under the drives' state-partition window

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.ops.Ingest
+
 /** Loaders for the driver's deterministic parquet test tables
   * (`/root/testdata/sf*`, see TESTDATA.md). Parquet scans get column
   * pruning + predicate pushdown from Catalyst for free, so callers
@@ -10,7 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    Ingest.parquet(spark, s"$sfDir/$name.parquet")
 
   def lineitem(spark: SparkSession, d: String): DataFrame = load(spark, d, "lineitem")
   def orders(spark: SparkSession, d: String): DataFrame = load(spark, d, "orders")

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.Ranking
+import graft.ops.{Ingest, Ranking}
 
 /** Persisted ANN index artifacts (r10 VERDICT #2): a production
   * 100 TB deployment builds an index ONCE, saves it, probes it many
@@ -76,7 +76,7 @@ object AnnIndex {
       .assignToCentroids(queries, readCentroids(spark, indexDir), nprobe)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("n2").as("q_n2"), col("cid"))
-    val cells = spark.read.parquet(s"$indexDir/cells")
+    val cells = Ingest.parquet(spark, s"$indexDir/cells")
       .select(col("vec_id"), col("embedding"), col("n2"), col("cid").cast("long").as("cid"))
     val scored = cells.join(q, Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -103,7 +103,7 @@ object AnnIndex {
     */
   def compactIvf(spark: SparkSession, indexDir: String): Unit = {
     val tmp = s"$indexDir/cells_compacting"
-    spark.read.parquet(s"$indexDir/cells")
+    Ingest.parquet(spark, s"$indexDir/cells")
       .repartition(col("cid"))
       .write.mode("overwrite").partitionBy("cid").parquet(tmp)
     swapIn(indexDir, "cells", tmp)
@@ -114,7 +114,7 @@ object AnnIndex {
     */
   def compactCodes(spark: SparkSession, indexDir: String, targetFiles: Int = 4): Unit = {
     val tmp = s"$indexDir/codes_compacting"
-    spark.read.parquet(s"$indexDir/codes").coalesce(targetFiles)
+    Ingest.parquet(spark, s"$indexDir/codes").coalesce(targetFiles)
       .write.mode("overwrite").parquet(tmp)
     swapIn(indexDir, "codes", tmp)
   }
@@ -142,7 +142,7 @@ object AnnIndex {
   }
 
   private def readCentroids(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(s"$indexDir/centroids")
+    Ingest.parquet(spark, s"$indexDir/centroids")
       .select(col("cid").as("vec_id"), col("embedding"))
 
   private def assignCells(vectors: DataFrame, centroids: DataFrame): DataFrame =
@@ -184,7 +184,7 @@ object AnnIndex {
     */
   def probeSq8(queries: DataFrame, indexDir: String, topK: Int): DataFrame = {
     val spark = queries.sparkSession
-    val c = spark.read.parquet(s"$indexDir/codes")
+    val c = Ingest.parquet(spark, s"$indexDir/codes")
       .select(col("vec_id"), col("codes").as("c_codes"), col("qn2").as("c_n2"))
     val q = Similarity.sq8Codes(queries, readSq8Grid(spark, indexDir))
       .select(col("vec_id").as("query_id"), col("codes").as("q_codes"),
@@ -203,7 +203,7 @@ object AnnIndex {
   }
 
   private def readSq8Grid(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(s"$indexDir/grid")
+    Ingest.parquet(spark, s"$indexDir/grid")
 
   // ---- PQ -----------------------------------------------------------------
 
@@ -221,7 +221,7 @@ object AnnIndex {
         .select(lit(i).as("sub"), col("vec_id").as("cid"), col("embedding").as("cent"))
     }.reduce(_.unionAll(_))
       .write.mode("overwrite").parquet(s"$indexDir/codebooks")
-    val books = spark.read.parquet(s"$indexDir/codebooks")
+    val books = Ingest.parquet(spark, s"$indexDir/codebooks")
     (0 until m).map { i =>
       Similarity.assignToCentroid(
         subspace(corpus, i, subDim),
@@ -238,7 +238,7 @@ object AnnIndex {
     * append ≡ full re-encode of base ∪ delta.
     */
   def appendPq(delta: DataFrame, m: Int, subDim: Int, indexDir: String): Unit = {
-    val books = delta.sparkSession.read.parquet(s"$indexDir/codebooks")
+    val books = Ingest.parquet(delta.sparkSession, s"$indexDir/codebooks")
     (0 until m).map { i =>
       Similarity.assignToCentroid(
         subspace(delta, i, subDim),
@@ -258,7 +258,7 @@ object AnnIndex {
   def probePq(queries: DataFrame, m: Int, subDim: Int, indexDir: String,
       topK: Int): DataFrame = {
     val spark = queries.sparkSession
-    val books = spark.read.parquet(s"$indexDir/codebooks")
+    val books = Ingest.parquet(spark, s"$indexDir/codebooks")
     val luts = (0 until m).map { i =>
       queries
         .select(col("vec_id").as("query_id"),
@@ -269,7 +269,7 @@ object AnnIndex {
         .select(col("query_id"), col(s"code_$i"),
           Similarity.dot(col("q_sub"), col("cent")).as(s"p_$i"))
     }
-    val codes = spark.read.parquet(s"$indexDir/codes")
+    val codes = Ingest.parquet(spark, s"$indexDir/codes")
     val scored = luts.zipWithIndex.foldLeft(codes) {
       case (acc, (lut, 0)) => acc.join(broadcast(lut), Seq("code_0"))
       case (acc, (lut, i)) => acc.join(broadcast(lut), Seq("query_id", s"code_$i"))

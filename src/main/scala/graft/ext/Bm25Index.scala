@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.Aggregates
+import graft.ops.{Aggregates, Ingest}
 
 /** Saved inverted-index lifecycle for BM25 retrieval — the retrieval
   * family's member of the standing-artifact pattern (`AnnIndex` for
@@ -105,12 +105,12 @@ object Bm25Index {
     */
   def compact(spark: SparkSession, ix: String, targetFiles: Int = 4): Unit = {
     val pTmp = s"$ix/postings_compacting"
-    spark.read.parquet(postingsPath(ix))
+    Ingest.parquet(spark, postingsPath(ix))
       .repartition(col("wb"))
       .write.mode("overwrite").partitionBy("wb").parquet(pTmp)
     AnnIndex.swapIn(ix, "postings", pTmp)
     val dTmp = s"$ix/doclen_compacting"
-    spark.read.parquet(doclenPath(ix)).coalesce(targetFiles)
+    Ingest.parquet(spark, doclenPath(ix)).coalesce(targetFiles)
       .write.mode("overwrite").parquet(dTmp)
     AnnIndex.swapIn(ix, "doclen", dTmp)
   }
@@ -130,8 +130,8 @@ object Bm25Index {
       stopWords: Seq[String],
       nTerms: Int,
       k: Int): DataFrame = {
-    val tf = spark.read.parquet(postingsPath(ix))
-    val dl = spark.read.parquet(doclenPath(ix))
+    val tf = Ingest.parquet(spark, postingsPath(ix))
+    val dl = Ingest.parquet(spark, doclenPath(ix))
     val dfW = tf.groupBy(col("word")).agg(count(lit(1)).as("dfq"))
       .filter(!col("word").isin(stopWords: _*))
     val terms = Retrieval.rankTopK(dfW, "word", "dfq", nTerms)

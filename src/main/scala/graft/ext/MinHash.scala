@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Ingest
+
 /** Near-duplicate detection via MinHash + LSH banding
   * (SURVEY §2.8 E2).
   *
@@ -371,7 +373,7 @@ object MinHash {
       indexDir: String, shingleLen: Int = 3): Unit = {
     signatureTable(docs, idCol, textCol, shingleLen)
       .write.mode("overwrite").parquet(s"$indexDir/sigs")
-    bandRows(docs.sparkSession.read.parquet(s"$indexDir/sigs"))
+    bandRows(Ingest.parquet(docs.sparkSession, s"$indexDir/sigs"))
       .write.mode("overwrite").partitionBy("bidx").parquet(s"$indexDir/bands")
   }
 
@@ -400,12 +402,12 @@ object MinHash {
     */
   def compactBands(spark: SparkSession, indexDir: String, targetFiles: Int = 4): Unit = {
     val bandsTmp = s"$indexDir/bands_compacting"
-    spark.read.parquet(s"$indexDir/bands")
+    Ingest.parquet(spark, s"$indexDir/bands")
       .repartition(col("bidx"))
       .write.mode("overwrite").partitionBy("bidx").parquet(bandsTmp)
     AnnIndex.swapIn(indexDir, "bands", bandsTmp)
     val sigsTmp = s"$indexDir/sigs_compacting"
-    spark.read.parquet(s"$indexDir/sigs").coalesce(targetFiles)
+    Ingest.parquet(spark, s"$indexDir/sigs").coalesce(targetFiles)
       .write.mode("overwrite").parquet(sigsTmp)
     AnnIndex.swapIn(indexDir, "sigs", sigsTmp)
   }
@@ -417,7 +419,7 @@ object MinHash {
     * nothing to recompute).
     */
   def probeBands(spark: SparkSession, indexDir: String): DataFrame = {
-    val bands = spark.read.parquet(s"$indexDir/bands")
+    val bands = Ingest.parquet(spark, s"$indexDir/bands")
     bands.as("a")
       .join(bands.as("b"),
         col("a.bidx") === col("b.bidx") && col("a.bkey") === col("b.bkey") &&
@@ -437,7 +439,7 @@ object MinHash {
     */
   def probeBandsIncremental(spark: SparkSession, indexDir: String,
       isDelta: Column): DataFrame = {
-    val bands = spark.read.parquet(s"$indexDir/bands")
+    val bands = Ingest.parquet(spark, s"$indexDir/bands")
     val deltaBands = bands.filter(isDelta)
       .select(col("doc_id").as("d_id"), col("sig").as("d_sig"),
         col("bidx"), col("bkey"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnBridge
 
 import graft.functions.FloatDotProduct
-import graft.ops.Ranking
+import graft.ops.{Ingest, Ranking}
 
 /** Similarity search over embedding columns (SURVEY §2.8 E3):
   * brute-force cosine top-k as the correctness baseline, and a
@@ -653,20 +653,20 @@ object Similarity {
     val spark = vectors.sparkSession
     prepareVecs(vectors, nBits)
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$indexDir/vecs")
-    val vecs = spark.read.parquet(s"$indexDir/vecs")
+    val vecs = Ingest.parquet(spark, s"$indexDir/vecs")
     directedTopK(vecs, vecs, k)
       .write.mode("overwrite").parquet(s"$indexDir/knn")
-    mutualEdgesFromKnn(spark.read.parquet(s"$indexDir/knn"))
+    mutualEdgesFromKnn(Ingest.parquet(spark, s"$indexDir/knn"))
       .write.mode("overwrite").parquet(s"$indexDir/edges")
   }
 
   /** The standing edge table — a probe is a bare parquet scan. */
   def probeKnnGraph(spark: org.apache.spark.sql.SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(s"$indexDir/edges")
+    Ingest.parquet(spark, s"$indexDir/edges")
 
   /** The saved directed lists (for diagnostics and the append law). */
   def probeKnnLists(spark: org.apache.spark.sql.SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(s"$indexDir/knn")
+    Ingest.parquet(spark, s"$indexDir/knn")
 
   /** Incrementally ingest `delta` (ids disjoint from the base) into a
     * saved graph — EXACT, by top-k mergeability:
@@ -684,11 +684,11 @@ object Similarity {
     val spark = delta.sparkSession
     prepareVecs(delta, nBits)
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$indexDir/vecs_delta")
-    val dPrep = spark.read.parquet(s"$indexDir/vecs_delta")
-    val base = spark.read.parquet(s"$indexDir/vecs")
+    val dPrep = Ingest.parquet(spark, s"$indexDir/vecs_delta")
+    val base = Ingest.parquet(spark, s"$indexDir/vecs")
     val deltaLists = directedTopK(dPrep, base.unionByName(dPrep), k)
     val baseVsDelta = scoredPairs(base, dPrep)
-    val savedLists = spark.read.parquet(s"$indexDir/knn")
+    val savedLists = Ingest.parquet(spark, s"$indexDir/knn")
       .select(col("query_id"), col("vec_id"), col("cos_sim"))
     val mergedBase = rankTopK(savedLists.unionByName(baseVsDelta), k)
     val knnTmp = s"$indexDir/knn_appending"
@@ -696,10 +696,10 @@ object Similarity {
       .write.mode("overwrite").parquet(knnTmp)
     AnnIndex.swapIn(indexDir, "knn", knnTmp)
     val edgesTmp = s"$indexDir/edges_appending"
-    mutualEdgesFromKnn(spark.read.parquet(s"$indexDir/knn"))
+    mutualEdgesFromKnn(Ingest.parquet(spark, s"$indexDir/knn"))
       .write.mode("overwrite").parquet(edgesTmp)
     AnnIndex.swapIn(indexDir, "edges", edgesTmp)
-    spark.read.parquet(s"$indexDir/vecs_delta")
+    Ingest.parquet(spark, s"$indexDir/vecs_delta")
       .write.mode("append").partitionBy("bucket").parquet(s"$indexDir/vecs")
     graft.ops.Sink.clearLocalPath(s"$indexDir/vecs_delta")
   }
@@ -881,7 +881,7 @@ object Similarity {
     */
   def writeGraphLandmarks(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, k: Int): Unit = {
-    val vecs = spark.read.parquet(s"$indexDir/vecs")
+    val vecs = Ingest.parquet(spark, s"$indexDir/vecs")
     kcenterSelect(vecs, k)
       .join(vecs.select(col("vec_id"), col("embedding"), col("n2")), Seq("vec_id"))
       .select(col("sel_order"), col("vec_id"), col("embedding"), col("n2"))
@@ -891,7 +891,7 @@ object Similarity {
   /** The stored landmark table — k rows, broadcastable. */
   def probeGraphLandmarks(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): DataFrame =
-    spark.read.parquet(s"$indexDir/landmarks")
+    Ingest.parquet(spark, s"$indexDir/landmarks")
 
   /** TURNKEY external-query graph probe: entries come from the
     * index's own stored landmarks (top-`entryK` by exact cosine
@@ -939,7 +939,7 @@ object Similarity {
       trainFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     val spark = queries.sparkSession
     val (adj, vecs, q) = beamSetup(queries, indexDir)
-    val corpusEmb = spark.read.parquet(s"$indexDir/vecs")
+    val corpusEmb = Ingest.parquet(spark, s"$indexDir/vecs")
       .select(col("vec_id"), col("embedding"))
     // Codebooks may TRAIN on a deterministic corpus slice (the
     // composition-gate discipline: training cost is index-build cost,
@@ -1026,7 +1026,7 @@ object Similarity {
       k: Int): DataFrame = {
     val spark = queries.sparkSession
     val (adj, vecs, q) = beamSetup(queries, graphDir)
-    val books = spark.read.parquet(s"$pqDir/codebooks")
+    val books = Ingest.parquet(spark, s"$pqDir/codebooks")
     val luts = (0 until m).map { i =>
       queries
         .select(col("vec_id").as("query_id"),
@@ -1037,7 +1037,7 @@ object Similarity {
         .select(col("query_id"), col(s"code_$i"),
           dot(col("q_sub"), col("cent")).as(s"p_$i"))
     }
-    val codes = spark.read.parquet(s"$pqDir/codes")
+    val codes = Ingest.parquet(spark, s"$pqDir/codes")
     val adc = (0 until m).map(i => col(s"p_$i")).reduce(_ + _)
     def adcScorer(pairs: DataFrame): DataFrame =
       luts.zipWithIndex.foldLeft(
@@ -1054,11 +1054,11 @@ object Similarity {
   private def beamSetup(
       queries: DataFrame, indexDir: String): (DataFrame, DataFrame, DataFrame) = {
     val spark = queries.sparkSession
-    val edges = spark.read.parquet(s"$indexDir/edges")
+    val edges = Ingest.parquet(spark, s"$indexDir/edges")
     // mutual edges are stored once (id_a < id_b); walks need both ways
     val adj = edges.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(edges.select(col("id_b").as("src"), col("id_a").as("dst")))
-    val vecs = spark.read.parquet(s"$indexDir/vecs")
+    val vecs = Ingest.parquet(spark, s"$indexDir/vecs")
       .select(col("vec_id"), col("embedding").as("c_emb"), col("n2").as("c_n2"))
     // query side: small by construction — broadcast it, never the corpus
     val q = broadcast(queries.select(col("vec_id").as("query_id"),
@@ -1156,16 +1156,16 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession,
       indexDir: String, targetFiles: Int = 4): Unit = {
     val vecsTmp = s"$indexDir/vecs_compacting"
-    spark.read.parquet(s"$indexDir/vecs")
+    Ingest.parquet(spark, s"$indexDir/vecs")
       .repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(vecsTmp)
     AnnIndex.swapIn(indexDir, "vecs", vecsTmp)
     val knnTmp = s"$indexDir/knn_compacting"
-    spark.read.parquet(s"$indexDir/knn").coalesce(targetFiles)
+    Ingest.parquet(spark, s"$indexDir/knn").coalesce(targetFiles)
       .write.mode("overwrite").parquet(knnTmp)
     AnnIndex.swapIn(indexDir, "knn", knnTmp)
     val edgesTmp = s"$indexDir/edges_compacting"
-    spark.read.parquet(s"$indexDir/edges").coalesce(targetFiles)
+    Ingest.parquet(spark, s"$indexDir/edges").coalesce(targetFiles)
       .write.mode("overwrite").parquet(edgesTmp)
     AnnIndex.swapIn(indexDir, "edges", edgesTmp)
   }

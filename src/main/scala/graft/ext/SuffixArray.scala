@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.Ingest
+
 /** Character-granular exact-substring duplicate detection via a
   * distributed PREFIX-DOUBLING rank construction — the suffix-array
   * leg of the E1 dedup family (r15 VERDICT Next #5; Lee et al.'s
@@ -218,7 +220,7 @@ object SuffixArray {
     * lifecycle; plans over it scan the artifact and rebuild nothing.
     */
   def readSpans(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+    Ingest.parquet(spark, dir)
 
   /** Per-document merged excision intervals derived from a span
     * report: (doc_id, cuts sorted-struct-array, n_cuts, n_cut_chars).
@@ -373,7 +375,7 @@ object SuffixArray {
 
   private def segFrames(spark: org.apache.spark.sql.SparkSession,
       m: SpanManifest, table: String): Seq[(Int, DataFrame)] =
-    m.segs.collect { case (t, g, p) if t == table => (g, spark.read.parquet(p)) }
+    m.segs.collect { case (t, g, p) if t == table => (g, Ingest.parquet(spark, p)) }
 
   /** The live spans view: newest generation wins PER DOC (appends
     * re-emit the full span set of every doc they touch). The window

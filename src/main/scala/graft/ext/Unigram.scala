@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.ops.Ingest
+
 /** Unigram-LM (SentencePiece-family, Kudo ACL 2018) tokenizer
   * TRAINING: the OTHER production tokenizer family beside BPE's
   * merge-table ([[Bpe]]) — seed a candidate-piece vocabulary from
@@ -235,7 +237,7 @@ object Unigram {
     */
   def readModel(spark: org.apache.spark.sql.SparkSession,
       dir: String): Seq[(String, Long)] =
-    spark.read.parquet(dir)
+    Ingest.parquet(spark, dir)
       .collect().map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1).toSeq
 
   /** SCORE-ONLY Viterbi fold: the final packed dp value for `word`

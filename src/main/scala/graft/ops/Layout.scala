@@ -75,9 +75,9 @@ object Layout {
       inPath: String,
       outPath: String,
       targetFiles: Int): DataFrame = {
-    spark.read.parquet(inPath).coalesce(targetFiles)
+    Ingest.parquet(spark, inPath).coalesce(targetFiles)
       .write.mode("overwrite").parquet(outPath)
-    spark.read.parquet(outPath)
+    Ingest.parquet(spark, outPath)
   }
 
   /** Per-file (min, max, count) zone-map manifest rows for a data
@@ -88,7 +88,7 @@ object Layout {
   def manifestRows(
       spark: org.apache.spark.sql.SparkSession,
       dataPath: String, zCol: String): DataFrame =
-    spark.read.parquet(dataPath)
+    Ingest.parquet(spark, dataPath)
       .groupBy(col("_metadata.file_path").as("file"))
       .agg(min(col(zCol)).as("zmin"), max(col(zCol)).as("zmax"),
         count(lit(1)).as("n_rows"))
@@ -106,7 +106,7 @@ object Layout {
       spark: org.apache.spark.sql.SparkSession,
       inPath: String, outPath: String, manifestOutPath: String,
       targetFiles: Int, zCol: String): Unit = {
-    spark.read.parquet(inPath).coalesce(targetFiles)
+    Ingest.parquet(spark, inPath).coalesce(targetFiles)
       .write.mode("overwrite").parquet(outPath)
     manifestRows(spark, outPath, zCol)
       .write.mode("overwrite").parquet(manifestOutPath)
@@ -134,7 +134,7 @@ object Layout {
   def zonemapCandidateFiles(
       spark: org.apache.spark.sql.SparkSession,
       manifestPath: String, lo: String, hi: String): Seq[String] =
-    spark.read.parquet(manifestPath)
+    Ingest.parquet(spark, manifestPath)
       .filter(col("zmax") >= lit(lo) && col("zmin") < lit(hi))
       .select(col("file")).collect().map(_.getString(0)).toIndexedSeq
 
@@ -149,7 +149,7 @@ object Layout {
     if (files.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], dataSchema)
-    else spark.read.parquet(files: _*)
+    else Ingest.parquet(spark, files: _*)
 
   def zonemapProbe(
       spark: org.apache.spark.sql.SparkSession,
@@ -203,7 +203,7 @@ object Layout {
   def bloomManifestRows(
       spark: org.apache.spark.sql.SparkSession,
       dataPath: String, keyCol: String): DataFrame =
-    spark.read.parquet(dataPath)
+    Ingest.parquet(spark, dataPath)
       .select(col("_metadata.file_path").as("file"),
         explode(array(bloomPositions(col(keyCol)): _*)).as("p"))
       .groupBy(col("file"), (col("p") / 64).cast("int").as("word_idx"))
@@ -234,7 +234,7 @@ object Layout {
     val needByWord = (0 until BloomK).map(i => posRow.getLong(i))
       .groupBy(p => (p / 64).toInt)
       .map { case (w, ps) => w -> ps.map(p => 1L << (p % 64)).reduce(_ | _) }
-    val man = spark.read.parquet(manifestPath)
+    val man = Ingest.parquet(spark, manifestPath)
     needByWord.toSeq.map { case (w, bits) =>
       man.filter(col("word_idx") === lit(w) &&
           col("word").bitwiseAND(lit(bits)) === lit(bits))

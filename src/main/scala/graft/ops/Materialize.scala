@@ -429,7 +429,7 @@ object Materialize {
   def refreshInto(
       spark: org.apache.spark.sql.SparkSession,
       stored: String, deltaRollup: DataFrame, keyCol: String): Unit =
-    rewriteSwap(spark, stored)(s => merge(s.read.parquet(stored), deltaRollup, keyCol))
+    rewriteSwap(spark, stored)(s => merge(Ingest.parquet(s, stored), deltaRollup, keyCol))
 
   /** In-place refresh of a STORED quantile sketch table
     * ([[quantileSketch]] schema): read, [[mergeQuantile]] the delta
@@ -442,7 +442,7 @@ object Materialize {
       spark: org.apache.spark.sql.SparkSession,
       stored: String, deltaSketch: DataFrame, keyCol: String, k: Int): Unit =
     rewriteSwap(spark, stored)(s =>
-      mergeQuantile(s.read.parquet(stored), deltaSketch, keyCol, k))
+      mergeQuantile(Ingest.parquet(s, stored), deltaSketch, keyCol, k))
 
   /** In-place refresh of a STORED bitmap NDV rollup ([[bitmapSketch]]
     * schema): read, [[mergeBitmap]] the delta sketch in — set union is
@@ -458,7 +458,7 @@ object Materialize {
       spark: org.apache.spark.sql.SparkSession,
       stored: String, deltaSketch: DataFrame, keyCols: Seq[String]): Unit =
     rewriteSwap(spark, stored)(s =>
-      mergeBitmap(s.read.parquet(stored), deltaSketch, keyCols))
+      mergeBitmap(Ingest.parquet(s, stored), deltaSketch, keyCols))
 
   /** In-place refresh of a STORED leaderboard ([[topkRollup]]
     * schema): read, [[mergeTopk]] the delta's top-k in, rewrite,
@@ -469,7 +469,7 @@ object Materialize {
       stored: String, deltaTopk: DataFrame, keyCol: String, ordCol: String,
       idCol: String, k: Int): Unit =
     rewriteSwap(spark, stored)(s =>
-      mergeTopk(s.read.parquet(stored), deltaTopk, keyCol, ordCol, idCol, k))
+      mergeTopk(Ingest.parquet(s, stored), deltaTopk, keyCol, ordCol, idCol, k))
 
   /** In-place [[maintainKeys]] against a STORED rollup — the
     * deployment shape of keyed CDC maintenance: untouched groups pass
@@ -486,7 +486,7 @@ object Materialize {
       metric: Column,
       affected: DataFrame): Unit =
     rewriteSwap(spark, stored)(s =>
-      maintainKeys(s.read.parquet(stored), factPost, keyCols, metric, affected))
+      maintainKeys(Ingest.parquet(s, stored), factPost, keyCols, metric, affected))
 
   /** Replace a stored table with `next` under the same
     * rewrite-then-swap discipline. `next` MAY read the table it

@@ -87,10 +87,6 @@ object Sink {
     }
   }
 
-  /** S5: read the sink back (dashboard load). */
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   /** S4 (bucketed variant): write as a bucketed catalog table —
     * rows pre-hash-partitioned AND sorted by the bucket keys into a
     * fixed number of files per partition. Two tables bucketed the

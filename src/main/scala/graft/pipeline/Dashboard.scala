@@ -17,6 +17,11 @@ object Dashboard {
   /** S5+S7: read the ETL sink back and cache before query fan-out
     * (app.py:28-33).
     *
+    * The read takes the schema of the sink's footer as it is now
+    * ([[Ingest.parquet]]: one footer read on the driver, no job), so a
+    * sink rewritten with another schema is read as written and a
+    * column the dashboard expects but no longer finds fails loudly.
+    *
     * A sink no larger than `spark.sql.autoBroadcastJoinThreshold` —
     * Spark's own "small enough to handle whole in one task" bound —
     * is cached as ONE partition. The cached scan then reports
@@ -28,7 +33,7 @@ object Dashboard {
     * keeps the scan's partitioning.
     */
   def load(spark: SparkSession, path: String): DataFrame = {
-    val df = Sink.readParquet(spark, path)
+    val df = Ingest.parquet(spark, path)
     val small = df.queryExecution.optimizedPlan.stats.sizeInBytes <=
       spark.sessionState.conf.autoBroadcastJoinThreshold
     Sink.cached(if (small) df.coalesce(1) else df)

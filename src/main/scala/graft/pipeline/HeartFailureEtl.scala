@@ -103,8 +103,9 @@ object HeartFailureEtl {
 
   /** Full pipeline: CSV extract (fail-fast on missing inputs, S3) →
     * transform → overwrite load (S4). The returned frame reads the
-    * sink back with the schema just written: the same files from the
-    * same process, so no footer-inference job is needed.
+    * sink back through [[Ingest.parquet]], which takes the schema from
+    * the footer just written, on the driver: the run starts two jobs,
+    * the broadcast build and the write.
     */
   def run(spark: SparkSession, readmissionsCsv: String, hospitalCsv: String,
       outPath: String): DataFrame = {
@@ -112,6 +113,6 @@ object HeartFailureEtl {
       Ingest.csvChecked(spark, readmissionsCsv, readmissionsSchema),
       Ingest.csvChecked(spark, hospitalCsv, hospitalInfoSchema))
     Sink.writeParquet(result, outPath)
-    spark.read.schema(result.schema).parquet(outPath)
+    Ingest.parquet(spark, outPath)
   }
 }

@@ -13,6 +13,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.DoubleType
 
+import graft.ops.Ingest
+
 /** One grouping key of a registered MV: its stored column name and
   * its defining expression in name-normalized canonical form.
   */
@@ -153,7 +155,7 @@ object MvCatalog {
     val keyDefs = keys.zipWithIndex.map { case ((_, n), i) =>
       MvKey(n, MvRewriteRule.nameNorm(defOf(s"__graft_mv_k$i")))
     }
-    val mvRel = spark.read.parquet(path).queryExecution.analyzed
+    val mvRel = Ingest.parquet(spark, path).queryExecution.analyzed
       .collectFirst { case l: LogicalRelation => l }
       .getOrElse(throw new IllegalStateException(s"MV '$name': $path is not a file scan"))
     defs.put(name, MvDef(
@@ -253,7 +255,7 @@ object MvCatalog {
     val keyDefs = keys.zipWithIndex.map { case ((_, n), i) =>
       MvKey(n, MvRewriteRule.nameNorm(defOf(s"__graft_mv_k$i")))
     }
-    val mvRel = spark.read.parquet(path).queryExecution.analyzed
+    val mvRel = Ingest.parquet(spark, path).queryExecution.analyzed
       .collectFirst { case l: LogicalRelation => l }
       .getOrElse(throw new IllegalStateException(s"MV '$name': $path is not a file scan"))
     defs.put(name, MvDef(
@@ -302,11 +304,11 @@ object MvCatalog {
     * additive, like reading one metastore database into a session.
     */
   def load(spark: SparkSession, path: String): Unit =
-    spark.read.parquet(path).collect().sortBy(_.getAs[String]("name")).foreach { r =>
+    Ingest.parquet(spark, path).collect().sortBy(_.getAs[String]("name")).foreach { r =>
       def strs(c: String): Seq[String] =
         r.getAs[scala.collection.Seq[String]](c).toSeq
       val name = r.getAs[String]("name")
-      val fact = spark.read.parquet(strs("fact_paths"): _*)
+      val fact = Ingest.parquet(spark, strs("fact_paths"): _*)
       val keys = strs("key_names")
         .zip(strs("key_sqls"))
         .map { case (n, sql) => expr(sql) -> n }
@@ -315,7 +317,7 @@ object MvCatalog {
       if (dims.isEmpty)
         register(spark, name, fact, keys.toSeq, metric, r.getAs[String]("mv_path"))
       else
-        registerJoined(spark, name, fact, spark.read.parquet(dims.toSeq: _*),
+        registerJoined(spark, name, fact, Ingest.parquet(spark, dims.toSeq: _*),
           expr(r.getAs[String]("fk_sql")), expr(r.getAs[String]("dk_sql")),
           keys.toSeq, metric, r.getAs[String]("mv_path"))
     }
@@ -438,7 +440,10 @@ object NdvCatalog {
     val keyDefs = keys.zipWithIndex.map { case ((_, n), i) =>
       MvKey(n, MvRewriteRule.nameNorm(defOf(s"__graft_ndv_k$i")))
     }
-    val mvRel = spark.read.parquet(path).queryExecution.analyzed
+    // one read of the artifact serves the stored relation and every
+    // validation below
+    val sketch = Ingest.parquet(spark, path)
+    val mvRel = sketch.queryExecution.analyzed
       .collectFirst { case l: LogicalRelation => l }
       .getOrElse(throw new IllegalStateException(s"NDV MV '$name': $path is not a file scan"))
     import org.apache.spark.sql.functions.{coalesce, countDistinct, lit, max, size}
@@ -456,7 +461,7 @@ object NdvCatalog {
     val factNdv = probe
       .groupBy(keyNames.map(col): _*)
       .agg(countDistinct(graft.ops.Materialize.ndvHash(col("__graft_ndv_id"))).as("d"))
-    val skSz = spark.read.parquet(path).select(
+    val skSz = sketch.select(
       keys.map(_._2).zip(keyNames).map { case (n, kn) => col(n).as(kn) } :+
         size(col("hs")).cast("long").as("sz"): _*)
     val cond = keyNames.map(kn => skSz(kn) <=> factNdv(kn)).reduce(_ && _)
@@ -468,7 +473,7 @@ object NdvCatalog {
     // on metastore load, so this fan-in is on s51/s53's hot path.
     val idNn = probe.select(col("__graft_ndv_id")).filter(col("__graft_ndv_id").isNotNull)
     val checks = graft.ops.Jobs.runConcurrently(spark, Seq[() => Any](
-      () => spark.read.parquet(path)
+      () => sketch
         .agg(max(size(col("hs"))).as("mx")).collect()(0) match {
         case r if r.isNullAt(0) => false // empty sketch: trivially complete
         case r => r.getInt(0) >= k
@@ -556,7 +561,8 @@ object NdvCatalog {
     val keyDefs = keys.zipWithIndex.map { case ((_, n), i) =>
       MvKey(n, MvRewriteRule.nameNorm(defOf(s"__graft_ndv_k$i")))
     }
-    val mvRel = spark.read.parquet(path).queryExecution.analyzed
+    val bitmaps = Ingest.parquet(spark, path)
+    val mvRel = bitmaps.queryExecution.analyzed
       .collectFirst { case l: LogicalRelation => l }
       .getOrElse(throw new IllegalStateException(s"NDV MV '$name': $path is not a file scan"))
     import org.apache.spark.sql.functions.{coalesce, countDistinct, lit}
@@ -564,7 +570,7 @@ object NdvCatalog {
     val factNdv = probe
       .groupBy(keyNames.map(col): _*)
       .agg(countDistinct(col("__graft_ndv_id")).as("d"))
-    val bmCard = spark.read.parquet(path).select(
+    val bmCard = bitmaps.select(
       keys.map(_._2).zip(keyNames).map { case (n, kn) => col(n).as(kn) } :+
         graft.ops.Materialize.bitmapCard(col("bm")).as("sz"): _*)
     val cond = keyNames.map(kn => bmCard(kn) <=> factNdv(kn)).reduce(_ && _)
@@ -604,10 +610,10 @@ object NdvCatalog {
     * validation scans again — that is the point, see [[save]].
     */
   def load(spark: SparkSession, path: String): Unit =
-    spark.read.parquet(path).collect().sortBy(_.getAs[String]("name")).foreach { r =>
+    Ingest.parquet(spark, path).collect().sortBy(_.getAs[String]("name")).foreach { r =>
       def strs(c: String): Seq[String] =
         r.getAs[scala.collection.Seq[String]](c).toSeq
-      val fact = spark.read.parquet(strs("fact_paths"): _*)
+      val fact = Ingest.parquet(spark, strs("fact_paths"): _*)
       val keys = strs("key_names").zip(strs("key_sqls"))
         .map { case (n, sql) => expr(sql) -> n }
       if (r.getAs[String]("kind") == "bitmap")

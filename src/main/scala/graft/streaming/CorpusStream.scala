@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ext.{MinHash, TextOps}
-import graft.ops.Sink
+import graft.ops.{Ingest, Sink}
 
 /** Streaming corpus ingestion with near-duplicate admission control —
   * the incremental form of the batch E2 dedup family: documents
@@ -70,7 +70,7 @@ object CorpusStream {
     // The admitted-so-far index: strictly-earlier batches only, so a
     // replayed batch never sees its own half-written partition.
     val index: Option[DataFrame] =
-      scala.util.Try(spark.read.parquet(indexPath)).toOption
+      scala.util.Try(Ingest.parquet(spark, indexPath)).toOption
         .map(_.filter(col("batch_id") < batchId))
 
     val vsIndex = index.map { idx =>

@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
 import graft.ParityQueries
-import graft.ops.Sink
+import graft.ops.{Ingest, Sink}
 
 /** The one drive lifecycle of the oracle-paired streaming rows: a file
   * source over a staged dir, the row's operator chain, a `foreachBatch`
@@ -101,7 +101,7 @@ object StreamDrive {
       query: Seq[DataFrame] => DataFrame): DataFrame = {
     val out = fresh(s"${row}_out")
     drive(s, row, ins, query, (b, id) => EventStream.writeBatchIdempotent(b, id, out))
-    s.read.parquet(out)
+    Ingest.parquet(s, out)
   }
 
   private def drive(

@@ -125,7 +125,7 @@ class OpsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_part").toString + "/t"
     val df = (1 to 100).map(i => (s"p${i % 4}", i)).toDF("part_key", "v")
     Sink.writeParquet(df, dir, partitionByCols = Seq("part_key"))
-    val back = Sink.readParquet(spark, dir).filter(col("part_key") === "p1")
+    val back = Ingest.parquet(spark, dir).filter(col("part_key") === "p1")
     assert(back.count() == 25)
     // the filter must reach the scan as a partition filter (pruned
     // read), not a post-scan predicate over all partitions
@@ -321,7 +321,7 @@ class OpsSpec extends SparkSpec {
     val dir = Sink.scratchDir("part_prune_test")
     val df = Seq(("a", 1), ("a", 2), ("b", 3), ("c", 4)).toDF("p", "v")
     Sink.writeParquet(df, dir, partitionByCols = Seq("p"))
-    val back = Sink.readParquet(spark, dir).filter(col("p") === "a")
+    val back = Ingest.parquet(spark, dir).filter(col("p") === "a")
     assert(back.select("v").as[Int].collect().sorted.toSeq == Seq(1, 2))
     // the filter must reach the scan as a PARTITION filter (directory
     // pruning), not a post-scan data filter
