@@ -2500,7 +2500,7 @@ object ExtQueries {
     try {
       // The ONE corpus-scale shuffle (link→edge aggregation) runs at
       // SESSION parallelism and materializes HERE; only the
-      // host-frame work runs under the small-state 8-partition window
+      // host-frame work runs on the small-state 8-partition profile
       // below (r18 ADVICE: wrapping the whole query capped the corpus
       // shuffle at 8 tasks too). The host set derives from the EDGE
       // frame, not the link frame — same set (edges are the grouped
@@ -2514,15 +2514,16 @@ object ExtQueries {
         val hosts = edges.select(col("src_host").as("host"))
           .unionByName(edges.select(col("dst_host").as("host"))).distinct()
         // host-frame rank rounds (≤ ~60 rows at the fixture's host
-        // count) under the small-state partition window — the
+        // count) on the small-state partition profile — the
         // e3_ivf_stream rationale: per-round job fan-out ∝
         // partitions, and the host graph is ≪ corpus by design.
         // pageRankWeighted returns an eager checkpoint, so the
         // caches release before this method returns.
-        ParityQueries.withConfs(s, Seq("spark.sql.shuffle.partitions" -> "8")) {
-          Dedup.pageRankWeighted(
-            hosts, "host", edges, "src_host", "dst_host", "w", PrIters)
-        }.select(col("id").as("host"), col("pr"))
+        val small = GraftSession.scoped(s, StreamDrive.StatePartitions)
+        Dedup.pageRankWeighted(
+          GraftSession.rebind(hosts, small), "host",
+          GraftSession.rebind(edges, small), "src_host", "dst_host", "w", PrIters)
+          .select(col("id").as("host"), col("pr"))
       } finally edges.unpersist(blocking = false)
     } finally links.unpersist(blocking = false)
   }
@@ -4889,9 +4890,9 @@ object ExtQueries {
     "e5_lid_saved" -> (e5LidSaved _),
     "e3_sq8_incremental" -> (e3Sq8Incremental _),
     "e3_pq_incremental" -> (e3PqIncremental _),
-    // runs under the drives' state-partition window
+    // runs on the drives' state-partition profile session
     "e3_ivf_stream" -> ((s: SparkSession, d: String) =>
-      StreamDrive.window(s)(e3IvfStream(s, d))),
+      e3IvfStream(GraftSession.scoped(s, StreamDrive.StatePartitions), d)),
     "e2_containment" -> (e2Containment _),
     "e2_knn_communities" -> (e2KnnCommunities _),
     "e3_kcenter" -> (e3Kcenter _),

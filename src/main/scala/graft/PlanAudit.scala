@@ -18,11 +18,11 @@ object PlanAudit {
         "e3_ann_bucketed", "e2_minhash_pairs", "pipeline_e2e", "o3_topk",
         "j5_asof_join", "e2_simhash_pairs", "e4_decode_stats",
         "o6_percentiles", "a11_histogram", "pipeline_topn",
-        // rewrite-tier rows execute inside their opt-in conf windows
+        // rewrite-tier rows are built on their opt-in profile sessions
         // and self-prove the rewritten plan shape with in-query
-        // requires — including them here DRIVES those proofs (the
-        // printed plan is the final artifact read); the last three are
-        // plain lazy plans whose shapes print directly
+        // requires — including them here DRIVES those proofs, and the
+        // printed plan is the rewritten plan Bench times; the last
+        // three are plain lazy plans whose shapes print directly
         "s30_mv_rewrite", "s41_mv_choose", "j18_join_elim",
         "j19_elim_then_mv", "s44_count_pushdown", "s45_distinct_elim",
         "e3_filtered_topk", "e7_priority_sample", "s42_topk_maintain",

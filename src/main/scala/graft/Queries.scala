@@ -3306,64 +3306,30 @@ object ParityQueries {
   // already prunes at the probe; the runtime filter exists precisely
   // for the shuffle-join regime a 100 TB fact side forces), and the
   // application-side size threshold is dropped to 0 because the toy
-  // fixture can't reach the 10 GiB production default. Confs are
-  // restored after the join MATERIALIZES into scratch (the roundtrip
-  // makes the plan execute under the intended confs — a lazily
-  // returned frame would re-optimize after restore); PlanGuardSpec
-  // asserts the executed plan carries the bloom probe. The oracle is
-  // the plain join — Bloom false positives only forward extra rows to
-  // the exact join, never change the result.
-  /** The join body of [[j14BloomJoin]], exposed so PlanGuardSpec can
-    * assert the bloom probe on the exact registered shape (the
-    * registered query returns a scratch read-back, which hides the
-    * executed join plan).
-    */
-  private[graft] def j14JoinPlan(s: SparkSession, dir: String): DataFrame = {
-    val dim = Tables.orders(s, dir)
-      .filter(col("o_orderpriority") === "1-URGENT")
-      .select(col("o_orderkey"), col("o_custkey"))
-    Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_extendedprice"))
-      .join(dim, col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_custkey"))
-      .agg(count(lit(1)).as("n_items"),
-        sum(floor(col("l_extendedprice") * 100)).cast("long").as("cents"))
-  }
+  // fixture can't reach the 10 GiB production default. The frame is
+  // built on the j14 profile session, so it executes under these confs
+  // wherever it runs; PlanGuardSpec asserts its executed plan carries
+  // the bloom probe. The oracle is the plain join — Bloom false
+  // positives only forward extra rows to the exact join, never change
+  // the result.
 
-  private[graft] val j14Confs = Seq(
+  private val j14Confs = Seq(
     "spark.sql.autoBroadcastJoinThreshold" -> "-1",
     "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
     "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
     "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0")
 
-  /** Run `body` with `confs` set, restoring the prior values after.
-    * The prior values come from `getAll` (explicitly set keys only):
-    * a key unset before the window is unset again after it, never
-    * pinned to its default.
-    *
-    * NOT concurrency-isolated: the confs mutate the SHARED session,
-    * so any query planned on the same SparkSession during the window
-    * would silently pick them up (e.g. j14's disabled broadcast).
-    * Fine under the single-threaded Verify/Bench harnesses this repo
-    * drives; a concurrent caller must pass `s.newSession()` (shares
-    * the SparkContext, isolates the conf) instead.
-    */
-  private[graft] def withConfs[T](
-      s: SparkSession, confs: Seq[(String, String)])(body: => T): T = {
-    val saved = s.conf.getAll
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally confs.foreach { case (k, _) =>
-      saved.get(k).fold(s.conf.unset(k))(s.conf.set(k, _))
-    }
-  }
-
   def j14BloomJoin(s: SparkSession, dir: String): DataFrame = {
-    val out = Sink.scratchDir(s"bloom_join_${math.abs(dir.hashCode)}")
-    withConfs(s, j14Confs) {
-      j14JoinPlan(s, dir).write.mode("overwrite").parquet(out)
-    }
-    Ingest.parquet(s, out)
+    val ps = GraftSession.scoped(s, j14Confs)
+    val dim = Tables.orders(ps, dir)
+      .filter(col("o_orderpriority") === "1-URGENT")
+      .select(col("o_orderkey"), col("o_custkey"))
+    Tables.lineitem(ps, dir)
+      .select(col("l_orderkey"), col("l_extendedprice"))
+      .join(dim, col("l_orderkey") === col("o_orderkey"))
+      .groupBy(col("o_custkey"))
+      .agg(count(lit(1)).as("n_items"),
+        sum(floor(col("l_extendedprice") * 100)).cast("long").as("cents"))
   }
 
   // ---- J17: AQE skew-join split (runtime re-plan) ---------------------------
@@ -3379,7 +3345,7 @@ object ParityQueries {
   // AQEShuffleRead nodes; the oracle is the plain join semantics —
   // partition splitting replays the other side's matching partition,
   // never changes the result.
-  private[graft] val j17Confs = Seq(
+  private val j17Confs = Seq(
     "spark.sql.adaptive.enabled" -> "true",
     "spark.sql.adaptive.skewJoin.enabled" -> "true",
     "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.0",
@@ -3396,10 +3362,10 @@ object ParityQueries {
     "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
     "spark.sql.autoBroadcastJoinThreshold" -> "-1",
     "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-  private[graft] def j17JoinPlan(s: SparkSession, dir: String): DataFrame = {
-    // Both join inputs are STAGED as scratch tables first (build-once
-    // per JVM), for two structural reasons the toy fixture would
-    // otherwise hide: (a) skew splitting regroups MAP-side shuffle
+  def j17AqeSkew(s: SparkSession, dir: String): DataFrame = {
+    // Both join inputs are STAGED as a standing artifact first (built
+    // once per JVM and dir), for two structural reasons the toy
+    // fixture would otherwise hide: (a) skew splitting regroups MAP-side shuffle
     // blocks, so a reduce partition fed by a single map task — all a
     // one-file parquet scan produces — can never split regardless of
     // size (the fact stage writes 16 files to emulate a production
@@ -3408,31 +3374,23 @@ object ParityQueries {
     // aggregate between them (the dim built in-query) opts the join
     // out, so the dim is materialized and re-scanned, which is what a
     // real pipeline's dimension table is anyway.
-    val staged = Sink.scratchDir(s"aqe_skew_${math.abs(dir.hashCode)}")
-    val factP = s"$staged/fact"; val dimP = s"$staged/dim"
-    if (!new java.io.File(factP).exists()) {
+    val staged = Sink.standing("aqe_skew_stage", dir) { p =>
       val f0 = Tables.lineitem(s, dir)
         .select(col("l_returnflag"), col("l_linestatus"),
           floor(col("l_extendedprice") * 100).cast("long").as("cents"))
-      f0.repartition(16).write.mode("overwrite").parquet(factP)
+      f0.repartition(16).write.mode("overwrite").parquet(s"$p/fact")
       f0.groupBy(col("l_returnflag"))
         .agg(sum(col("cents")).as("flag_cents"))
-        .write.mode("overwrite").parquet(dimP)
+        .write.mode("overwrite").parquet(s"$p/dim")
     }
-    val f = Ingest.parquet(s, factP)
-    val d = Ingest.parquet(s, dimP)
+    val ps = GraftSession.scoped(s, j17Confs)
+    val f = Ingest.parquet(ps, s"$staged/fact")
+    val d = Ingest.parquet(ps, s"$staged/dim")
     f.join(d, Seq("l_returnflag"))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(count(lit(1)).as("n"),
         sum(col("cents")).as("cents"),
         max(col("flag_cents")).as("flag_cents"))
-  }
-  def j17AqeSkew(s: SparkSession, dir: String): DataFrame = {
-    val out = Sink.scratchDir(s"aqe_skew_${math.abs(dir.hashCode)}")
-    withConfs(s, j17Confs) {
-      j17JoinPlan(s, dir).write.mode("overwrite").parquet(out)
-    }
-    Ingest.parquet(s, out)
   }
   val j17Sql =
     """WITH f AS (SELECT l_returnflag, l_linestatus,
@@ -3451,7 +3409,7 @@ object ParityQueries {
   // COMPUTE STATISTICS FOR ALL COLUMNS` — row counts + per-column
   // NDV/min/max/null counts on catalog tables) and letting the
   // cost-based optimizer CONSUME them: with CBO + join reorder
-  // enabled in a pinned-conf window (the j14 recipe), a 3-way join
+  // enabled in its profile session (the j14 recipe), a 3-way join
   // written worst-first — the two fact-sized tables joined before
   // the 1-row-selective nation filter — is re-ordered by estimated
   // cost so the selective dimension applies first. PlanGuardSpec
@@ -3460,10 +3418,15 @@ object ParityQueries {
   // the warehouse catalog; the result itself is plain SQL, so the
   // oracle checks values while the plan guard checks planning.
   private[graft] def j16Tables(s: SparkSession, dir: String): (String, String, String) = {
-    // PID-qualified + build-once-per-JVM, the s18 catalog recipe
-    val tag = s"${math.abs(dir.hashCode)}_${ProcessHandle.current.pid}"
-    val (ot, ct, nt) = (s"cbo_ord_$tag", s"cbo_cust_$tag", s"cbo_nat_$tag")
-    if (!s.catalog.tableExists(ot)) {
+    // A standing artifact: built once per (JVM, dir). The table names
+    // carry its scratch name, so two dirs never share tables and two
+    // concurrent runners never drop each other's warehouse dirs.
+    def names(p: String) = {
+      val tag = new java.io.File(p).getName
+      (s"${tag}_ord", s"${tag}_cust", s"${tag}_nat")
+    }
+    names(Sink.standing("cbo_stats", dir) { p =>
+      val (ot, ct, nt) = names(p)
       val wh = s.conf.get("spark.sql.warehouse.dir")
       Seq(ot, ct, nt).foreach { t =>
         s.sql(s"DROP TABLE IF EXISTS $t")
@@ -3479,8 +3442,7 @@ object ParityQueries {
         .write.mode("overwrite").format("parquet").saveAsTable(nt)
       Seq(ot, ct, nt).foreach(t =>
         s.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS FOR ALL COLUMNS"))
-    }
-    (ot, ct, nt)
+    })
   }
   private[graft] val j16Confs = Seq(
     "spark.sql.cbo.enabled" -> "true",
@@ -3498,13 +3460,8 @@ object ParityQueries {
       .agg(count(lit(1)).as("n_orders"),
         sum(floor(col("o_totalprice") * 100).cast("long")).as("cents"))
   }
-  def j16CboReorder(s: SparkSession, dir: String): DataFrame = {
-    val out = Sink.scratchDir(s"cbo_reorder_${math.abs(dir.hashCode)}")
-    withConfs(s, j16Confs) {
-      j16JoinPlan(s, dir).write.mode("overwrite").parquet(out)
-    }
-    Ingest.parquet(s, out)
-  }
+  def j16CboReorder(s: SparkSession, dir: String): DataFrame =
+    j16JoinPlan(GraftSession.scoped(s, j16Confs), dir)
   val j16Sql =
     """SELECT n_name, CAST(count(*) AS BIGINT) AS n_orders,
       |  CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
@@ -3528,6 +3485,25 @@ object ParityQueries {
   // made bit-exact. At 100 TB: the largest shuffle in the plan is
   // deleted outright. The registered FK is a standing artifact shared
   // with j19 and j21.
+  /** The conf profiles of the rewrite tier: each rule is injected
+    * everywhere but fires only in a session that opts in.
+    */
+  private val FkElim = Seq(graft.plans.JoinEliminationRule.EnabledKey -> "true")
+  private val MvRewrite = Seq(graft.plans.MvRewriteRule.EnabledKey -> "true")
+  /** `q`, once its optimized plan is proven rewritten: it scans a path
+    * containing each of `reads` and none containing any of `gone`. A
+    * silently dead rewrite errs the row instead of quietly re-scanning
+    * the base tables; scan locations are checked structurally (a
+    * Relation's toString omits its path).
+    */
+  private def provenRewrite(q: DataFrame, reads: Seq[String], gone: Seq[String]): DataFrame = {
+    val scans = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
+    require(reads.forall(r => scans.exists(_.contains(r))),
+      s"the rewrite did not reach ${reads.mkString(" and ")}; plan scans: $scans")
+    require(!scans.exists(p => gone.exists(p.contains)),
+      s"the rewrite left a scan of ${gone.mkString(" or ")}; plan scans: $scans")
+    q
+  }
   private def ordersCustomerFk(s: SparkSession, dir: String): Unit = {
     Sink.standing("orders_customer_fk", dir) { p =>
       graft.plans.FkCatalog.register(
@@ -3539,20 +3515,12 @@ object ParityQueries {
   }
   def j18JoinElim(s: SparkSession, dir: String): DataFrame = {
     ordersCustomerFk(s, dir)
-    val out = Sink.scratchDir(s"join_elim_${math.abs(dir.hashCode)}")
-    withConfs(s, Seq(graft.plans.JoinEliminationRule.EnabledKey -> "true")) {
-      val q = Tables.orders(s, dir)
-        .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_orders"), sum(s30Cents).as("sum_cents"))
-      val scans = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
-      require(!scans.exists(_.contains("customer.parquet")),
-        s"join elimination left the parent scan in the plan; scans: $scans")
-      require(scans.exists(_.contains("orders.parquet")),
-        s"join elimination removed the wrong side; scans: $scans")
-      q.write.mode("overwrite").parquet(out)
-    }
-    Ingest.parquet(s, out)
+    val ps = GraftSession.scoped(s, FkElim)
+    val q = Tables.orders(ps, dir)
+      .join(Tables.customer(ps, dir), col("o_custkey") === col("c_custkey"))
+      .groupBy(col("o_orderpriority"))
+      .agg(count(lit(1)).as("n_orders"), sum(s30Cents).as("sum_cents"))
+    provenRewrite(q, reads = Seq("orders.parquet"), gone = Seq("customer.parquet"))
   }
   val j18Sql =
     """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
@@ -3580,22 +3548,14 @@ object ParityQueries {
         Tables.customer(s, dir), col("c_nationkey"),
         Tables.nation(s, dir), col("n_nationkey"))
     }
-    val out = Sink.scratchDir(s"chain_elim_${math.abs(dir.hashCode)}")
-    withConfs(s, Seq(graft.plans.JoinEliminationRule.EnabledKey -> "true")) {
-      val q = Tables.orders(s, dir)
-        .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .join(Tables.nation(s, dir), col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_orders"), sum(s30Cents).as("sum_cents"))
-      val scans = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
-      require(!scans.exists(p =>
-        p.contains("customer.parquet") || p.contains("nation.parquet")),
-        s"a dim scan survived the chain elimination; scans: $scans")
-      require(scans.exists(_.contains("orders.parquet")),
-        s"chain elimination removed the fact side; scans: $scans")
-      q.write.mode("overwrite").parquet(out)
-    }
-    Ingest.parquet(s, out)
+    val ps = GraftSession.scoped(s, FkElim)
+    val q = Tables.orders(ps, dir)
+      .join(Tables.customer(ps, dir), col("o_custkey") === col("c_custkey"))
+      .join(Tables.nation(ps, dir), col("c_nationkey") === col("n_nationkey"))
+      .groupBy(col("o_orderpriority"))
+      .agg(count(lit(1)).as("n_orders"), sum(s30Cents).as("sum_cents"))
+    provenRewrite(q, reads = Seq("orders.parquet"),
+      gone = Seq("customer.parquet", "nation.parquet"))
   }
   val j21Sql =
     """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
@@ -3800,21 +3760,13 @@ object ParityQueries {
   // oracle runs the real LEFT JOIN.
   def j20LeftElim(s: SparkSession, dir: String): DataFrame = {
     customerPk(s, dir)
-    val out = Sink.scratchDir(s"left_elim_${math.abs(dir.hashCode)}")
-    withConfs(s, Seq(graft.plans.JoinEliminationRule.EnabledKey -> "true")) {
-      val q = Tables.orders(s, dir)
-        .join(Tables.customer(s, dir),
-          col("o_custkey") === col("c_custkey"), "left")
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_orders"), sum(s30Cents).as("sum_cents"))
-      val scans = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
-      require(!scans.exists(_.contains("customer.parquet")),
-        s"left-join elimination left the parent scan; scans: $scans")
-      require(scans.exists(_.contains("orders.parquet")),
-        s"left-join elimination removed the wrong side; scans: $scans")
-      q.write.mode("overwrite").parquet(out)
-    }
-    Ingest.parquet(s, out)
+    val ps = GraftSession.scoped(s, FkElim)
+    val q = Tables.orders(ps, dir)
+      .join(Tables.customer(ps, dir),
+        col("o_custkey") === col("c_custkey"), "left")
+      .groupBy(col("o_orderpriority"))
+      .agg(count(lit(1)).as("n_orders"), sum(s30Cents).as("sum_cents"))
+    provenRewrite(q, reads = Seq("orders.parquet"), gone = Seq("customer.parquet"))
   }
   val j20Sql =
     """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
@@ -3832,24 +3784,21 @@ object ParityQueries {
   // actually holds.
   def s48CountDistinctElim(s: SparkSession, dir: String): DataFrame = {
     customerPk(s, dir)
-    val out = Sink.scratchDir(s"cd_elim_${math.abs(dir.hashCode)}")
-    withConfs(s, Seq(graft.plans.JoinEliminationRule.EnabledKey -> "true")) {
-      val q = Tables.customer(s, dir)
-        .groupBy(col("c_nationkey"))
-        .agg(count_distinct(col("c_custkey")).as("n_cust"),
-          count(lit(1)).as("n_rows"))
-      val distincts = q.queryExecution.optimizedPlan.collect {
-        case ag: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
-          ag.aggregateExpressions.flatMap(_.collect {
-            case ae: org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
-                if ae.isDistinct => ae
-          })
-      }.flatten
-      require(distincts.isEmpty,
-        s"count(DISTINCT pk) kept its distinct aggregation: $distincts")
-      q.write.mode("overwrite").parquet(out)
-    }
-    Ingest.parquet(s, out)
+    val ps = GraftSession.scoped(s, FkElim)
+    val q = Tables.customer(ps, dir)
+      .groupBy(col("c_nationkey"))
+      .agg(count_distinct(col("c_custkey")).as("n_cust"),
+        count(lit(1)).as("n_rows"))
+    val distincts = q.queryExecution.optimizedPlan.collect {
+      case ag: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
+        ag.aggregateExpressions.flatMap(_.collect {
+          case ae: org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+              if ae.isDistinct => ae
+        })
+    }.flatten
+    require(distincts.isEmpty,
+      s"count(DISTINCT pk) kept its distinct aggregation: $distincts")
+    q
   }
   val s48Sql =
     """SELECT c_nationkey, CAST(count(DISTINCT c_custkey) AS BIGINT) AS n_cust,
@@ -3870,24 +3819,13 @@ object ParityQueries {
   def j19ElimThenMv(s: SparkSession, dir: String): DataFrame = {
     ordersCustomerFk(s, dir)
     s30MvDir(s, dir)
-    val out = Sink.scratchDir(s"elim_mv_${math.abs(dir.hashCode)}")
-    withConfs(s, Seq(
-      graft.plans.JoinEliminationRule.EnabledKey -> "true",
-      graft.plans.MvRewriteRule.EnabledKey -> "true")) {
-      val q = Tables.orders(s, dir)
-        .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("o_custkey"))
-        .agg(count(lit(1)).as("n_orders"), sum(s30Cents).as("sum_cents"),
-          min(s30Cents).as("min_cents"), max(s30Cents).as("max_cents"))
-      val scans = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
-      require(scans.exists(_.contains("mv_orders")),
-        s"elimination + MV rewrite did not reach the rollup; plan scans: $scans")
-      require(!scans.exists(p =>
-        p.contains("orders.parquet") || p.contains("customer.parquet")),
-        s"a base scan survived the two-step collapse; scans: $scans")
-      q.write.mode("overwrite").parquet(out)
-    }
-    Ingest.parquet(s, out)
+    val ps = GraftSession.scoped(s, FkElim ++ MvRewrite)
+    val q = Tables.orders(ps, dir)
+      .join(Tables.customer(ps, dir), col("o_custkey") === col("c_custkey"))
+      .groupBy(col("o_custkey"))
+      .agg(count(lit(1)).as("n_orders"), sum(s30Cents).as("sum_cents"),
+        min(s30Cents).as("min_cents"), max(s30Cents).as("max_cents"))
+    provenRewrite(q, reads = Seq("mv_orders"), gone = Seq("orders.parquet", "customer.parquet"))
   }
   val j19Sql =
     """SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders,
@@ -3949,40 +3887,24 @@ object ParityQueries {
       col("o_custkey"), S51K, base + "/mv")
     graft.plans.NdvCatalog.save(s, base + "/catalog")
     graft.plans.NdvCatalog.unregister(name)
-    def q = Tables.orders(s, dir)
+    val ps = GraftSession.scoped(s, MvRewrite)
+    def q = Tables.orders(ps, dir)
       .groupBy(date_trunc("QUARTER", col("o_orderdate")).as("quarter"))
       .agg(count_distinct(col("o_custkey")).as("n_cust"))
-    val out = Sink.scratchDir(s"ndv_meta_out_${math.abs(dir.hashCode)}")
-    withConfs(s, Seq(graft.plans.MvRewriteRule.EnabledKey -> "true")) {
-      val pre = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
-      require(pre.exists(_.contains("orders.parquet")),
-        s"NDV definition still live after unregister; plan scans: $pre")
-      graft.plans.NdvCatalog.load(s, base + "/catalog")
-      val post = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
-      require(post.exists(_.contains("ndv_meta")),
-        s"loaded NDV definition did not rewrite; plan scans: $post")
-      require(!post.exists(_.contains("orders.parquet")),
-        s"loaded NDV rewrite left a fact scan; scans: $post")
-      q.write.mode("overwrite").parquet(out)
-    }
-    Ingest.parquet(s, out)
+    val pre = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
+    require(pre.exists(_.contains("orders.parquet")),
+      s"NDV definition still live after unregister; plan scans: $pre")
+    graft.plans.NdvCatalog.load(ps, base + "/catalog")
+    provenRewrite(q, reads = Seq("ndv_meta"), gone = Seq("orders.parquet"))
   }
 
   def s50NdvRewrite(s: SparkSession, dir: String): DataFrame = {
     s50NdvDir(s, dir)
-    val out = Sink.scratchDir(s"ndv_rewrite_${math.abs(dir.hashCode)}")
-    withConfs(s, Seq(graft.plans.MvRewriteRule.EnabledKey -> "true")) {
-      val q = Tables.orders(s, dir)
-        .groupBy(date_trunc("MONTH", col("o_orderdate")).as("month"))
-        .agg(count_distinct(col("o_custkey")).as("n_cust"))
-      val scans = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
-      require(scans.exists(_.contains("ndv_mv")),
-        s"count-DISTINCT rewrite did not reach the NDV sketch; scans: $scans")
-      require(!scans.exists(_.contains("orders.parquet")),
-        s"the fact scan survived the count-DISTINCT rewrite; scans: $scans")
-      q.write.mode("overwrite").parquet(out)
-    }
-    Ingest.parquet(s, out)
+    val ps = GraftSession.scoped(s, MvRewrite)
+    val q = Tables.orders(ps, dir)
+      .groupBy(date_trunc("MONTH", col("o_orderdate")).as("month"))
+      .agg(count_distinct(col("o_custkey")).as("n_cust"))
+    provenRewrite(q, reads = Seq("ndv_mv"), gone = Seq("orders.parquet"))
   }
   val s50Sql =
     """SELECT date_trunc('month', o_orderdate) AS month,
@@ -4045,7 +3967,8 @@ object ParityQueries {
   // argument: the artifact stores the ids themselves.
   def s53BitmapRewrite(s: SparkSession, dir: String): DataFrame = {
     val base = Sink.scratchDir(s"s53_bm_${math.abs(dir.hashCode)}")
-    val fact = Tables.orders(s, dir)
+    val ps = GraftSession.scoped(s, MvRewrite)
+    val fact = Tables.orders(ps, dir)
     val keys = Seq(col("o_orderpriority") -> "prio")
     def q = fact
       .groupBy(col("o_orderpriority").as("prio"))
@@ -4057,35 +3980,35 @@ object ParityQueries {
     // archive) would rewrite the probe and make the gate throw on its
     // own leftovers. try/finally makes the gate idempotent — a
     // registry-wide run-twice regression test (IdempotenceSpec) holds
-    // the whole rewrite-gate class to this.
-    withConfs(s, Seq(graft.plans.MvRewriteRule.EnabledKey -> "true")) {
-      try {
-        // KMV at k=64 SATURATES on this grain: registration's validation
-        // refuses exactness and the rewrite must leave the fact scan alone
-        graft.plans.NdvCatalog.create(
-          s, s"s53_kmv_${math.abs(dir.hashCode)}", fact, keys,
-          col("o_custkey"), 64, base + "/kmv")
-        val kmvScans = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
-        require(kmvScans.exists(_.contains("orders.parquet")),
-          s"saturated KMV definition must NOT rewrite; plan scans: $kmvScans")
-        graft.plans.NdvCatalog.unregister(s"s53_kmv_${math.abs(dir.hashCode)}")
-        // the bitmap artifact has no saturation concept: same fact, same
-        // grain, rewrite fires and the fact scan disappears
-        graft.plans.NdvCatalog.createBitmap(
-          s, s"s53_bm_${math.abs(dir.hashCode)}", fact, keys,
-          col("o_custkey"), base + "/bm")
-        val scans = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
-        require(scans.exists(_.contains("s53_bm")),
-          s"count-DISTINCT rewrite did not reach the bitmap artifact; scans: $scans")
-        require(!scans.exists(_.contains("orders.parquet")),
-          s"the fact scan survived the bitmap count-DISTINCT rewrite; scans: $scans")
-        val out = Sink.scratchDir(s"s53_out_${math.abs(dir.hashCode)}")
-        q.write.mode("overwrite").parquet(out)
-        Ingest.parquet(s, out)
-      } finally {
-        graft.plans.NdvCatalog.unregister(s"s53_kmv_${math.abs(dir.hashCode)}")
-        graft.plans.NdvCatalog.unregister(s"s53_bm_${math.abs(dir.hashCode)}")
-      }
+    // the whole rewrite-gate class to this. So this rewrite row keeps
+    // its write: its definitions are gone once it returns, and a
+    // returned lazy frame would re-plan against the fact scan.
+    try {
+      // KMV at k=64 SATURATES on this grain: registration's validation
+      // refuses exactness and the rewrite must leave the fact scan alone
+      graft.plans.NdvCatalog.create(
+        ps, s"s53_kmv_${math.abs(dir.hashCode)}", fact, keys,
+        col("o_custkey"), 64, base + "/kmv")
+      val kmvScans = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
+      require(kmvScans.exists(_.contains("orders.parquet")),
+        s"saturated KMV definition must NOT rewrite; plan scans: $kmvScans")
+      graft.plans.NdvCatalog.unregister(s"s53_kmv_${math.abs(dir.hashCode)}")
+      // the bitmap artifact has no saturation concept: same fact, same
+      // grain, rewrite fires and the fact scan disappears
+      graft.plans.NdvCatalog.createBitmap(
+        ps, s"s53_bm_${math.abs(dir.hashCode)}", fact, keys,
+        col("o_custkey"), base + "/bm")
+      val scans = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
+      require(scans.exists(_.contains("s53_bm")),
+        s"count-DISTINCT rewrite did not reach the bitmap artifact; scans: $scans")
+      require(!scans.exists(_.contains("orders.parquet")),
+        s"the fact scan survived the bitmap count-DISTINCT rewrite; scans: $scans")
+      val out = Sink.scratchDir(s"s53_out_${math.abs(dir.hashCode)}")
+      q.write.mode("overwrite").parquet(out)
+      Ingest.parquet(s, out)
+    } finally {
+      graft.plans.NdvCatalog.unregister(s"s53_kmv_${math.abs(dir.hashCode)}")
+      graft.plans.NdvCatalog.unregister(s"s53_bm_${math.abs(dir.hashCode)}")
     }
   }
   val s53Sql =
@@ -4159,20 +4082,13 @@ object ParityQueries {
       Seq(date_trunc("MONTH", col("o_orderdate")) -> "month",
         col("o_orderpriority") -> "prio"),
       col("o_custkey"), base + "/bm")
-    withConfs(s, Seq(graft.plans.MvRewriteRule.EnabledKey -> "true")) {
-      val q = fact.groupBy(col("o_orderpriority").as("prio"))
-        .agg(count_distinct(col("o_custkey")).as("n_cust"))
-      val scans = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
-      require(scans.exists(_.contains("/bm")) && !scans.exists(_.contains("/fact")),
-        s"coarsened count-DISTINCT did not ride the bitmap lattice; scans: $scans")
-      val g = fact.agg(count_distinct(col("o_custkey")).as("n_total"))
-      val gScans = graft.plans.MvRewriteRule.scanPaths(g.queryExecution.optimizedPlan)
-      require(gScans.exists(_.contains("/bm")) && !gScans.exists(_.contains("/fact")),
-        s"the GLOBAL count-DISTINCT (lattice bottom) kept the fact scan: $gScans")
-      val out = Sink.scratchDir(s"s55_out_${math.abs(dir.hashCode)}")
-      q.crossJoin(g).write.mode("overwrite").parquet(out)
-      Ingest.parquet(s, out)
-    }
+    val rewritten = GraftSession.rebind(fact, GraftSession.scoped(s, MvRewrite))
+    // the per-priority tile and the GLOBAL count (lattice bottom) both
+    // ride the bitmap lattice
+    def lattice(q: DataFrame) = provenRewrite(q, reads = Seq("/bm"), gone = Seq("/fact"))
+    lattice(rewritten.groupBy(col("o_orderpriority").as("prio"))
+      .agg(count_distinct(col("o_custkey")).as("n_cust")))
+      .crossJoin(lattice(rewritten.agg(count_distinct(col("o_custkey")).as("n_total"))))
   }
   val s55Sql =
     """SELECT o_orderpriority AS prio,
@@ -4203,21 +4119,18 @@ object ParityQueries {
         s, Sink.artifactName(p),
         Tables.customer(s, dir), col("c_custkey"), validate = true, nonNull = true)
     }
-    val out = Sink.scratchDir(s"fd_prune_${math.abs(dir.hashCode)}")
-    withConfs(s, Seq(graft.plans.JoinEliminationRule.EnabledKey -> "true")) {
-      val q = Tables.orders(s, dir)
-        .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-        .agg(count(lit(1)).as("n_orders"), sum(s30Cents).as("sum_cents"))
-      val aggs = q.queryExecution.optimizedPlan.collect {
-        case ag: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
-          ag.groupingExpressions.length
-      }
-      require(aggs.nonEmpty && aggs.forall(_ == 1),
-        s"FD prune did not narrow the grouping to the key; grouping arities: $aggs")
-      q.write.mode("overwrite").parquet(out)
+    val ps = GraftSession.scoped(s, FkElim)
+    val q = Tables.orders(ps, dir)
+      .join(Tables.customer(ps, dir), col("o_custkey") === col("c_custkey"))
+      .groupBy(col("c_custkey"), col("c_name"), col("c_mktsegment"))
+      .agg(count(lit(1)).as("n_orders"), sum(s30Cents).as("sum_cents"))
+    val aggs = q.queryExecution.optimizedPlan.collect {
+      case ag: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
+        ag.groupingExpressions.length
     }
-    Ingest.parquet(s, out)
+    require(aggs.nonEmpty && aggs.forall(_ == 1),
+      s"FD prune did not narrow the grouping to the key; grouping arities: $aggs")
+    q
   }
   val s54Sql =
     """SELECT c_custkey, c_name, c_mktsegment,
@@ -4336,19 +4249,16 @@ object ParityQueries {
   }
   def s45DistinctElim(s: SparkSession, dir: String): DataFrame = {
     customerPk(s, dir)
-    val out = Sink.scratchDir(s"distinct_elim_${math.abs(dir.hashCode)}")
-    withConfs(s, Seq(graft.plans.JoinEliminationRule.EnabledKey -> "true")) {
-      val q = Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal"))
-        .dropDuplicates("c_custkey")
-      val aggs = q.queryExecution.optimizedPlan.collect {
-        case ag: org.apache.spark.sql.catalyst.plans.logical.Aggregate => ag
-      }
-      require(aggs.isEmpty,
-        s"distinct elimination left an aggregate in the plan:\n${q.queryExecution.optimizedPlan}")
-      q.write.mode("overwrite").parquet(out)
+    val ps = GraftSession.scoped(s, FkElim)
+    val q = Tables.customer(ps, dir)
+      .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal"))
+      .dropDuplicates("c_custkey")
+    val aggs = q.queryExecution.optimizedPlan.collect {
+      case ag: org.apache.spark.sql.catalyst.plans.logical.Aggregate => ag
     }
-    Ingest.parquet(s, out)
+    require(aggs.isEmpty,
+      s"distinct elimination left an aggregate in the plan:\n${q.queryExecution.optimizedPlan}")
+    q
   }
   val s45Sql =
     "SELECT c_custkey, c_nationkey, c_acctbal FROM customer"
@@ -4367,20 +4277,17 @@ object ParityQueries {
   // the oracle recomputes from rows, so a stale/wrong footer would
   // diverge.
   def s44CountPushdown(s: SparkSession, dir: String): DataFrame = {
-    val out = Sink.scratchDir(s"agg_pushdown_${math.abs(dir.hashCode)}")
-    withConfs(s, Seq(
+    val ps = GraftSession.scoped(s, Seq(
       "spark.sql.parquet.aggregatePushdown" -> "true",
-      "spark.sql.sources.useV1SourceList" -> "")) {
-      val q = Ingest.parquet(s, s"$dir/orders.parquet")
-        .agg(count(lit(1)).as("n_orders"),
-          min(col("o_orderkey")).as("min_key"),
-          max(col("o_orderkey")).as("max_key"))
-      val plan = q.queryExecution.executedPlan.toString
-      require(plan.contains("PushedAggregation: [COUNT(*)"),
-        s"aggregate was not pushed to the parquet scan:\n$plan")
-      q.write.mode("overwrite").parquet(out)
-    }
-    Ingest.parquet(s, out)
+      "spark.sql.sources.useV1SourceList" -> ""))
+    val q = Ingest.parquet(ps, s"$dir/orders.parquet")
+      .agg(count(lit(1)).as("n_orders"),
+        min(col("o_orderkey")).as("min_key"),
+        max(col("o_orderkey")).as("max_key"))
+    val plan = q.queryExecution.executedPlan.toString
+    require(plan.contains("PushedAggregation: [COUNT(*)"),
+      s"aggregate was not pushed to the parquet scan:\n$plan")
+    q
   }
   val s44Sql =
     """SELECT CAST(count(*) AS BIGINT) AS n_orders,
@@ -4425,26 +4332,11 @@ object ParityQueries {
 
   def s30MvRewrite(s: SparkSession, dir: String): DataFrame = {
     s30MvDir(s, dir)
-    val out = Sink.scratchDir(s"mv_rewrite_${math.abs(dir.hashCode)}")
-    // The j14/j16 recipe: EXECUTE inside the conf window. Returning the
-    // lazy frame instead would let the runner's own .write build a
-    // fresh QueryExecution after the window closed — correct values,
-    // but through the fact scan, and the gate would no longer exercise
-    // the rewritten plan end-to-end.
-    withConfs(s, Seq(graft.plans.MvRewriteRule.EnabledKey -> "true")) {
-      val q = s30UserQuery(s, dir)
-      // Make the gate row itself prove the substitution fired: a
-      // silently-dead rewrite must err the row, not quietly re-scan
-      // the fact table. Scan locations are checked structurally — a
-      // Relation's toString omits its path.
-      val scans = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
-      require(scans.exists(_.contains("mv_orders")),
-        s"MV rewrite did not fire; plan scans: $scans")
-      require(!scans.exists(_.contains("orders.parquet")),
-        s"MV rewrite left a fact scan in the plan; scans: $scans")
-      q.write.mode("overwrite").parquet(out)
-    }
-    Ingest.parquet(s, out)
+    // The j14/j16 recipe: the frame is built on the rewrite profile's
+    // session, so the runner's own action re-optimizes it with the
+    // rewrite on and executes the rewritten plan end to end.
+    val q = s30UserQuery(GraftSession.scoped(s, MvRewrite), dir)
+    provenRewrite(q, reads = Seq("mv_orders"), gone = Seq("orders.parquet"))
   }
   // ---- S31: incremental refresh ⊕ MV rewrite, end-to-end --------------------
   // s19 proves the rollup refreshes in O(delta); s30 proves queries
@@ -4480,27 +4372,19 @@ object ParityQueries {
 
   def s31MvRefresh(s: SparkSession, dir: String): DataFrame = {
     s31MvDir(s, dir)
-    val out = Sink.scratchDir(s"mv_refresh_${math.abs(dir.hashCode)}")
-    withConfs(s, Seq(graft.plans.MvRewriteRule.EnabledKey -> "true")) {
-      val q = Tables.orders(s, dir)
-        .groupBy(s31Day.as("day"))
-        .agg(
-          count(lit(1)).as("n"),
-          // count(metric) — derives from the rollup's n_m column, so
-          // this row also gates the non-null-count derivation against
-          // a REFRESHED artifact
-          count(s30Cents).as("n_m"),
-          sum(s30Cents).as("sum_m"),
-          min(s30Cents).as("min_m"),
-          max(s30Cents).as("max_m"))
-      val scans = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
-      require(scans.exists(_.contains("mv_daily")),
-        s"refresh-MV rewrite did not fire; plan scans: $scans")
-      require(!scans.exists(_.contains("orders.parquet")),
-        s"refresh-MV rewrite left a fact scan; scans: $scans")
-      q.write.mode("overwrite").parquet(out)
-    }
-    Ingest.parquet(s, out)
+    val ps = GraftSession.scoped(s, MvRewrite)
+    val q = Tables.orders(ps, dir)
+      .groupBy(s31Day.as("day"))
+      .agg(
+        count(lit(1)).as("n"),
+        // count(metric) — derives from the rollup's n_m column, so
+        // this row also gates the non-null-count derivation against
+        // a REFRESHED artifact
+        count(s30Cents).as("n_m"),
+        sum(s30Cents).as("sum_m"),
+        min(s30Cents).as("min_m"),
+        max(s30Cents).as("max_m"))
+    provenRewrite(q, reads = Seq("mv_daily"), gone = Seq("orders.parquet"))
   }
 
   // ---- S33/S34: multi-key MV + lattice coarsening ---------------------------
@@ -4528,45 +4412,29 @@ object ParityQueries {
 
   def s33MvMultikey(s: SparkSession, dir: String): DataFrame = {
     s33MvDir(s, dir)
-    val out = Sink.scratchDir(s"mv_multikey_${math.abs(dir.hashCode)}")
-    withConfs(s, Seq(graft.plans.MvRewriteRule.EnabledKey -> "true")) {
-      val q = Tables.orders(s, dir)
-        .groupBy(s31Day.as("day"), col("o_custkey"))
-        .agg(
-          count(lit(1)).as("n_orders"),
-          sum(s30Cents).as("sum_cents"),
-          min(s30Cents).as("min_cents"),
-          max(s30Cents).as("max_cents"))
-      val scans = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
-      require(scans.exists(_.contains("mv_daycust")),
-        s"multi-key MV rewrite did not fire; plan scans: $scans")
-      require(!scans.exists(_.contains("orders.parquet")),
-        s"multi-key MV rewrite left a fact scan; scans: $scans")
-      q.write.mode("overwrite").parquet(out)
-    }
-    Ingest.parquet(s, out)
+    val ps = GraftSession.scoped(s, MvRewrite)
+    val q = Tables.orders(ps, dir)
+      .groupBy(s31Day.as("day"), col("o_custkey"))
+      .agg(
+        count(lit(1)).as("n_orders"),
+        sum(s30Cents).as("sum_cents"),
+        min(s30Cents).as("min_cents"),
+        max(s30Cents).as("max_cents"))
+    provenRewrite(q, reads = Seq("mv_daycust"), gone = Seq("orders.parquet"))
   }
 
   def s34MvCoarsen(s: SparkSession, dir: String): DataFrame = {
     s33MvDir(s, dir)
-    val out = Sink.scratchDir(s"mv_coarsen_${math.abs(dir.hashCode)}")
-    withConfs(s, Seq(graft.plans.MvRewriteRule.EnabledKey -> "true")) {
-      val q = Tables.orders(s, dir)
-        .filter(col("o_custkey") % 2 === 0)
-        .groupBy(s31Day.as("day"))
-        .agg(
-          count(lit(1)).as("n_orders"),
-          sum(s30Cents).as("sum_cents"),
-          min(s30Cents).as("min_cents"),
-          max(s30Cents).as("max_cents"))
-      val scans = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
-      require(scans.exists(_.contains("mv_daycust")),
-        s"coarsening MV rewrite did not fire; plan scans: $scans")
-      require(!scans.exists(_.contains("orders.parquet")),
-        s"coarsening MV rewrite left a fact scan; scans: $scans")
-      q.write.mode("overwrite").parquet(out)
-    }
-    Ingest.parquet(s, out)
+    val ps = GraftSession.scoped(s, MvRewrite)
+    val q = Tables.orders(ps, dir)
+      .filter(col("o_custkey") % 2 === 0)
+      .groupBy(s31Day.as("day"))
+      .agg(
+        count(lit(1)).as("n_orders"),
+        sum(s30Cents).as("sum_cents"),
+        min(s30Cents).as("min_cents"),
+        max(s30Cents).as("max_cents"))
+    provenRewrite(q, reads = Seq("mv_daycust"), gone = Seq("orders.parquet"))
   }
 
   // ---- S41: cost-based MV choice across the lattice --------------------------
@@ -4585,25 +4453,15 @@ object ParityQueries {
   def s41MvChoose(s: SparkSession, dir: String): DataFrame = {
     s31MvDir(s, dir)
     s33MvDir(s, dir)
-    val out = Sink.scratchDir(s"mv_choose_${math.abs(dir.hashCode)}")
-    withConfs(s, Seq(graft.plans.MvRewriteRule.EnabledKey -> "true")) {
-      val q = Tables.orders(s, dir)
-        .groupBy(s31Day.as("day"))
-        .agg(
-          count(lit(1)).as("n_orders"),
-          sum(s30Cents).as("sum_cents"),
-          min(s30Cents).as("min_cents"),
-          max(s30Cents).as("max_cents"))
-      val scans = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
-      require(scans.exists(_.contains("mv_daily")),
-        s"cost-based choice did not pick the daily MV; plan scans: $scans")
-      require(!scans.exists(_.contains("mv_daycust")),
-        s"cost-based choice picked the LARGER tuple MV; plan scans: $scans")
-      require(!scans.exists(_.contains("orders.parquet")),
-        s"MV choice left a fact scan in the plan; scans: $scans")
-      q.write.mode("overwrite").parquet(out)
-    }
-    Ingest.parquet(s, out)
+    val ps = GraftSession.scoped(s, MvRewrite)
+    val q = Tables.orders(ps, dir)
+      .groupBy(s31Day.as("day"))
+      .agg(
+        count(lit(1)).as("n_orders"),
+        sum(s30Cents).as("sum_cents"),
+        min(s30Cents).as("min_cents"),
+        max(s30Cents).as("max_cents"))
+    provenRewrite(q, reads = Seq("mv_daily"), gone = Seq("mv_daycust", "orders.parquet"))
   }
 
   // ---- S43: MV catalog persistence (metastore round-trip) --------------------
@@ -4626,24 +4484,16 @@ object ParityQueries {
       s30Cents, base + "/prio")
     graft.plans.MvCatalog.save(s, base + "/catalog")
     graft.plans.MvCatalog.unregister(name)
-    def q = Tables.orders(s, dir)
+    val ps = GraftSession.scoped(s, MvRewrite)
+    def q = Tables.orders(ps, dir)
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_orders"), sum(s30Cents).as("sum_cents"),
         min(s30Cents).as("min_cents"), max(s30Cents).as("max_cents"))
-    val out = Sink.scratchDir(s"mv_meta_out_${math.abs(dir.hashCode)}")
-    withConfs(s, Seq(graft.plans.MvRewriteRule.EnabledKey -> "true")) {
-      val pre = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
-      require(pre.exists(_.contains("orders.parquet")),
-        s"definition still live after unregister; plan scans: $pre")
-      graft.plans.MvCatalog.load(s, base + "/catalog")
-      val post = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
-      require(post.exists(_.contains("mv_meta")),
-        s"loaded definition did not rewrite; plan scans: $post")
-      require(!post.exists(_.contains("orders.parquet")),
-        s"loaded rewrite left a fact scan; scans: $post")
-      q.write.mode("overwrite").parquet(out)
-    }
-    Ingest.parquet(s, out)
+    val pre = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
+    require(pre.exists(_.contains("orders.parquet")),
+      s"definition still live after unregister; plan scans: $pre")
+    graft.plans.MvCatalog.load(ps, base + "/catalog")
+    provenRewrite(q, reads = Seq("mv_meta"), gone = Seq("orders.parquet"))
   }
   val s43Sql =
     """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
@@ -4668,22 +4518,14 @@ object ParityQueries {
   // ~90 quadrillion dollars per group before a bit can drift.
   def s35MvAvg(s: SparkSession, dir: String): DataFrame = {
     s30MvDir(s, dir)
-    val out = Sink.scratchDir(s"mv_avg_${math.abs(dir.hashCode)}")
-    withConfs(s, Seq(graft.plans.MvRewriteRule.EnabledKey -> "true")) {
-      val q = Tables.orders(s, dir)
-        .groupBy(col("o_custkey"))
-        .agg(
-          avg(s30Cents).as("avg_cents"),
-          count(s30Cents).as("n_priced"),
-          sum(s30Cents).as("sum_cents"))
-      val scans = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
-      require(scans.exists(_.contains("mv_orders")),
-        s"avg MV rewrite did not fire; plan scans: $scans")
-      require(!scans.exists(_.contains("orders.parquet")),
-        s"avg MV rewrite left a fact scan in the plan; scans: $scans")
-      q.write.mode("overwrite").parquet(out)
-    }
-    Ingest.parquet(s, out)
+    val ps = GraftSession.scoped(s, MvRewrite)
+    val q = Tables.orders(ps, dir)
+      .groupBy(col("o_custkey"))
+      .agg(
+        avg(s30Cents).as("avg_cents"),
+        count(s30Cents).as("n_priced"),
+        sum(s30Cents).as("sum_cents"))
+    provenRewrite(q, reads = Seq("mv_orders"), gone = Seq("orders.parquet"))
   }
 
   val s35Sql =
@@ -4804,25 +4646,17 @@ object ParityQueries {
 
   def s37MvJoin(s: SparkSession, dir: String): DataFrame = {
     s37MvDir(s, dir)
-    val out = Sink.scratchDir(s"mv_join_q_${math.abs(dir.hashCode)}")
-    withConfs(s, Seq(graft.plans.MvRewriteRule.EnabledKey -> "true")) {
-      val q = Tables.orders(s, dir)
-        .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_nationkey"))
-        .agg(
-          count(lit(1)).as("n_orders"),
-          sum(s30Cents).as("sum_cents"),
-          min(s30Cents).as("min_cents"),
-          max(s30Cents).as("max_cents"),
-          avg(s30Cents).as("avg_cents"))
-      val scans = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
-      require(scans.exists(_.contains("mv_joined")),
-        s"joined MV rewrite did not fire; plan scans: $scans")
-      require(!scans.exists(p => p.contains("orders.parquet") || p.contains("customer.parquet")),
-        s"joined MV rewrite left a base scan in the plan; scans: $scans")
-      q.write.mode("overwrite").parquet(out)
-    }
-    Ingest.parquet(s, out)
+    val ps = GraftSession.scoped(s, MvRewrite)
+    val q = Tables.orders(ps, dir)
+      .join(Tables.customer(ps, dir), col("o_custkey") === col("c_custkey"))
+      .groupBy(col("c_nationkey"))
+      .agg(
+        count(lit(1)).as("n_orders"),
+        sum(s30Cents).as("sum_cents"),
+        min(s30Cents).as("min_cents"),
+        max(s30Cents).as("max_cents"),
+        avg(s30Cents).as("avg_cents"))
+    provenRewrite(q, reads = Seq("mv_joined"), gone = Seq("orders.parquet", "customer.parquet"))
   }
 
   val s37Sql =
@@ -4856,25 +4690,17 @@ object ParityQueries {
 
   def s38MvJoinRefresh(s: SparkSession, dir: String): DataFrame = {
     s38MvDir(s, dir)
-    val out = Sink.scratchDir(s"mv_joinref_q_${math.abs(dir.hashCode)}")
-    withConfs(s, Seq(graft.plans.MvRewriteRule.EnabledKey -> "true")) {
-      val q = Tables.orders(s, dir)
-        .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_mktsegment"))
-        .agg(
-          count(lit(1)).as("n"),
-          count(s30Cents).as("n_m"),
-          sum(s30Cents).as("sum_m"),
-          min(s30Cents).as("min_m"),
-          max(s30Cents).as("max_m"))
-      val scans = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
-      require(scans.exists(_.contains("mv_joinedref")),
-        s"refreshed joined-MV rewrite did not fire; plan scans: $scans")
-      require(!scans.exists(p => p.contains("orders.parquet") || p.contains("customer.parquet")),
-        s"refreshed joined-MV rewrite left a base scan; scans: $scans")
-      q.write.mode("overwrite").parquet(out)
-    }
-    Ingest.parquet(s, out)
+    val ps = GraftSession.scoped(s, MvRewrite)
+    val q = Tables.orders(ps, dir)
+      .join(Tables.customer(ps, dir), col("o_custkey") === col("c_custkey"))
+      .groupBy(col("c_mktsegment"))
+      .agg(
+        count(lit(1)).as("n"),
+        count(s30Cents).as("n_m"),
+        sum(s30Cents).as("sum_m"),
+        min(s30Cents).as("min_m"),
+        max(s30Cents).as("max_m"))
+    provenRewrite(q, reads = Seq("mv_joinedref"), gone = Seq("orders.parquet", "customer.parquet"))
   }
 
   val s38Sql =

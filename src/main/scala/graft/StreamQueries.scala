@@ -1041,8 +1041,8 @@ object StreamQueries {
     Ingest.parquet(s, current.get())
   }
 
-  /** Every row runs under the drives' state-partition window
-    * ([[StreamDrive.window]]).
+  /** Every row runs on the drives' state-partition profile session
+    * ([[StreamDrive.StatePartitions]]).
     */
   val all: Map[String, (SparkSession, String) => DataFrame] = Map[
       String, (SparkSession, String) => DataFrame](
@@ -1075,7 +1075,8 @@ object StreamQueries {
     "s29_cdc_stream" -> (s29CdcStream _),
     "w9_dedup_stream" -> (w9DedupStream _)
   ).map { case (name, fn) =>
-    name -> ((s: SparkSession, d: String) => StreamDrive.window(s)(fn(s, d)))
+    name -> ((s: SparkSession, d: String) =>
+      fn(GraftSession.scoped(s, StreamDrive.StatePartitions), d))
   }
 
   /** The 6-hour drift histogram, aggregated directly in SQL (both

@@ -125,8 +125,8 @@ object AnnIndex {
     * aside copy is restored. A crash between the renames leaves the
     * data recoverable at `<name>.replaced` instead of lost. Note the
     * swap still moves paths under any concurrently-held lazy
-    * DataFrame of the old artifact — like `withConfs`, artifact
-    * maintenance assumes the sequential harness (re-probe after a
+    * DataFrame of the old artifact — artifact maintenance assumes
+    * the sequential harness (re-probe after a
     * swap; a 100 TB deployment gets this from its table format's
     * snapshot isolation instead).
     */

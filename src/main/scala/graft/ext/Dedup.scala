@@ -1,8 +1,10 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Exact deduplication (SURVEY §2.8 E1).
   *
@@ -79,6 +81,22 @@ object Dedup {
       .distinct()
   }
 
+  /** The session an iterative graph loop runs on: shuffle partitions
+    * sized to the loop's working set of `rows` rows (one per 500k, at
+    * most the session's width) and AQE off. The session's width is
+    * sized for corpus-scale scans, but every loop shuffle is bounded by
+    * the active subgraph, and per-stage scheduling overhead plus AQE's
+    * re-plan latency dominates tiny iterations — measured 4× per
+    * iteration at sf0.1.
+    */
+  private def loopSession(spark: SparkSession, rows: Long): SparkSession = {
+    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    val loopParts = math.max(1L, math.min(rows / 500000L + 1L, sessionParts))
+    GraftSession.scoped(spark, Seq(
+      "spark.sql.shuffle.partitions" -> loopParts.toString,
+      "spark.sql.adaptive.enabled" -> "false"))
+  }
+
   /** Connected components over a near-dup pair list: every vertex
     * gets the MINIMUM id reachable from it as its component label —
     * the step that turns pairwise candidates ([[MinHash
@@ -100,9 +118,8 @@ object Dedup {
     * `vertices`: one `id` column; `pairs`: `a`, `b` (any orientation,
     * symmetrized internally). Returns (id, component).
     *
-    * NOTE: the loop temporarily scopes `spark.sql.shuffle.partitions`
-    * and disables AQE on the session (restored on exit) — do not run
-    * concurrently with other queries on the same SparkSession.
+    * The loop runs on its own profile session ([[loopSession]]), so
+    * it is safe to run beside other queries on the same SparkSession.
     */
   def connectedComponents(
       vertices: DataFrame,
@@ -146,39 +163,27 @@ object Dedup {
     val broadcastLabels = activeCount < 1000000L
     var iter = 0
     var converged = false
-    // Scope the loop's execution config to the ACTIVE SUBGRAPH, not
-    // the corpus: the session's shuffle.partitions is sized for
-    // corpus-scale scans, but every loop shuffle is bounded by
-    // activeCount rows, and per-stage scheduling overhead (plus AQE's
-    // re-plan latency) dominates tiny iterations — measured 4× per
-    // iteration at sf0.1. Restored before the corpus-sized final join.
+    // The loop runs on the active-subgraph profile (rebound there and
+    // back); the corpus-sized final join runs on the caller's session.
     val spark = vertices.sparkSession
-    val scoped = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
-    val saved = scoped.map(k => k -> spark.conf.getOption(k))
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toLong
-    val loopParts = math.max(1L, math.min(activeCount / 500000L + 1L, sessionParts))
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      while (!converged && iter < maxIter) {
-        val lbl = if (broadcastLabels) broadcast(labels) else labels
-        val prop = lbl.join(edges, col("id") === col("a"))
-          .select(col("b").as("id"), col("component"))
-        val next = labels.unionByName(prop)
-          .groupBy("id").agg(min("component").as("component"))
-          .localCheckpoint()
-        val (nextSum, _) = materializeAndSum(next)
-        converged = nextSum.compareTo(prevSum) == 0
-        prevSum = nextSum
-        labels = next
-        iter += 1
-      }
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+    val loop = loopSession(spark, activeCount)
+    val loopEdges = GraftSession.rebind(edges, loop)
+    labels = GraftSession.rebind(labels, loop)
+    while (!converged && iter < maxIter) {
+      val lbl = if (broadcastLabels) broadcast(labels) else labels
+      val prop = lbl.join(loopEdges, col("id") === col("a"))
+        .select(col("b").as("id"), col("component"))
+      val next = labels.unionByName(prop)
+        .groupBy("id").agg(min("component").as("component"))
+        .localCheckpoint()
+      val (nextSum, _) = materializeAndSum(next)
+      converged = nextSum.compareTo(prevSum) == 0
+      prevSum = nextSum
+      labels = next
+      iter += 1
     }
     vertices.select(col("id"))
-      .join(labels.withColumnRenamed("id", "__cid"),
+      .join(GraftSession.rebind(labels, spark).withColumnRenamed("id", "__cid"),
         col("id") === col("__cid"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))
   }
@@ -212,6 +217,7 @@ object Dedup {
     * Returns (id, component) like [[connectedComponents]]; the two
     * are law-tested equal (DedupStarSpec), and the chain fixture
     * asserts the O(log n) round count the plain loop cannot achieve.
+    * Its rounds run on a [[loopSession]] too.
     */
   def connectedComponentsStar(
       vertices: DataFrame,
@@ -261,39 +267,27 @@ object Dedup {
     val initialEdges = prevN
     var iter = 0
     var converged = prevN == 0L
-    // Scope the loop's execution config to the EDGE SET, not the
-    // corpus (the min-label loop's discipline, applied here too):
-    // every loop shuffle is bounded by the current edge count — which
-    // only ever shrinks — while the session's shuffle.partitions is
-    // sized for corpus-scale scans; per-stage scheduling plus AQE
-    // re-plan latency dominates the tiny rounds. The edge
+    // The rounds run on the edge-set profile (the min-label loop's
+    // discipline, applied here too: every loop shuffle is bounded by
+    // the current edge count, which only ever shrinks). The edge
     // materialization above and the corpus-scale final join below
-    // both run OUTSIDE the window at session config.
+    // both run on the caller's session.
     val spark = vertices.sparkSession
-    val scoped = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
-    val saved = scoped.map(k => k -> spark.conf.getOption(k))
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toLong
-    val loopParts = math.max(1L, math.min(initialEdges / 500000L + 1L, sessionParts))
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      while (!converged && iter < maxIter) {
-        // localCheckpoint per round: like the min-label loop, iterative
-        // lineage grows without bound otherwise
-        val next = smallStar(largeStar(edges)).localCheckpoint()
-        val (n, s) = fingerprint(next)
-        // edges only ever re-point DOWNWARD, so (count, sum) strictly
-        // decreases until the star fixpoint
-        converged = n == prevN && s.compareTo(prevSum) == 0
-        prevN = n; prevSum = s
-        edges = next
-        iter += 1
-      }
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+    edges = GraftSession.rebind(edges, loopSession(spark, initialEdges))
+    while (!converged && iter < maxIter) {
+      // localCheckpoint per round: like the min-label loop, iterative
+      // lineage grows without bound otherwise
+      val next = smallStar(largeStar(edges)).localCheckpoint()
+      val (n, s) = fingerprint(next)
+      // edges only ever re-point DOWNWARD, so (count, sum) strictly
+      // decreases until the star fixpoint
+      converged = n == prevN && s.compareTo(prevSum) == 0
+      prevN = n; prevSum = s
+      edges = next
+      iter += 1
     }
-    val labels = edges.groupBy("hi").agg(min(col("lo")).as("component"))
+    val labels = GraftSession.rebind(edges, spark)
+      .groupBy("hi").agg(min(col("lo")).as("component"))
       .select(col("hi").as("__cid"), col("component"))
     val out = vertices.select(col("id"))
       .join(labels, col("id") === col("__cid"), "left")

@@ -6,7 +6,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
-import graft.ParityQueries
 import graft.ops.{Ingest, Sink}
 
 /** The one drive lifecycle of the oracle-paired streaming rows: a file
@@ -157,15 +156,15 @@ object StreamDrive {
       } catch { case scala.util.control.NonFatal(_) => () }
     }
 
-  /** The drives' state-partition window, scoped to a whole row body. Each
-    * stateful operator keeps one state store per shuffle partition, and
-    * every micro-batch commits every store (a delta file and a rename per
-    * store), so at gate scale that commit fan-out, not the data, is the
-    * fixed cost; 8 partitions instead of the session's width cut it while
-    * the data batch still spreads over 8 tasks. A deployment sizes the
-    * same dial by arrival rate × horizon so each store stays in memory.
-    * Results are partition-count invariant (the StreamingSpec split laws).
+  /** The drives' state-partition profile: a row body runs on
+    * `GraftSession.scoped(s, StatePartitions)`. Each stateful operator
+    * keeps one state store per shuffle partition, and every micro-batch
+    * commits every store (a delta file and a rename per store), so at
+    * gate scale that commit fan-out, not the data, is the fixed cost;
+    * 8 partitions instead of the session's width cut it while the data
+    * batch still spreads over 8 tasks. A deployment sizes the same dial
+    * by arrival rate × horizon so each store stays in memory. Results
+    * are partition-count invariant (the StreamingSpec split laws).
     */
-  def window[T](s: SparkSession)(body: => T): T =
-    ParityQueries.withConfs(s, Seq("spark.sql.shuffle.partitions" -> "8"))(body)
+  val StatePartitions: Seq[(String, String)] = Seq("spark.sql.shuffle.partitions" -> "8")
 }

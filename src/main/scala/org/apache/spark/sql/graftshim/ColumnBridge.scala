@@ -39,4 +39,8 @@ object ColumnBridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
+
+  /** The query-execution listeners registered on a session now. */
+  def queryListeners(spark: SparkSession): Seq[org.apache.spark.sql.util.QueryExecutionListener] =
+    spark.listenerManager.listListeners().toSeq
 }

@@ -1,0 +1,183 @@
+package graft
+
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.ext.Dedup
+import graft.ops.Jobs
+import graft.plans.MvRewriteRule
+import graft.streaming.StreamDrive
+import graft.streaming.StreamDrive.fresh
+
+/** Laws of the one rule for scoping confs, [[GraftSession.scoped]]. */
+class GraftSessionSpec extends SparkSpec {
+  import spark.implicits._
+
+  private val dir = "/root/testdata/sf0.001"
+  private val three = Seq("spark.sql.shuffle.partitions" -> "3")
+
+  test("scoped is memoized per (parent, profile) and equals the parent's conf plus the profile") {
+    val ps = GraftSession.scoped(spark, three)
+    assert(GraftSession.scoped(spark, three) eq ps)
+    assert(GraftSession.scoped(spark, Seq("spark.sql.shuffle.partitions" -> "5")) ne ps)
+    assert(ps ne spark)
+    assert(ps.conf.getAll == spark.conf.getAll ++ three)
+  }
+
+  test("a new SparkContext never gets a stopped context's profile session") {
+    // a context cannot be stopped under the suite's shared session, so
+    // the law runs in a child JVM on this JVM's class path
+    val javaBin = s"${sys.props("java.home")}/bin/java"
+    val opens = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
+      .asScala.toSeq.filter(_.startsWith("--add-opens"))
+    val cmd = Seq(javaBin, "-Xmx768m") ++ opens ++
+      Seq("-cp", sys.props("java.class.path"), "graft.ScopedRestartProbe")
+    val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val out = scala.io.Source.fromInputStream(p.getInputStream, "UTF-8").mkString
+    assert(p.waitFor(5, TimeUnit.MINUTES) && p.exitValue() == 0, out)
+    assert(out.contains(ScopedRestartProbe.Ok), out)
+  }
+
+  test("profile confs never reach the parent: s30's query on the parent still scans the fact") {
+    // the rule is attached to the parent, so a leaked enable key would fire it there
+    val had = spark.experimental.extraOptimizations
+    if (!had.exists(_ eq MvRewriteRule))
+      spark.experimental.extraOptimizations = had :+ MvRewriteRule
+    try {
+      val before = spark.conf.getAll
+      assert(ParityQueries.s30MvRewrite(spark, dir).collect().nonEmpty)
+      assert(spark.conf.getAll == before)
+      val scans = MvRewriteRule.scanPaths(
+        ParityQueries.s30UserQuery(spark, dir).queryExecution.optimizedPlan)
+      assert(scans.exists(_.contains("orders.parquet")), scans)
+    } finally spark.experimental.extraOptimizations = had
+  }
+
+  test("a rule attached to the parent after the first scoped call runs in the profile session") {
+    val ps = GraftSession.scoped(spark, three)
+    val fired = new java.util.concurrent.atomic.AtomicInteger
+    object Counting extends Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = { fired.incrementAndGet(); plan }
+    }
+    val had = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = had :+ Counting
+    try {
+      val after = GraftSession.scoped(spark, three)
+      assert(after ne ps)
+      assert(after.experimental.extraOptimizations.exists(_ eq Counting))
+      assert(after.range(4).collect().length === 4)
+      assert(fired.get > 0)
+      assert(GraftSession.scoped(spark, three) eq after)
+    } finally spark.experimental.extraOptimizations = had
+  }
+
+  test("a listener registered on the parent after creation sees the profile session's queries and micro-batches") {
+    val ps = GraftSession.scoped(spark, three)
+    assert(ps.range(1).collect().length === 1)
+    val seen = new ConcurrentLinkedQueue[SparkSession]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        { seen.add(qe.sparkSession); () }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(ps.range(5).collect().length === 5)
+      ListenerBusDrain(spark.sparkContext)
+      assert(seen.asScala.exists(_ eq ps))
+    } finally spark.listenerManager.unregister(listener)
+    val (batches, _) = microBatches {
+      val in = StreamDrive.staged(ps.range(0, 10).toDF("id"), fresh("law_forward"))
+      StreamDrive.run(ps, "law_forward", in)(identity)((_, _) => ())
+    }
+    assert(batches === 1)
+  }
+
+  test("concurrent connected components leave the session conf unchanged and equal the sequential results") {
+    // a 40-vertex chain: the min-label loop runs its full 20 rounds
+    val verts = spark.range(0, 40).toDF("id")
+    val pairs = (0L until 39L).map(i => (i, i + 1)).toDF("a", "b")
+    def rows(df: DataFrame): Set[Row] = df.collect().toSet
+    def cc(): Set[Row] = rows(Dedup.connectedComponents(verts, pairs))
+    def pr(): Set[Row] = rows(Dedup.pageRank(verts, "id", pairs, "a", "b", 3))
+    val (ccSeq, prSeq) = (cc(), pr())
+    val before = spark.conf.getAll
+    // the second thunk starts once the first is well into its loop
+    // (its 10th job), so the two loops overlap
+    def beside[B](second: => B): Seq[Any] = {
+      val started = new CountDownLatch(10)
+      val tag = java.util.UUID.randomUUID().toString
+      val probe = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("law.first") == tag)) started.countDown()
+      }
+      spark.sparkContext.addSparkListener(probe)
+      try Jobs.runConcurrently(spark, Seq[() => Any](
+        () => { spark.sparkContext.setLocalProperty("law.first", tag); cc() },
+        () => { started.await(2, TimeUnit.MINUTES); second }))
+      finally spark.sparkContext.removeSparkListener(probe)
+    }
+    assert(beside(cc()) === Seq(ccSeq, ccSeq))
+    assert(spark.conf.getAll == before)
+    assert(beside(pr()) === Seq(ccSeq, prSeq))
+    assert(spark.conf.getAll == before)
+  }
+
+  test("src/main sets confs only in GraftSession; no conf window survives anywhere") {
+    val root = new java.io.File("src")
+    assert(root.isDirectory, s"run from the repository root (no ${root.getAbsolutePath})")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    def comment(line: String): Boolean =
+      Seq("*", "/*", "//").exists(line.trim.startsWith)
+    val setsConf = """conf\s*\.\s*(set|unset)""".r
+    val lines = for {
+      f <- files(root) if f.getName != "GraftSessionSpec.scala"
+      (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines().toSeq.zipWithIndex
+    } yield (f, line, s"${f.getPath}:${i + 1}: ${line.trim}")
+    val setters = lines.collect {
+      case (f, line, at) if f.getPath.startsWith("src/main") &&
+        f.getName != "GraftSession.scala" && !comment(line) &&
+        setsConf.findFirstIn(line).isDefined => at
+    }
+    assert(setters.isEmpty, setters.mkString("\n"))
+    val windows = lines.collect { case (_, line, at) if line.contains("withConfs") => at }
+    assert(windows.isEmpty, windows.mkString("\n"))
+  }
+}
+
+/** Child-JVM half of the stopped-context law: a profile session made
+  * over one context is never handed out over the next.
+  */
+object ScopedRestartProbe {
+  val Ok = "SCOPED_RESTART_OK"
+
+  def main(args: Array[String]): Unit = {
+    def session(): SparkSession = SparkSession.builder()
+      .master("local[1]").config("spark.ui.enabled", "false").getOrCreate()
+    val profile = Seq("spark.sql.shuffle.partitions" -> "2")
+    val first = session()
+    val stale = GraftSession.scoped(first, profile)
+    require(stale.range(3).count() == 3)
+    first.stop()
+    val second = session()
+    val ps = GraftSession.scoped(second, profile)
+    require(second ne first, "getOrCreate returned the stopped session")
+    require(ps ne stale, "the stopped context's profile session was handed out")
+    require(ps.sparkContext eq second.sparkContext)
+    require(!ps.sparkContext.isStopped)
+    require(ps.range(3).count() == 3)
+    second.stop()
+    println(Ok)
+  }
+}

@@ -25,8 +25,9 @@ class IdempotenceSpec extends SparkSpec {
 
   // the shared test session is a PLAIN session (no GraftExtensions);
   // the gates under test need the conf-gated optimizer rules present
-  // (each query opens its own withConfs enablement window, so the
-  // rules stay inert for every other suite in this JVM)
+  // (each query enables them only on its own profile session,
+  // GraftSession.scoped, so the rules stay inert for every other
+  // suite in this JVM)
   private def ensureRules(): Unit = {
     val have = spark.experimental.extraOptimizations
     val want = Seq(graft.plans.MvRewriteRule, graft.plans.JoinEliminationRule)

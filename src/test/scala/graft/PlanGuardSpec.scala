@@ -740,14 +740,12 @@ class PlanGuardSpec extends SparkSpec {
   }
 
   test("j14_bloom_join: the registered join shape carries the runtime bloom probe") {
-    // the registered query materializes to scratch under these confs;
-    // guard the same join body's executed plan directly
-    val p = ParityQueries.withConfs(spark, ParityQueries.j14Confs) {
-      ParityQueries.j14JoinPlan(spark, dir).queryExecution.executedPlan.toString
-    }
+    // the registered frame is built on the j14 profile session
+    // (GraftSession.scoped), so its own executed plan is the guarded one
+    val p = planOf("j14_bloom_join")
     assert(p.contains("bloom_filter_agg"), p) // creation side: dim keys
     assert(p.contains("might_contain"), p) // application side: fact pre-filter
-    // and the conf window must not leak: broadcast threshold restored
+    // and the profile must not leak: the session's broadcast threshold stands
     assert(spark.conf.get("spark.sql.autoBroadcastJoinThreshold") != "-1")
   }
 
@@ -755,8 +753,8 @@ class PlanGuardSpec extends SparkSpec {
     // the executed (post-AQE) plan must carry skewed AQEShuffleRead
     // nodes on the forced shuffle join — runtime re-plan observed,
     // not just configured
-    val p = ParityQueries.withConfs(spark, ParityQueries.j17Confs) {
-      val d = ParityQueries.j17JoinPlan(spark, dir)
+    val p = {
+      val d = ParityQueries.j17AqeSkew(spark, dir) // on the j17 profile session
       d.collect() // AQE finalizes this QueryExecution's physical plan
       d.queryExecution.executedPlan.toString
     }
@@ -770,19 +768,21 @@ class PlanGuardSpec extends SparkSpec {
     val (ot, ct, nt) = ParityQueries.j16Tables(spark, dir)
     // catalog statistics really persisted: exact row counts, not
     // scans (rowCount is only SURFACED in plan stats under CBO —
-    // reading it inside the conf window is itself part of the claim)
-    def rowCountOf(t: String): BigInt =
-      ParityQueries.withConfs(spark, ParityQueries.j16Confs) {
-        spark.table(t).queryExecution.optimizedPlan.stats.rowCount
-          .getOrElse(sys.error(s"no rowCount stat on $t"))
-      }
+    // reading it in the j16 profile session is itself part of the claim)
+    val cbo = GraftSession.scoped(spark, ParityQueries.j16Confs)
+    def rowCountOf(t: String): BigInt = {
+      // plan statistics are computed under the ACTIVE session's conf
+      org.apache.spark.sql.SparkSession.setActiveSession(cbo)
+      try cbo.table(t).queryExecution.optimizedPlan.stats.rowCount
+        .getOrElse(sys.error(s"no rowCount stat on $t"))
+      finally org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    }
     assert(rowCountOf(nt) == BigInt(25))
     assert(rowCountOf(ct) == spark.table(ct).count())
     // the bottom-most join's leaf tables, per conf regime
-    def bottomJoinLeaves(cbo: Boolean): Set[String] = {
-      val plan = (if (cbo) ParityQueries.withConfs(spark, ParityQueries.j16Confs) {
-        ParityQueries.j16JoinPlan(spark, dir).queryExecution.optimizedPlan
-      } else ParityQueries.j16JoinPlan(spark, dir).queryExecution.optimizedPlan)
+    def bottomJoinLeaves(withCbo: Boolean): Set[String] = {
+      val plan = ParityQueries.j16JoinPlan(if (withCbo) cbo else spark, dir)
+        .queryExecution.optimizedPlan
       val joins = plan.collect { case j: Join => j }
       assert(joins.size == 2, plan)
       // the innermost join is the one with no Join beneath it
@@ -791,24 +791,19 @@ class PlanGuardSpec extends SparkSpec {
       Set(ot, ct, nt).filter(t => bottom.toString.contains(t))
     }
     // cost-blind: executes as written — orders joins customer first
-    assert(bottomJoinLeaves(cbo = false) == Set(ot, ct))
+    assert(bottomJoinLeaves(withCbo = false) == Set(ot, ct))
     // with stats + CBO join reorder: the 1-row-selective nation
     // filter applies FIRST (customer ⋈ nation at the bottom)
-    assert(bottomJoinLeaves(cbo = true) == Set(ct, nt))
+    assert(bottomJoinLeaves(withCbo = true) == Set(ct, nt))
   }
 
-  test("withConfs restores the session conf exactly, also when the body throws") {
-    // a fresh session: no earlier window has set the CBO keys
-    val s = spark.newSession()
-    val before = s.conf.getAll
-    ParityQueries.withConfs(s, ParityQueries.j16Confs) {}
-    assert(s.conf.getAll == before)
-    // an explicitly set key gets its value back, an unset one is unset
-    val confs = ParityQueries.j16Confs :+ ("spark.sql.shuffle.partitions" -> "7")
-    intercept[IllegalStateException] {
-      ParityQueries.withConfs(s, confs) { throw new IllegalStateException("body failed") }
-    }
-    assert(s.conf.getAll == before)
+  test("j17_aqe_skew: a repeated call starts no job; its staged inputs survive") {
+    // the staged fact/dim are a standing artifact, and the row returns
+    // its lazy join instead of writing next to them
+    val first = ParityQueries.j17AqeSkew(spark, dir).collect().toSet
+    val (jobs, again) = jobsStarted(ParityQueries.j17AqeSkew(spark, dir))
+    assert(jobs === 0)
+    assert(again.collect().toSet === first)
   }
 
   test("j15_join_size_profile: histogram-to-histogram join, never the join output") {

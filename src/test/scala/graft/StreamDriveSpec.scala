@@ -76,14 +76,18 @@ class StreamDriveSpec extends SparkSpec {
     assert(spark.streams.active.isEmpty)
   }
 
-  test("the drive window leaves the session conf unchanged, also when the body throws") {
+  test("the drive profile session leaves the session conf unchanged, also on a throw") {
     // a fresh session (no explicit shuffle width) and the shared one (an explicit one)
     Seq(spark.newSession(), spark).foreach { s =>
       val before = s.conf.getAll
-      assert(StreamDrive.window(s)(s.conf.get("spark.sql.shuffle.partitions")) === "8")
+      val ps = GraftSession.scoped(s, StreamDrive.StatePartitions)
+      assert(ps.conf.get("spark.sql.shuffle.partitions") === "8")
       assert(s.conf.getAll == before)
-      intercept[IllegalStateException] {
-        StreamDrive.window(s) { throw new IllegalStateException("body failed") }
+      intercept[Exception] {
+        val in = StreamDrive.staged(ps.range(0, 10).toDF("id"), fresh("law_profile"))
+        StreamDrive.run(ps, "law_profile", in)(identity) { (_, _) =>
+          throw new IllegalStateException("body failed")
+        }
       }
       assert(s.conf.getAll == before)
     }

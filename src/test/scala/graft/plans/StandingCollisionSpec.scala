@@ -2,7 +2,9 @@ package graft.plans
 
 import java.nio.file.{Files, Paths}
 
-import graft.{ParityQueries, SparkSpec}
+import org.apache.spark.sql.functions.col
+
+import graft.{ParityQueries, SparkSpec, Tables}
 
 /** Two sf dirs whose paths have equal `String.hashCode` must not share
   * a standing artifact: with hashCode tags, s30's MV for one dir was
@@ -29,6 +31,33 @@ class StandingCollisionSpec extends SparkSpec {
       assert(namesAt(pa) != namesAt(pb))
     } finally {
       registered.foreach(MvCatalog.unregister)
+      Seq(aa, bb).foreach(p => Files.delete(Paths.get(p)))
+      Files.delete(tmp)
+    }
+  }
+
+  test("j16's catalog tables are distinct per dir, even on a hashCode collision") {
+    val tmp = Files.createTempDirectory("standing_collision_j16")
+    // two different sf dirs, so a shared table answers wrong
+    val Seq(aa, bb) = Seq("Aa" -> "sf0.001", "BB" -> "sf0.01").map { case (n, sf) =>
+      Files.createSymbolicLink(tmp.resolve(n), Paths.get(s"/root/testdata/$sf")).toString
+    }
+    assert(aa.hashCode === bb.hashCode)
+    def nOrders(dir: String): Seq[Long] =
+      ParityQueries.j16CboReorder(spark, dir).select("n_orders").collect().toSeq.map(_.getLong(0))
+    def expected(dir: String): Long =
+      Tables.orders(spark, dir)
+        .join(Tables.customer(spark, dir), col("o_custkey") === col("c_custkey"))
+        .join(Tables.nation(spark, dir).filter(col("n_name") === "NATION_7"),
+          col("c_nationkey") === col("n_nationkey"))
+        .count()
+    try {
+      val (ta, tb) = (ParityQueries.j16Tables(spark, aa), ParityQueries.j16Tables(spark, bb))
+      assert(ta.productIterator.toSet.intersect(tb.productIterator.toSet).isEmpty, (ta, tb))
+      assert(expected(aa) != expected(bb))
+      assert(nOrders(aa) === Seq(expected(aa)))
+      assert(nOrders(bb) === Seq(expected(bb)))
+    } finally {
       Seq(aa, bb).foreach(p => Files.delete(Paths.get(p)))
       Files.delete(tmp)
     }
