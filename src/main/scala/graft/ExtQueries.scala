@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.OracleSql._
+import graft.SparkEntry.Row
 import graft.ext._
 import graft.ops.{Ingest, Ranking, Sink}
 import graft.streaming.StreamDrive
@@ -11,13 +13,11 @@ import graft.streaming.StreamDrive
   * operators over the `documents` / `embeddings` testdata, each with
   * a DuckDB oracle.
   *
-  * Cross-engine determinism rules used throughout:
-  *  - integer "randomness" is md5-hex→BIGINT ([[TextOps.md5Int32]]) —
-  *    identical in both engines;
-  *  - float reductions are explicit LEFT FOLDS in array order with
-  *    float→double widening, so doubles match bit-for-bit;
-  *  - MinHash constants are interpolated into the oracle SQL from the
-  *    same Scala values that build the Spark plan.
+  * Cross-engine determinism: the md5 integers, left folds, cosine
+  * rankings and mutual-kNN CTEs of the oracles are [[OracleSql]]
+  * fragments, each the twin of one Spark expression; MinHash
+  * constants are interpolated into the oracle SQL from the same Scala
+  * values that build the Spark plan.
   */
 object ExtQueries {
 
@@ -29,24 +29,6 @@ object ExtQueries {
   private val AnnQueries = 32
   private val AnnK = 3
   private val NearDupThreshold = 0.35
-
-  private val AvgDec = "DECIMAL(28,10)"
-  private def meanSql(c: String): String =
-    s"CAST(CAST(SUM(CAST($c AS $AvgDec)) AS VARCHAR) AS DOUBLE) / COUNT($c)"
-
-  /** DuckDB md5-int32 (same value as TextOps.md5Int32). */
-  private def duckMd5Int(e: String): String =
-    s"CAST(('0x'||substr(md5($e),1,8)) AS BIGINT)"
-
-  /** DuckDB left-fold sum over a double list (same order as Spark's
-    * aggregate(…, 0.0, (acc,v) -> acc+v)).
-    */
-  private def duckFold(listExpr: String): String =
-    s"list_reduce(list_prepend(0.0, $listExpr), (x, y) -> x + y)"
-
-  /** DuckDB elementwise-product fold = Spark Similarity.dot. */
-  private def duckDot(a: String, b: String): String =
-    duckFold(s"list_transform(range(1, len($a)+1), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE))")
 
   // ---- E1: exact dedup with deterministic representative ------------------
   def e1DedupExact(s: SparkSession, dir: String): DataFrame =
@@ -134,7 +116,7 @@ object ExtQueries {
     val window = (0 until 3)
       .map(j => s"((hs[i+$j] * ${mixConst(j)}) % $P)")
       .mkString("(", " + ", s") % $P")
-    s"""${pfx}toks AS (SELECT doc_id, list_transform(string_split_regex(trim(text), '\\s+'), t -> ${duckMd5Int("t")} % $P) hs FROM $rel),
+    s"""${pfx}toks AS (SELECT doc_id, list_transform(string_split_regex(trim(text), '\\s+'), t -> ${md5IntTight("t")} % $P) hs FROM $rel),
        |${pfx}hashed AS (SELECT doc_id, [$window for i in range(1, len(hs)-1)] ms FROM ${pfx}toks WHERE len(hs) >= 3),
        |${pfx}sigs AS (SELECT doc_id, [$sigElems] sig FROM ${pfx}hashed),
        |${pfx}bands AS (SELECT doc_id, sig, unnest(range($Bands)) bidx, unnest([$bandExprs]) bkey FROM ${pfx}sigs)""".stripMargin
@@ -369,12 +351,12 @@ object ExtQueries {
     import MinHash.NumHashes
     def iter(r: Int) =
       s"""c$r AS (SELECT e.dst AS id,
-         |    CAST(CAST(p.pr / CAST(e.deg AS DOUBLE) AS VARCHAR) AS $AvgDec) AS cd
+         |    ${toDec("p.pr / CAST(e.deg AS DOUBLE)")} AS cd
          |  FROM pr${r - 1} p JOIN edgd e ON p.id = e.src),
          |s$r AS (SELECT id, SUM(cd) AS sdec FROM c$r GROUP BY id),
          |pr$r AS (SELECT d.doc_id AS id,
          |    CAST(0.15 AS DOUBLE) / CAST(nn.n AS DOUBLE) +
-         |    CAST(0.85 AS DOUBLE) * COALESCE(CAST(CAST(s.sdec AS VARCHAR) AS DOUBLE), CAST(0 AS DOUBLE)) AS pr
+         |    CAST(0.85 AS DOUBLE) * COALESCE(${toDouble("s.sdec")}, CAST(0 AS DOUBLE)) AS pr
          |  FROM documents d CROSS JOIN nfr nn LEFT JOIN s$r s ON d.doc_id = s.id)""".stripMargin
     val iters = (1 to PrIters).map(r => "," + iter(r)).mkString("\n")
     s"""$e2Ctes,
@@ -432,15 +414,14 @@ object ExtQueries {
         col("pr").as("rep_pr"), col("cluster_size"))
   }
   lazy val e2prSql: String = {
-    import MinHash.NumHashes
     def iter(r: Int) =
       s"""c$r AS (SELECT e.dst AS id,
-         |    CAST(CAST(p.pr / CAST(e.deg AS DOUBLE) AS VARCHAR) AS $AvgDec) AS cd
+         |    ${toDec("p.pr / CAST(e.deg AS DOUBLE)")} AS cd
          |  FROM pr${r - 1} p JOIN edgd e ON p.id = e.src),
          |s$r AS (SELECT id, SUM(cd) AS sdec FROM c$r GROUP BY id),
          |pr$r AS (SELECT d.doc_id AS id,
          |    CAST(0.15 AS DOUBLE) / CAST(nn.n AS DOUBLE) +
-         |    CAST(0.85 AS DOUBLE) * COALESCE(CAST(CAST(s.sdec AS VARCHAR) AS DOUBLE), CAST(0 AS DOUBLE)) AS pr
+         |    CAST(0.85 AS DOUBLE) * COALESCE(${toDouble("s.sdec")}, CAST(0 AS DOUBLE)) AS pr
          |  FROM documents d CROSS JOIN nfr nn LEFT JOIN s$r s ON d.doc_id = s.id)""".stripMargin
     val iters = (1 to PrIters).map(r => "," + iter(r)).mkString("\n")
     s"""$ccCompCtes,
@@ -482,7 +463,7 @@ object ExtQueries {
         Sampling.assignSplit(col("component")).as("split"))
   }
   val e7fSql: String = {
-    val b = s"${duckMd5Int("'split_' || CAST(component AS VARCHAR)")} % 1000"
+    val b = s"${md5IntTight("'split_' || CAST(component AS VARCHAR)")} % 1000"
     s"""$ccCompCtes
        |SELECT doc_id, component,
        |  CASE WHEN $b < 800 THEN 'train' WHEN $b < 900 THEN 'val' ELSE 'test' END AS split
@@ -503,7 +484,7 @@ object ExtQueries {
     val mask = (1L << SimHashChunkBits) - 1
     val chunkList = (0 until SimHashChunks)
       .map(c => s"(simhash >> ${c * SimHashChunkBits}) & $mask").mkString(", ")
-    s"""t AS (SELECT doc_id, list_transform(string_split_regex(trim(text), '\\s+'), tok -> ${duckMd5Int("tok")}) hs FROM documents),
+    s"""t AS (SELECT doc_id, list_transform(string_split_regex(trim(text), '\\s+'), tok -> ${md5IntTight("tok")}) hs FROM documents),
        |s AS (SELECT doc_id, CAST(list_sum(list_transform(range(0, 32), b ->
        |  CASE WHEN list_sum(list_transform(hs, h -> CASE WHEN ((h >> b) & 1) = 1 THEN 1 ELSE -1 END)) > 0
        |  THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS simhash FROM t),
@@ -575,16 +556,13 @@ object ExtQueries {
   // ---- E2c: embedding-cosine near-duplicate pairs --------------------------
   def e2EmbedNearDup(s: SparkSession, dir: String): DataFrame =
     Similarity.nearDupPairs(Tables.embeddings(s, dir), AnnBits, NearDupThreshold)
-  val e2cSql: String = {
-    val n2 = duckFold("list_transform(range(1, len(embedding)+1), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")
-    val bucket = s"array_to_string([CASE WHEN embedding[i] >= 0 THEN '1' ELSE '0' END for i in range(1, ${AnnBits + 1})], '')"
-    s"""WITH e AS (SELECT vec_id, embedding, $n2 AS n2, $bucket AS bucket FROM embeddings)
+  val e2cSql: String =
+    s"""WITH ${embeddingCte(Some(AnnBits))}
        |SELECT vec_a, vec_b, cos_sim FROM (
        |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       |    ${duckDot("a.embedding", "b.embedding")} / (sqrt(a.n2) * sqrt(b.n2)) AS cos_sim
+       |    ${cosineOf("a", "b")} AS cos_sim
        |  FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
        |WHERE cos_sim >= $NearDupThreshold""".stripMargin
-  }
 
   // ---- E3: brute-force cosine top-k (queries broadcast) --------------------
   def e3CosineTopK(s: SparkSession, dir: String): DataFrame = {
@@ -592,17 +570,10 @@ object ExtQueries {
     Similarity.cosineTopK(emb.filter(col("vec_id") < E3NumQueries), emb, E3K)
       .select(col("query_id"), col("vec_id"), col("cos_sim"), col("rk"))
   }
-  val e3Sql: String = {
-    val n2 = duckFold("list_transform(range(1, len(embedding)+1), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")
-    s"""WITH e AS (SELECT vec_id, embedding, $n2 AS n2 FROM embeddings),
-       |scored AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-       |    ${duckDot("q.embedding", "c.embedding")} / (sqrt(q.n2) * sqrt(c.n2)) AS cos_sim
-       |  FROM e q JOIN e c ON q.vec_id < $E3NumQueries AND c.vec_id <> q.vec_id)
-       |SELECT query_id, vec_id, cos_sim, rk FROM (
-       |  SELECT query_id, vec_id, cos_sim,
-       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
-       |  FROM scored) WHERE rk <= $E3K""".stripMargin
-  }
+  val e3Sql: String =
+    s"""WITH ${embeddingCte()},
+       |${scored(s"e q JOIN e c ON q.vec_id < $E3NumQueries AND c.vec_id <> q.vec_id")}
+       |${topK("scored", E3K)}""".stripMargin
 
   // ---- E3f: FILTERED vector search (metadata predicate + top-k) -------------
   // The production retrieval shape vector stores call pre-filtering:
@@ -623,18 +594,11 @@ object ExtQueries {
     Similarity.cosineTopK(emb.filter(col("vec_id") < E3NumQueries), cands, E3K)
       .select(col("query_id"), col("vec_id"), col("cos_sim"), col("rk"))
   }
-  val e3pfSql: String = {
-    val n2 = duckFold("list_transform(range(1, len(embedding)+1), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")
-    s"""WITH e AS (SELECT vec_id, embedding, $n2 AS n2 FROM embeddings),
+  val e3pfSql: String =
+    s"""WITH ${embeddingCte()},
        |c AS (SELECT e.* FROM e JOIN documents ON vec_id = doc_id WHERE lang = 'en'),
-       |scored AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-       |    ${duckDot("q.embedding", "c.embedding")} / (sqrt(q.n2) * sqrt(c.n2)) AS cos_sim
-       |  FROM e q JOIN c ON q.vec_id < $E3NumQueries AND c.vec_id <> q.vec_id)
-       |SELECT query_id, vec_id, cos_sim, rk FROM (
-       |  SELECT query_id, vec_id, cos_sim,
-       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
-       |  FROM scored) WHERE rk <= $E3K""".stripMargin
-  }
+       |${scored(s"e q JOIN c ON q.vec_id < $E3NumQueries AND c.vec_id <> q.vec_id")}
+       |${topK("scored", E3K)}""".stripMargin
 
   // ---- E3s: the SQL-first form of e3_cosine_topk ---------------------------
   // Same computation, same oracle — but written as one spark.sql
@@ -672,18 +636,10 @@ object ExtQueries {
     Similarity.bucketedTopK(emb.filter(col("vec_id") < AnnQueries), emb, AnnBits, AnnK)
       .select(col("query_id"), col("vec_id"), col("cos_sim"), col("rk"))
   }
-  val e3bSql: String = {
-    val n2 = duckFold("list_transform(range(1, len(embedding)+1), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")
-    val bucket = s"array_to_string([CASE WHEN embedding[i] >= 0 THEN '1' ELSE '0' END for i in range(1, ${AnnBits + 1})], '')"
-    s"""WITH e AS (SELECT vec_id, embedding, $n2 AS n2, $bucket AS bucket FROM embeddings),
-       |scored AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-       |    ${duckDot("q.embedding", "c.embedding")} / (sqrt(q.n2) * sqrt(c.n2)) AS cos_sim
-       |  FROM e q JOIN e c ON q.bucket = c.bucket AND q.vec_id < $AnnQueries AND c.vec_id <> q.vec_id)
-       |SELECT query_id, vec_id, cos_sim, rk FROM (
-       |  SELECT query_id, vec_id, cos_sim,
-       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
-       |  FROM scored) WHERE rk <= $AnnK""".stripMargin
-  }
+  val e3bSql: String =
+    s"""WITH ${embeddingCte(Some(AnnBits))},
+       |${scored(s"e q JOIN e c ON q.bucket = c.bucket AND q.vec_id < $AnnQueries AND c.vec_id <> q.vec_id")}
+       |${topK("scored", AnnK)}""".stripMargin
 
   // ---- E3d: ANN recall@k vs the exact baseline ------------------------------
   // The approximation's QUALITY as a query: per query point, how many
@@ -709,28 +665,17 @@ object ExtQueries {
       .select(col("query_id"), col("n_exact"), col("n_hit"),
         (col("n_hit").cast("double") / col("n_exact").cast("double")).as("recall"))
   }
-  val e3dSql: String = {
-    val n2 = duckFold("list_transform(range(1, len(embedding)+1), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")
-    val bucket = s"array_to_string([CASE WHEN embedding[i] >= 0 THEN '1' ELSE '0' END for i in range(1, ${AnnBits + 1})], '')"
-    s"""WITH e AS (SELECT vec_id, embedding, $n2 AS n2, $bucket AS bucket FROM embeddings),
-       |exs AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-       |    ${duckDot("q.embedding", "c.embedding")} / (sqrt(q.n2) * sqrt(c.n2)) AS cos_sim
-       |  FROM e q JOIN e c ON q.vec_id < $AnnQueries AND c.vec_id <> q.vec_id),
-       |ex AS (SELECT query_id, vec_id FROM (
-       |  SELECT query_id, vec_id, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rk
-       |  FROM exs) WHERE rk <= $AnnK),
-       |ans AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-       |    ${duckDot("q.embedding", "c.embedding")} / (sqrt(q.n2) * sqrt(c.n2)) AS cos_sim
-       |  FROM e q JOIN e c ON q.bucket = c.bucket AND q.vec_id < $AnnQueries AND c.vec_id <> q.vec_id),
-       |an AS (SELECT query_id, vec_id FROM (
-       |  SELECT query_id, vec_id, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rk
-       |  FROM ans) WHERE rk <= $AnnK)
+  val e3dSql: String =
+    s"""WITH ${embeddingCte(Some(AnnBits))},
+       |${scored(s"e q JOIN e c ON q.vec_id < $AnnQueries AND c.vec_id <> q.vec_id", "exs")},
+       |ex AS (${topKIds("exs", AnnK)}),
+       |${scored(s"e q JOIN e c ON q.bucket = c.bucket AND q.vec_id < $AnnQueries AND c.vec_id <> q.vec_id", "ans")},
+       |an AS (${topKIds("ans", AnnK)})
        |SELECT ex.query_id, CAST(count(*) AS BIGINT) AS n_exact,
        |  CAST(sum(CASE WHEN an.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
        |  CAST(sum(CASE WHEN an.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS recall
        |FROM ex LEFT JOIN an ON ex.query_id = an.query_id AND ex.vec_id = an.vec_id
        |GROUP BY ex.query_id""".stripMargin
-  }
 
   // ---- E3c: IVF-style ANN (centroid cells; data-adaptive buckets) ----------
   private val IvfCentroids = 16
@@ -741,24 +686,19 @@ object ExtQueries {
       emb.filter(col("vec_id") < IvfCentroids), AnnK)
       .select(col("query_id"), col("vec_id"), col("cos_sim"), col("rk"))
   }
-  val e3cSql: String = {
-    val n2 = duckFold("list_transform(range(1, len(embedding)+1), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")
-    s"""WITH e AS (SELECT vec_id, embedding, $n2 AS n2 FROM embeddings),
+  val e3cSql: String =
+    s"""WITH ${embeddingCte()},
        |cent AS (SELECT vec_id AS cid, embedding AS cent_emb, n2 AS cent_n2 FROM e WHERE vec_id < $IvfCentroids),
        |assign AS (SELECT vec_id, embedding, n2, cid FROM (
        |  SELECT v.vec_id, v.embedding, v.n2, cent.cid,
        |    row_number() OVER (PARTITION BY v.vec_id ORDER BY
-       |      ${duckDot("v.embedding", "cent.cent_emb")} / (sqrt(v.n2) * sqrt(cent.cent_n2)) DESC, cent.cid) AS rn
+       |      ${cosine("v.embedding", "cent.cent_emb", "v.n2", "cent.cent_n2")} DESC, cent.cid) AS rn
        |  FROM e v CROSS JOIN cent) WHERE rn = 1),
        |scored AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-       |    ${duckDot("q.embedding", "c.embedding")} / (sqrt(q.n2) * sqrt(c.n2)) AS cos_sim
+       |    ${cosineOf("q", "c")} AS cos_sim
        |  FROM assign q JOIN assign c ON q.cid = c.cid
        |  WHERE q.vec_id < $AnnQueries AND c.vec_id <> q.vec_id)
-       |SELECT query_id, vec_id, cos_sim, rk FROM (
-       |  SELECT query_id, vec_id, cos_sim,
-       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
-       |  FROM scored) WHERE rk <= $AnnK""".stripMargin
-  }
+       |${topK("scored", AnnK)}""".stripMargin
 
   // ---- E3c': multi-probe IVF — the recall-vs-cost dial ----------------------
   // Same index as e3_ivf_topk, but each query probes its IvfNprobe
@@ -776,27 +716,22 @@ object ExtQueries {
       emb.filter(col("vec_id") < IvfCentroids), AnnK, IvfNprobe)
       .select(col("query_id"), col("vec_id"), col("cos_sim"), col("rk"))
   }
-  val e3c2Sql: String = {
-    val n2 = duckFold("list_transform(range(1, len(embedding)+1), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")
-    s"""WITH e AS (SELECT vec_id, embedding, $n2 AS n2 FROM embeddings),
+  val e3c2Sql: String =
+    s"""WITH ${embeddingCte()},
        |cent AS (SELECT vec_id AS cid, embedding AS cent_emb, n2 AS cent_n2 FROM e WHERE vec_id < $IvfCentroids),
        |ranked AS (
        |  SELECT v.vec_id, v.embedding, v.n2, cent.cid,
        |    row_number() OVER (PARTITION BY v.vec_id ORDER BY
-       |      ${duckDot("v.embedding", "cent.cent_emb")} / (sqrt(v.n2) * sqrt(cent.cent_n2)) DESC, cent.cid) AS rn
+       |      ${cosine("v.embedding", "cent.cent_emb", "v.n2", "cent.cent_n2")} DESC, cent.cid) AS rn
        |  FROM e v CROSS JOIN cent),
        |assignc AS (SELECT vec_id, embedding, n2, cid FROM ranked WHERE rn = 1),
        |assignq AS (SELECT vec_id, embedding, n2, cid FROM ranked
        |  WHERE rn <= $IvfNprobe AND vec_id < $AnnQueries),
        |scored AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-       |    ${duckDot("q.embedding", "c.embedding")} / (sqrt(q.n2) * sqrt(c.n2)) AS cos_sim
+       |    ${cosineOf("q", "c")} AS cos_sim
        |  FROM assignq q JOIN assignc c ON q.cid = c.cid
        |  WHERE c.vec_id <> q.vec_id)
-       |SELECT query_id, vec_id, cos_sim, rk FROM (
-       |  SELECT query_id, vec_id, cos_sim,
-       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
-       |  FROM scored) WHERE rk <= $AnnK""".stripMargin
-  }
+       |${topK("scored", AnnK)}""".stripMargin
 
   // ---- E3c'': the recall-vs-cost dial, driver-verified ----------------------
   // recall@k of the multi-probe IVF per nprobe ∈ {1, IvfNprobe}: the
@@ -826,35 +761,26 @@ object ExtQueries {
     recallAt(1).unionByName(recallAt(IvfNprobe))
   }
   lazy val e3c3Sql: String = {
-    val n2 = duckFold("list_transform(range(1, len(embedding)+1), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")
     def arm(np: Int) =
       s"""assignq$np AS (SELECT vec_id, embedding, n2, cid FROM ranked
          |  WHERE rn <= $np AND vec_id < $AnnQueries),
-         |scored$np AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-         |    ${duckDot("q.embedding", "c.embedding")} / (sqrt(q.n2) * sqrt(c.n2)) AS cos_sim
-         |  FROM assignq$np q JOIN assignc c ON q.cid = c.cid WHERE c.vec_id <> q.vec_id),
-         |an$np AS (SELECT query_id, vec_id FROM (
-         |  SELECT query_id, vec_id, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rk
-         |  FROM scored$np) WHERE rk <= $AnnK),
+         |${scored(s"assignq$np q JOIN assignc c ON q.cid = c.cid WHERE c.vec_id <> q.vec_id", s"scored$np")},
+         |an$np AS (${topKIds(s"scored$np", AnnK)}),
          |rec$np AS (SELECT CAST($np AS BIGINT) AS nprobe,
          |  CAST(count(*) AS BIGINT) AS n_exact,
          |  CAST(sum(CASE WHEN an$np.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
          |  CAST(sum(CASE WHEN an$np.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS recall
          |  FROM ex LEFT JOIN an$np ON ex.query_id = an$np.query_id AND ex.vec_id = an$np.vec_id)""".stripMargin
-    s"""WITH e AS (SELECT vec_id, embedding, $n2 AS n2 FROM embeddings),
+    s"""WITH ${embeddingCte()},
        |cent AS (SELECT vec_id AS cid, embedding AS cent_emb, n2 AS cent_n2 FROM e WHERE vec_id < $IvfCentroids),
        |ranked AS (
        |  SELECT v.vec_id, v.embedding, v.n2, cent.cid,
        |    row_number() OVER (PARTITION BY v.vec_id ORDER BY
-       |      ${duckDot("v.embedding", "cent.cent_emb")} / (sqrt(v.n2) * sqrt(cent.cent_n2)) DESC, cent.cid) AS rn
+       |      ${cosine("v.embedding", "cent.cent_emb", "v.n2", "cent.cent_n2")} DESC, cent.cid) AS rn
        |  FROM e v CROSS JOIN cent),
        |assignc AS (SELECT vec_id, embedding, n2, cid FROM ranked WHERE rn = 1),
-       |exs AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-       |    ${duckDot("q.embedding", "c.embedding")} / (sqrt(q.n2) * sqrt(c.n2)) AS cos_sim
-       |  FROM e q JOIN e c ON q.vec_id < $AnnQueries AND c.vec_id <> q.vec_id),
-       |ex AS (SELECT query_id, vec_id FROM (
-       |  SELECT query_id, vec_id, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rk
-       |  FROM exs) WHERE rk <= $AnnK),
+       |${scored(s"e q JOIN e c ON q.vec_id < $AnnQueries AND c.vec_id <> q.vec_id", "exs")},
+       |ex AS (${topKIds("exs", AnnK)}),
        |${arm(1)},
        |${arm(IvfNprobe)}
        |SELECT * FROM rec1 UNION ALL SELECT * FROM rec$IvfNprobe""".stripMargin
@@ -874,39 +800,58 @@ object ExtQueries {
   def e3Kmeans(s: SparkSession, dir: String): DataFrame =
     Similarity.kmeans(Tables.embeddings(s, dir), KmK, KmIters)
 
+  /** Mean of the double column `v` as [[graft.ops.Aggregates.exactMean]]
+    * computes it: each double enters the decimal through its shortest
+    * round-trip string (see e4_dim_stats).
+    */
+  private val vMeanSql = s"${exactSum("CAST(v AS VARCHAR)")} / COUNT(v)"
+
+  /** One Lloyd assignment: each vector of `src` to its nearest centroid
+    * of `cent` in (cosine desc, cid) order, as CTE `out`; `withCos`
+    * keeps that cosine as `cent_cos`.
+    */
+  private def kmAssignSql(src: String, cent: String, out: String, withCos: Boolean = false): String = {
+    val cos = cosine("v.embedding", "c.cent", "v.n2", "c.cn2")
+    val (outCos, cosCol) = if (withCos) (", cent_cos", s"\n    $cos AS cent_cos,") else ("", "")
+    s"""$out AS (SELECT vec_id, embedding, n2, cid$outCos FROM (
+       |  SELECT v.vec_id, v.embedding, v.n2, c.cid,$cosCol
+       |    row_number() OVER (PARTITION BY v.vec_id ORDER BY
+       |      $cos DESC, c.cid) AS rn
+       |  FROM $src v CROSS JOIN $cent c) t WHERE rn = 1)""".stripMargin
+  }
+
+  /** One decimal-exact centroid update over assignment `a`: per-dim
+    * member means rounded to float, as CTE `out` (cid, cent, cn2).
+    */
+  private def kmUpdateSql(a: String, out: String): String =
+    s"""${out}d AS (SELECT cid, dim, $vMeanSql AS m FROM (
+       |    SELECT cid, unnest(range(1, len(embedding)+1)) AS dim,
+       |           unnest(list_transform(embedding, v -> CAST(v AS DOUBLE))) AS v FROM $a) x
+       |  GROUP BY cid, dim),
+       |$out AS (SELECT cid, cent, ${norm2("cent")} AS cn2 FROM (
+       |  SELECT cid, list(CAST(m AS FLOAT) ORDER BY dim) AS cent FROM ${out}d GROUP BY cid) y)""".stripMargin
+
   /** Shared DuckDB replay of Similarity.kmeans(KmK, KmIters): CTE
     * chain `e, c0, a1, c1, a2, c2, a3` where a3 = one row per vector
-    * (vec_id, embedding, n2, cid, cent_cos) — the final assignment.
-    * double → VARCHAR → DECIMAL(28,10) in the update replicates
-    * Spark's shortest-round-trip decimal conversion (the
-    * e4_dim_stats recipe). Used by e3_kmeans and e2_semantic_dedup.
+    * (vec_id, embedding, n2, cid, and cent_cos when `withCos`) — the
+    * final assignment. double → VARCHAR → DECIMAL(28,10) in the update
+    * replicates Spark's shortest-round-trip decimal conversion (the
+    * e4_dim_stats recipe).
     */
-  private lazy val kmeansChainSql: String = {
-    val n2 = duckFold("list_transform(range(1, len(embedding)+1), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")
-    val centN2 = duckFold("list_transform(range(1, len(cent)+1), i -> CAST(cent[i] AS DOUBLE) * CAST(cent[i] AS DOUBLE))")
-    val mexpr = s"CAST(CAST(SUM(CAST(CAST(v AS VARCHAR) AS $AvgDec)) AS VARCHAR) AS DOUBLE) / COUNT(v)"
-    def assign(cent: String, out: String) =
-      s"""$out AS (SELECT vec_id, embedding, n2, cid, cent_cos FROM (
-         |  SELECT v.vec_id, v.embedding, v.n2, c.cid,
-         |    ${duckDot("v.embedding", "c.cent")} / (sqrt(v.n2) * sqrt(c.cn2)) AS cent_cos,
-         |    row_number() OVER (PARTITION BY v.vec_id ORDER BY
-         |      ${duckDot("v.embedding", "c.cent")} / (sqrt(v.n2) * sqrt(c.cn2)) DESC, c.cid) AS rn
-         |  FROM e v CROSS JOIN $cent c) t WHERE rn = 1)""".stripMargin
-    def update(a: String, out: String) =
-      s"""${out}d AS (SELECT cid, dim, $mexpr AS m FROM (
-         |    SELECT cid, unnest(range(1, len(embedding)+1)) AS dim,
-         |           unnest(list_transform(embedding, v -> CAST(v AS DOUBLE))) AS v FROM $a) x
-         |  GROUP BY cid, dim),
-         |$out AS (SELECT cid, cent, $centN2 AS cn2 FROM (
-         |  SELECT cid, list(CAST(m AS FLOAT) ORDER BY dim) AS cent FROM ${out}d GROUP BY cid) y)""".stripMargin
-    s"""e AS (SELECT vec_id, embedding, $n2 AS n2 FROM embeddings),
+  private def kmeansChain(withCos: Boolean): String = {
+    def assign(cent: String, out: String) = kmAssignSql("e", cent, out, withCos)
+    s"""${embeddingCte()},
        |c0 AS (SELECT vec_id AS cid, embedding AS cent, n2 AS cn2 FROM e WHERE vec_id < $KmK),
        |${assign("c0", "a1")},
-       |${update("a1", "c1")},
+       |${kmUpdateSql("a1", "c1")},
        |${assign("c1", "a2")},
-       |${update("a2", "c2")},
+       |${kmUpdateSql("a2", "c2")},
        |${assign("c2", "a3")}""".stripMargin
   }
+
+  /** The chain with cent_cos: e3_kmeans, e3_hard_negatives, e2_semantic_dedup. */
+  private lazy val kmeansChainSql: String = kmeansChain(withCos = true)
+
   val e3eSql: String =
     s"""WITH $kmeansChainSql
        |SELECT vec_id, cid AS cluster, cent_cos FROM a3""".stripMargin
@@ -945,13 +890,10 @@ object ExtQueries {
   val e3lSql: String =
     s"""WITH $kmeansChainSql,
        |scored AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-       |    ${duckDot("q.embedding", "c.embedding")} / (sqrt(q.n2) * sqrt(c.n2)) AS cos_sim
+       |    ${cosineOf("q", "c")} AS cos_sim
        |  FROM a3 q JOIN a3 c
        |  ON q.vec_id < $AnnQueries AND c.vec_id <> q.vec_id AND c.cid <> q.cid)
-       |SELECT query_id, vec_id, cos_sim, rk FROM (
-       |  SELECT query_id, vec_id, cos_sim,
-       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
-       |  FROM scored) WHERE rk <= $AnnK""".stripMargin
+       |${topK("scored", AnnK)}""".stripMargin
 
   // ---- E2j: semantic dedup (SemDeDup, Abbas et al. 2023) -------------------
   // The embedding-space analogue of MinHash dedup: k-means clusters
@@ -970,7 +912,7 @@ object ExtQueries {
     s"""WITH $kmeansChainSql,
        |removed AS (SELECT DISTINCT v.vec_id FROM a3 v JOIN a3 u ON u.cid = v.cid
        |  AND (u.cent_cos < v.cent_cos OR (u.cent_cos = v.cent_cos AND u.vec_id < v.vec_id))
-       |  AND ${duckDot("u.embedding", "v.embedding")} / (sqrt(u.n2) * sqrt(v.n2)) >= $NearDupThreshold)
+       |  AND ${cosineOf("u", "v")} >= $NearDupThreshold)
        |SELECT a.vec_id, a.cid AS cluster, a.cent_cos, (r.vec_id IS NULL) AS keep
        |FROM a3 a LEFT JOIN removed r ON a.vec_id = r.vec_id""".stripMargin
 
@@ -989,39 +931,10 @@ object ExtQueries {
       Similarity.kmeansCentroids(emb, KmK, KmIters), AnnK)
       .select(col("query_id"), col("vec_id"), col("cos_sim"), col("rk"))
   }
-  val e3fSql: String = {
-    val n2 = duckFold("list_transform(range(1, len(embedding)+1), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")
-    val centN2 = duckFold("list_transform(range(1, len(cent)+1), i -> CAST(cent[i] AS DOUBLE) * CAST(cent[i] AS DOUBLE))")
-    val mexpr = s"CAST(CAST(SUM(CAST(CAST(v AS VARCHAR) AS $AvgDec)) AS VARCHAR) AS DOUBLE) / COUNT(v)"
-    def assign(cent: String, out: String) =
-      s"""$out AS (SELECT vec_id, embedding, n2, cid FROM (
-         |  SELECT v.vec_id, v.embedding, v.n2, c.cid,
-         |    row_number() OVER (PARTITION BY v.vec_id ORDER BY
-         |      ${duckDot("v.embedding", "c.cent")} / (sqrt(v.n2) * sqrt(c.cn2)) DESC, c.cid) AS rn
-         |  FROM e v CROSS JOIN $cent c) t WHERE rn = 1)""".stripMargin
-    def update(a: String, out: String) =
-      s"""${out}d AS (SELECT cid, dim, $mexpr AS m FROM (
-         |    SELECT cid, unnest(range(1, len(embedding)+1)) AS dim,
-         |           unnest(list_transform(embedding, v -> CAST(v AS DOUBLE))) AS v FROM $a) x
-         |  GROUP BY cid, dim),
-         |$out AS (SELECT cid, cent, $centN2 AS cn2 FROM (
-         |  SELECT cid, list(CAST(m AS FLOAT) ORDER BY dim) AS cent FROM ${out}d GROUP BY cid) y)""".stripMargin
-    s"""WITH e AS (SELECT vec_id, embedding, $n2 AS n2 FROM embeddings),
-       |c0 AS (SELECT vec_id AS cid, embedding AS cent, n2 AS cn2 FROM e WHERE vec_id < $KmK),
-       |${assign("c0", "a1")},
-       |${update("a1", "c1")},
-       |${assign("c1", "a2")},
-       |${update("a2", "c2")},
-       |${assign("c2", "a3")},
-       |scored AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-       |    ${duckDot("q.embedding", "c.embedding")} / (sqrt(q.n2) * sqrt(c.n2)) AS cos_sim
-       |  FROM a3 q JOIN a3 c ON q.cid = c.cid
-       |  WHERE q.vec_id < $AnnQueries AND c.vec_id <> q.vec_id)
-       |SELECT query_id, vec_id, cos_sim, rk FROM (
-       |  SELECT query_id, vec_id, cos_sim,
-       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
-       |  FROM scored) WHERE rk <= $AnnK""".stripMargin
-  }
+  val e3fSql: String =
+    s"""WITH ${kmeansChain(withCos = false)},
+       |${scored(s"a3 q JOIN a3 c ON q.cid = c.cid\n  WHERE q.vec_id < $AnnQueries AND c.vec_id <> q.vec_id")}
+       |${topK("scored", AnnK)}""".stripMargin
 
   // ---- E3g: product-quantization codes (per-subspace codebooks) ------------
   // The compression layer of a production ANN index: 4 subspaces × 16
@@ -1049,34 +962,18 @@ object ExtQueries {
     * table — exactly what write-on-base + append-delta produces.
     */
   private def pqChains(baseFilter: String): String = {
-    def fold(c: String) = duckFold(
-      s"list_transform(range(1, len($c)+1), i -> CAST($c[i] AS DOUBLE) * CAST($c[i] AS DOUBLE))")
-    val mexpr = s"CAST(CAST(SUM(CAST(CAST(v AS VARCHAR) AS $AvgDec)) AS VARCHAR) AS DOUBLE) / COUNT(v)"
-    def assign(e: String, cent: String, out: String) =
-      s"""$out AS (SELECT vec_id, embedding, n2, cid FROM (
-         |  SELECT v.vec_id, v.embedding, v.n2, c.cid,
-         |    row_number() OVER (PARTITION BY v.vec_id ORDER BY
-         |      ${duckDot("v.embedding", "c.cent")} / (sqrt(v.n2) * sqrt(c.cn2)) DESC, c.cid) AS rn
-         |  FROM $e v CROSS JOIN $cent c) t WHERE rn = 1)""".stripMargin
-    def update(a: String, out: String) =
-      s"""${out}d AS (SELECT cid, dim, $mexpr AS m FROM (
-         |    SELECT cid, unnest(range(1, len(embedding)+1)) AS dim,
-         |           unnest(list_transform(embedding, v -> CAST(v AS DOUBLE))) AS v FROM $a) x
-         |  GROUP BY cid, dim),
-         |$out AS (SELECT cid, cent, ${fold("cent")} AS cn2 FROM (
-         |  SELECT cid, list(CAST(m AS FLOAT) ORDER BY dim) AS cent FROM ${out}d GROUP BY cid) y)""".stripMargin
     (0 until PqM).map { i =>
       val (lo, hi) = (i * PqSubDim + 1, (i + 1) * PqSubDim)
       val p = s"s$i"
       val (trainCte, trainSrc) =
         if (baseFilter.isEmpty) ("", s"${p}e")
         else (s"${p}b AS (SELECT * FROM ${p}e WHERE $baseFilter),\n", s"${p}b")
-      s"""${p}e AS (SELECT vec_id, embedding, ${fold("embedding")} AS n2 FROM (
+      s"""${p}e AS (SELECT vec_id, embedding, ${norm2("embedding")} AS n2 FROM (
          |  SELECT vec_id, embedding[$lo:$hi] AS embedding FROM embeddings) z$i),
          |$trainCte${p}c0 AS (SELECT vec_id AS cid, embedding AS cent, n2 AS cn2 FROM $trainSrc WHERE vec_id < $PqK),
-         |${assign(trainSrc, s"${p}c0", s"${p}a1")},
-         |${update(s"${p}a1", s"${p}c1")},
-         |${assign(s"${p}e", s"${p}c1", s"${p}a2")}""".stripMargin
+         |${kmAssignSql(trainSrc, s"${p}c0", s"${p}a1")},
+         |${kmUpdateSql(s"${p}a1", s"${p}c1")},
+         |${kmAssignSql(s"${p}e", s"${p}c1", s"${p}a2")}""".stripMargin
     }.mkString(",\n")
   }
   lazy val e3gSql: String = {
@@ -1103,7 +1000,7 @@ object ExtQueries {
   lazy val e3kSql: String = {
     val luts = (0 until PqM).map { i =>
       val (lo, hi) = (i * PqSubDim + 1, (i + 1) * PqSubDim)
-      s"""lut$i AS (SELECT q.query_id, c.cid, ${duckDot("q.q_sub", "c.cent")} AS p_$i
+      s"""lut$i AS (SELECT q.query_id, c.cid, ${dot("q.q_sub", "c.cent")} AS p_$i
          |  FROM (SELECT vec_id AS query_id, embedding[$lo:$hi] AS q_sub
          |        FROM embeddings WHERE vec_id < $AnnQueries) q
          |  CROSS JOIN s${i}c1 c)""".stripMargin
@@ -1262,40 +1159,17 @@ object ExtQueries {
       .select(col("query_id"), col("vec_id"), col("cos_sim"), col("rk"))
   }
 
-  val e3nSql: String = {
-    val n2 = duckFold("list_transform(range(1, len(embedding)+1), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")
-    val centN2 = duckFold("list_transform(range(1, len(cent)+1), i -> CAST(cent[i] AS DOUBLE) * CAST(cent[i] AS DOUBLE))")
-    val mexpr = s"CAST(CAST(SUM(CAST(CAST(v AS VARCHAR) AS $AvgDec)) AS VARCHAR) AS DOUBLE) / COUNT(v)"
-    def assign(src: String, cent: String, out: String) =
-      s"""$out AS (SELECT vec_id, embedding, n2, cid FROM (
-         |  SELECT v.vec_id, v.embedding, v.n2, c.cid,
-         |    row_number() OVER (PARTITION BY v.vec_id ORDER BY
-         |      ${duckDot("v.embedding", "c.cent")} / (sqrt(v.n2) * sqrt(c.cn2)) DESC, c.cid) AS rn
-         |  FROM $src v CROSS JOIN $cent c) t WHERE rn = 1)""".stripMargin
-    def update(a: String, out: String) =
-      s"""${out}d AS (SELECT cid, dim, $mexpr AS m FROM (
-         |    SELECT cid, unnest(range(1, len(embedding)+1)) AS dim,
-         |           unnest(list_transform(embedding, v -> CAST(v AS DOUBLE))) AS v FROM $a) x
-         |  GROUP BY cid, dim),
-         |$out AS (SELECT cid, cent, $centN2 AS cn2 FROM (
-         |  SELECT cid, list(CAST(m AS FLOAT) ORDER BY dim) AS cent FROM ${out}d GROUP BY cid) y)""".stripMargin
-    s"""WITH e AS (SELECT vec_id, embedding, $n2 AS n2 FROM embeddings),
+  val e3nSql: String =
+    s"""WITH ${embeddingCte()},
        |eb AS (SELECT * FROM e WHERE vec_id % 7 <> 3),
        |c0 AS (SELECT vec_id AS cid, embedding AS cent, n2 AS cn2 FROM eb WHERE vec_id < $KmK),
-       |${assign("eb", "c0", "a1")},
-       |${update("a1", "c1")},
-       |${assign("eb", "c1", "a2")},
-       |${update("a2", "c2")},
-       |${assign("e", "c2", "a3")},
-       |scored AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-       |    ${duckDot("q.embedding", "c.embedding")} / (sqrt(q.n2) * sqrt(c.n2)) AS cos_sim
-       |  FROM a3 q JOIN a3 c ON q.cid = c.cid
-       |  WHERE q.vec_id < $AnnQueries AND c.vec_id <> q.vec_id)
-       |SELECT query_id, vec_id, cos_sim, rk FROM (
-       |  SELECT query_id, vec_id, cos_sim,
-       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
-       |  FROM scored) WHERE rk <= $AnnK""".stripMargin
-  }
+       |${kmAssignSql("eb", "c0", "a1")},
+       |${kmUpdateSql("a1", "c1")},
+       |${kmAssignSql("eb", "c1", "a2")},
+       |${kmUpdateSql("a2", "c2")},
+       |${kmAssignSql("e", "c2", "a3")},
+       |${scored(s"a3 q JOIN a3 c ON q.cid = c.cid\n  WHERE q.vec_id < $AnnQueries AND c.vec_id <> q.vec_id")}
+       |${topK("scored", AnnK)}""".stripMargin
 
   // ---- E4: array-column statistics over embeddings -------------------------
   def e4EmbeddingStats(s: SparkSession, dir: String): DataFrame =
@@ -1307,8 +1181,8 @@ object ExtQueries {
         size(col("embedding")).cast("double")).as("avg_val"),
       col("label"))
   val e4Sql: String = {
-    val sumFold = duckFold("list_transform(embedding, v -> CAST(v AS DOUBLE))")
-    val n2 = duckFold("list_transform(range(1, len(embedding)+1), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")
+    val sumFold = fold("list_transform(embedding, v -> CAST(v AS DOUBLE))")
+    val n2 = norm2("embedding")
     s"SELECT vec_id, len(embedding) AS dims, sqrt($n2) AS l2_norm, " +
       s"$sumFold / CAST(len(embedding) AS DOUBLE) AS avg_val, label FROM embeddings"
   }
@@ -1324,7 +1198,7 @@ object ExtQueries {
   }
   val e4bSql: String =
     "SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes, md5(text) AS digest, " +
-      s"CAST(${duckMd5Int("md5(text) || '_0'")} % 1000 AS DOUBLE) / 1000.0 AS feat0 FROM documents"
+      s"CAST(${md5IntTight("md5(text) || '_0'")} % 1000 AS DOUBLE) / 1000.0 AS feat0 FROM documents"
 
   // ---- E4d: per-dimension embedding statistics ------------------------------
   // The feature-normalization precompute (per-dim n/mean/min/max for
@@ -1348,13 +1222,11 @@ object ExtQueries {
   // and for float-widened doubles the two roundings at scale 10 can
   // differ (the expansion's digits 11+ land exactly in the cut zone).
   // VARCHAR → shortest repr → parse replicates Spark's semantics.
-  val e4dSql: String = {
-    val m = s"CAST(CAST(SUM(CAST(CAST(v AS VARCHAR) AS $AvgDec)) AS VARCHAR) AS DOUBLE) / COUNT(v)"
+  val e4dSql: String =
     s"""WITH x AS (SELECT unnest(range(1, len(embedding)+1)) AS dim,
        |  unnest(list_transform(embedding, v -> CAST(v AS DOUBLE))) AS v FROM embeddings)
-       |SELECT dim, count(*) AS n, $m AS mean_v, min(v) AS min_v, max(v) AS max_v
+       |SELECT dim, count(*) AS n, $vMeanSql AS mean_v, min(v) AS min_v, max(v) AS max_v
        |FROM x GROUP BY dim""".stripMargin
-  }
 
   // ---- E4c: REAL image decode — PNG encode→decode→pixel stats --------------
   // Per-row: seed from the doc digest → deterministic 8×8 grayscale
@@ -1378,7 +1250,7 @@ object ExtQueries {
   val e4cSql: String = {
     import graft.functions.ImageCodec.{MixA, MixB, P => IP}
     val n = ImgW * ImgH
-    s"""WITH seeds AS (SELECT doc_id, ${duckMd5Int("md5(text)")} AS seed FROM documents),
+    s"""WITH seeds AS (SELECT doc_id, ${md5IntTight("md5(text)")} AS seed FROM documents),
        |px AS (SELECT doc_id, [((seed * (((i+1)*$MixA + $MixB) % $IP)) % $IP) % 256 for i in range(0, $n)] AS p FROM seeds)
        |SELECT doc_id, CAST($ImgW AS BIGINT) AS img_w, CAST($ImgH AS BIGINT) AS img_h,
        |  CAST(list_sum(p) AS BIGINT) AS px_sum, CAST(list_min(p) AS BIGINT) AS px_min,
@@ -1414,7 +1286,7 @@ object ExtQueries {
     val sy = ImgH / RszH
     val sx = ImgW / RszW
     val srcIdx = s"((i // $RszW) * $sy) * $ImgW + (i % $RszW) * $sx"
-    s"""WITH seeds AS (SELECT doc_id, ${duckMd5Int("md5(text)")} AS seed FROM documents),
+    s"""WITH seeds AS (SELECT doc_id, ${md5IntTight("md5(text)")} AS seed FROM documents),
        |px AS (SELECT doc_id, [((seed * ((($srcIdx + 1)*$MixA + $MixB) % $IP)) % $IP) % 256 for i in range(0, $n)] AS p FROM seeds)
        |SELECT doc_id, CAST($RszW AS BIGINT) AS img_w, CAST($RszH AS BIGINT) AS img_h,
        |  CAST(list_sum(p) AS BIGINT) AS px_sum, CAST(list_min(p) AS BIGINT) AS px_min,
@@ -1487,7 +1359,7 @@ object ExtQueries {
     import graft.functions.ImageCodec.{MixA, MixB, P => IP}
     val n = VidW * VidH
     val px = s"(((seed + f) * (((i + 1) * $MixA + $MixB) % $IP)) % $IP) % 256"
-    s"""WITH seeds AS (SELECT doc_id, ${duckMd5Int("md5(text)")} AS seed FROM documents),
+    s"""WITH seeds AS (SELECT doc_id, ${md5IntTight("md5(text)")} AS seed FROM documents),
        |fr AS (SELECT doc_id, [[$px for i in range(0, $n)] for f in range(0, $VidFrames)] AS fs FROM seeds),
        |ct AS (SELECT doc_id, [CAST(f AS BIGINT) for f in range(1, $VidFrames)
        |    if list_sum(list_transform(range(1, $n + 1), i -> abs(fs[f + 1][i] - fs[f][i]))) > $SceneCutThr] AS cuts
@@ -1513,7 +1385,7 @@ object ExtQueries {
   val e4eSql: String = {
     import graft.functions.AudioCodec.SampleRate
     import graft.functions.ImageCodec.{MixA, MixB, P => IP}
-    s"""WITH seeds AS (SELECT doc_id, ${duckMd5Int("md5(text)")} AS seed FROM documents),
+    s"""WITH seeds AS (SELECT doc_id, ${md5IntTight("md5(text)")} AS seed FROM documents),
        |smp AS (SELECT doc_id, [((seed * (((i+1)*$MixA + $MixB) % $IP)) % $IP) % 65536 - 32768 for i in range(0, $AudioN)] AS sm FROM seeds)
        |SELECT doc_id, CAST($AudioN AS BIGINT) AS n_samples, CAST($SampleRate AS BIGINT) AS sample_rate,
        |  CAST(list_sum(sm) AS BIGINT) AS amp_sum,
@@ -1541,7 +1413,7 @@ object ExtQueries {
     import graft.functions.ImageCodec.{MixA, MixB, P => IP}
     val n = VidW * VidH
     val mid = VidFrames / 2
-    s"""WITH seeds AS (SELECT doc_id, ${duckMd5Int("md5(text)")} + $mid AS fseed FROM documents),
+    s"""WITH seeds AS (SELECT doc_id, ${md5IntTight("md5(text)")} + $mid AS fseed FROM documents),
        |px AS (SELECT doc_id, [((fseed * (((i+1)*$MixA + $MixB) % $IP)) % $IP) % 256 for i in range(0, $n)] AS p FROM seeds)
        |SELECT doc_id, CAST($VidFrames AS BIGINT) AS n_frames, CAST($mid AS BIGINT) AS frame_idx,
        |  CAST(list_sum(p) AS BIGINT) AS px_sum, CAST(list_min(p) AS BIGINT) AS px_min,
@@ -1615,7 +1487,7 @@ object ExtQueries {
         Sampling.assignSplit(col("doc_id")).as("split"))
   }
   lazy val e6pSql: String = {
-    val b = s"${duckMd5Int("'split_' || CAST(doc_id AS VARCHAR)")} % 1000"
+    val b = s"${md5IntTight("'split_' || CAST(doc_id AS VARCHAR)")} % 1000"
     s"""WITH RECURSIVE
        |$e6CleanCtes,
        |clean AS (SELECT exact.doc_id, n_tokens, lang_guess
@@ -1643,7 +1515,7 @@ object ExtQueries {
       col("doc_id"),
       Sampling.assignSplit(col("doc_id")).as("split"))
   val e7Sql: String = {
-    val b = s"${duckMd5Int("'split_' || CAST(doc_id AS VARCHAR)")} % 1000"
+    val b = s"${md5IntTight("'split_' || CAST(doc_id AS VARCHAR)")} % 1000"
     s"SELECT doc_id, CASE WHEN $b < 800 THEN 'train' WHEN $b < 900 THEN 'val' ELSE 'test' END AS split FROM documents"
   }
 
@@ -1659,7 +1531,7 @@ object ExtQueries {
       "source", "doc_id", ReservoirK)
       .select(col("source"), col("doc_id"), col("rk").cast("long").as("rk"))
   val e7gSql: String = {
-    val draw = duckMd5Int("'reservoir_' || CAST(doc_id AS VARCHAR)")
+    val draw = md5IntTight("'reservoir_' || CAST(doc_id AS VARCHAR)")
     s"""SELECT source, doc_id, rk FROM (
        |  SELECT source, doc_id, CAST(row_number() OVER (
        |    PARTITION BY source ORDER BY $draw, doc_id) AS BIGINT) AS rk
@@ -1686,7 +1558,7 @@ object ExtQueries {
         col("rk").cast("long").as("rk"), col("est_w"))
   val e7kSql: String = {
     val u =
-      s"(CAST((${duckMd5Int("'wsamp_' || CAST(doc_id AS VARCHAR)")} + 1) AS DOUBLE) / 4294967296.0)"
+      s"(CAST((${md5IntTight("'wsamp_' || CAST(doc_id AS VARCHAR)")} + 1) AS DOUBLE) / 4294967296.0)"
     s"""WITH d AS (SELECT source, doc_id, n_chars,
        |    CAST(n_chars AS DOUBLE) / $u AS q
        |  FROM documents WHERE n_chars IS NOT NULL AND doc_id IS NOT NULL),
@@ -1711,7 +1583,7 @@ object ExtQueries {
         count(lit(1)).as("n_total"),
         count(when(col("keep"), lit(1))).as("n_kept"))
   val e7bSql: String = {
-    val b = s"${duckMd5Int("'mix_' || CAST(doc_id AS VARCHAR)")} % 1000"
+    val b = s"${md5IntTight("'mix_' || CAST(doc_id AS VARCHAR)")} % 1000"
     val rate = MixRates.toSeq.sortBy(_._1).reverse
       .foldRight(MixDefault.toString) { case ((src, r), acc) =>
         s"CASE WHEN source = '$src' THEN $r ELSE $acc END"
@@ -1749,7 +1621,7 @@ object ExtQueries {
       .orderBy(col("source"))
   }
   val e7eSql: String = {
-    val h = duckMd5Int("'temp_' || CAST(doc_id AS VARCHAR)")
+    val h = md5IntTight("'temp_' || CAST(doc_id AS VARCHAR)")
     s"""WITH counts AS (SELECT source, count(*) AS n_orig FROM documents GROUP BY source),
        |rates AS (SELECT source, n_orig,
        |    CAST(floor(sqrt(CAST(n_min AS DOUBLE) / CAST(n_orig AS DOUBLE)) * $TempScale) AS BIGINT) AS thresh
@@ -2115,7 +1987,7 @@ object ExtQueries {
   val e5Sql: String =
     "SELECT lang, source, count(*) AS n_docs, " +
       "CAST(sum(len(string_split_regex(trim(text), '\\s+'))) AS BIGINT) AS sum_tokens, " +
-      s"${meanSql("n_chars")} AS avg_chars FROM documents GROUP BY lang, source"
+      s"${exactMean("n_chars")} AS avg_chars FROM documents GROUP BY lang, source"
 
   // ---- E5b: word frequency — explode + top-5 words per language ------------
   def e5WordFreq(s: SparkSession, dir: String): DataFrame = {
@@ -2534,12 +2406,12 @@ object ExtQueries {
     val canonS = TextOps.canonicalizeUrlDuck("src_url")
     def iter(r: Int) =
       s"""c$r AS (SELECT e.dst_host AS id,
-         |    CAST(CAST((p.pr / CAST(e.wout AS DOUBLE)) * CAST(e.w AS DOUBLE) AS VARCHAR) AS $AvgDec) AS cd
+         |    ${toDec("(p.pr / CAST(e.wout AS DOUBLE)) * CAST(e.w AS DOUBLE)")} AS cd
          |  FROM pr${r - 1} p JOIN edw e ON p.id = e.src_host),
          |s$r AS (SELECT id, SUM(cd) AS sdec FROM c$r GROUP BY id),
          |pr$r AS (SELECT h.host AS id,
          |    CAST(0.15 AS DOUBLE) / CAST(nn.n AS DOUBLE) +
-         |    CAST(0.85 AS DOUBLE) * COALESCE(CAST(CAST(s.sdec AS VARCHAR) AS DOUBLE), CAST(0 AS DOUBLE)) AS pr
+         |    CAST(0.85 AS DOUBLE) * COALESCE(${toDouble("s.sdec")}, CAST(0 AS DOUBLE)) AS pr
          |  FROM hosts h CROSS JOIN nfr nn LEFT JOIN s$r s ON h.host = s.id)""".stripMargin
     val iters = (1 to PrIters).map(r => "," + iter(r)).mkString("\n")
     s"""WITH pages AS (SELECT doc_id, $wrap AS src_url, $page AS page FROM documents),
@@ -2661,7 +2533,7 @@ object ExtQueries {
   lazy val e7rwSql: String = {
     val wrap = TextOps.urlWrapDuck("doc_id")
     val canonS = TextOps.canonicalizeUrlDuck("src_url")
-    val h = duckMd5Int("'rankmix_' || CAST(doc_id AS VARCHAR)")
+    val h = md5IntTight("'rankmix_' || CAST(doc_id AS VARCHAR)")
     s"""WITH rank_tbl AS ($e2hrSql),
        |mx AS (SELECT max(pr) AS pr_max FROM rank_tbl),
        |rates AS (SELECT host AS src_host,
@@ -2711,7 +2583,7 @@ object ExtQueries {
       .select(col("doc_id"), col("fp"), TextOps.simhash32("hs").as("simhash"))
   val e5dSql: String =
     s"""WITH t AS (SELECT doc_id, md5(lower(trim(text))) fp,
-       |  list_transform(string_split_regex(trim(text), '\\s+'), tok -> ${duckMd5Int("tok")}) hs FROM documents)
+       |  list_transform(string_split_regex(trim(text), '\\s+'), tok -> ${md5IntTight("tok")}) hs FROM documents)
        |SELECT doc_id, fp, CAST(list_sum(list_transform(range(0, 32), b ->
        |  CASE WHEN list_sum(list_transform(hs, h -> CASE WHEN ((h >> b) & 1) = 1 THEN 1 ELSE -1 END)) > 0
        |  THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS simhash FROM t""".stripMargin
@@ -2747,7 +2619,7 @@ object ExtQueries {
     }
     def dupFrac(w: String): String =
       s"CASE WHEN len($w) = 0 THEN 0.0 ELSE 1.0 - CAST(len(list_distinct($w)) AS DOUBLE) / CAST(len($w) AS DOUBLE) END"
-    s"""WITH toks AS (SELECT doc_id, list_transform(string_split_regex(trim(text), '\\s+'), t -> ${duckMd5Int("t")} % $P) hs FROM documents),
+    s"""WITH toks AS (SELECT doc_id, list_transform(string_split_regex(trim(text), '\\s+'), t -> ${md5IntTight("t")} % $P) hs FROM documents),
        |wins AS (SELECT doc_id, hs, ${win(2)} w2, ${win(3)} w3 FROM toks)
        |SELECT doc_id, ${dupFrac("w2")} AS dup_bigram_frac, ${dupFrac("w3")} AS dup_trigram_frac,
        |  CASE WHEN len(hs) = 0 THEN NULL ELSE CAST(len(list_distinct(hs)) AS DOUBLE) / CAST(len(hs) AS DOUBLE) END AS ttr
@@ -3046,7 +2918,7 @@ object ExtQueries {
   val e7cSql: String =
     s"""SELECT doc_id, source, rk FROM (
        |  SELECT doc_id, source, CAST(row_number() OVER (
-       |    PARTITION BY source ORDER BY ${duckMd5Int("'strat_' || CAST(doc_id AS VARCHAR)")}, doc_id) AS BIGINT) AS rk
+       |    PARTITION BY source ORDER BY ${md5IntTight("'strat_' || CAST(doc_id AS VARCHAR)")}, doc_id) AS BIGINT) AS rk
        |  FROM documents) WHERE rk <= $StratK""".stripMargin
 
   // ---- E5h: document chunking (context-window preparation) -----------------
@@ -3432,10 +3304,10 @@ object ExtQueries {
        |cl AS (SELECT w1, sum(cb) AS cl FROM cb GROUP BY 1),
        |vv AS (SELECT count(DISTINCT word) AS v FROM (SELECT unnest(string_split_regex(trim(text), '\\s+')) AS word FROM documents)),
        |sc AS (SELECT doc_id, n_occ,
-       |    CAST(CAST(CAST(n_occ AS DOUBLE) * (CAST(cb + 1 AS DOUBLE) / CAST(cl + v AS DOUBLE)) AS VARCHAR) AS $AvgDec) AS cd
+       |    ${toDec("CAST(n_occ AS DOUBLE) * (CAST(cb + 1 AS DOUBLE) / CAST(cl + v AS DOUBLE))")} AS cd
        |  FROM pd JOIN cb USING (w1, w2) JOIN cl USING (w1) CROSS JOIN vv)
        |SELECT doc_id, CAST(sum(n_occ) AS BIGINT) AS n_bigrams,
-       |  CAST(CAST(sum(cd) AS VARCHAR) AS DOUBLE) / CAST(sum(n_occ) AS DOUBLE) AS mean_p
+       |  ${toDouble("sum(cd)")} / CAST(sum(n_occ) AS DOUBLE) AS mean_p
        |FROM sc GROUP BY doc_id""".stripMargin
 
   // ---- E5bo: trigram stupid-backoff held-out scoring -----------------------
@@ -3482,7 +3354,7 @@ object ExtQueries {
        |  LEFT JOIN c1 u3 ON hd.w3 = u3.w
        |  CROSS JOIN tt)
        |SELECT doc_id, CAST(sum(n_occ) AS BIGINT) AS n_trigrams,
-       |  CAST(CAST(sum(CAST(CAST(CAST(n_occ AS DOUBLE) * sv AS VARCHAR) AS $AvgDec)) AS VARCHAR) AS DOUBLE)
+       |  ${toDouble(s"sum(${toDec("CAST(n_occ AS DOUBLE) * sv")})")}
        |    / CAST(sum(n_occ) AS DOUBLE) AS mean_s
        |FROM sc GROUP BY doc_id""".stripMargin
 
@@ -3539,7 +3411,7 @@ object ExtQueries {
        |  LEFT JOIN ${p}c1 u3 ON hd.w3 = u3.w
        |  CROSS JOIN ${p}tt),
        |${p}doc AS (SELECT doc_id, CAST(sum(n_occ) AS BIGINT) AS n_trigrams,
-       |  CAST(CAST(sum(CAST(CAST(CAST(n_occ AS DOUBLE) * sv AS VARCHAR) AS $AvgDec)) AS VARCHAR) AS DOUBLE)
+       |  ${toDouble(s"sum(${toDec("CAST(n_occ AS DOUBLE) * sv")})")}
        |    / CAST(sum(n_occ) AS DOUBLE) AS mean_s
        |FROM ${p}sc GROUP BY doc_id)""".stripMargin
   val e5dsSql: String =
@@ -3570,7 +3442,7 @@ object ExtQueries {
     val stops = TextOps.enMarkers.map(w => s"'$w'").mkString("(", ", ", ")")
     val cm = Seq("f_stop" -> "c_stop", "f_len" -> "c_len", "f_ttr" -> "c_ttr")
       .map { case (f, c) =>
-        s"CAST(CAST(sum(CAST(CAST($f AS VARCHAR) AS $AvgDec)) AS VARCHAR) AS DOUBLE) / count(*) AS $c"
+        s"${toDouble(s"sum(${toDec(f)})")} / count(*) AS $c"
       }.mkString(", ")
     val wide = (for (cls <- Seq("hi", "lo"); c <- Seq("c_stop", "c_len", "c_ttr"))
       yield s"max(CASE WHEN label_seed = '$cls' THEN $c END) AS ${cls}_$c").mkString(", ")
@@ -3655,15 +3527,13 @@ object ExtQueries {
         (col("n_hit").cast("double") / col("n_exact").cast("double")).as("recall"))
   }
   val e3iSql: String = {
-    val n2 = duckFold("list_transform(range(1, len(embedding)+1), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")
+    val n2 = norm2("embedding")
     s"""WITH ${sq8DuckCtes()},
        |e AS (SELECT vec_id, embedding, $n2 AS fn2 FROM embeddings),
        |exs AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-       |    ${duckDot("q.embedding", "c.embedding")} / (sqrt(q.fn2) * sqrt(c.fn2)) AS cos_sim
+       |    ${cosine("q.embedding", "c.embedding", "q.fn2", "c.fn2")} AS cos_sim
        |  FROM e q JOIN e c ON q.vec_id < $AnnQueries AND c.vec_id <> q.vec_id),
-       |ex AS (SELECT query_id, vec_id FROM (
-       |  SELECT query_id, vec_id, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rk
-       |  FROM exs) WHERE rk <= $AnnK)
+       |ex AS (${topKIds("exs", AnnK)})
        |SELECT ex.query_id, CAST(count(*) AS BIGINT) AS n_exact,
        |  CAST(sum(CASE WHEN sk.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
        |  CAST(sum(CASE WHEN sk.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS recall
@@ -3736,7 +3606,13 @@ object ExtQueries {
     * query terms (caller-supplied WHERE/ORDER source), the rest is
     * the scoring chain.
     */
-  private def bm25DuckCtes(qtCte: String): String =
+  private def bm25DuckCtes(qtCte: String): String = {
+    val term =
+      """
+        |      ((CAST(n_docs - df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5)) *
+        |      ((CAST(tf AS DOUBLE) * 2.2) /
+        |       (CAST(tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE) / avgdl))))
+        |     """.stripMargin
     s"""tkz AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS tks FROM documents),
        |tfm AS (SELECT doc_id, word, count(*) AS tf, max(dl) AS dl FROM (
        |    SELECT doc_id, len(tks) AS dl, unnest(tks) AS word FROM tkz) x
@@ -3744,16 +3620,13 @@ object ExtQueries {
        |dfm AS (SELECT word, count(*) AS df FROM tfm GROUP BY word),
        |dlf AS (SELECT doc_id, max(dl) AS dl FROM tfm GROUP BY doc_id),
        |nn AS (SELECT count(*) AS n_docs FROM dlf),
-       |ad AS (SELECT ${meanSql("dl")} AS avgdl FROM dlf),
+       |ad AS (SELECT ${exactMean("dl")} AS avgdl FROM dlf),
        |$qtCte,
        |bsc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_terms,
-       |    CAST(CAST(sum(CAST(CAST(
-       |      ((CAST(n_docs - df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5)) *
-       |      ((CAST(tf AS DOUBLE) * 2.2) /
-       |       (CAST(tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE) / avgdl))))
-       |      AS VARCHAR) AS $AvgDec)) AS VARCHAR) AS DOUBLE) AS score
+       |    ${toDouble(s"sum(${toDec(term)})")} AS score
        |  FROM tfm JOIN qt USING (word) JOIN dfm USING (word) CROSS JOIN nn CROSS JOIN ad
        |  GROUP BY doc_id)""".stripMargin
+  }
   val e5qSql: String = {
     val stops = TextOps.enMarkers.map(w => s"'$w'").mkString("(", ", ", ")")
     val qt =
@@ -3832,7 +3705,7 @@ object ExtQueries {
   }
   val e3jSql: String = {
     val stops = TextOps.enMarkers.map(w => s"'$w'").mkString("(", ", ", ")")
-    val n2 = duckFold("list_transform(range(1, len(embedding)+1), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")
+    val n2 = norm2("embedding")
     val qt =
       s"""qt AS (SELECT word FROM (
          |  SELECT word, row_number() OVER (ORDER BY count(*) DESC, word) AS qrk
@@ -3842,7 +3715,7 @@ object ExtQueries {
        |e AS (SELECT vec_id, embedding, $n2 AS fn2 FROM embeddings),
        |dn AS (SELECT vec_id AS doc_id, CAST(row_number() OVER (
        |    ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk_a FROM (
-       |  SELECT c.vec_id, ${duckDot("q.embedding", "c.embedding")} / (sqrt(q.fn2) * sqrt(c.fn2)) AS cos_sim
+       |  SELECT c.vec_id, ${cosine("q.embedding", "c.embedding", "q.fn2", "c.fn2")} AS cos_sim
        |  FROM e q JOIN e c ON q.vec_id = 0 AND c.vec_id <> 0) d
        |  QUALIFY rk_a <= $Bm25K),
        |sp AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS rk_b
@@ -3892,7 +3765,7 @@ object ExtQueries {
        |  CAST(sum(n_chars) AS BIGINT) AS n_chars,
        |  CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
        |  1.0 - CAST(count(DISTINCT md5(lower(trim(text)))) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS dup_frac,
-       |  ${meanSql(s"CAST(CAST($q AS VARCHAR) AS $AvgDec)")} AS mean_quality
+       |  ${exactMean(toDec(q))} AS mean_quality
        |FROM documents GROUP BY source""".stripMargin
   }
 
@@ -3988,7 +3861,7 @@ object ExtQueries {
   val e7dSql: String =
     s"""WITH c AS (SELECT doc_id, source,
        |  CASE WHEN source = 'src0' THEN 2500 WHEN source = 'src1' THEN 500 ELSE 1000 END AS rate,
-       |  ${duckMd5Int("'mix_' || CAST(doc_id AS VARCHAR)")} % 1000 AS b FROM documents)
+       |  ${md5IntTight("'mix_' || CAST(doc_id AS VARCHAR)")} % 1000 AS b FROM documents)
        |SELECT doc_id, source, CAST(unnest(range(1, rate // 1000 + CASE WHEN b < rate % 1000 THEN 1 ELSE 0 END + 1)) AS BIGINT) AS copy_idx
        |FROM c""".stripMargin
 
@@ -4090,21 +3963,12 @@ object ExtQueries {
     Similarity.compactKnnGraph(s, ix)
     Similarity.probeKnnGraph(s, ix)
   }
-  val e3ySql: String = {
-    val n2 = duckFold("list_transform(range(1, len(embedding)+1), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")
-    val bucket = s"array_to_string([CASE WHEN embedding[i] >= 0 THEN '1' ELSE '0' END for i in range(1, ${AnnBits + 1})], '')"
-    s"""WITH e AS (SELECT vec_id, embedding, $n2 AS n2, $bucket AS bucket FROM embeddings),
-       |scored AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-       |    ${duckDot("q.embedding", "c.embedding")} / (sqrt(q.n2) * sqrt(c.n2)) AS cos_sim
-       |  FROM e q JOIN e c ON q.bucket = c.bucket AND c.vec_id <> q.vec_id),
-       |knn AS (SELECT query_id, vec_id, cos_sim FROM (
-       |  SELECT query_id, vec_id, cos_sim,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rk
-       |  FROM scored) WHERE rk <= $AnnK)
+  val e3ySql: String =
+    s"""WITH ${embeddingCte(Some(AnnBits))},
+       |${bucketKnn(AnnK)}
        |SELECT least(query_id, vec_id) AS id_a, greatest(query_id, vec_id) AS id_b,
        |  max(cos_sim) AS cos_sim
        |FROM knn GROUP BY 1, 2 HAVING count(*) = 2""".stripMargin
-  }
 
   // ---- E3z: graph-ANN — beam search over the saved kNN graph ---------------
   // The highest-recall modern ANN index class (r15 VERDICT Next #3):
@@ -4165,11 +4029,9 @@ object ExtQueries {
   lazy val e3wGateSql: String = e3wSqlWith(pqChains(PqTrainSlice))
   lazy val e3wSql: String = e3wSqlWith(pqSqlChains)
   private def e3wSqlWith(chains: String): String = {
-    val n2 = duckFold("list_transform(range(1, len(embedding)+1), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")
-    val bucket = s"array_to_string([CASE WHEN embedding[i] >= 0 THEN '1' ELSE '0' END for i in range(1, ${AnnBits + 1})], '')"
     val luts = (0 until PqM).map { i =>
       val (lo, hi) = (i * PqSubDim + 1, (i + 1) * PqSubDim)
-      s"""lut$i AS (SELECT q.query_id, c.cid, ${duckDot("q.q_sub", "c.cent")} AS p_$i
+      s"""lut$i AS (SELECT q.query_id, c.cid, ${dot("q.q_sub", "c.cent")} AS p_$i
          |  FROM (SELECT vec_id AS query_id, embedding[$lo:$hi] AS q_sub
          |        FROM embeddings WHERE vec_id < $AnnQueries) q
          |  CROSS JOIN s${i}c1 c)""".stripMargin
@@ -4189,10 +4051,7 @@ object ExtQueries {
          |sc$r AS (SELECT f.query_id, f.cand AS vec_id, ac.adc AS cos_sim
          |  FROM fr$r f JOIN adcall ac
          |    ON ac.query_id = f.query_id AND ac.vec_id = f.cand),
-         |ly$r AS (SELECT query_id, vec_id, cos_sim FROM (
-         |  SELECT query_id, vec_id, cos_sim,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rk
-         |  FROM sc$r) WHERE rk <= $BeamWidth),
+         |ly$r AS (${topKScores(s"sc$r", BeamWidth)}),
          |f$r AS (SELECT query_id, vec_id FROM ly$r),
          |s${r + 1}${"p"}rev AS (SELECT query_id, vec_id FROM s$r${"p"}rev
          |  UNION ALL SELECT query_id, vec_id FROM ly$r)""".stripMargin
@@ -4200,23 +4059,14 @@ object ExtQueries {
     val pool = (1 to BeamRounds)
       .map(r => s"SELECT query_id, vec_id FROM ly$r")
       .mkString(" UNION ALL ")
-    val exCos = duckDot("qq.embedding", "c.embedding") + " / (sqrt(qq.n2) * sqrt(c.n2))"
+    val exCos = dot("qq.embedding", "c.embedding") + " / (sqrt(qq.n2) * sqrt(c.n2))"
     s"""WITH $chains,
        |$luts,
        |adcall AS (SELECT l0.query_id, a0.vec_id, $adc AS adc
        |  FROM s0a2 a0 $codeJoins $lutJoins),
-       |e AS (SELECT vec_id, embedding, $n2 AS n2, $bucket AS bucket FROM embeddings),
-       |scored AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-       |    ${duckDot("q.embedding", "c.embedding")} / (sqrt(q.n2) * sqrt(c.n2)) AS cos_sim
-       |  FROM e q JOIN e c ON q.bucket = c.bucket AND c.vec_id <> q.vec_id),
-       |knn AS (SELECT query_id, vec_id, cos_sim FROM (
-       |  SELECT query_id, vec_id, cos_sim,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rk
-       |  FROM scored) WHERE rk <= $AnnK),
-       |me AS (SELECT least(query_id, vec_id) AS id_a, greatest(query_id, vec_id) AS id_b
-       |  FROM knn GROUP BY 1, 2 HAVING count(*) = 2),
-       |ad AS (SELECT id_a AS src, id_b AS dst FROM me
-       |  UNION ALL SELECT id_b AS src, id_a AS dst FROM me),
+       |${embeddingCte(Some(AnnBits))},
+       |${mutualKnn(AnnK)},
+       |${bothWays("ad")},
        |q AS (SELECT vec_id AS query_id, embedding, n2 FROM e WHERE vec_id < $AnnQueries),
        |f0 AS (SELECT query_id, query_id AS vec_id FROM q),
        |s1prev AS (SELECT query_id, vec_id FROM f0),
@@ -4301,7 +4151,7 @@ object ExtQueries {
     */
   private def kcenterChainSql(src: String, k: Int, p: String): String = {
     def dist(a: String, b: String) =
-      s"1.0 - ${duckDot(s"$a.embedding", s"$b.embedding")} / (sqrt($a.n2) * sqrt($b.n2))"
+      s"1.0 - ${dot(s"$a.embedding", s"$b.embedding")} / (sqrt($a.n2) * sqrt($b.n2))"
     // every stage is MATERIALIZED: DuckDB inlines plain CTEs per
     // reference, and each mᵢ/cᵢ is referenced by all later stages —
     // un-materialized, the chain re-evaluates itself exponentially
@@ -4340,47 +4190,32 @@ object ExtQueries {
        |  LEFT JOIN s${r - 1} s ON nb.query_id = s.query_id AND nb.cand = s.vec_id
        |  WHERE s.vec_id IS NULL),
        |sc$r AS (SELECT f.query_id, c.vec_id,
-       |    ${duckDot("qq.embedding", "c.embedding")} / (sqrt(qq.n2) * sqrt(c.n2)) AS cos_sim
+       |    ${cosineOf("qq", "c")} AS cos_sim
        |  FROM fr$r f JOIN e c ON f.cand = c.vec_id
        |  JOIN q qq ON f.query_id = qq.query_id),
-       |ly$r AS (SELECT query_id, vec_id, cos_sim FROM (
-       |  SELECT query_id, vec_id, cos_sim,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rk
-       |  FROM sc$r) WHERE rk <= $BeamWidth),
+       |ly$r AS (${topKScores(s"sc$r", BeamWidth)}),
        |f$r AS (SELECT query_id, vec_id FROM ly$r),
        |s$r AS (SELECT query_id, vec_id FROM s${r - 1}
        |  UNION ALL SELECT query_id, vec_id FROM ly$r)""".stripMargin
   }.mkString(",\n")
 
   lazy val e3xSql: String = {
-    val n2 = duckFold("list_transform(range(1, len(embedding)+1), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")
-    val bucket = s"array_to_string([CASE WHEN embedding[i] >= 0 THEN '1' ELSE '0' END for i in range(1, ${AnnBits + 1})], '')"
     val pool = (0 to BeamRounds)
       .map(r => s"SELECT query_id, vec_id, cos_sim FROM ly$r")
       .mkString(" UNION ALL ")
-    s"""WITH al AS (SELECT vec_id, embedding, $n2 AS n2, $bucket AS bucket FROM embeddings),
+    s"""WITH ${embeddingCte(Some(AnnBits), "al")},
        |e AS (SELECT * FROM al WHERE vec_id % 10 <> 0 AND vec_id % 3 = 1),
-       |scored AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-       |    ${duckDot("q.embedding", "c.embedding")} / (sqrt(q.n2) * sqrt(c.n2)) AS cos_sim
-       |  FROM e q JOIN e c ON q.bucket = c.bucket AND c.vec_id <> q.vec_id),
-       |knn AS (SELECT query_id, vec_id, cos_sim FROM (
-       |  SELECT query_id, vec_id, cos_sim,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rk
-       |  FROM scored) WHERE rk <= $AnnK),
-       |me AS (SELECT least(query_id, vec_id) AS id_a, greatest(query_id, vec_id) AS id_b,
-       |    max(cos_sim) AS cos_sim
-       |  FROM knn GROUP BY 1, 2 HAVING count(*) = 2),
-       |ad AS (SELECT id_a AS src, id_b AS dst FROM me
-       |  UNION ALL SELECT id_b AS src, id_a AS dst FROM me),
+       |${mutualKnn(AnnK, "max(cos_sim) AS cos_sim")},
+       |${bothWays("ad")},
        |q AS (SELECT vec_id AS query_id, embedding, n2 FROM al
        |  WHERE vec_id % 10 = 0 AND vec_id < ${AnnQueries * 10}),
        |${kcenterChainSql("e", GraphLmK, "kc")},
        |lm AS MATERIALIZED (SELECT e.vec_id, e.embedding, e.n2 FROM e JOIN kcsel s ON e.vec_id = s.vec_id),
        |ent AS (SELECT query_id, vec_id, cos_sim FROM (
        |  SELECT qq.query_id, l.vec_id,
-       |    ${duckDot("qq.embedding", "l.embedding")} / (sqrt(qq.n2) * sqrt(l.n2)) AS cos_sim,
+       |    ${cosineOf("qq", "l")} AS cos_sim,
        |    row_number() OVER (PARTITION BY qq.query_id ORDER BY
-       |      ${duckDot("qq.embedding", "l.embedding")} / (sqrt(qq.n2) * sqrt(l.n2)) DESC,
+       |      ${cosineOf("qq", "l")} DESC,
        |      l.vec_id) AS rk
        |  FROM q qq CROSS JOIN lm l) WHERE rk <= $ExtEntryK),
        |ly0 AS (SELECT query_id, vec_id, cos_sim FROM ent),
@@ -4388,10 +4223,7 @@ object ExtQueries {
        |s0 AS (SELECT query_id, vec_id FROM ent),
        |$beamRoundsSql,
        |pool AS ($pool)
-       |SELECT query_id, vec_id, cos_sim, rk FROM (
-       |  SELECT query_id, vec_id, cos_sim,
-       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
-       |  FROM pool) WHERE rk <= $AnnK""".stripMargin
+       |${topK("pool", AnnK)}""".stripMargin
   }
 
   // ---- E3x': the SAVED-artifact form of the turnkey external probe ---------
@@ -4413,32 +4245,20 @@ object ExtQueries {
       .select(col("query_id"), col("vec_id"), col("cos_sim"), col("rk"))
   }
   lazy val e3xsSql: String = {
-    val n2 = duckFold("list_transform(range(1, len(embedding)+1), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")
-    val bucket = s"array_to_string([CASE WHEN embedding[i] >= 0 THEN '1' ELSE '0' END for i in range(1, ${AnnBits + 1})], '')"
     val pool = (0 to BeamRounds)
       .map(r => s"SELECT query_id, vec_id, cos_sim FROM ly$r")
       .mkString(" UNION ALL ")
-    s"""WITH e AS (SELECT vec_id, embedding, $n2 AS n2, $bucket AS bucket FROM embeddings),
-       |scored AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-       |    ${duckDot("q.embedding", "c.embedding")} / (sqrt(q.n2) * sqrt(c.n2)) AS cos_sim
-       |  FROM e q JOIN e c ON q.bucket = c.bucket AND c.vec_id <> q.vec_id),
-       |knn AS (SELECT query_id, vec_id, cos_sim FROM (
-       |  SELECT query_id, vec_id, cos_sim,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rk
-       |  FROM scored) WHERE rk <= $AnnK),
-       |me AS (SELECT least(query_id, vec_id) AS id_a, greatest(query_id, vec_id) AS id_b,
-       |    max(cos_sim) AS cos_sim
-       |  FROM knn GROUP BY 1, 2 HAVING count(*) = 2),
-       |ad AS (SELECT id_a AS src, id_b AS dst FROM me
-       |  UNION ALL SELECT id_b AS src, id_a AS dst FROM me),
+    s"""WITH ${embeddingCte(Some(AnnBits))},
+       |${mutualKnn(AnnK, "max(cos_sim) AS cos_sim")},
+       |${bothWays("ad")},
        |q AS (SELECT vec_id AS query_id, embedding, n2 FROM e WHERE vec_id < $AnnQueries),
        |${kcenterChainSql("e", GraphLmK, "kc")},
        |lm AS MATERIALIZED (SELECT e.vec_id, e.embedding, e.n2 FROM e JOIN kcsel s ON e.vec_id = s.vec_id),
        |ent AS (SELECT query_id, vec_id, cos_sim FROM (
        |  SELECT qq.query_id, l.vec_id,
-       |    ${duckDot("qq.embedding", "l.embedding")} / (sqrt(qq.n2) * sqrt(l.n2)) AS cos_sim,
+       |    ${cosineOf("qq", "l")} AS cos_sim,
        |    row_number() OVER (PARTITION BY qq.query_id ORDER BY
-       |      ${duckDot("qq.embedding", "l.embedding")} / (sqrt(qq.n2) * sqrt(l.n2)) DESC,
+       |      ${cosineOf("qq", "l")} DESC,
        |      l.vec_id) AS rk
        |  FROM q qq CROSS JOIN lm l WHERE l.vec_id <> qq.query_id) WHERE rk <= $ExtEntryK),
        |ly0 AS (SELECT query_id, vec_id, cos_sim FROM ent),
@@ -4446,40 +4266,22 @@ object ExtQueries {
        |s0 AS (SELECT query_id, vec_id FROM ent),
        |$beamRoundsSql,
        |pool AS ($pool)
-       |SELECT query_id, vec_id, cos_sim, rk FROM (
-       |  SELECT query_id, vec_id, cos_sim,
-       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
-       |  FROM pool) WHERE rk <= $AnnK""".stripMargin
+       |${topK("pool", AnnK)}""".stripMargin
   }
 
   val e3zSql: String = {
-    val n2 = duckFold("list_transform(range(1, len(embedding)+1), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")
-    val bucket = s"array_to_string([CASE WHEN embedding[i] >= 0 THEN '1' ELSE '0' END for i in range(1, ${AnnBits + 1})], '')"
     val pool = (1 to BeamRounds)
       .map(r => s"SELECT query_id, vec_id, cos_sim FROM ly$r")
       .mkString(" UNION ALL ")
-    s"""WITH e AS (SELECT vec_id, embedding, $n2 AS n2, $bucket AS bucket FROM embeddings),
-       |scored AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-       |    ${duckDot("q.embedding", "c.embedding")} / (sqrt(q.n2) * sqrt(c.n2)) AS cos_sim
-       |  FROM e q JOIN e c ON q.bucket = c.bucket AND c.vec_id <> q.vec_id),
-       |knn AS (SELECT query_id, vec_id, cos_sim FROM (
-       |  SELECT query_id, vec_id, cos_sim,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rk
-       |  FROM scored) WHERE rk <= $AnnK),
-       |me AS (SELECT least(query_id, vec_id) AS id_a, greatest(query_id, vec_id) AS id_b,
-       |    max(cos_sim) AS cos_sim
-       |  FROM knn GROUP BY 1, 2 HAVING count(*) = 2),
-       |ad AS (SELECT id_a AS src, id_b AS dst FROM me
-       |  UNION ALL SELECT id_b AS src, id_a AS dst FROM me),
+    s"""WITH ${embeddingCte(Some(AnnBits))},
+       |${mutualKnn(AnnK, "max(cos_sim) AS cos_sim")},
+       |${bothWays("ad")},
        |q AS (SELECT vec_id AS query_id, embedding, n2 FROM e WHERE vec_id < $AnnQueries),
        |f0 AS (SELECT query_id, query_id AS vec_id FROM q),
        |s0 AS (SELECT query_id, vec_id FROM f0),
        |$beamRoundsSql,
        |pool AS ($pool)
-       |SELECT query_id, vec_id, cos_sim, rk FROM (
-       |  SELECT query_id, vec_id, cos_sim,
-       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
-       |  FROM pool) WHERE rk <= $AnnK""".stripMargin
+       |${topK("pool", AnnK)}""".stripMargin
   }
 
   // ---- E2n: communities on the mutual k-NN graph (weighted LPA) ------------
@@ -4507,9 +4309,7 @@ object ExtQueries {
         col("community_size"))
   }
   val e2kcSql: String = {
-    val n2 = duckFold("list_transform(range(1, len(embedding)+1), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")
-    val bucket = s"array_to_string([CASE WHEN embedding[i] >= 0 THEN '1' ELSE '0' END for i in range(1, ${AnnBits + 1})], '')"
-    val w = s"CAST(CAST(cos_sim AS VARCHAR) AS $AvgDec)"
+    val w = toDec("cos_sim")
     val rounds = (1 to LpaIters).map { i =>
       s"""c$i AS (SELECT e.src AS id, l.label, sum(e.w) AS ws
          |  FROM ed e JOIN l${i - 1} l ON e.dst = l.id GROUP BY 1, 2),
@@ -4519,19 +4319,9 @@ object ExtQueries {
          |l$i AS (SELECT v.id, coalesce(b.label, v.id) AS label
          |  FROM l0 v LEFT JOIN b$i b USING (id))""".stripMargin
     }.mkString(",\n")
-    s"""WITH e AS (SELECT vec_id, embedding, $n2 AS n2, $bucket AS bucket FROM embeddings),
-       |scored AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-       |    ${duckDot("q.embedding", "c.embedding")} / (sqrt(q.n2) * sqrt(c.n2)) AS cos_sim
-       |  FROM e q JOIN e c ON q.bucket = c.bucket AND c.vec_id <> q.vec_id),
-       |knn AS (SELECT query_id, vec_id, cos_sim FROM (
-       |  SELECT query_id, vec_id, cos_sim,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rk
-       |  FROM scored) WHERE rk <= $AnnK),
-       |me AS (SELECT least(query_id, vec_id) AS id_a, greatest(query_id, vec_id) AS id_b,
-       |    max(cos_sim) AS cos_sim
-       |  FROM knn GROUP BY 1, 2 HAVING count(*) = 2),
-       |ed AS (SELECT id_a AS src, id_b AS dst, $w AS w FROM me
-       |  UNION ALL SELECT id_b AS src, id_a AS dst, $w AS w FROM me),
+    s"""WITH ${embeddingCte(Some(AnnBits))},
+       |${mutualKnn(AnnK, "max(cos_sim) AS cos_sim")},
+       |${bothWays("ed", s", $w AS w")},
        |l0 AS (SELECT vec_id AS id, vec_id AS label FROM embeddings),
        |$rounds,
        |sz AS (SELECT label, CAST(count(*) AS BIGINT) AS community_size
@@ -4552,11 +4342,10 @@ object ExtQueries {
   def e3Kcenter(s: SparkSession, dir: String): DataFrame =
     Similarity.kcenterSelect(Tables.embeddings(s, dir), KcenterK)
   val e3kcSql: String = {
-    val n2 = duckFold("list_transform(range(1, len(embedding)+1), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")
     val out = (2 to KcenterK)
       .map(i => s"UNION ALL SELECT CAST($i AS BIGINT), vec_id, md FROM kcc$i")
       .mkString("\n")
-    s"""WITH e AS (SELECT vec_id, embedding, $n2 AS n2 FROM embeddings),
+    s"""WITH ${embeddingCte()},
        |${kcenterChainSql("e", KcenterK, "kc")}
        |SELECT CAST(1 AS BIGINT) AS sel_order, id AS vec_id, 0.0 AS dist_at_selection FROM kcs1
        |$out""".stripMargin
@@ -4586,8 +4375,6 @@ object ExtQueries {
       .select(col("id").as("vec_id"), col("hops"))
   }
   val e2bfSql: String = {
-    val n2 = duckFold("list_transform(range(1, len(embedding)+1), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")
-    val bucket = s"array_to_string([CASE WHEN embedding[i] >= 0 THEN '1' ELSE '0' END for i in range(1, ${AnnBits + 1})], '')"
     val rounds = (1 to BfsMaxHops).map { i =>
       s"""r$i AS (SELECT id, min(hops) AS hops FROM (
          |  SELECT id, hops FROM r${i - 1}
@@ -4595,18 +4382,9 @@ object ExtQueries {
          |  SELECT e.dst AS id, r.hops + 1 AS hops FROM ed e JOIN r${i - 1} r ON e.src = r.id
          |) GROUP BY id)""".stripMargin
     }.mkString(",\n")
-    s"""WITH e AS (SELECT vec_id, embedding, $n2 AS n2, $bucket AS bucket FROM embeddings),
-       |scored AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-       |    ${duckDot("q.embedding", "c.embedding")} / (sqrt(q.n2) * sqrt(c.n2)) AS cos_sim
-       |  FROM e q JOIN e c ON q.bucket = c.bucket AND c.vec_id <> q.vec_id),
-       |knn AS (SELECT query_id, vec_id, cos_sim FROM (
-       |  SELECT query_id, vec_id, cos_sim,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rk
-       |  FROM scored) WHERE rk <= $AnnK),
-       |me AS (SELECT least(query_id, vec_id) AS id_a, greatest(query_id, vec_id) AS id_b
-       |  FROM knn GROUP BY 1, 2 HAVING count(*) = 2),
-       |ed AS (SELECT id_a AS src, id_b AS dst FROM me
-       |  UNION ALL SELECT id_b AS src, id_a AS dst FROM me),
+    s"""WITH ${embeddingCte(Some(AnnBits))},
+       |${mutualKnn(AnnK)},
+       |${bothWays("ed")},
        |r0 AS (SELECT vec_id AS id, CAST(0 AS BIGINT) AS hops FROM embeddings
        |  WHERE vec_id % $BfsSeedMod = 0),
        |$rounds
@@ -4638,8 +4416,6 @@ object ExtQueries {
       .select(col("id").as("vec_id"), col("d").as("dist"))
   }
   val e2qSql: String = {
-    val n2 = duckFold("list_transform(range(1, len(embedding)+1), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")
-    val bucket = s"array_to_string([CASE WHEN embedding[i] >= 0 THEN '1' ELSE '0' END for i in range(1, ${AnnBits + 1})], '')"
     val rounds = (1 to SsspRounds).map { i =>
       s"""r$i AS (SELECT id, min(d) AS d FROM (
          |  SELECT id, d FROM r${i - 1}
@@ -4647,19 +4423,9 @@ object ExtQueries {
          |  SELECT e.dst AS id, r.d + e.w AS d FROM ed e JOIN r${i - 1} r ON e.src = r.id
          |) GROUP BY id)""".stripMargin
     }.mkString(",\n")
-    s"""WITH e AS (SELECT vec_id, embedding, $n2 AS n2, $bucket AS bucket FROM embeddings),
-       |scored AS (SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-       |    ${duckDot("q.embedding", "c.embedding")} / (sqrt(q.n2) * sqrt(c.n2)) AS cos_sim
-       |  FROM e q JOIN e c ON q.bucket = c.bucket AND c.vec_id <> q.vec_id),
-       |knn AS (SELECT query_id, vec_id, cos_sim FROM (
-       |  SELECT query_id, vec_id, cos_sim,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rk
-       |  FROM scored) WHERE rk <= $AnnK),
-       |me AS (SELECT least(query_id, vec_id) AS id_a, greatest(query_id, vec_id) AS id_b,
-       |    CAST(floor((1.0 - max(cos_sim)) * 1000000) AS BIGINT) + 1 AS w
-       |  FROM knn GROUP BY 1, 2 HAVING count(*) = 2),
-       |ed AS (SELECT id_a AS src, id_b AS dst, w FROM me
-       |  UNION ALL SELECT id_b AS src, id_a AS dst, w FROM me),
+    s"""WITH ${embeddingCte(Some(AnnBits))},
+       |${mutualKnn(AnnK, "CAST(floor((1.0 - max(cos_sim)) * 1000000) AS BIGINT) + 1 AS w")},
+       |${bothWays("ed", ", w")},
        |r0 AS (SELECT vec_id AS id, CAST(0 AS BIGINT) AS d FROM embeddings
        |  WHERE vec_id % $BfsSeedMod = 0),
        |$rounds
@@ -4703,15 +4469,15 @@ object ExtQueries {
           .as("rr_x2520"))
   }
   val e3mrSql: String = {
-    val n2 = duckFold("list_transform(range(1, len(embedding)+1), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))")
+    val n2 = norm2("embedding")
     s"""WITH e AS (SELECT vec_id, label, embedding, $n2 AS n2 FROM embeddings),
        |scored AS (SELECT q.vec_id AS query_id, q.label AS q_label,
        |    c.vec_id AS vec_id, c.label AS c_label,
-       |    ${duckDot("q.embedding", "c.embedding")} / (sqrt(q.n2) * sqrt(c.n2)) AS cos_sim
+       |    ${cosineOf("q", "c")} AS cos_sim
        |  FROM e q JOIN e c ON q.vec_id % $MrrQueryMod = 0 AND c.vec_id <> q.vec_id),
        |topk AS (SELECT query_id, q_label, vec_id, c_label, rk FROM (
        |  SELECT query_id, q_label, vec_id, c_label,
-       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rk
+       |    CAST($cosRank AS BIGINT) AS rk
        |  FROM scored) WHERE rk <= $MrrK),
        |rel AS (SELECT query_id, min(rk) AS first_rel_rank
        |  FROM topk WHERE c_label = q_label GROUP BY query_id)
@@ -4737,7 +4503,7 @@ object ExtQueries {
   val e7jSql: String =
     s"""WITH ep AS (SELECT unnest(range($ShuffleEpochs)) AS epoch),
        |d AS (SELECT epoch, doc_id,
-       |    ${duckMd5Int("'epoch' || CAST(epoch AS VARCHAR) || '_' || CAST(doc_id AS VARCHAR)")} AS draw
+       |    ${md5IntTight("'epoch' || CAST(epoch AS VARCHAR) || '_' || CAST(doc_id AS VARCHAR)")} AS draw
        |  FROM documents CROSS JOIN ep)
        |SELECT epoch,
        |  CAST(row_number() OVER (PARTITION BY epoch ORDER BY draw, doc_id) AS BIGINT) AS position,
@@ -4773,288 +4539,152 @@ object ExtQueries {
        |GROUP BY min_freq, tot""".stripMargin
   }
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "e1_dedup_exact" -> (e1DedupExact _),
-    "e1_passage_dedup" -> (e1PassageDedup _),
-    "e2_minhash_pairs" -> (e2MinhashPairs _),
-    "e2_incremental" -> (e2Incremental _),
-    "e2_neardup_saved" -> (e2NeardupSaved _),
-    "e2_neardup_ingest" -> (e2NeardupIngest _),
-    "e2_bands_compacted" -> (e2BandsCompacted _),
-    "e2_ngram_jaccard" -> (e2NgramJaccard _),
-    "e2_simhash_pairs" -> (e2SimhashPairs _),
-    "e2_dedup_clusters" -> (e2DedupClusters _),
-    "e2_pagerank" -> (e2PageRank _),
-    "e2_pagerank_rep" -> (e2PageRankRep _),
-    "e2_cluster_rep" -> (e2ClusterRep _),
-    "e7_stratified" -> (e7Stratified _),
-    "e2_lev_verify" -> (e2LevVerify _),
-    "e2_embed_neardup" -> (e2EmbedNearDup _),
-    "e6_corpus_clean" -> (e6CorpusClean _),
-    "e6_full_prep" -> (e6FullPrep _),
-    "e7_split" -> (e7Split _),
-    "e7_cluster_split" -> (e7ClusterSplit _),
-    "e7_mixture_stats" -> (e7MixtureStats _),
-    "e7_upsample" -> (e7Upsample _),
-    "e7_temperature" -> (e7Temperature _),
-    "e5_chunks" -> (e5Chunks _),
-    "e5_pack" -> (e5Pack _),
-    "e8_contamination" -> (e8Contamination _),
-    "e8_decontaminated" -> (e8Decontaminated _),
-    "e8_bloom_prefilter" -> (e8BloomPrefilter _),
-    "e3_cosine_topk" -> (e3CosineTopK _),
-    "e3_filtered_topk" -> (e3FilteredTopK _),
-    "e3_ann_bucketed" -> (e3AnnBucketed _),
-    "e3_ann_recall" -> (e3AnnRecall _),
-    "e3_ivf_topk" -> (e3IvfTopK _),
-    "e3_kmeans" -> (e3Kmeans _),
-    "e3_ivf_learned" -> (e3IvfLearned _),
-    "e3_pq_codes" -> (e3PqCodes _),
-    "e4_embedding_stats" -> (e4EmbeddingStats _),
-    "e4_blob_meta" -> (e4BlobMeta _),
-    "e4_decode_stats" -> (e4DecodeStats _),
-    "e4_resize_stats" -> (e4ResizeStats _),
-    "e4_image_dedup" -> (e4ImageDedup _),
-    "e4_audio_stats" -> (e4AudioStats _),
-    "e4_video_frames" -> (e4VideoFrames _),
-    "e4_dim_stats" -> (e4DimStats _),
-    "e5_bpe_tokens" -> (e5BpeTokens _),
-    "e5_token_stats" -> (e5TokenStats _),
-    "e5_word_freq" -> (e5WordFreq _),
-    "e5_quality_langid" -> (e5QualityLangid _),
-    "e5_char_trigrams" -> (e5CharTrigrams _),
-    "e5_html_extract" -> (e5HtmlExtract _),
-    "e5_url_canon" -> (e5UrlCanon _),
-    "e1_url_dedup" -> (e1UrlDedup _),
-    "e5_link_extract" -> (e5LinkExtract _),
-    // the 8-partition small-state window is scoped INSIDE e2HostRank
-    // to the host-frame rank rounds only (r18 ADVICE)
-    "e2_host_rank" -> (e2HostRank _),
-    "e6_host_quality" -> (e6HostQuality _),
-    "e7_rank_weighted" -> (e7RankWeighted _),
-    "e5_line_dedup" -> (e5LineDedup _),
-    "e5_fingerprint" -> (e5Fingerprint _),
-    "e5_repetition" -> (e5Repetition _),
-    "e5_pii_redact" -> (e5PiiRedact _),
-    "e5_normalize" -> (e5Normalize _),
-    "e5_bigram_rarity" -> (e5BigramRarity _),
-    "e5_tfidf" -> (e5Tfidf _),
-    "e2_chain_components" -> (e2ChainComponents _),
-    "e2_semantic_dedup" -> (e2SemanticDedup _),
-    "e7_reservoir" -> (e7Reservoir _),
-    "e7_priority_sample" -> (e7PrioritySample _),
-    "e5_bpe_train" -> (e5BpeTrain _),
-    "e5_unigram_train" -> (e5UnigramTrain _),
-    "e5_unigram_apply" -> (e5UnigramApply _),
-    "e5_unigram_saved" -> (e5UnigramSaved _),
-    "e2_triangles" -> (e2Triangles _),
-    "e5_pack_assemble" -> (e5PackAssemble _),
-    "e1_source_overlap" -> (e1SourceOverlap _),
-    "e3_cosine_sql" -> (e3CosineSql _),
-    "e7_curriculum" -> (e7Curriculum _),
-    "e3_ivf_probe" -> (e3IvfProbe _),
-    "e3_ivf_recall_probe" -> (e3IvfRecallProbe _),
-    "e5_bpe_apply" -> (e5BpeApply _),
-    "e1_span_dedup" -> (e1SpanDedup _),
-    "e1_span_scrub" -> (e1SpanScrub _),
-    "e5_lm_score" -> (e5LmScore _),
-    "e5_quality_classifier" -> (e5QualityClassifier _),
-    "e3_sq8_topk" -> (e3Sq8Topk _),
-    "e3_sq8_recall" -> (e3Sq8Recall _),
-    "e6_ppl_buckets" -> (e6PplBuckets _),
-    "e5_classifier_confusion" -> (e5ClassifierConfusion _),
-    "e5_bm25" -> (e5Bm25 _),
-    "e5_bm25_saved" -> (e5Bm25Saved _),
-    "e5_bm25_appended" -> (e5Bm25Appended _),
-    "e5_bm25_compacted" -> (e5Bm25Compacted _),
-    "e3_hybrid_rrf" -> (e3HybridRrf _),
-    "e3_pq_adc" -> (e3PqAdc _),
-    "e3_hard_negatives" -> (e3HardNegatives _),
-    "e6_data_card" -> (e6DataCard _),
-    "e5_lid_model" -> (e5LidModel _),
-    "e2_lsh_scurve" -> (e2LshScurve _),
-    "e4_scene_cuts" -> (e4SceneCuts _),
-    "e7_token_budget" -> (e7TokenBudget _),
-    "e2_dedup_impact" -> (e2DedupImpact _),
-    "e5_lid_confusion" -> (e5LidConfusion _),
-    "e3_ivf_saved" -> (e3IvfSaved _),
-    "e3_sq8_saved" -> (e3Sq8Saved _),
-    "e3_pq_saved" -> (e3PqSaved _),
-    "e3_ivf_incremental" -> (e3IvfIncremental _),
-    "e3_ivf_compacted" -> (e3IvfCompacted _),
-    "e1_span_maximal" -> (e1SpanMaximal _),
-    "e1_suffix_spans" -> (e1SuffixSpans _),
-    "e1_spans_saved" -> (e1SpansSaved _),
-    "e1_spans_appended" -> (e1SpansAppended _),
-    "e1_spans_compacted" -> (e1SpansCompacted _),
-    "e5_lid_saved" -> (e5LidSaved _),
-    "e3_sq8_incremental" -> (e3Sq8Incremental _),
-    "e3_pq_incremental" -> (e3PqIncremental _),
-    // runs on the drives' state-partition profile session
-    "e3_ivf_stream" -> ((s: SparkSession, d: String) =>
-      e3IvfStream(GraftSession.scoped(s, StreamDrive.StatePartitions), d)),
-    "e2_containment" -> (e2Containment _),
-    "e2_knn_communities" -> (e2KnnCommunities _),
-    "e3_kcenter" -> (e3Kcenter _),
-    "e5_backoff_score" -> (e5BackoffScore _),
-    "e5_domain_select" -> (e5DomainSelect _),
-    "e3_knn_graph" -> (e3KnnGraph _),
-    "e3_knn_appended" -> (e3KnnAppended _),
-    "e3_knn_compacted" -> (e3KnnCompacted _),
-    "e3_graph_search" -> (e3GraphSearch _),
-    "e3_graph_search_appended" -> (e3GraphSearchAppended _),
-    "e3_graph_search_external" -> (e3GraphSearchExternal _),
-    "e3_graph_search_ext_saved" -> (e3GraphSearchExtSaved _),
-    "e3_graph_search_adc" -> (e3GraphSearchAdc _),
-    "e3_graph_search_adc_saved" -> (e3GraphSearchAdcSaved _),
-    "e2_bfs_hops" -> (e2BfsHops _),
-    "e2_sssp_weighted" -> (e2SsspWeighted _),
-    "e3_mrr_eval" -> (e3MrrEval _),
-    "e7_epoch_shuffle" -> (e7EpochShuffle _),
-    "e5_vocab_coverage" -> (e5VocabCoverage _)
-  )
-
-  val sql: Map[String, String] = Map(
-    "e1_dedup_exact" -> e1Sql,
-    "e1_passage_dedup" -> e1bSql,
-    "e2_minhash_pairs" -> e2Sql,
-    "e2_incremental" -> e2iSql,
+  val all: Map[String, Row] = Map(
+    "e1_dedup_exact" -> Row(e1DedupExact, e1Sql),
+    "e1_passage_dedup" -> Row(e1PassageDedup, e1bSql),
+    "e2_minhash_pairs" -> Row(e2MinhashPairs, e2Sql),
+    "e2_incremental" -> Row(e2Incremental, e2iSql),
     // saved-index probes round-trip bit-exactly, so they reuse the
     // in-query operators' oracles verbatim — the equality IS the claim
-    "e2_neardup_saved" -> e2Sql,
-    "e2_neardup_ingest" -> e2iSql,
-    "e2_bands_compacted" -> e2iSql,
-    "e2_ngram_jaccard" -> e2bSql,
-    "e2_simhash_pairs" -> e2dSql,
-    "e2_dedup_clusters" -> e2eSql,
-    "e2_pagerank" -> e2pSql,
-    "e2_pagerank_rep" -> e2prSql,
-    "e2_cluster_rep" -> e2gSql,
-    "e7_stratified" -> e7cSql,
-    "e2_lev_verify" -> e2fSql,
-    "e2_embed_neardup" -> e2cSql,
-    "e6_corpus_clean" -> e6Sql,
-    "e6_full_prep" -> e6pSql,
-    "e7_split" -> e7Sql,
-    "e7_reservoir" -> e7gSql,
-    "e7_priority_sample" -> e7kSql,
-    "e5_bpe_train" -> e5tSql,
-    "e5_bpe_apply" -> e5vSql,
-    "e5_unigram_train" -> e5ugSql,
-    "e5_unigram_apply" -> e5uaSql,
-    "e5_unigram_saved" -> e5uaSql,
-    "e2_triangles" -> e2kSql,
-    "e5_pack_assemble" -> e5uSql,
-    "e1_source_overlap" -> e1cSql,
-    "e3_cosine_sql" -> e3Sql,
-    "e7_curriculum" -> e7hSql,
-    "e7_cluster_split" -> e7fSql,
-    "e7_mixture_stats" -> e7bSql,
-    "e7_upsample" -> e7dSql,
-    "e7_temperature" -> e7eSql,
-    "e5_chunks" -> e5hSql,
-    "e5_pack" -> e5iSql,
-    "e8_contamination" -> e8Sql,
-    "e8_decontaminated" -> e8bSql,
-    "e8_bloom_prefilter" -> e8bSql,
-    "e3_cosine_topk" -> e3Sql,
-    "e3_filtered_topk" -> e3pfSql,
-    "e3_ann_bucketed" -> e3bSql,
-    "e3_ann_recall" -> e3dSql,
-    "e3_ivf_topk" -> e3cSql,
-    "e3_ivf_probe" -> e3c2Sql,
-    "e3_ivf_recall_probe" -> e3c3Sql,
-    "e3_kmeans" -> e3eSql,
-    "e2_semantic_dedup" -> e2jSql,
-    "e3_ivf_learned" -> e3fSql,
-    "e3_pq_codes" -> e3gSql,
-    "e4_embedding_stats" -> e4Sql,
-    "e4_blob_meta" -> e4bSql,
-    "e4_decode_stats" -> e4cSql,
-    "e4_resize_stats" -> e4rSql,
-    "e4_image_dedup" -> e4hSql,
-    "e4_audio_stats" -> e4eSql,
-    "e4_video_frames" -> e4fSql,
-    "e4_dim_stats" -> e4dSql,
-    "e5_bpe_tokens" -> e5aSql,
-    "e5_token_stats" -> e5Sql,
-    "e5_word_freq" -> e5bSql,
-    "e5_quality_langid" -> e5cSql,
-    "e5_char_trigrams" -> e5eSql,
-    "e5_html_extract" -> e5hxSql,
-    "e5_url_canon" -> e5ucSql,
-    "e1_url_dedup" -> e1udSql,
-    "e5_link_extract" -> e5lkSql,
-    "e2_host_rank" -> e2hrSql,
-    "e6_host_quality" -> e6hqSql,
-    "e7_rank_weighted" -> e7rwSql,
-    "e5_line_dedup" -> e5ldSql,
-    "e5_fingerprint" -> e5dSql,
-    "e5_repetition" -> e5fSql,
-    "e5_pii_redact" -> e5gSql,
-    "e5_normalize" -> e5jSql,
-    "e5_bigram_rarity" -> e5kSql,
-    "e5_tfidf" -> e5mSql,
-    "e2_chain_components" -> e2hSql,
-    "e1_span_dedup" -> e1dSql,
-    "e1_span_scrub" -> e1gSql,
-    "e5_lm_score" -> e5nSql,
-    "e5_quality_classifier" -> e5oSql,
-    "e3_sq8_topk" -> e3hSql,
-    "e3_sq8_recall" -> e3iSql,
-    "e6_ppl_buckets" -> e6cSql,
-    "e5_classifier_confusion" -> e5pSql,
-    "e5_bm25" -> e5qSql,
-    "e5_bm25_saved" -> e5qSql,
-    "e5_bm25_appended" -> e5qSql,
-    "e5_bm25_compacted" -> e5qSql,
-    "e3_hybrid_rrf" -> e3jSql,
-    "e3_pq_adc" -> e3kSql,
-    "e3_hard_negatives" -> e3lSql,
-    "e6_data_card" -> e6dSql,
-    "e5_lid_model" -> e5rSql,
-    "e2_lsh_scurve" -> e2mSql,
-    "e4_scene_cuts" -> e4jSql,
-    "e7_token_budget" -> e7iSql,
-    "e2_dedup_impact" -> e2nSql,
-    "e5_lid_confusion" -> e5sSql,
+    "e2_neardup_saved" -> Row(e2NeardupSaved, e2Sql),
+    "e2_neardup_ingest" -> Row(e2NeardupIngest, e2iSql),
+    "e2_bands_compacted" -> Row(e2BandsCompacted, e2iSql),
+    "e2_ngram_jaccard" -> Row(e2NgramJaccard, e2bSql),
+    "e2_simhash_pairs" -> Row(e2SimhashPairs, e2dSql),
+    "e2_dedup_clusters" -> Row(e2DedupClusters, e2eSql),
+    "e2_pagerank" -> Row(e2PageRank, e2pSql),
+    "e2_pagerank_rep" -> Row(e2PageRankRep, e2prSql),
+    "e2_cluster_rep" -> Row(e2ClusterRep, e2gSql),
+    "e7_stratified" -> Row(e7Stratified, e7cSql),
+    "e2_lev_verify" -> Row(e2LevVerify, e2fSql),
+    "e2_embed_neardup" -> Row(e2EmbedNearDup, e2cSql),
+    "e6_corpus_clean" -> Row(e6CorpusClean, e6Sql),
+    "e6_full_prep" -> Row(e6FullPrep, e6pSql),
+    "e7_split" -> Row(e7Split, e7Sql),
+    "e7_cluster_split" -> Row(e7ClusterSplit, e7fSql),
+    "e7_mixture_stats" -> Row(e7MixtureStats, e7bSql),
+    "e7_upsample" -> Row(e7Upsample, e7dSql),
+    "e7_temperature" -> Row(e7Temperature, e7eSql),
+    "e5_chunks" -> Row(e5Chunks, e5hSql),
+    "e5_pack" -> Row(e5Pack, e5iSql),
+    "e8_contamination" -> Row(e8Contamination, e8Sql),
+    "e8_decontaminated" -> Row(e8Decontaminated, e8bSql),
+    "e8_bloom_prefilter" -> Row(e8BloomPrefilter, e8bSql),
+    "e3_cosine_topk" -> Row(e3CosineTopK, e3Sql),
+    "e3_filtered_topk" -> Row(e3FilteredTopK, e3pfSql),
+    "e3_ann_bucketed" -> Row(e3AnnBucketed, e3bSql),
+    "e3_ann_recall" -> Row(e3AnnRecall, e3dSql),
+    "e3_ivf_topk" -> Row(e3IvfTopK, e3cSql),
+    "e3_kmeans" -> Row(e3Kmeans, e3eSql),
+    "e3_ivf_learned" -> Row(e3IvfLearned, e3fSql),
+    "e3_pq_codes" -> Row(e3PqCodes, e3gSql),
+    "e4_embedding_stats" -> Row(e4EmbeddingStats, e4Sql),
+    "e4_blob_meta" -> Row(e4BlobMeta, e4bSql),
+    "e4_decode_stats" -> Row(e4DecodeStats, e4cSql),
+    "e4_resize_stats" -> Row(e4ResizeStats, e4rSql),
+    "e4_image_dedup" -> Row(e4ImageDedup, e4hSql),
+    "e4_audio_stats" -> Row(e4AudioStats, e4eSql),
+    "e4_video_frames" -> Row(e4VideoFrames, e4fSql),
+    "e4_dim_stats" -> Row(e4DimStats, e4dSql),
+    "e5_bpe_tokens" -> Row(e5BpeTokens, e5aSql),
+    "e5_token_stats" -> Row(e5TokenStats, e5Sql),
+    "e5_word_freq" -> Row(e5WordFreq, e5bSql),
+    "e5_quality_langid" -> Row(e5QualityLangid, e5cSql),
+    "e5_char_trigrams" -> Row(e5CharTrigrams, e5eSql),
+    "e5_html_extract" -> Row(e5HtmlExtract, e5hxSql),
+    "e5_url_canon" -> Row(e5UrlCanon, e5ucSql),
+    "e1_url_dedup" -> Row(e1UrlDedup, e1udSql),
+    "e5_link_extract" -> Row(e5LinkExtract, e5lkSql),
+    // the 8-partition small-state window is scoped INSIDE e2HostRank
+    // to the host-frame rank rounds only (r18 ADVICE)
+    "e2_host_rank" -> Row(e2HostRank, e2hrSql),
+    "e6_host_quality" -> Row(e6HostQuality, e6hqSql),
+    "e7_rank_weighted" -> Row(e7RankWeighted, e7rwSql),
+    "e5_line_dedup" -> Row(e5LineDedup, e5ldSql),
+    "e5_fingerprint" -> Row(e5Fingerprint, e5dSql),
+    "e5_repetition" -> Row(e5Repetition, e5fSql),
+    "e5_pii_redact" -> Row(e5PiiRedact, e5gSql),
+    "e5_normalize" -> Row(e5Normalize, e5jSql),
+    "e5_bigram_rarity" -> Row(e5BigramRarity, e5kSql),
+    "e5_tfidf" -> Row(e5Tfidf, e5mSql),
+    "e2_chain_components" -> Row(e2ChainComponents, e2hSql),
+    "e2_semantic_dedup" -> Row(e2SemanticDedup, e2jSql),
+    "e7_reservoir" -> Row(e7Reservoir, e7gSql),
+    "e7_priority_sample" -> Row(e7PrioritySample, e7kSql),
+    "e5_bpe_train" -> Row(e5BpeTrain, e5tSql),
+    "e5_unigram_train" -> Row(e5UnigramTrain, e5ugSql),
+    "e5_unigram_apply" -> Row(e5UnigramApply, e5uaSql),
+    "e5_unigram_saved" -> Row(e5UnigramSaved, e5uaSql),
+    "e2_triangles" -> Row(e2Triangles, e2kSql),
+    "e5_pack_assemble" -> Row(e5PackAssemble, e5uSql),
+    "e1_source_overlap" -> Row(e1SourceOverlap, e1cSql),
+    "e3_cosine_sql" -> Row(e3CosineSql, e3Sql),
+    "e7_curriculum" -> Row(e7Curriculum, e7hSql),
+    "e3_ivf_probe" -> Row(e3IvfProbe, e3c2Sql),
+    "e3_ivf_recall_probe" -> Row(e3IvfRecallProbe, e3c3Sql),
+    "e5_bpe_apply" -> Row(e5BpeApply, e5vSql),
+    "e1_span_dedup" -> Row(e1SpanDedup, e1dSql),
+    "e1_span_scrub" -> Row(e1SpanScrub, e1gSql),
+    "e5_lm_score" -> Row(e5LmScore, e5nSql),
+    "e5_quality_classifier" -> Row(e5QualityClassifier, e5oSql),
+    "e3_sq8_topk" -> Row(e3Sq8Topk, e3hSql),
+    "e3_sq8_recall" -> Row(e3Sq8Recall, e3iSql),
+    "e6_ppl_buckets" -> Row(e6PplBuckets, e6cSql),
+    "e5_classifier_confusion" -> Row(e5ClassifierConfusion, e5pSql),
+    "e5_bm25" -> Row(e5Bm25, e5qSql),
+    "e5_bm25_saved" -> Row(e5Bm25Saved, e5qSql),
+    "e5_bm25_appended" -> Row(e5Bm25Appended, e5qSql),
+    "e5_bm25_compacted" -> Row(e5Bm25Compacted, e5qSql),
+    "e3_hybrid_rrf" -> Row(e3HybridRrf, e3jSql),
+    "e3_pq_adc" -> Row(e3PqAdc, e3kSql),
+    "e3_hard_negatives" -> Row(e3HardNegatives, e3lSql),
+    "e6_data_card" -> Row(e6DataCard, e6dSql),
+    "e5_lid_model" -> Row(e5LidModel, e5rSql),
+    "e2_lsh_scurve" -> Row(e2LshScurve, e2mSql),
+    "e4_scene_cuts" -> Row(e4SceneCuts, e4jSql),
+    "e7_token_budget" -> Row(e7TokenBudget, e7iSql),
+    "e2_dedup_impact" -> Row(e2DedupImpact, e2nSql),
+    "e5_lid_confusion" -> Row(e5LidConfusion, e5sSql),
     // Saved-index probes are bit-identical to their build-in-query
     // operators, so they reuse those operators' oracles verbatim.
-    "e3_ivf_saved" -> e3fSql,
-    "e3_sq8_saved" -> e3hSql,
-    "e3_pq_saved" -> e3kSql,
-    "e3_ivf_incremental" -> e3nSql,
+    "e3_ivf_saved" -> Row(e3IvfSaved, e3fSql),
+    "e3_sq8_saved" -> Row(e3Sq8Saved, e3hSql),
+    "e3_pq_saved" -> Row(e3PqSaved, e3kSql),
+    "e3_ivf_incremental" -> Row(e3IvfIncremental, e3nSql),
     // compaction must be invisible to results — same lineage, same oracle
-    "e3_ivf_compacted" -> e3nSql,
-    "e1_span_maximal" -> e1eSql,
-    "e1_suffix_spans" -> e1fSliceSql,
-    "e1_spans_saved" -> e1fSql,
-    "e1_spans_appended" -> e1fSliceSql,
-    "e1_spans_compacted" -> e1fSliceSql,
-    "e5_lid_saved" -> e5rSql,
-    "e3_sq8_incremental" -> e3oSql,
-    "e3_pq_incremental" -> e3qSql,
-    "e3_ivf_stream" -> e3nSql,
-    "e2_containment" -> e2ctSql,
-    "e2_knn_communities" -> e2kcSql,
-    "e3_kcenter" -> e3kcSql,
-    "e5_backoff_score" -> e5boSql,
-    "e5_domain_select" -> e5dsSql,
-    "e3_knn_graph" -> e3ySql,
-    "e3_knn_appended" -> e3ySql,
-    "e3_knn_compacted" -> e3ySql,
-    "e3_graph_search" -> e3zSql,
-    "e3_graph_search_appended" -> e3zSql,
-    "e3_graph_search_external" -> e3xSql,
-    "e3_graph_search_ext_saved" -> e3xsSql,
-    "e3_graph_search_adc" -> e3wGateSql,
-    "e3_graph_search_adc_saved" -> e3wSql,
-    "e2_bfs_hops" -> e2bfSql,
-    "e2_sssp_weighted" -> e2qSql,
-    "e3_mrr_eval" -> e3mrSql,
-    "e7_epoch_shuffle" -> e7jSql,
-    "e5_vocab_coverage" -> e5ySql
+    "e3_ivf_compacted" -> Row(e3IvfCompacted, e3nSql),
+    "e1_span_maximal" -> Row(e1SpanMaximal, e1eSql),
+    "e1_suffix_spans" -> Row(e1SuffixSpans, e1fSliceSql),
+    "e1_spans_saved" -> Row(e1SpansSaved, e1fSql),
+    "e1_spans_appended" -> Row(e1SpansAppended, e1fSliceSql),
+    "e1_spans_compacted" -> Row(e1SpansCompacted, e1fSliceSql),
+    "e5_lid_saved" -> Row(e5LidSaved, e5rSql),
+    "e3_sq8_incremental" -> Row(e3Sq8Incremental, e3oSql),
+    "e3_pq_incremental" -> Row(e3PqIncremental, e3qSql),
+    // runs on the drives' state-partition profile session
+    "e3_ivf_stream" -> Row((s, d) =>
+      e3IvfStream(GraftSession.scoped(s, StreamDrive.StatePartitions), d), e3nSql),
+    "e2_containment" -> Row(e2Containment, e2ctSql),
+    "e2_knn_communities" -> Row(e2KnnCommunities, e2kcSql),
+    "e3_kcenter" -> Row(e3Kcenter, e3kcSql),
+    "e5_backoff_score" -> Row(e5BackoffScore, e5boSql),
+    "e5_domain_select" -> Row(e5DomainSelect, e5dsSql),
+    "e3_knn_graph" -> Row(e3KnnGraph, e3ySql),
+    "e3_knn_appended" -> Row(e3KnnAppended, e3ySql),
+    "e3_knn_compacted" -> Row(e3KnnCompacted, e3ySql),
+    "e3_graph_search" -> Row(e3GraphSearch, e3zSql),
+    "e3_graph_search_appended" -> Row(e3GraphSearchAppended, e3zSql),
+    "e3_graph_search_external" -> Row(e3GraphSearchExternal, e3xSql),
+    "e3_graph_search_ext_saved" -> Row(e3GraphSearchExtSaved, e3xsSql),
+    "e3_graph_search_adc" -> Row(e3GraphSearchAdc, e3wGateSql),
+    "e3_graph_search_adc_saved" -> Row(e3GraphSearchAdcSaved, e3wSql),
+    "e2_bfs_hops" -> Row(e2BfsHops, e2bfSql),
+    "e2_sssp_weighted" -> Row(e2SsspWeighted, e2qSql),
+    "e3_mrr_eval" -> Row(e3MrrEval, e3mrSql),
+    "e7_epoch_shuffle" -> Row(e7EpochShuffle, e7jSql),
+    "e5_vocab_coverage" -> Row(e5VocabCoverage, e5ySql)
   )
+
 
   // ---- Standing-artifact prewarm (r19 VERDICT Next #2) ----------------------
   // The per-(JVM, sf-dir) standing artifacts above (kNN graph +

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.OracleSql._
+import graft.SparkEntry.Row
 import graft.ops.{Ingest, Sink}
 import graft.pipeline.{Dashboard, HeartFailureEtl}
 
@@ -17,13 +19,10 @@ import graft.pipeline.{Dashboard, HeartFailureEtl}
   * hospital_info (nulled states exercise the A4 group-key trap).
   * The oracle recomputes the same values straight from the parquet
   * tables — if the CSV round-trip, coercion, filter, projection,
-  * drop, or join diverges anywhere, the hash diverges.
+  * drop, or join diverges anywhere, the hash diverges. Its exact
+  * means are [[OracleSql.exactMean]].
   */
 object PipelineQueries {
-
-  private val AvgDec = "DECIMAL(28,10)"
-  private def meanSql(c: String): String =
-    s"CAST(CAST(SUM(CAST($c AS $AvgDec)) AS VARCHAR) AS DOUBLE) / COUNT($c)"
 
   private val Measure = "1-URGENT"
 
@@ -81,7 +80,7 @@ object PipelineQueries {
     */
   def pipelineE2e(s: SparkSession, dir: String): DataFrame = {
     val (readm, hosp) = analogInputs(s, dir)
-    val base = Sink.scratchDir(s"pipeline_${math.abs(dir.hashCode)}")
+    val base = Sink.scratchDir(s"pipeline_${Sink.pathTag(dir)}")
     Sink.writeCsv(readm, s"$base/readmissions")
     Sink.writeCsv(hosp, s"$base/hospital_info")
     HeartFailureEtl.transform(
@@ -116,7 +115,7 @@ object PipelineQueries {
     m1.unionByName(m2).unionByName(m3).unionByName(m4)
   }
   val pipelineDashboardSql: String = {
-    val m = meanSql("excess_readmission_ratio")
+    val m = exactMean("excess_readmission_ratio")
     s"""$etlCtes
        |SELECT 'n_hospitals' AS which, '' AS k, CAST(count(DISTINCT facility_id) AS DOUBLE) AS metric FROM etl
        |UNION ALL SELECT 'avg_ratio', '', $m FROM etl
@@ -154,15 +153,9 @@ object PipelineQueries {
     s"$etlCtes\n${side("highest", "DESC")}\nUNION ALL\n${side("lowest", "ASC")}"
   }
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipeline_e2e" -> (pipelineE2e _),
-    "pipeline_dashboard" -> (pipelineDashboard _),
-    "pipeline_topn" -> (pipelineTopn _)
-  )
-
-  val sql: Map[String, String] = Map(
-    "pipeline_e2e" -> pipelineE2eSql,
-    "pipeline_dashboard" -> pipelineDashboardSql,
-    "pipeline_topn" -> pipelineTopnSql
+  val all: Map[String, Row] = Map(
+    "pipeline_e2e" -> Row(pipelineE2e, pipelineE2eSql),
+    "pipeline_dashboard" -> Row(pipelineDashboard, pipelineDashboardSql),
+    "pipeline_topn" -> Row(pipelineTopn, pipelineTopnSql)
   )
 }

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.OracleSql._
+import graft.SparkEntry.Row
 import graft.ops._
 
 /** Parity query registry: one named query per reference operator
@@ -12,20 +14,13 @@ import graft.ops._
   *
   * Conventions for oracle comparability (SURVEY §5.2, §7.4):
   *  - every computed column is aliased identically in Spark and SQL;
-  *  - double aggregates go through DECIMAL(28,10) (exact, order-free)
-  *    and are cast back to double — parallel Spark == sequential DuckDB
-  *    bit-for-bit;
+  *  - exact sums and means, folds and hashes come from [[OracleSql]],
+  *    each fragment the twin of one Spark expression;
   *  - counts/ranks are cast to BIGINT to match DuckDB output types;
   *  - top-k queries carry total-order tiebreakers so ties are
   *    deterministic across engines.
   */
 object ParityQueries {
-
-  private val AvgDec = "DECIMAL(28,10)"
-
-  /** Exact order-independent mean, ANSI-safe (see Aggregates). */
-  private def meanSql(c: String): String =
-    s"CAST(CAST(SUM(CAST($c AS $AvgDec)) AS VARCHAR) AS DOUBLE) / COUNT($c)"
 
   // ---- P1: column-name normalization (etl_script.py:74-75) ----------
   // Rename lineitem columns into raw "Title Case / slash" forms, then
@@ -379,14 +374,14 @@ object ParityQueries {
     val w3 = w.rowsBetween(-2, Window.currentRow)
     Tables.orders(s, dir).select(
       col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-      (sum(col("o_totalprice").cast(AvgDec)).over(w3).cast("double") /
+      (sum(col("o_totalprice").cast(Dec)).over(w3).cast("double") /
         count(lit(1)).over(w3)).as("mov_avg3"),
       lead(col("o_totalprice"), 1).over(w).as("next_price"),
       first(col("o_totalprice")).over(w).as("first_price"))
   }
   val o8Sql =
     "SELECT o_orderkey, o_custkey, o_totalprice, " +
-      s"CAST(CAST(SUM(CAST(o_totalprice AS $AvgDec)) OVER w3 AS VARCHAR) AS DOUBLE) / count(*) OVER w3 AS mov_avg3, " +
+      s"${toDouble(s"SUM(CAST(o_totalprice AS $Dec)) OVER w3")} / count(*) OVER w3 AS mov_avg3, " +
       "lead(o_totalprice, 1) OVER w AS next_price, " +
       "first_value(o_totalprice) OVER w AS first_price " +
       "FROM orders WINDOW " +
@@ -516,7 +511,7 @@ object ParityQueries {
       .agg(count(lit(1)).as("n"), Aggregates.exactSum(col("l_quantity")).as("sum_qty"))
   val a6Sql =
     s"SELECT l_returnflag, l_linestatus, count(*) AS n, " +
-      s"CAST(CAST(SUM(CAST(l_quantity AS $AvgDec)) AS VARCHAR) AS DOUBLE) AS sum_qty " +
+      s"${exactSum("l_quantity")} AS sum_qty " +
       "FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)"
 
   // ---- A17: grouping-set level labels (grouping_id) -----------------------
@@ -565,16 +560,15 @@ object ParityQueries {
       .orderBy(col("rk"))
   }
   val o13Sql =
-    """WITH pp AS (SELECT l_partkey,
+    s"""WITH pp AS (SELECT l_partkey,
       |    SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,4))) AS rev
       |  FROM lineitem GROUP BY l_partkey),
       |t AS (SELECT SUM(rev) AS total FROM pp)
       |SELECT l_partkey, rk, cum_share FROM (
       |  SELECT l_partkey,
       |    CAST(row_number() OVER (ORDER BY rev DESC, l_partkey) AS BIGINT) AS rk,
-      |    CAST(CAST(SUM(rev) OVER (ORDER BY rev DESC, l_partkey
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS VARCHAR) AS DOUBLE)
-      |      / CAST(CAST(total AS VARCHAR) AS DOUBLE) AS cum_share
+      |    ${toDouble("SUM(rev) OVER (ORDER BY rev DESC, l_partkey\n      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)")}
+      |      / ${toDouble("total")} AS cum_share
       |  FROM pp, t) x
       |WHERE rk <= 100 ORDER BY rk""".stripMargin
 
@@ -595,7 +589,7 @@ object ParityQueries {
   val o5Sql =
     "SELECT o_orderkey, o_custkey, o_totalprice, " +
       "lag(o_totalprice, 1) OVER w AS prev_price, " +
-      s"CAST(CAST(SUM(CAST(o_totalprice AS $AvgDec)) OVER w AS VARCHAR) AS DOUBLE) AS run_total " +
+      s"${toDouble(s"SUM(CAST(o_totalprice AS $Dec)) OVER w")} AS run_total " +
       "FROM orders WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)"
 
   // ---- A1: scalar count (etl_script.py:100,120,169) --------------------
@@ -611,13 +605,13 @@ object ParityQueries {
   // ---- A3: scalar mean (dashboard_app/app.py:48) ------------------------
   def a3Mean(s: SparkSession, dir: String): DataFrame =
     Aggregates.mean(Tables.lineitem(s, dir), "l_discount")
-  val a3Sql = s"SELECT ${meanSql("l_discount")} AS avg_l_discount FROM lineitem"
+  val a3Sql = s"SELECT ${exactMean("l_discount")} AS avg_l_discount FROM lineitem"
 
   // ---- A4: grouped mean, null keys dropped (dashboard_app/app.py:57) ----
   def a4GroupMean(s: SparkSession, dir: String): DataFrame =
     Aggregates.groupedMean(Tables.lineitem(s, dir), "l_returnflag", "l_quantity")
   val a4Sql =
-    s"SELECT l_returnflag, ${meanSql("l_quantity")} AS avg_l_quantity " +
+    s"SELECT l_returnflag, ${exactMean("l_quantity")} AS avg_l_quantity " +
       "FROM lineitem WHERE l_returnflag IS NOT NULL GROUP BY l_returnflag"
 
   // ---- A5: grouped mean + desc sort (dashboard_app/app.py:74) -----------
@@ -625,7 +619,7 @@ object ParityQueries {
     Aggregates.groupedMean(Tables.orders(s, dir), "o_orderpriority", "o_totalprice")
       .orderBy(col("avg_o_totalprice").desc_nulls_last, col("o_orderpriority").asc)
   val a5Sql =
-    s"SELECT o_orderpriority, ${meanSql("o_totalprice")} AS avg_o_totalprice " +
+    s"SELECT o_orderpriority, ${exactMean("o_totalprice")} AS avg_o_totalprice " +
       "FROM orders WHERE o_orderpriority IS NOT NULL GROUP BY o_orderpriority " +
       "ORDER BY avg_o_totalprice DESC, o_orderpriority"
 
@@ -697,8 +691,8 @@ object ParityQueries {
     byFlagQty.unionByName(byFlagDisc).select(col("which"), col("l_returnflag"), col("metric"))
   }
   val s7Sql =
-    s"SELECT 'avg_qty' AS which, l_returnflag, ${meanSql("l_quantity")} AS metric FROM lineitem GROUP BY l_returnflag " +
-      s"UNION ALL SELECT 'avg_disc' AS which, l_returnflag, ${meanSql("l_discount")} AS metric FROM lineitem GROUP BY l_returnflag"
+    s"SELECT 'avg_qty' AS which, l_returnflag, ${exactMean("l_quantity")} AS metric FROM lineitem GROUP BY l_returnflag " +
+      s"UNION ALL SELECT 'avg_disc' AS which, l_returnflag, ${exactMean("l_discount")} AS metric FROM lineitem GROUP BY l_returnflag"
 
   // ---- S1+S4: CSV sink → schema'd CSV scan round-trip ---------------------
   // Exercises the reference's two I/O contracts in one query
@@ -715,7 +709,7 @@ object ParityQueries {
     // PID-qualified scratch path (shutdown-hook cleaned): concurrent
     // runners (Bench + Verify on the same sf dir) must not race
     // overwrite-vs-read on one directory.
-    val path = Sink.scratchDir(s"csv_roundtrip_${math.abs(dir.hashCode)}")
+    val path = Sink.scratchDir(s"csv_roundtrip_${Sink.pathTag(dir)}")
     Sink.writeCsv(out, path)
     Ingest.csv(s, path, StructType(Seq(
       StructField("supp_id", StringType),
@@ -737,7 +731,7 @@ object ParityQueries {
     val out = Tables.nation(s, dir).select(
       lpad(col("n_nationkey").cast("string"), 4, "0").as("nation_id"),
       col("n_name"), col("n_regionkey"))
-    val path = Sink.scratchDir(s"json_roundtrip_${math.abs(dir.hashCode)}")
+    val path = Sink.scratchDir(s"json_roundtrip_${Sink.pathTag(dir)}")
     out.write.mode("overwrite").json(path)
     s.read.schema(StructType(Seq(
       StructField("nation_id", StringType),
@@ -758,7 +752,7 @@ object ParityQueries {
     val out = Tables.part(s, dir).select(
       lpad(col("p_partkey").cast("string"), 9, "0").as("part_id"),
       col("p_name"), col("p_size"), col("p_retailprice"))
-    val path = Sink.scratchDir(s"orc_roundtrip_${math.abs(dir.hashCode)}")
+    val path = Sink.scratchDir(s"orc_roundtrip_${Sink.pathTag(dir)}")
     Sink.writeOrc(out, path)
     Ingest.orc(s, path, StructType(Seq(
       StructField("part_id", StringType),
@@ -782,7 +776,7 @@ object ParityQueries {
     val out = Tables.supplier(s, dir).select(
       lpad(col("s_suppkey").cast("string"), 7, "0").as("supp_id"),
       col("s_name"), col("s_nationkey"), col("s_acctbal"))
-    val path = Sink.scratchDir(s"xml_roundtrip_${math.abs(dir.hashCode)}")
+    val path = Sink.scratchDir(s"xml_roundtrip_${Sink.pathTag(dir)}")
     Sink.writeXml(out, path)
     Ingest.xml(s, path, StructType(Seq(
       StructField("supp_id", StringType),
@@ -837,7 +831,7 @@ object ParityQueries {
         format_number(col("m").cast("decimal(28,3)"), 3).as("avg_fmt"))
   val f2f3Sql =
     "WITH t AS (SELECT count(*) AS n, " +
-      s"CAST(${meanSql("o_totalprice")} AS DECIMAL(28,3)) AS d FROM orders) " +
+      s"CAST(${exactMean("o_totalprice")} AS DECIMAL(28,3)) AS d FROM orders) " +
       "SELECT format('{:,}', n) AS n_fmt, " +
       "format('{:,}', CAST(trunc(d) AS BIGINT)) || '.' || " +
       "lpad(CAST(CAST((d - trunc(d)) * 1000 AS BIGINT) AS VARCHAR), 3, '0') AS avg_fmt FROM t"
@@ -854,7 +848,7 @@ object ParityQueries {
       .filter(col("bucket").isNotNull)
   val w1Sql =
     s"SELECT time_bucket(INTERVAL '1 hour', ts) AS bucket, count(*) AS n, " +
-      s"${meanSql("value")} AS avg_value FROM events " +
+      s"${exactMean("value")} AS avg_value FROM events " +
       "WHERE ts IS NOT NULL GROUP BY bucket"
 
   // ---- W4: hopping (sliding) windows — the third window kind -------------
@@ -876,7 +870,7 @@ object ParityQueries {
     s"""WITH k AS (SELECT unnest(range(4)) AS k),
        |w AS (SELECT make_timestamp((epoch_us(ts) // 900000000 - k.k) * 900000000) AS bucket, value
        |  FROM events, k WHERE ts IS NOT NULL)
-       |SELECT bucket, count(*) AS n, ${meanSql("value")} AS avg_value FROM w GROUP BY bucket""".stripMargin
+       |SELECT bucket, count(*) AS n, ${exactMean("value")} AS avg_value FROM w GROUP BY bucket""".stripMargin
 
   // ---- W5: funnel analysis (ordered multi-stage conversion) ---------------
   // view → click → purchase per user, each stage's timestamp the
@@ -1025,7 +1019,7 @@ object ParityQueries {
       count(when(col("l_discount") > 0.05, 1)).as("n_discounted"))
   val a7Sql =
     "SELECT count(*) FILTER (l_returnflag = 'R') AS n_returned, " +
-      s"CAST(CAST(SUM(CAST(CASE WHEN l_returnflag = 'R' THEN l_extendedprice ELSE 0.0 END AS $AvgDec)) AS VARCHAR) AS DOUBLE) AS returned_value, " +
+      s"${exactSum("CASE WHEN l_returnflag = 'R' THEN l_extendedprice ELSE 0.0 END")} AS returned_value, " +
       "count(*) FILTER (l_discount > 0.05) AS n_discounted FROM lineitem"
 
   // ---- A8: pivot (wide summary; fixed pivot values keep the schema
@@ -1038,8 +1032,8 @@ object ParityQueries {
       .withColumnsRenamed(Map("F" -> "qty_f", "O" -> "qty_o"))
   val a8Sql =
     s"""SELECT l_returnflag,
-       |  CAST(CAST(SUM(CAST(CASE WHEN l_linestatus = 'F' THEN l_quantity END AS $AvgDec)) AS VARCHAR) AS DOUBLE) AS qty_f,
-       |  CAST(CAST(SUM(CAST(CASE WHEN l_linestatus = 'O' THEN l_quantity END AS $AvgDec)) AS VARCHAR) AS DOUBLE) AS qty_o
+       |  ${exactSum("CASE WHEN l_linestatus = 'F' THEN l_quantity END")} AS qty_f,
+       |  ${exactSum("CASE WHEN l_linestatus = 'O' THEN l_quantity END")} AS qty_o
        |FROM lineitem GROUP BY l_returnflag""".stripMargin
 
   // ---- A9: scalar-subquery comparison (items above the global mean) ------
@@ -1055,7 +1049,7 @@ object ParityQueries {
   }
   val a9Sql =
     s"SELECT count(*) AS n_above FROM lineitem " +
-      s"WHERE l_extendedprice > (SELECT ${meanSql("l_extendedprice")} FROM lineitem)"
+      s"WHERE l_extendedprice > (SELECT ${exactMean("l_extendedprice")} FROM lineitem)"
 
   // ---- O6: exact percentiles (quartiles per group) ------------------------
   // Spark `percentile` and DuckDB `quantile_cont` share the
@@ -1108,7 +1102,7 @@ object ParityQueries {
   }
   val o10Sql =
     s"""WITH monthly AS (SELECT o_custkey, date_trunc('month', o_orderdate) AS m,
-       |    CAST(CAST(SUM(CAST(o_totalprice AS $AvgDec)) AS VARCHAR) AS DOUBLE) AS m_total
+       |    ${exactSum("o_totalprice")} AS m_total
        |  FROM orders GROUP BY 1, 2),
        |spine AS (SELECT o_custkey, unnest(generate_series(min_m, max_m, INTERVAL 1 MONTH)) AS m
        |  FROM (SELECT o_custkey, min(m) AS min_m, max(m) AS max_m FROM monthly GROUP BY o_custkey)),
@@ -1142,7 +1136,7 @@ object ParityQueries {
   }
   val o11Sql =
     s"""SELECT user_id, event_id, value,
-       |  list_reduce(list_prepend(0.0, vs), (s, v) -> s * 0.5 + v * 0.5) AS ewma
+       |  ${fold("vs", "(s, v) -> s * 0.5 + v * 0.5")} AS ewma
        |FROM (
        |  SELECT user_id, event_id, value,
        |    list(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -1259,9 +1253,9 @@ object ParityQueries {
         .as("wavg_price"))
       .orderBy(col("l_returnflag"))
   val a15Sql =
-    """SELECT l_returnflag,
-      |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(10,0))) AS VARCHAR) AS DOUBLE)
-      |    / CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS wavg_price
+    s"""SELECT l_returnflag,
+      |  ${toDouble("SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(10,0)))")}
+      |    / ${exactSum("l_quantity", "DECIMAL(18,2)")} AS wavg_price
       |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
 
   // ---- P7: winsorize (percentile clipping) --------------------------------
@@ -1363,12 +1357,12 @@ object ParityQueries {
     graft.ops.Aggregates.targetEncodeLoo(
       Tables.events(s, dir), "event_id", "event_type", "value")
   val p9Sql: String =
-    s"""WITH b AS (SELECT event_id, event_type, CAST(value AS $AvgDec) AS vd
+    s"""WITH b AS (SELECT event_id, event_type, CAST(value AS $Dec) AS vd
        |  FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL),
        |g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_g, SUM(vd) AS s_g
        |  FROM b GROUP BY 1)
        |SELECT b.event_id, b.event_type,
-       |  CAST(CAST(s_g - vd AS VARCHAR) AS DOUBLE) / (n_g - 1) AS loo_mean
+       |  ${toDouble("s_g - vd")} / (n_g - 1) AS loo_mean
        |FROM b JOIN g USING (event_type) WHERE n_g > 1""".stripMargin
 
   // ---- A10: correlation via explicit decimal moments ----------------------
@@ -1392,10 +1386,14 @@ object ParityQueries {
   // BigDecimal converts correctly-rounded — the string bridge gives
   // one correctly-rounded parse on both sides.
   private val MomDec = "decimal(8,2)"
+  private def mom(a: Column, b: Column): Column =
+    sum(a.cast(MomDec) * b.cast(MomDec)).cast("double")
+  /** [[mom]]'s oracle twin. */
+  private def momSql(a: String, b: String): String =
+    toDouble(s"SUM(CAST($a AS DECIMAL(8,2)) * CAST($b AS DECIMAL(8,2)))")
   def a10Corr(s: SparkSession, dir: String): DataFrame = {
     val x = col("l_quantity")
     val y = col("l_extendedprice")
-    def mom(a: Column, b: Column) = sum(a.cast(MomDec) * b.cast(MomDec)).cast("double")
     Tables.lineitem(s, dir)
       .agg(
         count(lit(1)).cast("double").as("n"),
@@ -1411,12 +1409,9 @@ object ParityQueries {
           .as("corr_qty_price"))
   }
   val a10Sql = {
-    def es(e: String) = s"CAST(CAST(SUM(CAST($e AS $AvgDec)) AS VARCHAR) AS DOUBLE)"
-    def mom(a: String, b: String) =
-      s"CAST(CAST(SUM(CAST($a AS DECIMAL(8,2)) * CAST($b AS DECIMAL(8,2))) AS VARCHAR) AS DOUBLE)"
-    s"WITH s AS (SELECT CAST(count(*) AS DOUBLE) AS n, ${es("l_quantity")} AS sx, " +
-      s"${es("l_extendedprice")} AS sy, ${mom("l_quantity", "l_extendedprice")} AS sxy, " +
-      s"${mom("l_quantity", "l_quantity")} AS sxx, ${mom("l_extendedprice", "l_extendedprice")} AS syy " +
+    s"WITH s AS (SELECT CAST(count(*) AS DOUBLE) AS n, ${exactSum("l_quantity")} AS sx, " +
+      s"${exactSum("l_extendedprice")} AS sy, ${momSql("l_quantity", "l_extendedprice")} AS sxy, " +
+      s"${momSql("l_quantity", "l_quantity")} AS sxx, ${momSql("l_extendedprice", "l_extendedprice")} AS syy " +
       "FROM lineitem) " +
       "SELECT (n*sxy - sx*sy) / (sqrt(n*sxx - sx*sx) * sqrt(n*syy - sy*sy)) AS corr_qty_price FROM s"
   }
@@ -1433,7 +1428,6 @@ object ParityQueries {
   def a14GroupRegression(s: SparkSession, dir: String): DataFrame = {
     val x = col("l_quantity")
     val y = col("l_extendedprice")
-    def mom(a: Column, b: Column) = sum(a.cast(MomDec) * b.cast(MomDec)).cast("double")
     Tables.lineitem(s, dir)
       .groupBy(col("l_returnflag"))
       .agg(
@@ -1452,12 +1446,9 @@ object ParityQueries {
           .as("intercept"))
   }
   val a14Sql = {
-    def es(e: String) = s"CAST(CAST(SUM(CAST($e AS $AvgDec)) AS VARCHAR) AS DOUBLE)"
-    def mom(a: String, b: String) =
-      s"CAST(CAST(SUM(CAST($a AS DECIMAL(8,2)) * CAST($b AS DECIMAL(8,2))) AS VARCHAR) AS DOUBLE)"
-    s"WITH s AS (SELECT l_returnflag, CAST(count(*) AS DOUBLE) AS n, ${es("l_quantity")} AS sx, " +
-      s"${es("l_extendedprice")} AS sy, ${mom("l_quantity", "l_extendedprice")} AS sxy, " +
-      s"${mom("l_quantity", "l_quantity")} AS sxx FROM lineitem GROUP BY l_returnflag) " +
+    s"WITH s AS (SELECT l_returnflag, CAST(count(*) AS DOUBLE) AS n, ${exactSum("l_quantity")} AS sx, " +
+      s"${exactSum("l_extendedprice")} AS sy, ${momSql("l_quantity", "l_extendedprice")} AS sxy, " +
+      s"${momSql("l_quantity", "l_quantity")} AS sxx FROM lineitem GROUP BY l_returnflag) " +
       "SELECT l_returnflag, CAST(n AS BIGINT) AS n_rows, " +
       "(n*sxy - sx*sy) / (n*sxx - sx*sx) AS slope, " +
       "(sy - ((n*sxy - sx*sy) / (n*sxx - sx*sx)) * sx) / n AS intercept FROM s"
@@ -1506,7 +1497,7 @@ object ParityQueries {
         sum(col("l_extendedprice").cast("decimal(28,2)")).cast("double").as("sum_price"))
   val a12Sql =
     "SELECT l_returnflag, l_linestatus, count(*) AS n, " +
-      "CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,2))) AS VARCHAR) AS DOUBLE) AS sum_price " +
+      s"${exactSum("l_extendedprice", "DECIMAL(28,2)")} AS sum_price " +
       "FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)"
 
   // ---- O7: ranking-function family -----------------------------------------
@@ -1582,11 +1573,11 @@ object ParityQueries {
   }
   val q1Sql =
     s"""SELECT l_returnflag, l_linestatus,
-       |  CAST(CAST(SUM(CAST(l_quantity AS $AvgDec)) AS VARCHAR) AS DOUBLE) AS sum_qty,
-       |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,2))) AS VARCHAR) AS DOUBLE) AS sum_base_price,
-       |  CAST(CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,4))) AS VARCHAR) AS DOUBLE) AS sum_disc_price,
-       |  ${meanSql("l_quantity")} AS avg_qty,
-       |  ${meanSql("l_discount")} AS avg_disc,
+       |  ${exactSum("l_quantity")} AS sum_qty,
+       |  ${exactSum("l_extendedprice", "DECIMAL(28,2)")} AS sum_base_price,
+       |  ${exactSum("l_extendedprice * (1.0 - l_discount)", "DECIMAL(28,4)")} AS sum_disc_price,
+       |  ${exactMean("l_quantity")} AS avg_qty,
+       |  ${exactMean("l_discount")} AS avg_disc,
        |  count(*) AS count_order
        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1999-12-01 00:00:00'
        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin
@@ -1616,7 +1607,7 @@ object ParityQueries {
   }
   val q3Sql =
     s"""SELECT l_orderkey, o_orderdate,
-       |  CAST(CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,4))) AS VARCHAR) AS DOUBLE) AS revenue
+       |  ${exactSum("l_extendedprice * (1.0 - l_discount)", "DECIMAL(28,4)")} AS revenue
        |FROM lineitem
        |JOIN orders ON l_orderkey = o_orderkey
        |JOIN customer ON o_custkey = c_custkey
@@ -1652,8 +1643,8 @@ object ParityQueries {
       Seq(col("o_totalprice").desc, col("o_orderkey").asc), 100)
   }
   val q18Sql =
-    s"""WITH big AS (SELECT l_orderkey, CAST(CAST(SUM(CAST(l_quantity AS $AvgDec)) AS VARCHAR) AS DOUBLE) AS sum_qty
-       |  FROM lineitem GROUP BY l_orderkey HAVING CAST(CAST(SUM(CAST(l_quantity AS $AvgDec)) AS VARCHAR) AS DOUBLE) > $Q18MinQty)
+    s"""WITH big AS (SELECT l_orderkey, ${exactSum("l_quantity")} AS sum_qty
+       |  FROM lineitem GROUP BY l_orderkey HAVING ${exactSum("l_quantity")} > $Q18MinQty)
        |SELECT c_name, o_custkey, o_orderkey, o_orderdate, o_totalprice, sum_qty
        |FROM orders JOIN big ON o_orderkey = big.l_orderkey
        |JOIN customer ON o_custkey = c_custkey
@@ -1688,8 +1679,8 @@ object ParityQueries {
         |ORDER BY revenue DESC, n_name""".stripMargin)
   }
   val q5Sql =
-    """SELECT n_name,
-      |  CAST(CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,4))) AS VARCHAR) AS DOUBLE) AS revenue
+    s"""SELECT n_name,
+      |  ${exactSum("l_extendedprice * (1.0 - l_discount)", "DECIMAL(28,4)")} AS revenue
       |FROM customer JOIN orders ON c_custkey = o_custkey
       |JOIN lineitem ON l_orderkey = o_orderkey
       |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
@@ -1718,7 +1709,7 @@ object ParityQueries {
       .agg(sum((col("l_extendedprice") * col("l_discount")).cast("decimal(28,4)"))
         .cast("double").as("revenue"))
   val q6Sql =
-    """SELECT CAST(CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(28,4))) AS VARCHAR) AS DOUBLE) AS revenue
+    s"""SELECT ${exactSum("l_extendedprice * l_discount", "DECIMAL(28,4)")} AS revenue
       |FROM lineitem
       |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
       |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
@@ -1756,8 +1747,8 @@ object ParityQueries {
       Seq(col("revenue").desc, col("c_custkey").asc), 20)
   }
   val q10Sql =
-    """SELECT c_custkey, c_name,
-      |  CAST(CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,4))) AS VARCHAR) AS DOUBLE) AS revenue,
+    s"""SELECT c_custkey, c_name,
+      |  ${exactSum("l_extendedprice * (1.0 - l_discount)", "DECIMAL(28,4)")} AS revenue,
       |  c_acctbal, n_name
       |FROM customer JOIN orders ON c_custkey = o_custkey
       |JOIN lineitem ON l_orderkey = o_orderkey
@@ -1854,10 +1845,10 @@ object ParityQueries {
        |terms AS (SELECT n1, n2,
        |    CAST(CAST(
        |      (CAST(c1 * n2 - c2 * n1 AS DOUBLE) * CAST(c1 * n2 - c2 * n1 AS DOUBLE))
-       |        / CAST(c1 + c2 AS DOUBLE) AS VARCHAR) AS DECIMAL(28,10)) AS td
+       |        / CAST(c1 + c2 AS DOUBLE) AS VARCHAR) AS $Dec) AS td
        |  FROM pb CROSS JOIN tot)
        |SELECT n1, n2, CAST(count(*) AS BIGINT) AS n_buckets,
-       |  CAST(CAST(SUM(td) AS VARCHAR) AS DOUBLE)
+       |  ${toDouble("SUM(td)")}
        |    / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)) AS chi2
        |FROM terms GROUP BY n1, n2""".stripMargin
 
@@ -1900,8 +1891,7 @@ object ParityQueries {
     graft.ops.Aggregates.cmsHeavyHitters(
       Tables.lineitem(s, dir), "l_partkey", CmsDepth, CmsWidth, CmsTopK)
   val a23Sql = {
-    def md5i(e: String) = s"CAST(('0x' || substr(md5($e), 1, 8)) AS BIGINT)"
-    val bkt = md5i("'cms' || CAST(i AS VARCHAR) || '_' || CAST(l_partkey AS VARCHAR)")
+    val bkt = md5Int("'cms' || CAST(i AS VARCHAR) || '_' || CAST(l_partkey AS VARCHAR)")
     s"""WITH hs AS (SELECT l_partkey, i, $bkt % $CmsWidth AS b
        |  FROM lineitem CROSS JOIN (SELECT unnest(range($CmsDepth)) AS i)),
        |sk AS (SELECT i AS h, b, count(*) AS c FROM hs GROUP BY 1, 2),
@@ -1910,7 +1900,7 @@ object ParityQueries {
        |    row_number() OVER (ORDER BY count(*) DESC, l_partkey) AS rk
        |  FROM lineitem GROUP BY l_partkey) t WHERE rk <= $CmsTopK),
        |pr AS (SELECT t.l_partkey, t.true_n, i AS h,
-       |    ${md5i("'cms' || CAST(i AS VARCHAR) || '_' || CAST(t.l_partkey AS VARCHAR)")} % $CmsWidth AS b
+       |    ${md5Int("'cms' || CAST(i AS VARCHAR) || '_' || CAST(t.l_partkey AS VARCHAR)")} % $CmsWidth AS b
        |  FROM top t CROSS JOIN (SELECT unnest(range($CmsDepth)) AS i))
        |SELECT pr.l_partkey, pr.true_n, CAST(min(sk.c) AS BIGINT) AS cms_n
        |FROM pr JOIN sk USING (h, b)
@@ -2056,7 +2046,7 @@ object ParityQueries {
   def a25KmvDistinct(s: SparkSession, dir: String): DataFrame =
     graft.ops.Aggregates.kmvDistinct(Tables.lineitem(s, dir), "l_partkey", KmvK)
   val a25Sql: String = {
-    val h = "CAST(('0x' || substr(md5('kmv_' || CAST(l_partkey AS VARCHAR)), 1, 8)) AS BIGINT)"
+    val h = md5Int("'kmv_' || CAST(l_partkey AS VARCHAR)")
     s"""WITH h AS (SELECT DISTINCT $h AS h FROM lineitem WHERE l_partkey IS NOT NULL),
        |km AS (SELECT max(h) AS h_k, CAST(count(*) AS BIGINT) AS n_min
        |  FROM (SELECT h FROM h ORDER BY h LIMIT $KmvK)),
@@ -2130,7 +2120,7 @@ object ParityQueries {
   }
   val s21Sql =
     s"""WITH hs AS (SELECT DISTINCT date_trunc('month', o_orderdate) AS month,
-       |    CAST(('0x' || substr(md5('kmv_' || CAST(o_custkey AS VARCHAR)), 1, 8)) AS BIGINT) AS h
+       |    ${md5Int("'kmv_' || CAST(o_custkey AS VARCHAR)")} AS h
        |  FROM orders WHERE o_custkey IS NOT NULL),
        |mk AS (SELECT month, h FROM (
        |  SELECT month, h, row_number() OVER (PARTITION BY month ORDER BY h) AS rk FROM hs)
@@ -2176,7 +2166,7 @@ object ParityQueries {
   }
   val s32Sql =
     s"""WITH hv AS (SELECT date_trunc('month', o_orderdate) AS month,
-       |    CAST(('0x' || substr(md5('qsk_' || CAST(o_orderkey AS VARCHAR)), 1, 8)) AS BIGINT) AS h,
+       |    ${md5Int("'qsk_' || CAST(o_orderkey AS VARCHAR)")} AS h,
        |    CAST(floor(o_totalprice * 100) AS BIGINT) AS v
        |  FROM orders WHERE o_orderkey IS NOT NULL AND o_totalprice IS NOT NULL),
        |mk AS (SELECT month, h, v FROM (
@@ -2562,8 +2552,8 @@ object ParityQueries {
           .cast("long").as("days_since_prev"))
   }
   val p12Sql =
-    """WITH b AS (SELECT o_orderkey, o_custkey, o_orderpriority, o_orderdate,
-      |    CAST(o_totalprice AS DECIMAL(28,10)) AS vd,
+    s"""WITH b AS (SELECT o_orderkey, o_custkey, o_orderpriority, o_orderdate,
+      |    CAST(o_totalprice AS $Dec) AS vd,
       |    CAST(floor(o_totalprice * 100) AS BIGINT) AS cents FROM orders),
       |g AS (SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_g, SUM(vd) AS s_g
       |  FROM b GROUP BY 1),
@@ -2571,7 +2561,7 @@ object ParityQueries {
       |    quantile_cont(cents, 0.75) AS e3 FROM b)
       |SELECT o_orderkey,
       |  CASE WHEN n_g > 1
-      |    THEN CAST(CAST(s_g - vd AS VARCHAR) AS DOUBLE) / (n_g - 1) END AS prio_loo,
+      |    THEN ${toDouble("s_g - vd")} / (n_g - 1) END AS prio_loo,
       |  1 + CAST(cents > e1 AS BIGINT) + CAST(cents > e2 AS BIGINT)
       |    + CAST(cents > e3 AS BIGINT) AS price_bin,
       |  CASE WHEN o_custkey IS NOT NULL
@@ -2593,8 +2583,6 @@ object ParityQueries {
   // accumulates in floats.
   private val A26Cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
   def a26CorrMatrix(s: SparkSession, dir: String): DataFrame = {
-    val mom = (a: Column, b: Column) =>
-      sum(a.cast(MomDec) * b.cast(MomDec)).cast("double")
     val pairs = for {
       i <- A26Cols.indices; j <- A26Cols.indices if i < j
     } yield (A26Cols(i), A26Cols(j))
@@ -2614,16 +2602,13 @@ object ParityQueries {
       }: _*)))
   }
   val a26Sql: String = {
-    def es(e: String) = s"CAST(CAST(SUM(CAST($e AS $AvgDec)) AS VARCHAR) AS DOUBLE)"
-    def mm(a: String, b: String) =
-      s"CAST(CAST(SUM(CAST($a AS DECIMAL(8,2)) * CAST($b AS DECIMAL(8,2))) AS VARCHAR) AS DOUBLE)"
     val pairs = for {
       i <- A26Cols.indices; j <- A26Cols.indices if i < j
     } yield (A26Cols(i), A26Cols(j))
     val moms =
-      (A26Cols.map(c => s"${mm(c, c)} AS m_${c}_$c") ++
-        pairs.map { case (a, b) => s"${mm(a, b)} AS m_${a}_$b" } ++
-        A26Cols.map(c => s"${es(c)} AS s_$c")).mkString(", ")
+      (A26Cols.map(c => s"${momSql(c, c)} AS m_${c}_$c") ++
+        pairs.map { case (a, b) => s"${momSql(a, b)} AS m_${a}_$b" } ++
+        A26Cols.map(c => s"${exactSum(c)} AS s_$c")).mkString(", ")
     val rows = pairs.map { case (a, b) =>
       s"""SELECT '$a' AS col_x, '$b' AS col_y,
          |  (n * m_${a}_$b - s_$a * s_$b) /
@@ -2855,7 +2840,7 @@ object ParityQueries {
   def s9PartitionedPrune(s: SparkSession, dir: String): DataFrame = {
     val out = Tables.events(s, dir).select(
       col("event_id"), col("user_id"), col("value"), col("event_type"))
-    val path = Sink.scratchDir(s"part_prune_${math.abs(dir.hashCode)}")
+    val path = Sink.scratchDir(s"part_prune_${Sink.pathTag(dir)}")
     out.write.mode("overwrite").partitionBy("event_type").parquet(path)
     Ingest.parquet(s, path)
       .filter(col("event_type").isin("click", "purchase"))
@@ -2930,14 +2915,12 @@ object ParityQueries {
       .agg(count(lit(1)).as("n_rows"), sum(col("h")).as("checksum"))
   }
   val s11Sql: String = {
-    def md5i(e: String) =
-      s"CAST(('0x' || substr(md5($e), 1, 8)) AS BIGINT)"
     val repr = "o_orderkey || '|' || o_custkey || '|' || o_orderstatus || '|' || " +
       "CAST(floor(o_totalprice * 100) AS BIGINT) || '|' || " +
       "epoch_us(o_orderdate) || '|' || o_orderpriority"
-    s"""SELECT ${md5i("CAST(o_orderkey AS VARCHAR)")} % $ChecksumBuckets AS bucket,
+    s"""SELECT ${md5Int("CAST(o_orderkey AS VARCHAR)")} % $ChecksumBuckets AS bucket,
        |  CAST(count(*) AS BIGINT) AS n_rows,
-       |  CAST(SUM(${md5i(s"($repr)")}) AS BIGINT) AS checksum
+       |  CAST(SUM(${md5Int(s"($repr)")}) AS BIGINT) AS checksum
        |FROM orders GROUP BY 1""".stripMargin
   }
 
@@ -2949,7 +2932,7 @@ object ParityQueries {
   // mangling across the two layout hops diverges the hash; the
   // 64 → 4 file-count evidence is asserted in LayoutSpec.
   def s12Compact(s: SparkSession, dir: String): DataFrame = {
-    val tag = math.abs(dir.hashCode)
+    val tag = Sink.pathTag(dir)
     val small = Sink.scratchDir(s"compact_small_$tag")
     val big = Sink.scratchDir(s"compact_big_$tag")
     Tables.events(s, dir)
@@ -2974,7 +2957,7 @@ object ParityQueries {
   // union-by-name semantics this verifies are identical.
   def s17SchemaMerge(s: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(s, dir)
-    val base = Sink.scratchDir(s"schema_evo_${math.abs(dir.hashCode)}")
+    val base = Sink.scratchDir(s"schema_evo_${Sink.pathTag(dir)}")
     o.filter(col("o_orderkey") % 2 === 0)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
       .write.mode("overwrite").parquet(s"$base/gen1")
@@ -3010,7 +2993,7 @@ object ParityQueries {
     // the same sf dir (Bench + Verify) share spark.sql.warehouse.dir,
     // and a dir-hash-only tag would let them drop/delete each other's
     // table directories mid-query
-    val tag = s"${math.abs(dir.hashCode)}_${ProcessHandle.current.pid}"
+    val tag = s"${Sink.pathTag(dir)}_${ProcessHandle.current.pid}"
     val lt = s"li_bkt_$tag"
     val ot = s"ord_bkt_$tag"
     // a fresh JVM's in-memory catalog has forgotten these managed
@@ -3062,7 +3045,7 @@ object ParityQueries {
   // plain truth table, so any skip unsoundness — a pruned file that
   // actually held a matching row — diverges rows+hash.
   def s22ZonemapSkip(s: SparkSession, dir: String): DataFrame = {
-    val tag = math.abs(dir.hashCode)
+    val tag = Sink.pathTag(dir)
     val data = Sink.scratchDir(s"zm_data_$tag")
     val man = Sink.scratchDir(s"zm_manifest_$tag")
     Tables.orders(s, dir)
@@ -3093,7 +3076,7 @@ object ParityQueries {
   // unsound refresh diverges rows+hash. LayoutSpec additionally pins
   // manifest rows ≡ recomputed stats and the file-count drop.
   def s26ZonemapCompact(s: SparkSession, dir: String): DataFrame = {
-    val tag = math.abs(dir.hashCode)
+    val tag = Sink.pathTag(dir)
     val data = Sink.scratchDir(s"zmc_data_$tag")
     val cdata = Sink.scratchDir(s"zmc_cdata_$tag")
     val man = Sink.scratchDir(s"zmc_man_$tag")
@@ -3129,7 +3112,7 @@ object ParityQueries {
   // pins the no-false-negative law over every key and the skip
   // evidence (candidates < total files).
   def s27BloomSkip(s: SparkSession, dir: String): DataFrame = {
-    val tag = math.abs(dir.hashCode)
+    val tag = Sink.pathTag(dir)
     val data = Sink.scratchDir(s"bf_data_$tag")
     val man = Sink.scratchDir(s"bf_man_$tag")
     Tables.orders(s, dir)
@@ -3163,7 +3146,7 @@ object ParityQueries {
   // the result is non-empty at every SF); the oracle is the plain
   // compound truth table.
   def s28CompoundSkip(s: SparkSession, dir: String): DataFrame = {
-    val tag = math.abs(dir.hashCode)
+    val tag = Sink.pathTag(dir)
     val data = Sink.scratchDir(s"cs_data_$tag")
     val zman = Sink.scratchDir(s"cs_zman_$tag")
     val bman = Sink.scratchDir(s"cs_bman_$tag")
@@ -3577,7 +3560,7 @@ object ParityQueries {
   // rewriting terabytes of parquet; reads pay a broadcast-sized
   // anti-join (per-file bitmaps once DVs outgrow a broadcast).
   def s46DeletionVectors(s: SparkSession, dir: String): DataFrame = {
-    val base = Sink.scratchDir(s"s46_dv_${math.abs(dir.hashCode)}")
+    val base = Sink.scratchDir(s"s46_dv_${Sink.pathTag(dir)}")
     Tables.orders(s, dir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderpriority"),
         floor(col("o_totalprice") * 100).cast("long").as("cents"))
@@ -3875,8 +3858,8 @@ object ParityQueries {
   // s50's true count(DISTINCT).
   private val S51K = 8192 // sf0.1 densest quarter holds 4 878 distinct custkeys
   def s51NdvMetastore(s: SparkSession, dir: String): DataFrame = {
-    val base = Sink.scratchDir(s"ndv_meta_${math.abs(dir.hashCode)}")
-    val name = s"orders_quarter_ndvm_${math.abs(dir.hashCode)}"
+    val base = Sink.scratchDir(s"ndv_meta_${Sink.pathTag(dir)}")
+    val name = s"orders_quarter_ndvm_${Sink.pathTag(dir)}"
     // QUARTER grain, not s50's month: definitions match by (fact,
     // keys, id) canon, so a month-grain twin would let s50's standing
     // registration answer this query and break the dead-then-alive
@@ -3937,7 +3920,7 @@ object ParityQueries {
     val facts = Tables.orders(s, dir).select(
       date_trunc("MONTH", col("o_orderdate")).as("month"), col("o_custkey"))
     val cut = lit(S19Cutoff).cast("timestamp")
-    val stored = Sink.scratchDir(s"s52_bm_${math.abs(dir.hashCode)}") + "/monthly"
+    val stored = Sink.scratchDir(s"s52_bm_${Sink.pathTag(dir)}") + "/monthly"
     graft.ops.Materialize
       .bitmapSketch(facts.filter(col("month") < cut), Seq("month"), "o_custkey")
       .write.mode("overwrite").parquet(stored)
@@ -3966,7 +3949,7 @@ object ParityQueries {
   // per group — plan shape preserved). Exactness needs no collision
   // argument: the artifact stores the ids themselves.
   def s53BitmapRewrite(s: SparkSession, dir: String): DataFrame = {
-    val base = Sink.scratchDir(s"s53_bm_${math.abs(dir.hashCode)}")
+    val base = Sink.scratchDir(s"s53_bm_${Sink.pathTag(dir)}")
     val ps = GraftSession.scoped(s, MvRewrite)
     val fact = Tables.orders(ps, dir)
     val keys = Seq(col("o_orderpriority") -> "prio")
@@ -3987,28 +3970,28 @@ object ParityQueries {
       // KMV at k=64 SATURATES on this grain: registration's validation
       // refuses exactness and the rewrite must leave the fact scan alone
       graft.plans.NdvCatalog.create(
-        ps, s"s53_kmv_${math.abs(dir.hashCode)}", fact, keys,
+        ps, s"s53_kmv_${Sink.pathTag(dir)}", fact, keys,
         col("o_custkey"), 64, base + "/kmv")
       val kmvScans = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
       require(kmvScans.exists(_.contains("orders.parquet")),
         s"saturated KMV definition must NOT rewrite; plan scans: $kmvScans")
-      graft.plans.NdvCatalog.unregister(s"s53_kmv_${math.abs(dir.hashCode)}")
+      graft.plans.NdvCatalog.unregister(s"s53_kmv_${Sink.pathTag(dir)}")
       // the bitmap artifact has no saturation concept: same fact, same
       // grain, rewrite fires and the fact scan disappears
       graft.plans.NdvCatalog.createBitmap(
-        ps, s"s53_bm_${math.abs(dir.hashCode)}", fact, keys,
+        ps, s"s53_bm_${Sink.pathTag(dir)}", fact, keys,
         col("o_custkey"), base + "/bm")
       val scans = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
       require(scans.exists(_.contains("s53_bm")),
         s"count-DISTINCT rewrite did not reach the bitmap artifact; scans: $scans")
       require(!scans.exists(_.contains("orders.parquet")),
         s"the fact scan survived the bitmap count-DISTINCT rewrite; scans: $scans")
-      val out = Sink.scratchDir(s"s53_out_${math.abs(dir.hashCode)}")
+      val out = Sink.scratchDir(s"s53_out_${Sink.pathTag(dir)}")
       q.write.mode("overwrite").parquet(out)
       Ingest.parquet(s, out)
     } finally {
-      graft.plans.NdvCatalog.unregister(s"s53_kmv_${math.abs(dir.hashCode)}")
-      graft.plans.NdvCatalog.unregister(s"s53_bm_${math.abs(dir.hashCode)}")
+      graft.plans.NdvCatalog.unregister(s"s53_kmv_${Sink.pathTag(dir)}")
+      graft.plans.NdvCatalog.unregister(s"s53_bm_${Sink.pathTag(dir)}")
     }
   }
   val s53Sql =
@@ -4066,7 +4049,7 @@ object ParityQueries {
   // count-distinct tiles, where the KMV tier would need one artifact
   // per grain and the naive plan one fact scan per tile.
   def s55BitmapCoarsen(s: SparkSession, dir: String): DataFrame = {
-    val base = Sink.scratchDir(s"s55_bm_${math.abs(dir.hashCode)}")
+    val base = Sink.scratchDir(s"s55_bm_${Sink.pathTag(dir)}")
     // stage a PRIVATE fact copy: NdvCatalog definitions match on fact
     // paths, and this gate's requires must prove the LATTICE path
     // specifically — on the shared orders scan, whichever bitmap/KMV
@@ -4078,7 +4061,7 @@ object ParityQueries {
       .write.mode("overwrite").parquet(base + "/fact")
     val fact = Ingest.parquet(s, base + "/fact")
     graft.plans.NdvCatalog.createBitmap(
-      s, s"s55_bm_${math.abs(dir.hashCode)}", fact,
+      s, s"s55_bm_${Sink.pathTag(dir)}", fact,
       Seq(date_trunc("MONTH", col("o_orderdate")) -> "month",
         col("o_orderpriority") -> "prio"),
       col("o_custkey"), base + "/bm")
@@ -4191,7 +4174,7 @@ object ParityQueries {
   // outgrows its usefulness, is s12's rewrite recipe applied to the
   // live frame. At 100 TB an update batch costs O(|batch|) writes.
   def s47MorUpsert(s: SparkSession, dir: String): DataFrame = {
-    val base = Sink.scratchDir(s"s47_mor_${math.abs(dir.hashCode)}")
+    val base = Sink.scratchDir(s"s47_mor_${Sink.pathTag(dir)}")
     Tables.orders(s, dir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderpriority"),
         floor(col("o_totalprice") * 100).cast("long").as("cents"))
@@ -4477,8 +4460,8 @@ object ParityQueries {
   // the whole-table oracle. o_orderpriority is a key no other
   // registered MV carries, so only the LOADED definition can answer.
   def s43MvMetastore(s: SparkSession, dir: String): DataFrame = {
-    val base = Sink.scratchDir(s"mv_meta_${math.abs(dir.hashCode)}")
-    val name = s"orders_prio_cents_${math.abs(dir.hashCode)}"
+    val base = Sink.scratchDir(s"mv_meta_${Sink.pathTag(dir)}")
+    val name = s"orders_prio_cents_${Sink.pathTag(dir)}"
     graft.plans.MvCatalog.create(
       s, name, Tables.orders(s, dir), col("o_orderpriority"), "o_orderpriority",
       s30Cents, base + "/prio")
@@ -4859,7 +4842,7 @@ object ParityQueries {
   def j10Dpp(s: SparkSession, dir: String): DataFrame = {
     val out = Tables.events(s, dir).select(
       col("event_id"), col("user_id"), col("value"), col("event_type"))
-    val path = Sink.scratchDir(s"dpp_${math.abs(dir.hashCode)}")
+    val path = Sink.scratchDir(s"dpp_${Sink.pathTag(dir)}")
     out.write.mode("overwrite").partitionBy("event_type").parquet(path)
     val fact = Ingest.parquet(s, path)
     val dim = Tables.events(s, dir)
@@ -4904,15 +4887,15 @@ object ParityQueries {
         col("w_total"))
   }
   val w7Sql =
-    """WITH seq AS (SELECT user_id, value, ts, event_id,
+    s"""WITH seq AS (SELECT user_id, value, ts, event_id,
       |    epoch_us(lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) - epoch_us(ts) AS w_us
       |  FROM events WHERE ts IS NOT NULL),
       |g AS (SELECT user_id,
-      |    sum(CAST(value AS DECIMAL(28,10)) * w_us) AS vw,
+      |    sum(CAST(value AS $Dec) * w_us) AS vw,
       |    CAST(sum(w_us) AS BIGINT) AS w_total
       |  FROM seq WHERE w_us IS NOT NULL GROUP BY user_id)
       |SELECT user_id,
-      |  CAST(CAST(vw AS VARCHAR) AS DOUBLE) / CAST(w_total AS DOUBLE) AS twap,
+      |  ${toDouble("vw")} / CAST(w_total AS DOUBLE) AS twap,
       |  w_total FROM g""".stripMargin
 
   // ---- W10: OHLC bar downsampling ------------------------------------------
@@ -4991,321 +4974,162 @@ object ParityQueries {
         count(lit(1)).as("n_customers"))
       .orderBy(col("avg_acctbal").desc_nulls_last, col("r_name").asc, col("n_name").asc)
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p1_normalize_names" -> (p1NormalizeNames _),
-    "p2_coerce_cast" -> (p2CoerceCast _),
-    "p3_null_drop" -> (p3NullDrop _),
-    "p4_filter" -> (p4Filter _),
-    "p5_project" -> (p5Project _),
-    "p6_drop" -> (p6Drop _),
-    "p7_winsorize" -> (p7Winsorize _),
-    "p8_profile" -> (p8Profile _),
-    "p9_target_encode" -> (p9TargetEncode _),
-    "p10_expectations" -> (p10Expectations _),
-    "j1_join_inner" -> (j1Join _),
-    "j1_join_3way" -> (j1Join3Way _),
-    "j2_left_join" -> (j2LeftJoin _),
-    "j3_semi_anti" -> (j3SemiAnti _),
-    "j4_salted_join" -> (j4SaltedJoin _),
-    "j5_asof_join" -> (j5AsofJoin _),
-    "j5_asof_native" -> (j5AsofNative _),
-    "j12_asof_tolerance" -> (j12AsofTolerance _),
-    "j6_range_join" -> (j6RangeJoin _),
-    "j7_interval_overlap" -> (j7IntervalOverlap _),
-    "j8_range_auto" -> (j8RangeAuto _),
-    "j9_basket_pairs" -> (j9BasketPairs _),
-    "f5_json" -> (f5Json _),
-    "f6_math_toolkit" -> (f6MathToolkit _),
-    "f7_string_toolkit" -> (f7StringToolkit _),
-    "o8_window_frames" -> (o8WindowFrames _),
-    "f8_null_toolkit" -> (f8NullToolkit _),
-    "u1_set_ops" -> (u1SetOps _),
-    "a6_rollup" -> (a6Rollup _),
-    "o5_window_analytics" -> (o5WindowAnalytics _),
-    "a1_count" -> (a1Count _),
-    "a2_count_distinct" -> (a2CountDistinct _),
-    "a3_mean" -> (a3Mean _),
-    "a4_group_mean" -> (a4GroupMean _),
-    "a5_group_mean_sort" -> (a5GroupMeanSort _),
-    "o1_sort_desc" -> (o1SortDesc _),
-    "o2_sort_asc" -> (o2SortAsc _),
-    "o3_topk" -> (o3TopK _),
-    "o4_topk_per_group" -> (o4TopKPerGroup _),
-    "f1_string_funcs" -> (f1StringFuncs _),
-    "s7_cached_fanout" -> (s7CachedFanout _),
-    "s1_csv_roundtrip" -> (s1CsvRoundtrip _),
-    "s2_json_roundtrip" -> (s2JsonRoundtrip _),
-    "s3_orc_roundtrip" -> (s3OrcRoundtrip _),
-    "s13_xml_roundtrip" -> (s13XmlRoundtrip _),
-    "s8_upsert" -> (s8Upsert _),
-    "f2_f3_format" -> (f2f3Format _),
-    "w1_window_agg" -> (w1WindowAgg _),
-    "w4_hopping_window" -> (w4HoppingWindow _),
-    "w5_funnel" -> (w5Funnel _),
-    "w6_retention" -> (w6Retention _),
-    "w2_sessionize" -> (w2Sessionize _),
-    "w3_session_window" -> (w3SessionWindow _),
-    "f4_datetime" -> (f4Datetime _),
-    "a7_conditional_agg" -> (a7ConditionalAgg _),
-    "a8_pivot" -> (a8Pivot _),
-    "a9_above_avg" -> (a9AboveAvg _),
-    "o6_percentiles" -> (o6Percentiles _),
-    "a10_corr" -> (a10Corr _),
-    "a11_histogram" -> (a11Histogram _),
-    "a12_cube" -> (a12Cube _),
-    "a13_typed_mean" -> (a13TypedMean _),
-    "a14_group_regression" -> (a14GroupRegression _),
-    "o7_rank_family" -> (o7RankFamily _),
-    "o9_moving_median" -> (o9MovingMedian _),
-    "o10_gap_fill" -> (o10GapFill _),
-    "o11_ewma" -> (o11Ewma _),
-    "o12_cumulative_users" -> (o12CumulativeUsers _),
-    "a15_weighted_avg" -> (a15WeightedAvg _),
-    "a16_mode" -> (a16Mode _),
-    "a17_grouping_id" -> (a17GroupingId _),
-    "a18_heavy_hitters" -> (a18HeavyHitters _),
-    "a19_ks_drift" -> (a19KsDrift _),
-    "a21_chi_drift" -> (a21ChiDrift _),
-    "a22_mad_outliers" -> (a22MadOutliers _),
-    "a23_cms_frequency" -> (a23CmsFrequency _),
-    "a24_cusum_drift" -> (a24CusumDrift _),
-    "a25_kmv_distinct" -> (a25KmvDistinct _),
-    "a20_benford" -> (a20Benford _),
-    "s9_partitioned_prune" -> (s9PartitionedPrune _),
-    "s10_zorder" -> (s10Zorder _),
-    "s11_table_checksum" -> (s11TableChecksum _),
-    "s12_compact" -> (s12Compact _),
-    "s14_scd2" -> (s14Scd2 _),
-    "s19_rollup_incremental" -> (s19RollupIncremental _),
-    "s21_rollup_ndv" -> (s21RollupNdv _),
-    "s32_rollup_quantile" -> (s32RollupQuantile _),
-    "s42_topk_maintain" -> (s42TopkMaintain _),
-    "s20_snapshot_read" -> (s20SnapshotRead _),
-    "p11_quantile_bin" -> (p11QuantileBin _),
-    "p12_feature_matrix" -> (p12FeatureMatrix _),
-    "w11_streaks" -> (w11Streaks _),
-    "a26_corr_matrix" -> (a26CorrMatrix _),
-    "a27_autocorr" -> (a27Autocorr _),
-    "j13_interp_join" -> (j13InterpJoin _),
-    "s16_stats_collect" -> (s16StatsCollect _),
-    "s17_schema_merge" -> (s17SchemaMerge _),
-    "s18_bucketed_join" -> (s18BucketedJoin _),
-    "s22_zonemap_skip" -> (s22ZonemapSkip _),
-    "s23_snapshot_diff" -> (s23SnapshotDiff _),
-    "s25_cdc_apply" -> (s25CdcApply _),
-    "s26_zonemap_compact" -> (s26ZonemapCompact _),
-    "s27_bloom_skip" -> (s27BloomSkip _),
-    "s28_compound_skip" -> (s28CompoundSkip _),
-    "j14_bloom_join" -> (j14BloomJoin _),
-    "j16_cbo_reorder" -> (j16CboReorder _),
-    "j18_join_elim" -> (j18JoinElim _),
-    "s44_count_pushdown" -> (s44CountPushdown _),
-    "s45_distinct_elim" -> (s45DistinctElim _),
-    "j19_elim_then_mv" -> (j19ElimThenMv _),
-    "j20_left_elim" -> (j20LeftElim _),
-    "j21_chain_elim" -> (j21ChainElim _),
-    "o16_attribution" -> (o16Attribution _),
-    "s48_count_distinct_elim" -> (s48CountDistinctElim _),
-    "s50_ndv_rewrite" -> (s50NdvRewrite _),
-    "s51_ndv_metastore" -> (s51NdvMetastore _),
-    "s52_bitmap_ndv" -> (s52BitmapNdv _),
-    "s53_bitmap_rewrite" -> (s53BitmapRewrite _),
-    "s54_fd_prune" -> (s54FdPrune _),
-    "s55_bitmap_coarsen" -> (s55BitmapCoarsen _),
-    "o17_multi_touch" -> (o17MultiTouch _),
-    "a29_retention_bitmap" -> (a29RetentionBitmap _),
-    "a28_segment_overlap" -> (a28SegmentOverlap _),
-    "s46_deletion_vectors" -> (s46DeletionVectors _),
-    "s47_mor_upsert" -> (s47MorUpsert _),
-    "j17_aqe_skew" -> (j17AqeSkew _),
-    "s30_mv_rewrite" -> (s30MvRewrite _),
-    "s31_mv_refresh" -> (s31MvRefresh _),
-    "s33_mv_multikey" -> (s33MvMultikey _),
-    "s34_mv_coarsen" -> (s34MvCoarsen _),
-    "s35_mv_avg" -> (s35MvAvg _),
-    "s36_mv_cdc" -> (s36MvCdc _),
-    "s37_mv_join" -> (s37MvJoin _),
-    "s38_mv_join_refresh" -> (s38MvJoinRefresh _),
-    "s40_mv_join_dimcdc" -> (s40MvJoinDimCdc _),
-    "s41_mv_choose" -> (s41MvChoose _),
-    "s43_mv_metastore" -> (s43MvMetastore _),
-    "j15_join_size_profile" -> (j15JoinSizeProfile _),
-    "p13_ref_integrity" -> (p13RefIntegrity _),
-    "o15_rfm_segments" -> (o15RfmSegments _),
-    "o15_edges" -> (o15Edges _),
-    "o15_scores" -> (o15Scores _),
-    "o15_rowhash" -> (o15RowHash _),
-    "j10_dpp" -> (j10Dpp _),
-    "w7_twap" -> (w7Twap _),
-    "w10_ohlc" -> (w10Ohlc _),
-    "w8_interval_merge" -> (w8IntervalMerge _),
-    "o13_pareto" -> (o13Pareto _),
-    "o14_transitions" -> (o14Transitions _),
-    "u2_bag_ops" -> (u2BagOps _),
-    "q1_pricing_summary" -> (q1PricingSummary _),
-    "q3_shipping_priority" -> (q3ShippingPriority _),
-    "q5_local_supplier" -> (q5LocalSupplier _),
-    "q6_forecast_revenue" -> (q6ForecastRevenue _),
-    "q10_returned_items" -> (q10ReturnedItems _),
-    "q18_large_orders" -> (q18LargeOrders _)
-  )
-
-  val sql: Map[String, String] = Map(
-    "p1_normalize_names" -> p1Sql,
-    "p2_coerce_cast" -> p2Sql,
-    "p3_null_drop" -> p3Sql,
-    "p4_filter" -> p4Sql,
-    "p5_project" -> p5Sql,
-    "p6_drop" -> p6Sql,
-    "p7_winsorize" -> p7Sql,
-    "p8_profile" -> p8Sql,
-    "p9_target_encode" -> p9Sql,
-    "p10_expectations" -> p10Sql,
-    "j1_join_inner" -> j1Sql,
-    "j1_join_3way" -> j1bSql,
-    "j2_left_join" -> j2Sql,
-    "j3_semi_anti" -> j3Sql,
-    "j4_salted_join" -> j4Sql,
-    "j5_asof_join" -> j5Sql,
-    "j5_asof_native" -> j5Sql,
-    "j12_asof_tolerance" -> j12Sql,
-    "j6_range_join" -> j6Sql,
-    "j7_interval_overlap" -> j7Sql,
-    "j8_range_auto" -> j8Sql,
-    "j9_basket_pairs" -> j9Sql,
-    "f5_json" -> f5Sql,
-    "f6_math_toolkit" -> f6Sql,
-    "f7_string_toolkit" -> f7Sql,
-    "o8_window_frames" -> o8Sql,
-    "f8_null_toolkit" -> f8Sql,
-    "u1_set_ops" -> u1Sql,
-    "a6_rollup" -> a6Sql,
-    "o5_window_analytics" -> o5Sql,
-    "a1_count" -> a1Sql,
-    "a2_count_distinct" -> a2Sql,
-    "a3_mean" -> a3Sql,
-    "a4_group_mean" -> a4Sql,
-    "a5_group_mean_sort" -> a5Sql,
-    "o1_sort_desc" -> o1Sql,
-    "o2_sort_asc" -> o2Sql,
-    "o3_topk" -> o3Sql,
-    "o4_topk_per_group" -> o4Sql,
-    "f1_string_funcs" -> f1Sql,
-    "s7_cached_fanout" -> s7Sql,
-    "s1_csv_roundtrip" -> s1Sql,
-    "s2_json_roundtrip" -> s2Sql,
-    "s3_orc_roundtrip" -> s3oSql,
-    "s13_xml_roundtrip" -> s13Sql,
-    "s8_upsert" -> s8Sql,
-    "f2_f3_format" -> f2f3Sql,
-    "w1_window_agg" -> w1Sql,
-    "w4_hopping_window" -> w4Sql,
-    "w5_funnel" -> w5Sql,
-    "w6_retention" -> w6Sql,
-    "w2_sessionize" -> w2Sql,
-    "w3_session_window" -> w3Sql,
-    "f4_datetime" -> f4Sql,
-    "a7_conditional_agg" -> a7Sql,
-    "a8_pivot" -> a8Sql,
-    "a9_above_avg" -> a9Sql,
-    "o6_percentiles" -> o6Sql,
-    "a10_corr" -> a10Sql,
-    "a11_histogram" -> a11Sql,
-    "a12_cube" -> a12Sql,
-    "a13_typed_mean" -> a13Sql,
-    "a14_group_regression" -> a14Sql,
-    "o7_rank_family" -> o7Sql,
-    "o9_moving_median" -> o9Sql,
-    "o10_gap_fill" -> o10Sql,
-    "o11_ewma" -> o11Sql,
-    "o12_cumulative_users" -> o12Sql,
-    "a15_weighted_avg" -> a15Sql,
-    "a16_mode" -> a16Sql,
-    "a17_grouping_id" -> a17Sql,
-    "a18_heavy_hitters" -> a18Sql,
-    "a19_ks_drift" -> a19Sql,
-    "a21_chi_drift" -> a21Sql,
-    "a22_mad_outliers" -> a22Sql,
-    "a23_cms_frequency" -> a23Sql,
-    "a24_cusum_drift" -> a24Sql,
-    "a25_kmv_distinct" -> a25Sql,
-    "a20_benford" -> a20Sql,
-    "s9_partitioned_prune" -> s9Sql,
-    "s10_zorder" -> s10Sql,
-    "s11_table_checksum" -> s11Sql,
-    "s12_compact" -> s12Sql,
-    "s14_scd2" -> s14Sql,
-    "s19_rollup_incremental" -> s19Sql,
-    "s21_rollup_ndv" -> s21Sql,
-    "s32_rollup_quantile" -> s32Sql,
-    "s42_topk_maintain" -> s42Sql,
-    "s20_snapshot_read" -> s20Sql,
-    "p11_quantile_bin" -> p11Sql,
-    "p12_feature_matrix" -> p12Sql,
-    "w11_streaks" -> w11Sql,
-    "a26_corr_matrix" -> a26Sql,
-    "a27_autocorr" -> a27Sql,
-    "j13_interp_join" -> j13Sql,
-    "s16_stats_collect" -> s16Sql,
-    "s17_schema_merge" -> s17Sql,
-    "s18_bucketed_join" -> s18Sql,
-    "s22_zonemap_skip" -> s22Sql,
-    "s23_snapshot_diff" -> s23Sql,
-    "s25_cdc_apply" -> s25Sql,
-    "s26_zonemap_compact" -> s22Sql,
-    "s27_bloom_skip" -> s27Sql,
-    "s28_compound_skip" -> s28Sql,
-    "j14_bloom_join" -> j14Sql,
-    "j16_cbo_reorder" -> j16Sql,
-    "j18_join_elim" -> j18Sql,
-    "s44_count_pushdown" -> s44Sql,
-    "s45_distinct_elim" -> s45Sql,
-    "j19_elim_then_mv" -> j19Sql,
-    "j20_left_elim" -> j20Sql,
-    "j21_chain_elim" -> j21Sql,
-    "o16_attribution" -> o16Sql,
-    "s48_count_distinct_elim" -> s48Sql,
-    "s50_ndv_rewrite" -> s50Sql,
-    "s51_ndv_metastore" -> s51Sql,
-    "s52_bitmap_ndv" -> s52Sql,
-    "s53_bitmap_rewrite" -> s53Sql,
-    "s54_fd_prune" -> s54Sql,
-    "s55_bitmap_coarsen" -> s55Sql,
-    "o17_multi_touch" -> o17Sql,
-    "a29_retention_bitmap" -> a29Sql,
-    "a28_segment_overlap" -> a28Sql,
-    "s46_deletion_vectors" -> s46Sql,
-    "s47_mor_upsert" -> s47Sql,
-    "j17_aqe_skew" -> j17Sql,
-    "s30_mv_rewrite" -> s30Sql,
-    "s31_mv_refresh" -> s19Sql,
-    "s33_mv_multikey" -> s33Sql,
-    "s34_mv_coarsen" -> s34Sql,
-    "s35_mv_avg" -> s35Sql,
-    "s36_mv_cdc" -> s36Sql,
-    "s37_mv_join" -> s37Sql,
-    "s38_mv_join_refresh" -> s38Sql,
-    "s40_mv_join_dimcdc" -> s40Sql,
-    "s41_mv_choose" -> s41Sql,
-    "s43_mv_metastore" -> s43Sql,
-    "j15_join_size_profile" -> j15Sql,
-    "p13_ref_integrity" -> p13Sql,
-    "o15_rfm_segments" -> o15Sql,
-    "o15_edges" -> o15EdgesSql,
-    "o15_scores" -> o15ScoresSql,
-    "o15_rowhash" -> o15RowHashSql,
-    "j10_dpp" -> j10Sql,
-    "w7_twap" -> w7Sql,
-    "w10_ohlc" -> w10Sql,
-    "w8_interval_merge" -> w8Sql,
-    "o13_pareto" -> o13Sql,
-    "o14_transitions" -> o14Sql,
-    "u2_bag_ops" -> u2Sql,
-    "q1_pricing_summary" -> q1Sql,
-    "q3_shipping_priority" -> q3Sql,
-    "q5_local_supplier" -> q5Sql,
-    "q6_forecast_revenue" -> q6Sql,
-    "q10_returned_items" -> q10Sql,
-    "q18_large_orders" -> q18Sql
+  val all: Map[String, Row] = Map(
+    "p1_normalize_names" -> Row(p1NormalizeNames, p1Sql),
+    "p2_coerce_cast" -> Row(p2CoerceCast, p2Sql),
+    "p3_null_drop" -> Row(p3NullDrop, p3Sql),
+    "p4_filter" -> Row(p4Filter, p4Sql),
+    "p5_project" -> Row(p5Project, p5Sql),
+    "p6_drop" -> Row(p6Drop, p6Sql),
+    "p7_winsorize" -> Row(p7Winsorize, p7Sql),
+    "p8_profile" -> Row(p8Profile, p8Sql),
+    "p9_target_encode" -> Row(p9TargetEncode, p9Sql),
+    "p10_expectations" -> Row(p10Expectations, p10Sql),
+    "j1_join_inner" -> Row(j1Join, j1Sql),
+    "j1_join_3way" -> Row(j1Join3Way, j1bSql),
+    "j2_left_join" -> Row(j2LeftJoin, j2Sql),
+    "j3_semi_anti" -> Row(j3SemiAnti, j3Sql),
+    "j4_salted_join" -> Row(j4SaltedJoin, j4Sql),
+    "j5_asof_join" -> Row(j5AsofJoin, j5Sql),
+    "j5_asof_native" -> Row(j5AsofNative, j5Sql),
+    "j12_asof_tolerance" -> Row(j12AsofTolerance, j12Sql),
+    "j6_range_join" -> Row(j6RangeJoin, j6Sql),
+    "j7_interval_overlap" -> Row(j7IntervalOverlap, j7Sql),
+    "j8_range_auto" -> Row(j8RangeAuto, j8Sql),
+    "j9_basket_pairs" -> Row(j9BasketPairs, j9Sql),
+    "f5_json" -> Row(f5Json, f5Sql),
+    "f6_math_toolkit" -> Row(f6MathToolkit, f6Sql),
+    "f7_string_toolkit" -> Row(f7StringToolkit, f7Sql),
+    "o8_window_frames" -> Row(o8WindowFrames, o8Sql),
+    "f8_null_toolkit" -> Row(f8NullToolkit, f8Sql),
+    "u1_set_ops" -> Row(u1SetOps, u1Sql),
+    "a6_rollup" -> Row(a6Rollup, a6Sql),
+    "o5_window_analytics" -> Row(o5WindowAnalytics, o5Sql),
+    "a1_count" -> Row(a1Count, a1Sql),
+    "a2_count_distinct" -> Row(a2CountDistinct, a2Sql),
+    "a3_mean" -> Row(a3Mean, a3Sql),
+    "a4_group_mean" -> Row(a4GroupMean, a4Sql),
+    "a5_group_mean_sort" -> Row(a5GroupMeanSort, a5Sql),
+    "o1_sort_desc" -> Row(o1SortDesc, o1Sql),
+    "o2_sort_asc" -> Row(o2SortAsc, o2Sql),
+    "o3_topk" -> Row(o3TopK, o3Sql),
+    "o4_topk_per_group" -> Row(o4TopKPerGroup, o4Sql),
+    "f1_string_funcs" -> Row(f1StringFuncs, f1Sql),
+    "s7_cached_fanout" -> Row(s7CachedFanout, s7Sql),
+    "s1_csv_roundtrip" -> Row(s1CsvRoundtrip, s1Sql),
+    "s2_json_roundtrip" -> Row(s2JsonRoundtrip, s2Sql),
+    "s3_orc_roundtrip" -> Row(s3OrcRoundtrip, s3oSql),
+    "s13_xml_roundtrip" -> Row(s13XmlRoundtrip, s13Sql),
+    "s8_upsert" -> Row(s8Upsert, s8Sql),
+    "f2_f3_format" -> Row(f2f3Format, f2f3Sql),
+    "w1_window_agg" -> Row(w1WindowAgg, w1Sql),
+    "w4_hopping_window" -> Row(w4HoppingWindow, w4Sql),
+    "w5_funnel" -> Row(w5Funnel, w5Sql),
+    "w6_retention" -> Row(w6Retention, w6Sql),
+    "w2_sessionize" -> Row(w2Sessionize, w2Sql),
+    "w3_session_window" -> Row(w3SessionWindow, w3Sql),
+    "f4_datetime" -> Row(f4Datetime, f4Sql),
+    "a7_conditional_agg" -> Row(a7ConditionalAgg, a7Sql),
+    "a8_pivot" -> Row(a8Pivot, a8Sql),
+    "a9_above_avg" -> Row(a9AboveAvg, a9Sql),
+    "o6_percentiles" -> Row(o6Percentiles, o6Sql),
+    "a10_corr" -> Row(a10Corr, a10Sql),
+    "a11_histogram" -> Row(a11Histogram, a11Sql),
+    "a12_cube" -> Row(a12Cube, a12Sql),
+    "a13_typed_mean" -> Row(a13TypedMean, a13Sql),
+    "a14_group_regression" -> Row(a14GroupRegression, a14Sql),
+    "o7_rank_family" -> Row(o7RankFamily, o7Sql),
+    "o9_moving_median" -> Row(o9MovingMedian, o9Sql),
+    "o10_gap_fill" -> Row(o10GapFill, o10Sql),
+    "o11_ewma" -> Row(o11Ewma, o11Sql),
+    "o12_cumulative_users" -> Row(o12CumulativeUsers, o12Sql),
+    "a15_weighted_avg" -> Row(a15WeightedAvg, a15Sql),
+    "a16_mode" -> Row(a16Mode, a16Sql),
+    "a17_grouping_id" -> Row(a17GroupingId, a17Sql),
+    "a18_heavy_hitters" -> Row(a18HeavyHitters, a18Sql),
+    "a19_ks_drift" -> Row(a19KsDrift, a19Sql),
+    "a21_chi_drift" -> Row(a21ChiDrift, a21Sql),
+    "a22_mad_outliers" -> Row(a22MadOutliers, a22Sql),
+    "a23_cms_frequency" -> Row(a23CmsFrequency, a23Sql),
+    "a24_cusum_drift" -> Row(a24CusumDrift, a24Sql),
+    "a25_kmv_distinct" -> Row(a25KmvDistinct, a25Sql),
+    "a20_benford" -> Row(a20Benford, a20Sql),
+    "s9_partitioned_prune" -> Row(s9PartitionedPrune, s9Sql),
+    "s10_zorder" -> Row(s10Zorder, s10Sql),
+    "s11_table_checksum" -> Row(s11TableChecksum, s11Sql),
+    "s12_compact" -> Row(s12Compact, s12Sql),
+    "s14_scd2" -> Row(s14Scd2, s14Sql),
+    "s19_rollup_incremental" -> Row(s19RollupIncremental, s19Sql),
+    "s21_rollup_ndv" -> Row(s21RollupNdv, s21Sql),
+    "s32_rollup_quantile" -> Row(s32RollupQuantile, s32Sql),
+    "s42_topk_maintain" -> Row(s42TopkMaintain, s42Sql),
+    "s20_snapshot_read" -> Row(s20SnapshotRead, s20Sql),
+    "p11_quantile_bin" -> Row(p11QuantileBin, p11Sql),
+    "p12_feature_matrix" -> Row(p12FeatureMatrix, p12Sql),
+    "w11_streaks" -> Row(w11Streaks, w11Sql),
+    "a26_corr_matrix" -> Row(a26CorrMatrix, a26Sql),
+    "a27_autocorr" -> Row(a27Autocorr, a27Sql),
+    "j13_interp_join" -> Row(j13InterpJoin, j13Sql),
+    "s16_stats_collect" -> Row(s16StatsCollect, s16Sql),
+    "s17_schema_merge" -> Row(s17SchemaMerge, s17Sql),
+    "s18_bucketed_join" -> Row(s18BucketedJoin, s18Sql),
+    "s22_zonemap_skip" -> Row(s22ZonemapSkip, s22Sql),
+    "s23_snapshot_diff" -> Row(s23SnapshotDiff, s23Sql),
+    "s25_cdc_apply" -> Row(s25CdcApply, s25Sql),
+    "s26_zonemap_compact" -> Row(s26ZonemapCompact, s22Sql),
+    "s27_bloom_skip" -> Row(s27BloomSkip, s27Sql),
+    "s28_compound_skip" -> Row(s28CompoundSkip, s28Sql),
+    "j14_bloom_join" -> Row(j14BloomJoin, j14Sql),
+    "j16_cbo_reorder" -> Row(j16CboReorder, j16Sql),
+    "j18_join_elim" -> Row(j18JoinElim, j18Sql),
+    "s44_count_pushdown" -> Row(s44CountPushdown, s44Sql),
+    "s45_distinct_elim" -> Row(s45DistinctElim, s45Sql),
+    "j19_elim_then_mv" -> Row(j19ElimThenMv, j19Sql),
+    "j20_left_elim" -> Row(j20LeftElim, j20Sql),
+    "j21_chain_elim" -> Row(j21ChainElim, j21Sql),
+    "o16_attribution" -> Row(o16Attribution, o16Sql),
+    "s48_count_distinct_elim" -> Row(s48CountDistinctElim, s48Sql),
+    "s50_ndv_rewrite" -> Row(s50NdvRewrite, s50Sql),
+    "s51_ndv_metastore" -> Row(s51NdvMetastore, s51Sql),
+    "s52_bitmap_ndv" -> Row(s52BitmapNdv, s52Sql),
+    "s53_bitmap_rewrite" -> Row(s53BitmapRewrite, s53Sql),
+    "s54_fd_prune" -> Row(s54FdPrune, s54Sql),
+    "s55_bitmap_coarsen" -> Row(s55BitmapCoarsen, s55Sql),
+    "o17_multi_touch" -> Row(o17MultiTouch, o17Sql),
+    "a29_retention_bitmap" -> Row(a29RetentionBitmap, a29Sql),
+    "a28_segment_overlap" -> Row(a28SegmentOverlap, a28Sql),
+    "s46_deletion_vectors" -> Row(s46DeletionVectors, s46Sql),
+    "s47_mor_upsert" -> Row(s47MorUpsert, s47Sql),
+    "j17_aqe_skew" -> Row(j17AqeSkew, j17Sql),
+    "s30_mv_rewrite" -> Row(s30MvRewrite, s30Sql),
+    "s31_mv_refresh" -> Row(s31MvRefresh, s19Sql),
+    "s33_mv_multikey" -> Row(s33MvMultikey, s33Sql),
+    "s34_mv_coarsen" -> Row(s34MvCoarsen, s34Sql),
+    "s35_mv_avg" -> Row(s35MvAvg, s35Sql),
+    "s36_mv_cdc" -> Row(s36MvCdc, s36Sql),
+    "s37_mv_join" -> Row(s37MvJoin, s37Sql),
+    "s38_mv_join_refresh" -> Row(s38MvJoinRefresh, s38Sql),
+    "s40_mv_join_dimcdc" -> Row(s40MvJoinDimCdc, s40Sql),
+    "s41_mv_choose" -> Row(s41MvChoose, s41Sql),
+    "s43_mv_metastore" -> Row(s43MvMetastore, s43Sql),
+    "j15_join_size_profile" -> Row(j15JoinSizeProfile, j15Sql),
+    "p13_ref_integrity" -> Row(p13RefIntegrity, p13Sql),
+    "o15_rfm_segments" -> Row(o15RfmSegments, o15Sql),
+    "o15_edges" -> Row(o15Edges, o15EdgesSql),
+    "o15_scores" -> Row(o15Scores, o15ScoresSql),
+    "o15_rowhash" -> Row(o15RowHash, o15RowHashSql),
+    "j10_dpp" -> Row(j10Dpp, j10Sql),
+    "w7_twap" -> Row(w7Twap, w7Sql),
+    "w10_ohlc" -> Row(w10Ohlc, w10Sql),
+    "w8_interval_merge" -> Row(w8IntervalMerge, w8Sql),
+    "o13_pareto" -> Row(o13Pareto, o13Sql),
+    "o14_transitions" -> Row(o14Transitions, o14Sql),
+    "u2_bag_ops" -> Row(u2BagOps, u2Sql),
+    "q1_pricing_summary" -> Row(q1PricingSummary, q1Sql),
+    "q3_shipping_priority" -> Row(q3ShippingPriority, q3Sql),
+    "q5_local_supplier" -> Row(q5LocalSupplier, q5Sql),
+    "q6_forecast_revenue" -> Row(q6ForecastRevenue, q6Sql),
+    "q10_returned_items" -> Row(q10ReturnedItems, q10Sql),
+    "q18_large_orders" -> Row(q18LargeOrders, q18Sql)
   )
 }

@@ -5,6 +5,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.OracleSql._
+import graft.SparkEntry.Row
 import graft.ext.{QualityModel, TextOps}
 import graft.ops.{Aggregates, Ingest, Materialize, Sink}
 import graft.streaming.{CorpusStream, EventStream, StreamDrive}
@@ -655,11 +657,10 @@ object StreamQueries {
       CmsStreamDepth, CmsStreamWidth, CmsStreamTopK)
   }
   val a23sSql: String = {
-    def md5i(e: String) = s"CAST(('0x' || substr(md5($e), 1, 8)) AS BIGINT)"
     val d = CmsStreamDepth; val w = CmsStreamWidth; val k = CmsStreamTopK
     s"""WITH src AS (SELECT user_id FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL),
        |hs AS (SELECT user_id, i,
-       |    ${md5i("'cms' || CAST(i AS VARCHAR) || '_' || CAST(user_id AS VARCHAR)")} % $w AS b
+       |    ${md5Int("'cms' || CAST(i AS VARCHAR) || '_' || CAST(user_id AS VARCHAR)")} % $w AS b
        |  FROM src CROSS JOIN (SELECT unnest(range($d)) AS i)),
        |sk AS (SELECT i AS h, b, count(*) AS c FROM hs GROUP BY 1, 2),
        |top AS (SELECT user_id, true_n FROM (
@@ -667,7 +668,7 @@ object StreamQueries {
        |    row_number() OVER (ORDER BY count(*) DESC, user_id) AS rk
        |  FROM src GROUP BY user_id) t WHERE rk <= $k),
        |pr AS (SELECT t.user_id, t.true_n, i AS h,
-       |    ${md5i("'cms' || CAST(i AS VARCHAR) || '_' || CAST(t.user_id AS VARCHAR)")} % $w AS b
+       |    ${md5Int("'cms' || CAST(i AS VARCHAR) || '_' || CAST(t.user_id AS VARCHAR)")} % $w AS b
        |  FROM top t CROSS JOIN (SELECT unnest(range($d)) AS i))
        |SELECT pr.user_id, pr.true_n, CAST(min(sk.c) AS BIGINT) AS cms_n
        |FROM pr JOIN sk USING (h, b)
@@ -1041,44 +1042,6 @@ object StreamQueries {
     Ingest.parquet(s, current.get())
   }
 
-  /** Every row runs on the drives' state-partition profile session
-    * ([[StreamDrive.StatePartitions]]).
-    */
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map[
-      String, (SparkSession, String) => DataFrame](
-    "w1_window_stream" -> (w1WindowStream _),
-    "w3_session_stream" -> (w3SessionStream _),
-    "w4_hopping_stream" -> (w4HoppingStream _),
-    "w10_ohlc_stream" -> (w10OhlcStream _),
-    "w5_funnel_stream" -> (w5FunnelStream _),
-    "j5_asof_stream" -> (j5AsofStream _),
-    "j5_asof_bounded_stream" -> (j5AsofBoundedStream _),
-    "a19_drift_stream" -> (a19DriftStream _),
-    "a23_cms_stream" -> (a23CmsStream _),
-    "a24_cusum_stream" -> (a24CusumStream _),
-    "e5_quality_stream" -> (e5QualityStream _),
-    "e8_decontam_stream" -> (e8DecontamStream _),
-    "e7_split_stream" -> (e7SplitStream _),
-    "e4_stats_stream" -> (e4StatsStream _),
-    "e5_html_stream" -> (e5HtmlStream _),
-    "e5_unigram_stream" -> (e5UnigramStream _),
-    "e1_scrub_stream" -> (e1ScrubStream _),
-    "e5_link_stream" -> (e5LinkStream _),
-    "e7_rank_stream" -> (e7RankStream _),
-    "s19_rollup_stream" -> (s19RollupStream _),
-    "s32_quantile_stream" -> (s32QuantileStream _),
-    "s52_bitmap_stream" -> (s52BitmapStream _),
-    "s42_topk_stream" -> (s42TopkStream _),
-    "s39_mv_join_stream" -> (s39MvJoinStream _),
-    "s49_mv_dimcdc_stream" -> (s49MvDimCdcStream _),
-    "s24_manifest_stream" -> (s24ManifestStream _),
-    "s29_cdc_stream" -> (s29CdcStream _),
-    "w9_dedup_stream" -> (w9DedupStream _)
-  ).map { case (name, fn) =>
-    name -> ((s: SparkSession, d: String) =>
-      fn(GraftSession.scoped(s, StreamDrive.StatePartitions), d))
-  }
-
   /** The 6-hour drift histogram, aggregated directly in SQL (both
     * engines' tumbling buckets are epoch-aligned).
     */
@@ -1089,36 +1052,41 @@ object StreamQueries {
       |WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL
       |GROUP BY 1, 2, 3""".stripMargin
 
-  /** Streaming queries reuse their batch twins' oracle SQL verbatim —
-    * that equality is the whole point of the pairing.
+  /** Every row runs on the drives' state-partition profile session
+    * ([[StreamDrive.StatePartitions]]). Streaming rows reuse their batch
+    * twins' oracle SQL verbatim — that equality is the whole point of
+    * the pairing.
     */
-  val sql: Map[String, String] = Map(
-    "w1_window_stream" -> ParityQueries.w1Sql,
-    "w3_session_stream" -> ParityQueries.w3Sql,
-    "w4_hopping_stream" -> ParityQueries.w4Sql,
-    "w10_ohlc_stream" -> ParityQueries.w10Sql,
-    "w5_funnel_stream" -> ParityQueries.w5Sql,
-    "j5_asof_stream" -> ParityQueries.j5Sql,
-    "j5_asof_bounded_stream" -> j5bSql,
-    "a19_drift_stream" -> a19sSql,
-    "a23_cms_stream" -> a23sSql,
-    "a24_cusum_stream" -> a24sSql,
-    "e5_quality_stream" -> ExtQueries.e5oSql,
-    "e8_decontam_stream" -> ExtQueries.e8bSql,
-    "e7_split_stream" -> ExtQueries.e7Sql,
-    "e4_stats_stream" -> ExtQueries.e4cSql,
-    "e5_html_stream" -> ExtQueries.e5hxSql,
-    "e5_unigram_stream" -> ExtQueries.e5uaSql,
-    "e1_scrub_stream" -> ExtQueries.e1gSql,
-    "e5_link_stream" -> ExtQueries.e5lkSql,
-    "e7_rank_stream" -> ExtQueries.e7rwSql,
-    "s19_rollup_stream" -> ParityQueries.s19Sql,
-    "s32_quantile_stream" -> ParityQueries.s32Sql,
-    "s52_bitmap_stream" -> ParityQueries.s52Sql,
-    "s42_topk_stream" -> ParityQueries.s42Sql,
-    "s39_mv_join_stream" -> s39sSql,
-    "s49_mv_dimcdc_stream" -> ParityQueries.s40Sql,
-    "s24_manifest_stream" -> ParityQueries.s22Sql,
-    "s29_cdc_stream" -> ParityQueries.s25Sql,
-    "w9_dedup_stream" -> w9sSql)
+  val all: Map[String, Row] = Map(
+    "w1_window_stream" -> Row(w1WindowStream, ParityQueries.w1Sql),
+    "w3_session_stream" -> Row(w3SessionStream, ParityQueries.w3Sql),
+    "w4_hopping_stream" -> Row(w4HoppingStream, ParityQueries.w4Sql),
+    "w10_ohlc_stream" -> Row(w10OhlcStream, ParityQueries.w10Sql),
+    "w5_funnel_stream" -> Row(w5FunnelStream, ParityQueries.w5Sql),
+    "j5_asof_stream" -> Row(j5AsofStream, ParityQueries.j5Sql),
+    "j5_asof_bounded_stream" -> Row(j5AsofBoundedStream, j5bSql),
+    "a19_drift_stream" -> Row(a19DriftStream, a19sSql),
+    "a23_cms_stream" -> Row(a23CmsStream, a23sSql),
+    "a24_cusum_stream" -> Row(a24CusumStream, a24sSql),
+    "e5_quality_stream" -> Row(e5QualityStream, ExtQueries.e5oSql),
+    "e8_decontam_stream" -> Row(e8DecontamStream, ExtQueries.e8bSql),
+    "e7_split_stream" -> Row(e7SplitStream, ExtQueries.e7Sql),
+    "e4_stats_stream" -> Row(e4StatsStream, ExtQueries.e4cSql),
+    "e5_html_stream" -> Row(e5HtmlStream, ExtQueries.e5hxSql),
+    "e5_unigram_stream" -> Row(e5UnigramStream, ExtQueries.e5uaSql),
+    "e1_scrub_stream" -> Row(e1ScrubStream, ExtQueries.e1gSql),
+    "e5_link_stream" -> Row(e5LinkStream, ExtQueries.e5lkSql),
+    "e7_rank_stream" -> Row(e7RankStream, ExtQueries.e7rwSql),
+    "s19_rollup_stream" -> Row(s19RollupStream, ParityQueries.s19Sql),
+    "s32_quantile_stream" -> Row(s32QuantileStream, ParityQueries.s32Sql),
+    "s52_bitmap_stream" -> Row(s52BitmapStream, ParityQueries.s52Sql),
+    "s42_topk_stream" -> Row(s42TopkStream, ParityQueries.s42Sql),
+    "s39_mv_join_stream" -> Row(s39MvJoinStream, s39sSql),
+    "s49_mv_dimcdc_stream" -> Row(s49MvDimCdcStream, ParityQueries.s40Sql),
+    "s24_manifest_stream" -> Row(s24ManifestStream, ParityQueries.s22Sql),
+    "s29_cdc_stream" -> Row(s29CdcStream, ParityQueries.s25Sql),
+    "w9_dedup_stream" -> Row(w9DedupStream, w9sSql)
+  ).map { case (name, Row(run, oracle)) =>
+    name -> Row((s, d) => run(GraftSession.scoped(s, StreamDrive.StatePartitions), d), oracle)
+  }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.OracleSql._
+import graft.SparkEntry.Row
 import graft.ops._
 
 /** TPC-H-shaped analytical suite beyond the reference's own queries
@@ -21,24 +23,15 @@ import graft.ops._
   * of this module is shape coverage — every classic decision-support
   * plan pattern, each oracle-checked against DuckDB.
   *
-  * Oracle-comparability follows the house recipes (Queries.scala
-  * header): money sums through DECIMAL(28,4), exact means through
-  * DECIMAL(28,10)/COUNT, counts/years cast to BIGINT, total-order
-  * tiebreakers on every ORDER BY.
+  * Oracle-comparability follows [[OracleSql]] (money sums are
+  * `exactSum(e, "DECIMAL(28,4)")`), with counts/years cast to BIGINT
+  * and total-order tiebreakers on every ORDER BY.
   */
 object TpchQueries {
 
-  private val AvgDec = "DECIMAL(28,10)"
-
-  /** DuckDB-side exact money sum: per-row product quantized to 4
-    * decimals, summed exactly, rendered back to double through the
-    * shortest-round-trip string (bit-identical to Spark's
-    * sum(decimal).cast(double)).
+  /** Exact money sum: per-row product quantized to 4 decimals, summed
+    * exactly (oracle twin: `exactSum(e, "DECIMAL(28,4)")`).
     */
-  private def revSql(expr: String): String =
-    s"CAST(CAST(SUM(CAST($expr AS DECIMAL(28,4))) AS VARCHAR) AS DOUBLE)"
-
-  /** Spark-side twin of [[revSql]]. */
   private def revenue(e: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     sum(e.cast("decimal(28,4)")).cast("double")
 
@@ -81,8 +74,8 @@ object TpchQueries {
       .orderBy(col("supp_nation"), col("cust_nation"), col("l_year"))
   }
   val q7Sql =
-    """SELECT supp_nation, cust_nation, l_year,
-      |  CAST(CAST(SUM(CAST(volume AS DECIMAL(28,4))) AS VARCHAR) AS DOUBLE) AS revenue
+    s"""SELECT supp_nation, cust_nation, l_year,
+      |  ${exactSum("volume", "DECIMAL(28,4)")} AS revenue
       |FROM (
       |  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
       |         CAST(year(l_shipdate) AS BIGINT) AS l_year,
@@ -144,8 +137,8 @@ object TpchQueries {
         sum(col("rev")).cast("double")).as("promo_revenue"))
   }
   val q14Sql =
-    s"""SELECT 100.0 * ${revSql("CASE WHEN p_type = 'PROMO' THEN CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,4)) END")}
-      |  / ${revSql("CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,4))")} AS promo_revenue
+    s"""SELECT 100.0 * ${exactSum("CASE WHEN p_type = 'PROMO' THEN CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,4)) END", "DECIMAL(28,4)")}
+      |  / ${exactSum("CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,4))", "DECIMAL(28,4)")} AS promo_revenue
       |FROM lineitem JOIN part ON l_partkey = p_partkey
       |WHERE l_shipdate >= TIMESTAMP '1997-09-01 00:00:00'
       |  AND l_shipdate < TIMESTAMP '1997-10-01 00:00:00'""".stripMargin
@@ -173,7 +166,7 @@ object TpchQueries {
   }
   val q15Sql =
     s"""WITH rev AS (
-      |  SELECT l_suppkey, ${revSql("l_extendedprice * (1.0 - l_discount)")} AS total_revenue
+      |  SELECT l_suppkey, ${exactSum("l_extendedprice * (1.0 - l_discount)", "DECIMAL(28,4)")} AS total_revenue
       |  FROM lineitem
       |  WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
       |    AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'
@@ -254,9 +247,9 @@ object TpchQueries {
       .orderBy(col("o_year"))
   }
   val q8Sql =
-    """SELECT o_year,
-      |  CAST(CAST(SUM(CASE WHEN nation = 'NATION_5' THEN volume END) AS VARCHAR) AS DOUBLE)
-      |    / CAST(CAST(SUM(volume) AS VARCHAR) AS DOUBLE) AS mkt_share
+    s"""SELECT o_year,
+      |  ${toDouble("SUM(CASE WHEN nation = 'NATION_5' THEN volume END)")}
+      |    / ${toDouble("SUM(volume)")} AS mkt_share
       |FROM (
       |  SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year, n2.n_name AS nation,
       |         CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,4)) AS volume
@@ -298,11 +291,11 @@ object TpchQueries {
         .as("avg_yearly"))
   }
   val q17Sql =
-    s"""SELECT CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,2))) AS VARCHAR) AS DOUBLE) / 7.0 AS avg_yearly
+    s"""SELECT ${exactSum("l_extendedprice", "DECIMAL(28,2)")} / 7.0 AS avg_yearly
       |FROM lineitem JOIN part ON p_partkey = l_partkey
       |WHERE p_brand = 'Brand#3'
       |  AND l_quantity < (
-      |    SELECT 0.2 * (CAST(CAST(SUM(CAST(l_quantity AS $AvgDec)) AS VARCHAR) AS DOUBLE) / count(l_quantity))
+      |    SELECT 0.2 * (${exactSum("l_quantity")} / count(l_quantity))
       |    FROM lineitem l2 WHERE l2.l_partkey = part.p_partkey)""".stripMargin
 
   // ---- Q19: discounted revenue (disjunctive predicate pushdown) ----------
@@ -328,7 +321,7 @@ object TpchQueries {
       .agg(sum(col("rev")).cast("double").as("revenue"))
   }
   val q19Sql =
-    s"""SELECT ${revSql("CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,4))")} AS revenue
+    s"""SELECT ${exactSum("CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,4))", "DECIMAL(28,4)")} AS revenue
       |FROM lineitem JOIN part ON p_partkey = l_partkey
       |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 11)
       |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25 AND l_quantity BETWEEN 10 AND 20)
@@ -362,17 +355,17 @@ object TpchQueries {
       .orderBy(col("value").desc, col("l_partkey"))
   }
   val q11Sql =
-    """WITH v AS (
+    s"""WITH v AS (
       |  SELECT l_partkey,
       |         SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,4))) AS vdec
       |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
       |  JOIN nation ON s_nationkey = n_nationkey
       |  WHERE n_name = 'NATION_1'
       |  GROUP BY l_partkey)
-      |SELECT l_partkey, CAST(CAST(vdec AS VARCHAR) AS DOUBLE) AS value
+      |SELECT l_partkey, ${toDouble("vdec")} AS value
       |FROM v
-      |WHERE CAST(CAST(vdec AS VARCHAR) AS DOUBLE) >
-      |      (SELECT CAST(CAST(SUM(vdec) AS VARCHAR) AS DOUBLE) * CAST(0.001 AS DOUBLE) FROM v)
+      |WHERE ${toDouble("vdec")} >
+      |      (SELECT ${toDouble("SUM(vdec)")} * CAST(0.001 AS DOUBLE) FROM v)
       |ORDER BY value DESC, l_partkey""".stripMargin
 
   // ---- Q21: lone returner (EXISTS + NOT EXISTS on the same fact) ---------
@@ -453,11 +446,11 @@ object TpchQueries {
       .orderBy(col("c_mktsegment"))
   }
   val q22Sql =
-    """SELECT c_mktsegment, count(*) AS numcust,
-      |  CAST(CAST(SUM(CAST(c_acctbal AS DECIMAL(28,2))) AS VARCHAR) AS DOUBLE) AS totacctbal
+    s"""SELECT c_mktsegment, count(*) AS numcust,
+      |  ${exactSum("c_acctbal", "DECIMAL(28,2)")} AS totacctbal
       |FROM customer
       |WHERE c_acctbal > (
-      |    SELECT CAST(CAST(SUM(CAST(c_acctbal AS DECIMAL(28,10))) AS VARCHAR) AS DOUBLE)
+      |    SELECT ${exactSum("c_acctbal")}
       |           / count(c_acctbal)
       |    FROM customer WHERE c_acctbal > 0)
       |  AND NOT EXISTS (SELECT 1 FROM orders
@@ -557,7 +550,7 @@ object TpchQueries {
   }
   val q9Sql =
     s"""SELECT nation, o_year,
-      |  ${revSql("l_extendedprice * (1.0 - l_discount)")} AS sum_profit
+      |  ${exactSum("l_extendedprice * (1.0 - l_discount)", "DECIMAL(28,4)")} AS sum_profit
       |FROM (
       |  SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year,
       |         l_extendedprice, l_discount
@@ -716,39 +709,22 @@ object TpchQueries {
       |    WHERE 2 * st.avail > sh.shipped)
       |ORDER BY s_name""".stripMargin
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q4_priority_exists" -> (q4PriorityExists _),
-    "q7_volume_shipping" -> (q7VolumeShipping _),
-    "q8_market_share" -> (q8MarketShare _),
-    "q17_small_qty_revenue" -> (q17SmallQtyRevenue _),
-    "q19_disjunctive_rev" -> (q19DisjunctiveRev _),
-    "q13_cust_distribution" -> (q13CustomerDistribution _),
-    "q14_promo_share" -> (q14PromoShare _),
-    "q15_top_supplier" -> (q15TopSupplier _),
-    "q11_important_parts" -> (q11ImportantParts _),
-    "q21_lone_returner" -> (q21LoneReturner _),
-    "q22_dormant_value" -> (q22DormantValue _),
-    "q2_min_cost_supplier" -> (q2MinCostSupplier _),
-    "q9_product_profit" -> (q9ProductProfit _),
-    "q12_late_shipments" -> (q12LateShipments _),
-    "q16_supplier_cnt" -> (q16SupplierCnt _),
-    "q20_excess_suppliers" -> (q20ExcessSuppliers _))
-
-  val sql: Map[String, String] = Map(
-    "q4_priority_exists" -> q4Sql,
-    "q7_volume_shipping" -> q7Sql,
-    "q8_market_share" -> q8Sql,
-    "q17_small_qty_revenue" -> q17Sql,
-    "q19_disjunctive_rev" -> q19Sql,
-    "q13_cust_distribution" -> q13Sql,
-    "q14_promo_share" -> q14Sql,
-    "q15_top_supplier" -> q15Sql,
-    "q11_important_parts" -> q11Sql,
-    "q21_lone_returner" -> q21Sql,
-    "q22_dormant_value" -> q22Sql,
-    "q2_min_cost_supplier" -> q2Sql,
-    "q9_product_profit" -> q9Sql,
-    "q12_late_shipments" -> q12Sql,
-    "q16_supplier_cnt" -> q16Sql,
-    "q20_excess_suppliers" -> q20Sql)
+  val all: Map[String, Row] = Map(
+    "q4_priority_exists" -> Row(q4PriorityExists, q4Sql),
+    "q7_volume_shipping" -> Row(q7VolumeShipping, q7Sql),
+    "q8_market_share" -> Row(q8MarketShare, q8Sql),
+    "q17_small_qty_revenue" -> Row(q17SmallQtyRevenue, q17Sql),
+    "q19_disjunctive_rev" -> Row(q19DisjunctiveRev, q19Sql),
+    "q13_cust_distribution" -> Row(q13CustomerDistribution, q13Sql),
+    "q14_promo_share" -> Row(q14PromoShare, q14Sql),
+    "q15_top_supplier" -> Row(q15TopSupplier, q15Sql),
+    "q11_important_parts" -> Row(q11ImportantParts, q11Sql),
+    "q21_lone_returner" -> Row(q21LoneReturner, q21Sql),
+    "q22_dormant_value" -> Row(q22DormantValue, q22Sql),
+    "q2_min_cost_supplier" -> Row(q2MinCostSupplier, q2Sql),
+    "q9_product_profit" -> Row(q9ProductProfit, q9Sql),
+    "q12_late_shipments" -> Row(q12LateShipments, q12Sql),
+    "q16_supplier_cnt" -> Row(q16SupplierCnt, q16Sql),
+    "q20_excess_suppliers" -> Row(q20ExcessSuppliers, q20Sql)
+  )
 }

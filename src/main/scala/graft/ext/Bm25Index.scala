@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Aggregates, Ingest}
+import graft.ops.Ingest
 
 /** Saved inverted-index lifecycle for BM25 retrieval — the retrieval
   * family's member of the standing-artifact pattern (`AnnIndex` for

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -24,8 +24,6 @@ import graft.ops.Aggregates
   */
 object Retrieval {
   private val Dec = DecimalType(28, 10)
-  val K1 = 1.2
-  val B = 0.75
 
   /** Per-document BM25 scores against a small `queryTerms` frame
     * (single column `word`), k1 = 1.2, b = 0.75. Returns one row per

@@ -517,7 +517,7 @@ object Similarity {
       if (seed.nonEmpty) {
         centers :+= ((seed(0).get(0), embOf(seed(0)), seed(0).getDouble(2), 0.0))
         var exhausted = false
-        for (i <- 2 to k if !exhausted) {
+        for (_ <- 2 to k if !exhausted) {
           val scored =
             if (literalFold) {
               val md = centers.map { case (_, emb, n2c, _) => distTo(emb, n2c) }

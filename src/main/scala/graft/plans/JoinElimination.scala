@@ -424,7 +424,7 @@ object JoinEliminationRule extends Rule[LogicalPlan] {
           case at: Attribute if isPruned(at) =>
             Some(Alias(firstOf(at), at.name)(exprId = at.exprId))
           case at: Attribute => Some(at) // kept grouping attr (validity unchanged)
-          case al @ Alias(ae: aggregate.AggregateExpression, name) =>
+          case al @ Alias(_: aggregate.AggregateExpression, _) =>
             Some(al) // real aggregates pass through untouched
           case al @ Alias(e, name) if isPruned(e) =>
             Some(Alias(firstOf(e), name)(exprId = al.exprId))

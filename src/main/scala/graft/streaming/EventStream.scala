@@ -215,11 +215,6 @@ object EventStream {
   def streamingDedup(events: DataFrame, keyCols: Seq[String], lateness: String = "2 hours"): DataFrame =
     events.withWatermark("ts", lateness).dropDuplicatesWithinWatermark(keyCols)
 
-  /** Default output mode for the windowed aggregation (append emits
-    * each window once, when the watermark passes its end).
-    */
-  val WindowedOutputMode: OutputMode = OutputMode.Append
-
   /** Stream-static enrichment join: each micro-batch inner-joins the
     * stream against a STATIC dimension (re-read per batch, so slowly
     * changing dims pick up updates). Catalyst broadcasts the static

@@ -2,8 +2,6 @@ package graft
 
 import scala.util.Random
 
-import org.apache.spark.sql.functions._
-
 import graft.ext.Dedup
 
 /** Law tests for star-contraction connected components: it must agree

@@ -404,9 +404,9 @@ class ExtSpec extends SparkSpec {
   // ---- E3l ---------------------------------------------------------------
   test("e3_hard_negatives never returns a co-clustered pair") {
     val dir = "/root/testdata/sf0.001"
-    val clusters = ExtQueries.all("e3_kmeans")(spark, dir)
+    val clusters = ExtQueries.all("e3_kmeans").run(spark, dir)
       .select($"vec_id", $"cluster").as[(Long, Long)].collect().toMap
-    val pairs = ExtQueries.all("e3_hard_negatives")(spark, dir)
+    val pairs = ExtQueries.all("e3_hard_negatives").run(spark, dir)
       .select($"query_id", $"vec_id").as[(Long, Long)].collect().toSeq
     assert(pairs.nonEmpty)
     pairs.foreach { case (q, v) =>
@@ -435,7 +435,7 @@ class ExtSpec extends SparkSpec {
 
   // ---- E6c ---------------------------------------------------------------
   test("e6_ppl_buckets: per-language terciles balance within 1 and order by score") {
-    val rows = ExtQueries.all("e6_ppl_buckets")(spark, "/root/testdata/sf0.001")
+    val rows = ExtQueries.all("e6_ppl_buckets").run(spark, "/root/testdata/sf0.001")
       .as[(Long, String, Double, Int)].collect().toSeq
     assert(rows.nonEmpty)
     rows.groupBy(_._2).foreach { case (lang, rs) =>

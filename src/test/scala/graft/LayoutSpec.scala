@@ -216,7 +216,7 @@ class LayoutSpec extends SparkSpec {
     val out = SparkEntry.queries("s22_zonemap_skip")(spark, dir)
     // the query staged layout + manifest under this JVM's scratch dirs
     val man = spark.read.parquet(
-      Sink.scratchDir(s"zm_manifest_${math.abs(dir.hashCode)}"))
+      Sink.scratchDir(s"zm_manifest_${Sink.pathTag(dir)}"))
     val total = man.count()
     val cand = man
       .filter(col("zmax") >= lit("1996-01-01") && col("zmin") < lit("1996-07-01"))
@@ -267,7 +267,7 @@ class LayoutSpec extends SparkSpec {
   test("s27 bloom skip: equality truth table off a date layout, candidates < files") {
     val dir = "/root/testdata/sf0.001"
     val out = SparkEntry.queries("s27_bloom_skip")(spark, dir)
-    val tag = math.abs(dir.hashCode)
+    val tag = Sink.pathTag(dir)
     val man = Sink.scratchDir(s"bf_man_$tag")
     val data = Sink.scratchDir(s"bf_data_$tag")
     val key = spark.read.parquet(data)
@@ -325,7 +325,7 @@ class LayoutSpec extends SparkSpec {
   test("s28 compound skip: candidate set is the manifest intersection; result is the compound truth") {
     val dir = "/root/testdata/sf0.001"
     val out = SparkEntry.queries("s28_compound_skip")(spark, dir)
-    val tag = math.abs(dir.hashCode)
+    val tag = Sink.pathTag(dir)
     val zman = Sink.scratchDir(s"cs_zman_$tag")
     val bman = Sink.scratchDir(s"cs_bman_$tag")
     val data = Sink.scratchDir(s"cs_data_$tag")
@@ -354,7 +354,7 @@ class LayoutSpec extends SparkSpec {
   test("s26 compaction refreshes the manifest: rows match recomputed stats, files drop, probe stays sound") {
     val dir = "/root/testdata/sf0.001"
     val out = SparkEntry.queries("s26_zonemap_compact")(spark, dir)
-    val tag = math.abs(dir.hashCode)
+    val tag = Sink.pathTag(dir)
     val cdata = Sink.scratchDir(s"zmc_cdata_$tag")
     val man = Sink.scratchDir(s"zmc_man_$tag")
     // refreshed manifest rows ≡ stats recomputed from the rewritten bytes

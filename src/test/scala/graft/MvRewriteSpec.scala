@@ -14,7 +14,18 @@ class MvRewriteSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private val dir = "/root/testdata/sf0.001"
+  // The sf0.001 tables behind a private symlinked path: the registry's
+  // standing MV/NDV definitions on the real path (left by any suite that
+  // ran the registry earlier in this JVM) then never compete with this
+  // spec's own definitions in the rewrite's cost choice.
+  private val dir = {
+    val tmp = java.nio.file.Files.createTempDirectory("mv_rewrite_spec")
+    val link = java.nio.file.Files.createSymbolicLink(
+      tmp.resolve("sf0.001"), java.nio.file.Paths.get("/root/testdata/sf0.001"))
+    tmp.toFile.deleteOnExit()
+    link.toFile.deleteOnExit()
+    link.toString
+  }
   private val cents = floor(col("o_totalprice") * 100).cast("long")
 
   /** The test session has no GraftExtensions, so attach the rule the

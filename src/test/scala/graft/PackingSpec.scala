@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.ext.Packing
 
 /** Law tests for the two-phase parallel prefix sum (ext/Packing): the

@@ -98,15 +98,15 @@ class StreamDriveSpec extends SparkSpec {
     def rows(df: DataFrame): Set[Seq[Any]] = df.collect().toSet[Row].map(_.toSeq)
     val ev = Tables.events(spark, dir)
     val twins = Seq(
-      "w4_hopping_stream" -> ParityQueries.all("w4_hopping_window")(spark, dir),
-      "w10_ohlc_stream" -> ParityQueries.all("w10_ohlc")(spark, dir),
+      "w4_hopping_stream" -> ParityQueries.all("w4_hopping_window").run(spark, dir),
+      "w10_ohlc_stream" -> ParityQueries.all("w10_ohlc").run(spark, dir),
       "a23_cms_stream" -> Aggregates.cmsHeavyHitters(
         ev.filter($"ts".isNotNull && $"user_id".isNotNull), "user_id", 4, 32, 20),
       "a24_cusum_stream" -> Aggregates.cusumDrift(
         ev.filter($"event_type" === "purchase" && $"value".isNotNull && $"ts".isNotNull),
         "ts", "value"))
     twins.foreach { case (row, twin) =>
-      val (n, got) = microBatches(rows(StreamQueries.all(row)(spark, dir)))
+      val (n, got) = microBatches(rows(StreamQueries.all(row).run(spark, dir)))
       assert(n === 2, s"$row ran $n micro-batches")
       assert(got.nonEmpty && got == rows(twin), row)
     }

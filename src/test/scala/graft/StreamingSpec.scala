@@ -442,7 +442,7 @@ class StreamingSpec extends SparkSpec {
     // span artifact, so one-file micro-batches (forced in the gate
     // itself) must reproduce the whole-corpus batch scrub exactly
     val dir = "/root/testdata/sf0.001"
-    val got = StreamQueries.all("e1_scrub_stream")(spark, dir)
+    val got = StreamQueries.all("e1_scrub_stream").run(spark, dir)
       .as[(Long, Long, Long, String)].collect().toSet
     val expected = graft.ext.SuffixArray.scrubSpans(
       Tables.documents(spark, dir), "doc_id", "text", 32)
@@ -455,7 +455,7 @@ class StreamingSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val got = StreamQueries.w4HoppingStreamImpl(spark, dir, forcedSplit = true)
       .as[(java.sql.Timestamp, Long, Double)].collect().toSet
-    val expected = ParityQueries.all("w4_hopping_window")(spark, dir)
+    val expected = ParityQueries.all("w4_hopping_window").run(spark, dir)
       .as[(java.sql.Timestamp, Long, Double)].collect().toSet
     assert(got == expected)
     assert(got.nonEmpty)
@@ -467,7 +467,7 @@ class StreamingSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val got = StreamQueries.w10OhlcStreamImpl(spark, dir, forcedSplit = true)
       .as[(java.sql.Timestamp, Double, Double, Double, Double, Long)].collect().toSet
-    val expected = ParityQueries.all("w10_ohlc")(spark, dir)
+    val expected = ParityQueries.all("w10_ohlc").run(spark, dir)
       .as[(java.sql.Timestamp, Double, Double, Double, Double, Long)].collect().toSet
     assert(got == expected)
     assert(got.nonEmpty)
@@ -479,7 +479,7 @@ class StreamingSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val got = StreamQueries.s19RollupStream(spark, dir)
       .as[(java.sql.Timestamp, Long, Long, Long, Long, Long)].collect().toSet
-    val batch = ParityQueries.all("s19_rollup_incremental")(spark, dir)
+    val batch = ParityQueries.all("s19_rollup_incremental").run(spark, dir)
       .as[(java.sql.Timestamp, Long, Long, Long, Long, Long)].collect().toSet
     assert(got == batch)
     assert(got.nonEmpty)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.ext.{Dedup, SuffixArray}
 
 /** Laws for the char-granular suffix-array dedup leg: the

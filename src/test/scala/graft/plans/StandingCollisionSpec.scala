@@ -62,4 +62,20 @@ class StandingCollisionSpec extends SparkSpec {
       Files.delete(tmp)
     }
   }
+
+  test("src/main keys no scratch dir or catalog name by String.hashCode") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the repository root (no ${root.getAbsolutePath})")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    def comment(line: String): Boolean =
+      Seq("*", "/*", "//").exists(line.trim.startsWith)
+    val offenders = for {
+      f <- files(root)
+      (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines().toSeq.zipWithIndex
+      if !comment(line) && line.contains("hashCode")
+    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }
