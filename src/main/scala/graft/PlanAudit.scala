@@ -33,7 +33,14 @@ object PlanAudit {
         "e3_graph_search",
         // r18 rows: the artifact-probing scrub (no SA rebuild in-plan)
         // and the zero-exchange URL canonicalizer + its one-shuffle dedup
-        "e1_span_scrub", "e5_url_canon", "e1_url_dedup")
+        "e1_span_scrub", "e5_url_canon", "e1_url_dedup",
+        // the rest of the rows that consume the definition catalog
+        // (MV, NDV, FK and unique definitions): with the rows above,
+        // the audit is the plan-shape gate of the rewrite tier
+        "s31_mv_refresh", "s33_mv_multikey", "s34_mv_coarsen", "s35_mv_avg",
+        "s37_mv_join", "s38_mv_join_refresh", "s43_mv_metastore",
+        "s48_count_distinct_elim", "s51_ndv_metastore", "s53_bitmap_rewrite",
+        "s54_fd_prune", "s55_bitmap_coarsen", "j20_left_elim")
     names.foreach { n =>
       println(s"\n########## $n ##########")
       SparkEntry.queries(n)(spark, dir).explain("formatted")

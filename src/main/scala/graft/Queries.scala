@@ -2072,6 +2072,30 @@ object ParityQueries {
   // oracle IS the full recompute, making the maintenance law itself
   // the driver-gated artifact.
   private[graft] val S19Cutoff = "2001-01-01"
+
+  // ---- The cents aggregates of the rollup rows (s19, the s30 family) ---------
+  // Each Spark list is held once here, and each DuckDB twin below it
+  // names its Spark twin (the [[OracleSql]] discipline). A twin spans
+  // several oracle lines, joined as the registry strings lay them out.
+  private val s30Cents = floor(col("o_totalprice") * 100).cast("long")
+  private val nOrders = count(lit(1)).as("n_orders")
+  private val sumCents = sum(s30Cents).as("sum_cents")
+  private val centsStats =
+    Seq(sumCents, min(s30Cents).as("min_cents"), max(s30Cents).as("max_cents"))
+  /** A query spelling of the rollup's own statistics (s31, s38). */
+  private val rollupStats = Seq(count(s30Cents).as("n_m"), sum(s30Cents).as("sum_m"),
+    min(s30Cents).as("min_m"), max(s30Cents).as("max_m"))
+  /** Spark twin: `s30Cents`. */
+  private val s30CentsSql = "CAST(floor(o_totalprice * 100) AS BIGINT)"
+  private def centsSql(fn: String, name: String) = s"CAST($fn($s30CentsSql) AS BIGINT) AS $name"
+  /** Spark twin: `sumCents`. */
+  private val sumCentsSql = centsSql("sum", "sum_cents")
+  /** Spark twin: `centsStats`. */
+  private val centsStatsSql = Seq(sumCentsSql, centsSql("min", "min_cents"),
+    centsSql("max", "max_cents")).mkString(",\n  ")
+  /** Spark twin: `rollupStats`. */
+  private val rollupStatsSql = Seq(centsSql("count", "n_m"), centsSql("sum", "sum_m"),
+    centsSql("min", "min_m"), centsSql("max", "max_m")).mkString(",\n  ")
   def s19RollupIncremental(s: SparkSession, dir: String): DataFrame = {
     val facts = Tables.orders(s, dir).select(
       date_trunc("DAY", col("o_orderdate")).as("day"),
@@ -2085,12 +2109,9 @@ object ParityQueries {
     Materialize.merge(base, delta, "day")
   }
   val s19Sql =
-    """SELECT date_trunc('day', o_orderdate) AS day,
+    s"""SELECT date_trunc('day', o_orderdate) AS day,
       |  CAST(count(*) AS BIGINT) AS n,
-      |  CAST(count(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS n_m,
-      |  CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_m,
-      |  CAST(min(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS min_m,
-      |  CAST(max(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS max_m
+      |  $rollupStatsSql
       |FROM orders GROUP BY 1""".stripMargin
 
   // ---- S21: incremental NDV maintenance via mergeable KMV sketches ---------
@@ -3453,7 +3474,7 @@ object ParityQueries {
       |WHERE n_name = 'NATION_7'
       |GROUP BY n_name""".stripMargin
 
-  // ---- J18: FK join elimination (validated RELY constraints) -----------------
+  // ---- J18: FK join elimination (validated constraints) ----------------------
   // The classic star-schema rewrite BI tools force engines to ship:
   // generated SQL joins every dimension whether the query uses it or
   // not, and under a validated foreign key (child key non-null, every
@@ -3480,7 +3501,7 @@ object ParityQueries {
     * Relation's toString omits its path).
     */
   private def provenRewrite(q: DataFrame, reads: Seq[String], gone: Seq[String]): DataFrame = {
-    val scans = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
+    val scans = graft.plans.DefCatalog.scanPaths(q.queryExecution.optimizedPlan)
     require(reads.forall(r => scans.exists(_.contains(r))),
       s"the rewrite did not reach ${reads.mkString(" and ")}; plan scans: $scans")
     require(!scans.exists(p => gone.exists(p.contains)),
@@ -3502,12 +3523,12 @@ object ParityQueries {
     val q = Tables.orders(ps, dir)
       .join(Tables.customer(ps, dir), col("o_custkey") === col("c_custkey"))
       .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n_orders"), sum(s30Cents).as("sum_cents"))
+      .agg(nOrders, sumCents)
     provenRewrite(q, reads = Seq("orders.parquet"), gone = Seq("customer.parquet"))
   }
   val j18Sql =
-    """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
-      |  CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_cents
+    s"""SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
+      |  $sumCentsSql
       |FROM orders JOIN customer ON o_custkey = c_custkey
       |GROUP BY 1""".stripMargin
 
@@ -3536,13 +3557,13 @@ object ParityQueries {
       .join(Tables.customer(ps, dir), col("o_custkey") === col("c_custkey"))
       .join(Tables.nation(ps, dir), col("c_nationkey") === col("n_nationkey"))
       .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n_orders"), sum(s30Cents).as("sum_cents"))
+      .agg(nOrders, sumCents)
     provenRewrite(q, reads = Seq("orders.parquet"),
       gone = Seq("customer.parquet", "nation.parquet"))
   }
   val j21Sql =
-    """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
-      |  CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_cents
+    s"""SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
+      |  $sumCentsSql
       |FROM orders JOIN customer ON o_custkey = c_custkey
       |JOIN nation ON c_nationkey = n_nationkey
       |GROUP BY 1""".stripMargin
@@ -3581,8 +3602,8 @@ object ParityQueries {
       .agg(count(lit(1)).as("n_live"), sum(col("cents")).as("sum_cents"))
   }
   val s46Sql =
-    """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_live,
-      |  CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_cents
+    s"""SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_live,
+      |  $sumCentsSql
       |FROM orders WHERE NOT (o_custkey % 10 = 3)
       |GROUP BY 1""".stripMargin
 
@@ -3748,12 +3769,12 @@ object ParityQueries {
       .join(Tables.customer(ps, dir),
         col("o_custkey") === col("c_custkey"), "left")
       .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n_orders"), sum(s30Cents).as("sum_cents"))
+      .agg(nOrders, sumCents)
     provenRewrite(q, reads = Seq("orders.parquet"), gone = Seq("customer.parquet"))
   }
   val j20Sql =
-    """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
-      |  CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_cents
+    s"""SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
+      |  $sumCentsSql
       |FROM orders LEFT JOIN customer ON o_custkey = c_custkey
       |GROUP BY 1""".stripMargin
 
@@ -3806,15 +3827,12 @@ object ParityQueries {
     val q = Tables.orders(ps, dir)
       .join(Tables.customer(ps, dir), col("o_custkey") === col("c_custkey"))
       .groupBy(col("o_custkey"))
-      .agg(count(lit(1)).as("n_orders"), sum(s30Cents).as("sum_cents"),
-        min(s30Cents).as("min_cents"), max(s30Cents).as("max_cents"))
+      .agg(nOrders, centsStats: _*)
     provenRewrite(q, reads = Seq("mv_orders"), gone = Seq("orders.parquet", "customer.parquet"))
   }
   val j19Sql =
-    """SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders,
-      |  CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_cents,
-      |  CAST(min(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS min_cents,
-      |  CAST(max(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS max_cents
+    s"""SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders,
+      |  $centsStatsSql
       |FROM orders JOIN customer ON o_custkey = c_custkey
       |GROUP BY 1""".stripMargin
 
@@ -3874,7 +3892,7 @@ object ParityQueries {
     def q = Tables.orders(ps, dir)
       .groupBy(date_trunc("QUARTER", col("o_orderdate")).as("quarter"))
       .agg(count_distinct(col("o_custkey")).as("n_cust"))
-    val pre = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
+    val pre = graft.plans.DefCatalog.scanPaths(q.queryExecution.optimizedPlan)
     require(pre.exists(_.contains("orders.parquet")),
       s"NDV definition still live after unregister; plan scans: $pre")
     graft.plans.NdvCatalog.load(ps, base + "/catalog")
@@ -3972,7 +3990,7 @@ object ParityQueries {
       graft.plans.NdvCatalog.create(
         ps, s"s53_kmv_${Sink.pathTag(dir)}", fact, keys,
         col("o_custkey"), 64, base + "/kmv")
-      val kmvScans = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
+      val kmvScans = graft.plans.DefCatalog.scanPaths(q.queryExecution.optimizedPlan)
       require(kmvScans.exists(_.contains("orders.parquet")),
         s"saturated KMV definition must NOT rewrite; plan scans: $kmvScans")
       graft.plans.NdvCatalog.unregister(s"s53_kmv_${Sink.pathTag(dir)}")
@@ -3981,7 +3999,7 @@ object ParityQueries {
       graft.plans.NdvCatalog.createBitmap(
         ps, s"s53_bm_${Sink.pathTag(dir)}", fact, keys,
         col("o_custkey"), base + "/bm")
-      val scans = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
+      val scans = graft.plans.DefCatalog.scanPaths(q.queryExecution.optimizedPlan)
       require(scans.exists(_.contains("s53_bm")),
         s"count-DISTINCT rewrite did not reach the bitmap artifact; scans: $scans")
       require(!scans.exists(_.contains("orders.parquet")),
@@ -4100,13 +4118,13 @@ object ParityQueries {
     Sink.standing("customer_pknn", dir) { p =>
       graft.plans.FkCatalog.registerUnique(
         s, Sink.artifactName(p),
-        Tables.customer(s, dir), col("c_custkey"), validate = true, nonNull = true)
+        Tables.customer(s, dir), col("c_custkey"), nonNull = true)
     }
     val ps = GraftSession.scoped(s, FkElim)
     val q = Tables.orders(ps, dir)
       .join(Tables.customer(ps, dir), col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-      .agg(count(lit(1)).as("n_orders"), sum(s30Cents).as("sum_cents"))
+      .agg(nOrders, sumCents)
     val aggs = q.queryExecution.optimizedPlan.collect {
       case ag: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
         ag.groupingExpressions.length
@@ -4116,9 +4134,9 @@ object ParityQueries {
     q
   }
   val s54Sql =
-    """SELECT c_custkey, c_name, c_mktsegment,
+    s"""SELECT c_custkey, c_name, c_mktsegment,
       |  CAST(count(*) AS BIGINT) AS n_orders,
-      |  CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_cents
+      |  $sumCentsSql
       |FROM orders JOIN customer ON o_custkey = c_custkey
       |GROUP BY 1, 2, 3""".stripMargin
 
@@ -4215,7 +4233,7 @@ object ParityQueries {
   // ---- S45: DISTINCT elimination on a validated unique key --------------------
   // The defensive dropDuplicates BI tools emit on primary keys is a
   // whole-table shuffle that does nothing. FkCatalog.registerUnique
-  // VALIDATES the key (duplicate probe, or RELY mode), and
+  // VALIDATES the key (duplicate probe), and
   // JoinEliminationRule collapses the Aggregate that Catalyst rewrote
   // the Deduplicate into (grouping keys must COVER the unique key;
   // every output a grouped attribute or a first(attr) alias) to a
@@ -4291,25 +4309,21 @@ object ParityQueries {
   // in-query require proves the OPTIMIZED plan reads only the MV
   // (the fact relation is gone). AVG needs no aggregate rewrite —
   // it derives after aggregation as two exact BIGINTs dividing,
-  // bit-identical in every engine. The MV is a standing artifact;
-  // refreshes would ride Materialize.refreshInto without
-  // re-registration (path identity).
-  private val s30Cents = floor(col("o_totalprice") * 100).cast("long")
+  // bit-identical in every engine. The MV is a standing artifact. Its
+  // definition snapshots the fact's files: a refresh after new fact
+  // files (Materialize.refreshInto) re-registers, and until it does the
+  // drifted fact keeps its scan instead of the stale rollup answering.
   private[graft] def s30MvDir(s: SparkSession, dir: String): String =
     Sink.standing("mv_orders", dir) { p =>
       graft.plans.MvCatalog.create(
         s, Sink.artifactName(p),
-        Tables.orders(s, dir), col("o_custkey"), "o_custkey", s30Cents, s"$p/cust_cents")
+        Tables.orders(s, dir), Seq(col("o_custkey") -> "o_custkey"), s30Cents, s"$p/cust_cents")
     }
 
   private[graft] def s30UserQuery(s: SparkSession, dir: String): DataFrame =
     Tables.orders(s, dir)
       .groupBy(col("o_custkey"))
-      .agg(
-        count(lit(1)).as("n_orders"),
-        sum(s30Cents).as("sum_cents"),
-        min(s30Cents).as("min_cents"),
-        max(s30Cents).as("max_cents"))
+      .agg(nOrders, centsStats: _*)
       .withColumn("avg_cents",
         col("sum_cents").cast("double") / col("n_orders").cast("double"))
 
@@ -4329,11 +4343,12 @@ object ParityQueries {
   // history never rescanned), then REGISTERED, and the gate query is
   // the plain full-table groupBy-day over `orders` — answered entirely
   // from the refreshed artifact (fact scan proven gone). Registration
-  // survives refreshes by construction (the path is the identity and
-  // refreshInto swaps content under it), which this row exercises:
-  // the registered definition describes the FULL fact table, and the
-  // oracle (s19's full-recompute SQL, reused verbatim) only matches if
-  // base ⊕ delta ≡ whole-table rollup bit-for-bit. Day is a COMPUTED
+  // comes AFTER the refresh because it snapshots the fact's files: a
+  // definition registered before new fact files would be disqualified
+  // by them, never served stale. The registered definition describes
+  // the FULL fact table, and the oracle (s19's full-recompute SQL,
+  // reused verbatim) only matches if base ⊕ delta ≡ whole-table
+  // rollup bit-for-bit. Day is a COMPUTED
   // key (date_trunc), so this also gates expression-key matching in
   // the rewrite. A distinct key from s30's custkey MV keeps the two
   // registered MVs unambiguous on the shared fact scan.
@@ -4350,7 +4365,7 @@ object ParityQueries {
         Materialize.rollup(facts.filter(col("day") >= cut), "day", col("m")), "day")
       graft.plans.MvCatalog.register(
         s, Sink.artifactName(p),
-        Tables.orders(s, dir), s31Day, "day", s30Cents, stored)
+        Tables.orders(s, dir), Seq(s31Day -> "day"), s30Cents, stored)
     }
 
   def s31MvRefresh(s: SparkSession, dir: String): DataFrame = {
@@ -4358,15 +4373,10 @@ object ParityQueries {
     val ps = GraftSession.scoped(s, MvRewrite)
     val q = Tables.orders(ps, dir)
       .groupBy(s31Day.as("day"))
-      .agg(
-        count(lit(1)).as("n"),
-        // count(metric) — derives from the rollup's n_m column, so
-        // this row also gates the non-null-count derivation against
-        // a REFRESHED artifact
-        count(s30Cents).as("n_m"),
-        sum(s30Cents).as("sum_m"),
-        min(s30Cents).as("min_m"),
-        max(s30Cents).as("max_m"))
+      // count(metric) — derives from the rollup's n_m column, so this
+      // row also gates the non-null-count derivation against a
+      // REFRESHED artifact
+      .agg(count(lit(1)).as("n"), rollupStats: _*)
     provenRewrite(q, reads = Seq("mv_daily"), gone = Seq("orders.parquet"))
   }
 
@@ -4398,11 +4408,7 @@ object ParityQueries {
     val ps = GraftSession.scoped(s, MvRewrite)
     val q = Tables.orders(ps, dir)
       .groupBy(s31Day.as("day"), col("o_custkey"))
-      .agg(
-        count(lit(1)).as("n_orders"),
-        sum(s30Cents).as("sum_cents"),
-        min(s30Cents).as("min_cents"),
-        max(s30Cents).as("max_cents"))
+      .agg(nOrders, centsStats: _*)
     provenRewrite(q, reads = Seq("mv_daycust"), gone = Seq("orders.parquet"))
   }
 
@@ -4412,11 +4418,7 @@ object ParityQueries {
     val q = Tables.orders(ps, dir)
       .filter(col("o_custkey") % 2 === 0)
       .groupBy(s31Day.as("day"))
-      .agg(
-        count(lit(1)).as("n_orders"),
-        sum(s30Cents).as("sum_cents"),
-        min(s30Cents).as("min_cents"),
-        max(s30Cents).as("max_cents"))
+      .agg(nOrders, centsStats: _*)
     provenRewrite(q, reads = Seq("mv_daycust"), gone = Seq("orders.parquet"))
   }
 
@@ -4439,11 +4441,7 @@ object ParityQueries {
     val ps = GraftSession.scoped(s, MvRewrite)
     val q = Tables.orders(ps, dir)
       .groupBy(s31Day.as("day"))
-      .agg(
-        count(lit(1)).as("n_orders"),
-        sum(s30Cents).as("sum_cents"),
-        min(s30Cents).as("min_cents"),
-        max(s30Cents).as("max_cents"))
+      .agg(nOrders, centsStats: _*)
     provenRewrite(q, reads = Seq("mv_daily"), gone = Seq("mv_daycust", "orders.parquet"))
   }
 
@@ -4463,26 +4461,23 @@ object ParityQueries {
     val base = Sink.scratchDir(s"mv_meta_${Sink.pathTag(dir)}")
     val name = s"orders_prio_cents_${Sink.pathTag(dir)}"
     graft.plans.MvCatalog.create(
-      s, name, Tables.orders(s, dir), col("o_orderpriority"), "o_orderpriority",
+      s, name, Tables.orders(s, dir), Seq(col("o_orderpriority") -> "o_orderpriority"),
       s30Cents, base + "/prio")
     graft.plans.MvCatalog.save(s, base + "/catalog")
     graft.plans.MvCatalog.unregister(name)
     val ps = GraftSession.scoped(s, MvRewrite)
     def q = Tables.orders(ps, dir)
       .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n_orders"), sum(s30Cents).as("sum_cents"),
-        min(s30Cents).as("min_cents"), max(s30Cents).as("max_cents"))
-    val pre = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
+      .agg(nOrders, centsStats: _*)
+    val pre = graft.plans.DefCatalog.scanPaths(q.queryExecution.optimizedPlan)
     require(pre.exists(_.contains("orders.parquet")),
       s"definition still live after unregister; plan scans: $pre")
     graft.plans.MvCatalog.load(ps, base + "/catalog")
     provenRewrite(q, reads = Seq("mv_meta"), gone = Seq("orders.parquet"))
   }
   val s43Sql =
-    """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
-      |  CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_cents,
-      |  CAST(min(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS min_cents,
-      |  CAST(max(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS max_cents
+    s"""SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
+      |  $centsStatsSql
       |FROM orders GROUP BY 1""".stripMargin
 
   // ---- S35: MV rewrite of avg() and count(metric) ---------------------------
@@ -4507,15 +4502,15 @@ object ParityQueries {
       .agg(
         avg(s30Cents).as("avg_cents"),
         count(s30Cents).as("n_priced"),
-        sum(s30Cents).as("sum_cents"))
+        sumCents)
     provenRewrite(q, reads = Seq("mv_orders"), gone = Seq("orders.parquet"))
   }
 
   val s35Sql =
-    """SELECT o_custkey,
-      |  AVG(CAST(floor(o_totalprice * 100) AS BIGINT)) AS avg_cents,
-      |  CAST(count(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS n_priced,
-      |  CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_cents
+    s"""SELECT o_custkey,
+      |  AVG($s30CentsSql) AS avg_cents,
+      |  CAST(count($s30CentsSql) AS BIGINT) AS n_priced,
+      |  $sumCentsSql
       |FROM orders GROUP BY 1""".stripMargin
 
   // ---- S36: CDC-driven MV maintenance (updates + deletes, not just appends) -
@@ -4633,21 +4628,14 @@ object ParityQueries {
     val q = Tables.orders(ps, dir)
       .join(Tables.customer(ps, dir), col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_nationkey"))
-      .agg(
-        count(lit(1)).as("n_orders"),
-        sum(s30Cents).as("sum_cents"),
-        min(s30Cents).as("min_cents"),
-        max(s30Cents).as("max_cents"),
-        avg(s30Cents).as("avg_cents"))
+      .agg(nOrders, centsStats :+ avg(s30Cents).as("avg_cents"): _*)
     provenRewrite(q, reads = Seq("mv_joined"), gone = Seq("orders.parquet", "customer.parquet"))
   }
 
   val s37Sql =
-    """SELECT c_nationkey, CAST(count(*) AS BIGINT) AS n_orders,
-      |  CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_cents,
-      |  CAST(min(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS min_cents,
-      |  CAST(max(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS max_cents,
-      |  AVG(CAST(floor(o_totalprice * 100) AS BIGINT)) AS avg_cents
+    s"""SELECT c_nationkey, CAST(count(*) AS BIGINT) AS n_orders,
+      |  $centsStatsSql,
+      |  AVG($s30CentsSql) AS avg_cents
       |FROM orders JOIN customer ON o_custkey = c_custkey
       |GROUP BY 1""".stripMargin
 
@@ -4677,21 +4665,13 @@ object ParityQueries {
     val q = Tables.orders(ps, dir)
       .join(Tables.customer(ps, dir), col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_mktsegment"))
-      .agg(
-        count(lit(1)).as("n"),
-        count(s30Cents).as("n_m"),
-        sum(s30Cents).as("sum_m"),
-        min(s30Cents).as("min_m"),
-        max(s30Cents).as("max_m"))
+      .agg(count(lit(1)).as("n"), rollupStats: _*)
     provenRewrite(q, reads = Seq("mv_joinedref"), gone = Seq("orders.parquet", "customer.parquet"))
   }
 
   val s38Sql =
-    """SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n,
-      |  CAST(count(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS n_m,
-      |  CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_m,
-      |  CAST(min(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS min_m,
-      |  CAST(max(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS max_m
+    s"""SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n,
+      |  $rollupStatsSql
       |FROM orders JOIN customer ON o_custkey = c_custkey
       |GROUP BY 1""".stripMargin
 
@@ -4740,49 +4720,38 @@ object ParityQueries {
   }
 
   val s40Sql =
-    """WITH post AS (
+    s"""WITH post AS (
       |  SELECT c_custkey,
       |    CASE WHEN c_nationkey = 3 AND c_custkey % 5 = 4 THEN 10
       |         ELSE c_nationkey END AS c_nationkey
       |  FROM customer)
       |SELECT c_nationkey, CAST(count(*) AS BIGINT) AS n,
-      |  CAST(count(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS n_m,
-      |  CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_m,
-      |  CAST(min(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS min_m,
-      |  CAST(max(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS max_m
+      |  $rollupStatsSql
       |FROM orders JOIN post ON o_custkey = c_custkey
       |GROUP BY 1""".stripMargin
 
   val s33Sql =
-    """SELECT date_trunc('day', o_orderdate) AS day, o_custkey,
+    s"""SELECT date_trunc('day', o_orderdate) AS day, o_custkey,
       |  CAST(count(*) AS BIGINT) AS n_orders,
-      |  CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_cents,
-      |  CAST(min(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS min_cents,
-      |  CAST(max(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS max_cents
+      |  $centsStatsSql
       |FROM orders GROUP BY 1, 2""".stripMargin
 
   val s34Sql =
-    """SELECT date_trunc('day', o_orderdate) AS day,
+    s"""SELECT date_trunc('day', o_orderdate) AS day,
       |  CAST(count(*) AS BIGINT) AS n_orders,
-      |  CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_cents,
-      |  CAST(min(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS min_cents,
-      |  CAST(max(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS max_cents
+      |  $centsStatsSql
       |FROM orders WHERE o_custkey % 2 = 0 GROUP BY 1""".stripMargin
 
   val s41Sql =
-    """SELECT date_trunc('day', o_orderdate) AS day,
+    s"""SELECT date_trunc('day', o_orderdate) AS day,
       |  CAST(count(*) AS BIGINT) AS n_orders,
-      |  CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_cents,
-      |  CAST(min(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS min_cents,
-      |  CAST(max(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS max_cents
+      |  $centsStatsSql
       |FROM orders GROUP BY 1""".stripMargin
 
   val s30Sql =
-    """SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders,
-      |  CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_cents,
-      |  CAST(min(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS min_cents,
-      |  CAST(max(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS max_cents,
-      |  CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
+    s"""SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders,
+      |  $centsStatsSql,
+      |  CAST(sum($s30CentsSql) AS DOUBLE)
       |    / CAST(count(*) AS DOUBLE) AS avg_cents
       |FROM orders GROUP BY 1""".stripMargin
 

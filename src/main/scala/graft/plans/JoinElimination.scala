@@ -1,10 +1,5 @@
 package graft.plans
 
-import java.util.Locale
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
@@ -12,152 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 
-/** A declared-and-VALIDATED foreign-key relationship between two file
-  * scans: every child row's key is non-null and matches exactly one
-  * parent row (parent key unique). Under these three facts an inner
-  * equi-join on the key pair preserves child rows 1:1, so the join is
-  * removable whenever nothing above it uses parent columns.
-  */
-private[graft] case class FkDef(
-    name: String,
-    childPaths: Set[String],
-    parentPaths: Set[String],
-    childKeyCanon: Expression,
-    parentKeyCanon: Expression,
-    // point-in-time identity: the concrete files each side's scan held
-    // at registration. Validation proves the constraint over THESE
-    // files only — a scan whose contents drifted (append under the
-    // same rootPath, compaction) no longer matches and the rewrite
-    // refuses to fire rather than trust a possibly-broken constraint.
-    childFiles: Set[String],
-    parentFiles: Set[String])
-
-/** Registry of foreign-key constraints for [[JoinEliminationRule]].
-  *
-  * `register` VALIDATES the constraint with three one-time jobs
-  * (null child keys, orphan child keys, duplicate parent keys — the
-  * p13 referential-integrity checks repurposed as a gate) before
-  * trusting it; a violated declaration is refused loudly. Warehouse
-  * engines ship the same feature as RELY constraints and skip the
-  * validation on the user's word — `validate = false` gives that
-  * mode, for constraints enforced upstream (at 100 TB you validate
-  * once at ingest, not per session).
-  *
-  * JVM-global like [[MvCatalog]]: constraints outlive any one query;
-  * the REWRITE stays opt-in per session
-  * ([[JoinEliminationRule.EnabledKey]]).
-  */
-object FkCatalog {
-
-  private val defs = new java.util.concurrent.ConcurrentHashMap[String, FkDef]()
-
-  def register(
-      spark: SparkSession,
-      name: String,
-      child: DataFrame,
-      childKey: Column,
-      parent: DataFrame,
-      parentKey: Column,
-      validate: Boolean = true): Unit = {
-    val cProbe = child.select(childKey.as("__fk_ck"))
-    val pProbe = parent.select(parentKey.as("__fk_pk"))
-    def scanOf(probe: DataFrame, side: String) = {
-      val opt = probe.queryExecution.optimizedPlan
-      val (aliases, filters, rel) = MvRewriteRule.decompose(opt).getOrElse(
-        throw new IllegalArgumentException(
-          s"FK '$name': $side must be a bare file scan (+ projections), got:\n$opt"))
-      require(filters.isEmpty,
-        s"FK '$name': a FILTERED $side cannot carry a whole-table constraint")
-      val paths = MvRewriteRule.relPaths(rel).getOrElse(
-        throw new IllegalArgumentException(s"FK '$name': $side scan is not a file relation"))
-      val out = opt.output.head
-      (paths, MvRewriteRule.relFiles(rel),
-        MvRewriteRule.nameNorm(aliases.getOrElse(out.exprId, out)))
-    }
-    val (cPaths, cFiles, cCanon) = scanOf(cProbe, "child")
-    val (pPaths, pFiles, pCanon) = scanOf(pProbe, "parent")
-    if (validate) {
-      import org.apache.spark.sql.functions.{col, count}
-      val nulls = cProbe.filter(col("__fk_ck").isNull).limit(1).count()
-      require(nulls == 0, s"FK '$name' violated: child key has NULLs")
-      val orphans = cProbe
-        .join(pProbe, col("__fk_ck") === col("__fk_pk"), "left_anti")
-        .limit(1).count()
-      require(orphans == 0, s"FK '$name' violated: child keys without a parent row")
-      val dups = pProbe.groupBy(col("__fk_pk")).agg(count(org.apache.spark.sql.functions.lit(1)).as("n"))
-        .filter(col("n") > 1).limit(1).count()
-      require(dups == 0, s"FK '$name' violated: parent key is not unique")
-    }
-    defs.put(name, FkDef(name, cPaths, pPaths, cCanon, pCanon, cFiles, pFiles))
-    ()
-  }
-
-  def unregister(name: String): Unit = { defs.remove(name); () }
-  def clear(): Unit = { defs.clear(); uniques.clear() }
-  def isEmpty: Boolean = defs.isEmpty && uniques.isEmpty
-  private[plans] def all: Iterable[FkDef] = defs.values.asScala
-
-  /** A declared-and-validated UNIQUE key of one file scan. `files` is
-    * the same point-in-time snapshot [[FkDef]] carries: uniqueness was
-    * proven over these concrete files, and a drifted scan disqualifies
-    * the rewrite instead of silently trusting a stale constraint.
-    */
-  private[graft] case class UniqueDef(
-      name: String, paths: Set[String], keyCanon: Expression, files: Set[String],
-      // true ⇒ the key is also validated (or RELY-declared) NON-NULL —
-      // i.e. a PRIMARY KEY. DISTINCT/count-DISTINCT elimination need
-      // uniqueness alone; the FD group-by prune needs the stronger
-      // form (see fdGroupPrune's null-extension argument).
-      nonNull: Boolean = false)
-
-  private val uniques = new java.util.concurrent.ConcurrentHashMap[String, UniqueDef]()
-
-  /** Register (and by default validate) a unique key on a table — the
-    * standalone half of the FK machinery, consumed by
-    * [[JoinEliminationRule]]'s DISTINCT elimination: a
-    * dropDuplicates whose key set contains a unique key is a no-op.
-    */
-  def registerUnique(
-      spark: SparkSession,
-      name: String,
-      table: DataFrame,
-      key: Column,
-      validate: Boolean = true,
-      // declare the key PRIMARY (unique AND non-null): with
-      // `validate = true` the null-absence is proven by one extra
-      // probe; with `validate = false` it is RELY-trusted like the
-      // uniqueness itself. Only nonNull defs feed the FD group-by
-      // prune ([[JoinEliminationRule]]).
-      nonNull: Boolean = false): Unit = {
-    val probe = table.select(key.as("__uq_k"))
-    val opt = probe.queryExecution.optimizedPlan
-    val (aliases, filters, rel) = MvRewriteRule.decompose(opt).getOrElse(
-      throw new IllegalArgumentException(
-        s"UNIQUE '$name': table must be a bare file scan (+ projections), got:\n$opt"))
-    require(filters.isEmpty,
-      s"UNIQUE '$name': a FILTERED table cannot carry a whole-table constraint")
-    val paths = MvRewriteRule.relPaths(rel).getOrElse(
-      throw new IllegalArgumentException(s"UNIQUE '$name': scan is not a file relation"))
-    if (validate) {
-      import org.apache.spark.sql.functions.{col, count, lit}
-      val dups = probe.groupBy(col("__uq_k")).agg(count(lit(1)).as("n"))
-        .filter(col("n") > 1).limit(1).count()
-      require(dups == 0, s"UNIQUE '$name' violated: key has duplicates")
-      if (nonNull) {
-        val nulls = probe.filter(col("__uq_k").isNull).limit(1).count()
-        require(nulls == 0, s"PRIMARY '$name' violated: key has NULLs")
-      }
-    }
-    val out = opt.output.head
-    uniques.put(name, UniqueDef(
-      name, paths, MvRewriteRule.nameNorm(aliases.getOrElse(out.exprId, out)),
-      MvRewriteRule.relFiles(rel), nonNull))
-    ()
-  }
-
-  def unregisterUnique(name: String): Unit = { uniques.remove(name); () }
-  private[plans] def allUniques: Iterable[UniqueDef] = uniques.values.asScala
-}
+import DefCatalog.{decompose, inline, nameNorm, splitConjuncts, traverse}
 
 /** Optimizer rule: JOIN ELIMINATION on validated foreign keys — the
   * classic warehouse rewrite (Calcite/Oracle/Snowflake ship it on
@@ -207,7 +57,7 @@ object JoinEliminationRule extends Rule[LogicalPlan] {
       case a @ Aggregate(g, ae, j: Join, _) =>
         childSide(j, (g ++ ae).flatMap(_.references)).map { case (keep, subst) =>
           a.copy(
-            groupingExpressions = g.map(substExpr(_, subst)),
+            groupingExpressions = g.map(inline(_, subst)),
             aggregateExpressions = ae.map(substNamed(_, subst)),
             child = keep)
         }.orElse(distinctElim(a)).orElse(fdGroupPrune(a)).getOrElse(a)
@@ -223,7 +73,7 @@ object JoinEliminationRule extends Rule[LogicalPlan] {
       case a @ Aggregate(g, ae, child, _) if peelAttrProjects(child).isDefined =>
         peelAttrProjects(child).flatMap(j =>
           childSide(j, (g ++ ae).flatMap(_.references)).map { case (keep, subst) =>
-            val g2 = g.map(substExpr(_, subst))
+            val g2 = g.map(inline(_, subst))
             val ae2 = ae.map(substNamed(_, subst))
             val needed = AttributeSet((g2 ++ ae2).flatMap(_.references))
             a.copy(
@@ -252,16 +102,11 @@ object JoinEliminationRule extends Rule[LogicalPlan] {
 
   /** Replace every reference to the dropped parent's key with the
     * surviving child key (equal on every retained row by the join
-    * condition; non-null by the validated constraint). Top-level
-    * named outputs keep their original name and exprId via an alias
-    * so parent operators never notice the substitution.
+    * condition; non-null by the validated constraint) — [[DefCatalog
+    * .inline]] with the substitution map. Top-level named outputs keep
+    * their original name and exprId via an alias so parent operators
+    * never notice the substitution.
     */
-  private def substExpr(e: Expression, subst: Map[ExprId, Attribute]): Expression =
-    if (subst.isEmpty) e
-    else e.transformUp {
-      case a: AttributeReference if subst.contains(a.exprId) => subst(a.exprId)
-    }
-
   private def substNamed(
       ne: NamedExpression, subst: Map[ExprId, Attribute]): NamedExpression =
     if (subst.isEmpty) ne
@@ -269,9 +114,9 @@ object JoinEliminationRule extends Rule[LogicalPlan] {
       case a: AttributeReference if subst.contains(a.exprId) =>
         Alias(subst(a.exprId), a.name)(exprId = a.exprId)
       case al: Alias =>
-        Alias(substExpr(al.child, subst), al.name)(exprId = al.exprId,
+        Alias(inline(al.child, subst), al.name)(exprId = al.exprId,
           qualifier = al.qualifier, explicitMetadata = al.explicitMetadata)
-      case other => substExpr(other, subst).asInstanceOf[NamedExpression]
+      case other => inline(other, subst).asInstanceOf[NamedExpression]
     }
 
   /** DISTINCT elimination: `dropDuplicates(keys)` over a scan whose
@@ -288,16 +133,13 @@ object JoinEliminationRule extends Rule[LogicalPlan] {
     */
   private def distinctElim(a: Aggregate): Option[LogicalPlan] =
     for {
-      (aliases, _, rel) <- MvRewriteRule.decompose(a.child)
-      paths <- MvRewriteRule.relPaths(rel)
+      (aliases, _, rel) <- decompose(a.child)
       gAttrs <- Some(a.groupingExpressions).filter(_.forall(_.isInstanceOf[Attribute]))
         .map(_.map(_.asInstanceOf[Attribute]))
       if gAttrs.nonEmpty
-      gCanons = gAttrs.map(g =>
-        MvRewriteRule.nameNorm(aliases.getOrElse(g.exprId, g)))
+      gCanons = gAttrs.map(g => nameNorm(aliases.getOrElse(g.exprId, g)))
       if FkCatalog.allUniques.exists(u =>
-        u.paths == paths && u.files == MvRewriteRule.relFiles(rel) &&
-          gCanons.exists(_.semanticEquals(u.keyCanon)))
+        u.scan.sameScan(rel) && gCanons.exists(_.semanticEquals(u.keyCanon)))
       gSet = AttributeSet(gAttrs)
       outs <- traverse(a.aggregateExpressions.map {
         case at: Attribute if gSet.contains(at) => Some(at)
@@ -309,9 +151,6 @@ object JoinEliminationRule extends Rule[LogicalPlan] {
       })
     } yield Project(outs, a.child)
 
-  private def traverse[T](xs: Seq[Option[T]]): Option[Seq[T]] =
-    if (xs.forall(_.isDefined)) Some(xs.map(_.get)) else None
-
   /** count(DISTINCT unique_key) → count(unique_key): the distinct
     * aggregation's Expand + extra exchange is a no-op when the
     * argument is a validated unique key of the scan. Grouped or
@@ -321,16 +160,13 @@ object JoinEliminationRule extends Rule[LogicalPlan] {
     */
   private def countDistinctElim(a: Aggregate): Option[LogicalPlan] =
     for {
-      (aliases, _, rel) <- MvRewriteRule.decompose(a.child)
-      paths <- MvRewriteRule.relPaths(rel)
-      uniq = FkCatalog.allUniques
-        .filter(u => u.paths == paths && u.files == MvRewriteRule.relFiles(rel))
-        .map(_.keyCanon).toSeq
+      (aliases, _, rel) <- decompose(a.child)
+      uniq = FkCatalog.allUniques.filter(_.scan.sameScan(rel)).map(_.keyCanon).toSeq
       if uniq.nonEmpty
       newExprs = a.aggregateExpressions.map(_.transformUp {
         case ae @ aggregate.AggregateExpression(
             aggregate.Count(Seq(c)), _, true, None, _)
-            if uniq.exists(MvRewriteRule.nameNorm(inlined(c, aliases)).semanticEquals) =>
+            if uniq.exists(nameNorm(inline(c, aliases)).semanticEquals) =>
           ae.copy(isDistinct = false)
       }.asInstanceOf[NamedExpression])
       if newExprs != a.aggregateExpressions
@@ -397,10 +233,9 @@ object JoinEliminationRule extends Rule[LogicalPlan] {
     }
     val candidates: Seq[(LogicalRelation, Attribute)] = for {
       l <- rels
-      paths <- MvRewriteRule.relPaths(l).toSeq
       u <- FkCatalog.allUniques.toSeq.sortBy(_.name)
-      if u.nonNull && u.paths == paths && u.files == MvRewriteRule.relFiles(l)
-      kAttr <- l.output.find(at => MvRewriteRule.nameNorm(at).semanticEquals(u.keyCanon))
+      if u.nonNull && u.scan.sameScan(l)
+      kAttr <- l.output.find(at => nameNorm(at).semanticEquals(u.keyCanon))
     } yield (l, kAttr)
     candidates.flatMap { case (rel, kAttr) =>
       val (keyG, restG) = a.groupingExpressions.partition {
@@ -513,35 +348,23 @@ object JoinEliminationRule extends Rule[LogicalPlan] {
     * elimination must preserve.
     */
   private def decomposeInnerTree(p: LogicalPlan)
-      : Option[(Map[ExprId, Expression], Seq[LogicalRelation])] = p match {
-    case lr: LogicalRelation => Some((Map.empty, Seq(lr)))
-    case SubqueryAlias(_, c) => decomposeInnerTree(c)
-    case Project(pl, c) =>
-      decomposeInnerTree(c).flatMap { case (m, rels) =>
-        val ok = pl.forall {
-          case _: AttributeReference => true
-          case _: Alias => true
-          case _ => false
-        }
-        if (!ok) None
-        else Some((m ++ pl.collect { case a: Alias => a.exprId -> inlined(a.child, m) }, rels))
-      }
-    case Filter(_, c) => decomposeInnerTree(c)
-    case Join(l, r, Inner, _, _) =>
-      for {
-        (ml, rl) <- decomposeInnerTree(l)
-        (mr, rr) <- decomposeInnerTree(r)
-      } yield (ml ++ mr, rl ++ rr)
-    case _ => None
-  }
+      : Option[(Map[ExprId, Expression], Seq[LogicalRelation])] =
+    DefCatalog.peel[Seq[LogicalRelation]](p) {
+      case lr: LogicalRelation => Some((Map.empty, Nil, Seq(lr)))
+      case Join(l, r, Inner, _, _) =>
+        for {
+          (ml, rl) <- decomposeInnerTree(l)
+          (mr, rr) <- decomposeInnerTree(r)
+        } yield (ml ++ mr, Nil, rl ++ rr)
+      case _ => None
+    }.map { case (m, _, rels) => (m, rels) }
 
   private def eliminable(
       keep: LogicalPlan, drop: LogicalPlan, cond: Expression,
       leftOuter: Boolean): Boolean = {
     val keepDec = decomposeInnerTree(keep)
     val dec = for {
-      (mD, fD, lrD) <- MvRewriteRule.decompose(drop)
-      dPaths <- MvRewriteRule.relPaths(lrD)
+      (mD, fD, lrD) <- decompose(drop)
       // keep side: an inner-tree for the INNER leg (see
       // [[decomposeInnerTree]]); for LEFT OUTER the keep side may be
       // ANY plan — no keep row is dropped or duplicated regardless of
@@ -551,7 +374,7 @@ object JoinEliminationRule extends Rule[LogicalPlan] {
       // STACKS of defensive LEFT joins eliminate one by one).
       mK <- keepDec.map(_._1)
         .orElse(if (leftOuter) Some(Map.empty[ExprId, Expression]) else None)
-      eq <- inlined(cond, mK ++ mD) match {
+      eq <- inline(cond, mK ++ mD) match {
         case EqualTo(a, b) if b.references.subsetOf(lrD.outputSet) &&
           a.references.nonEmpty && !a.references.exists(lrD.outputSet.contains) =>
           Some((a, b))
@@ -561,13 +384,12 @@ object JoinEliminationRule extends Rule[LogicalPlan] {
         case _ => None
       }
     } yield {
-      val ckCanon = MvRewriteRule.nameNorm(eq._1)
-      val pkCanon = MvRewriteRule.nameNorm(eq._2)
+      val ckCanon = nameNorm(eq._1)
+      val pkCanon = nameNorm(eq._2)
       // constraints are point-in-time: the scans must still hold the
       // exact files the constraint was validated over (files appended
       // under the same directory after register() could violate
       // non-null/orphan-free/unique without re-validation)
-      val dFiles = MvRewriteRule.relFiles(lrD)
       // the keep-side scan the child key is BOUND to — by exprId
       // containment, so two keep scans sharing column names can never
       // confuse the match; the FK reasoning then applies to that scan
@@ -575,15 +397,11 @@ object JoinEliminationRule extends Rule[LogicalPlan] {
       val lrC = keepDec.flatMap(_._2.find(lr => eq._1.references.subsetOf(lr.outputSet)))
       val fk = lrC.exists { lc =>
         // canonical matching is by name — same guard as the MV tier
-        lc.output.map(_.name.toLowerCase(Locale.ROOT)).toSet
-          .intersect(lrD.output.map(_.name.toLowerCase(Locale.ROOT)).toSet).isEmpty &&
-        MvRewriteRule.relPaths(lc).exists { kPaths =>
+        DefCatalog.sharedNames(lc, lrD).isEmpty &&
           FkCatalog.all.exists(d =>
-            d.childPaths == kPaths && d.parentPaths == dPaths &&
-              d.childFiles == MvRewriteRule.relFiles(lc) && d.parentFiles == dFiles &&
+            d.child.sameScan(lc) && d.parent.sameScan(lrD) &&
               ckCanon.semanticEquals(d.childKeyCanon) &&
               pkCanon.semanticEquals(d.parentKeyCanon))
-        }
       }
       if (leftOuter) {
         // duplication is the only hazard: the dropped key must be
@@ -593,8 +411,7 @@ object JoinEliminationRule extends Rule[LogicalPlan] {
         // invisible when no dropped column is referenced (and
         // uniqueness survives filtering).
         fk || FkCatalog.allUniques.exists(u =>
-          u.paths == dPaths && u.files == dFiles &&
-            pkCanon.semanticEquals(u.keyCanon))
+          u.scan.sameScan(lrD) && pkCanon.semanticEquals(u.keyCanon))
       } else {
         // INNER: the full FK (non-null, no orphans, unique) must hold,
         // and the dropped side may carry ONLY filters that provably
@@ -607,11 +424,9 @@ object JoinEliminationRule extends Rule[LogicalPlan] {
         // elimination would change results.
         val fOk = fD.flatMap(splitConjuncts).forall {
           case IsNotNull(c) =>
-            val n = MvRewriteRule.nameNorm(c)
+            val n = nameNorm(c)
             n.semanticEquals(pkCanon) ||
-              FkCatalog.all.exists(d =>
-                d.childPaths == dPaths && d.childFiles == dFiles &&
-                  n.semanticEquals(d.childKeyCanon))
+              FkCatalog.all.exists(d => d.child.sameScan(lrD) && n.semanticEquals(d.childKeyCanon))
           case _ => false
         }
         fk && fOk
@@ -619,15 +434,4 @@ object JoinEliminationRule extends Rule[LogicalPlan] {
     }
     dec.contains(true)
   }
-
-  private def splitConjuncts(f: Expression): Seq[Expression] = f match {
-    case And(a, b) => splitConjuncts(a) ++ splitConjuncts(b)
-    case other => Seq(other)
-  }
-
-  private def inlined(e: Expression, m: Map[ExprId, Expression]): Expression =
-    if (m.isEmpty) e
-    else e.transformUp {
-      case a: AttributeReference if m.contains(a.exprId) => m(a.exprId)
-    }
 }

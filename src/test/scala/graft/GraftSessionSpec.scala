@@ -14,7 +14,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.ext.Dedup
 import graft.ops.Jobs
-import graft.plans.MvRewriteRule
+import graft.plans.{DefCatalog, MvRewriteRule}
 import graft.streaming.StreamDrive
 import graft.streaming.StreamDrive.fresh
 
@@ -56,7 +56,7 @@ class GraftSessionSpec extends SparkSpec {
       val before = spark.conf.getAll
       assert(ParityQueries.s30MvRewrite(spark, dir).collect().nonEmpty)
       assert(spark.conf.getAll == before)
-      val scans = MvRewriteRule.scanPaths(
+      val scans = DefCatalog.scanPaths(
         ParityQueries.s30UserQuery(spark, dir).queryExecution.optimizedPlan)
       assert(scans.exists(_.contains("orders.parquet")), scans)
     } finally spark.experimental.extraOptimizations = had

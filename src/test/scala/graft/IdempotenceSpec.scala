@@ -14,7 +14,7 @@ package graft
   *
   * This spec holds the WHOLE class to re-executability: every query
   * that registers into NdvCatalog / MvCatalog / FkCatalog or asserts
-  * on MvRewriteRule.scanPaths runs twice back-to-back in one session,
+  * on DefCatalog.scanPaths runs twice back-to-back in one session,
   * and both passes must complete with identical row counts. A new
   * gate added to the registry belongs in this list if it touches any
   * of those catalogs.

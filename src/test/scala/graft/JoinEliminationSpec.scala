@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.plans.{FkCatalog, JoinEliminationRule, MvRewriteRule}
+import graft.plans.{DefCatalog, FkCatalog, JoinEliminationRule}
 
 /** Laws for FK join elimination (j18): the rewrite must change the
   * PLAN (parent scan gone) and not one bit of the RESULT, must refuse
@@ -40,7 +40,7 @@ class JoinEliminationSpec extends SparkSpec {
     df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
 
   private def scans(df: DataFrame): Set[String] =
-    MvRewriteRule.scanPaths(df.queryExecution.optimizedPlan)
+    DefCatalog.scanPaths(df.queryExecution.optimizedPlan)
 
   private def joined: DataFrame =
     Tables.orders(spark, dir)
@@ -250,7 +250,7 @@ class JoinEliminationSpec extends SparkSpec {
     withFk {
       val path = graft.ops.Sink.scratchDir("mv_elim_law") + "/cust"
       MvCatalog.create(spark, "law_elim_mv", Tables.orders(spark, dir),
-        col("o_custkey"), "o_custkey", cents, path)
+        Seq(col("o_custkey") -> "o_custkey"), cents, path)
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations ++ Seq(JoinEliminationRule, MvRewriteRule)
       spark.conf.set(JoinEliminationRule.EnabledKey, "true")
@@ -477,7 +477,7 @@ class JoinEliminationSpec extends SparkSpec {
 
   private def withPk[T](body: => T): T = {
     FkCatalog.registerUnique(spark, "law_cust_pk",
-      Tables.customer(spark, dir), col("c_custkey"), validate = true, nonNull = true)
+      Tables.customer(spark, dir), col("c_custkey"), nonNull = true)
     try body
     finally FkCatalog.unregisterUnique("law_cust_pk")
   }
@@ -534,7 +534,7 @@ class JoinEliminationSpec extends SparkSpec {
     val fact = spark.read.parquet(base + "/fact")
     val dim = spark.read.parquet(base + "/dim")
     FkCatalog.registerUnique(spark, "law_dim_pk", dim, col("pk"),
-      validate = true, nonNull = true)
+      nonNull = true)
     try {
       def q: DataFrame = fact.join(dim, col("fk") === col("pk"), "left")
         .groupBy(col("pk"), col("nm"))
@@ -572,7 +572,7 @@ class JoinEliminationSpec extends SparkSpec {
     def dim = spark.read.parquet(base + "/dim")
     def fact = spark.read.parquet(base + "/fact")
     FkCatalog.registerUnique(spark, "law_fd_stale", dim, col("pk"),
-      validate = true, nonNull = true)
+      nonNull = true)
     try {
       def q: DataFrame = fact.join(dim, col("fk") === col("pk"))
         .groupBy(col("pk"), col("nm")).agg(sum(col("v")).as("s"))

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.plans.{MvCatalog, MvRewriteRule, NdvCatalog}
+import graft.plans.{DefCatalog, MvCatalog, MvRewriteRule, NdvCatalog}
 
 /** Laws for the materialized-view substitution (s30): the rewrite
   * must change the PLAN (fact scan → rollup scan) and must not change
@@ -48,7 +48,7 @@ class MvRewriteSpec extends SparkSpec {
     df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
 
   private def scans(df: DataFrame): Set[String] =
-    MvRewriteRule.scanPaths(df.queryExecution.optimizedPlan)
+    DefCatalog.scanPaths(df.queryExecution.optimizedPlan)
 
   private def mvReady(): Unit = ParityQueries.s30MvDir(spark, dir)
 
@@ -109,7 +109,7 @@ class MvRewriteSpec extends SparkSpec {
     val day = date_trunc("DAY", col("o_orderdate"))
     val path = graft.ops.Sink.scratchDir("mv_orders_day_test") + "/daily"
     MvCatalog.create(spark, "test_orders_daily",
-      Tables.orders(spark, dir), day, "day", cents, path)
+      Tables.orders(spark, dir), Seq(day -> "day"), cents, path)
     try {
       def q: DataFrame = Tables.orders(spark, dir)
         .groupBy(day.as("day"))
@@ -266,7 +266,7 @@ class MvRewriteSpec extends SparkSpec {
         .otherwise(col("m0")).as("m"))
       .write.mode("overwrite").parquet(fact)
     val f = spark.read.parquet(fact)
-    MvCatalog.create(spark, "test_nulls_mv", f, col("k"), "k", col("m"), path + "/mv")
+    MvCatalog.create(spark, "test_nulls_mv", f, Seq(col("k") -> "k"), col("m"), path + "/mv")
     try {
       def q: DataFrame = spark.read.parquet(fact)
         .groupBy(col("k"))
@@ -460,7 +460,7 @@ class MvRewriteSpec extends SparkSpec {
     val day2 = date_trunc("DAY", col("o_orderdate"))
     val base = graft.ops.Sink.scratchDir("mv_meta_law")
     MvCatalog.create(spark, "test_meta_daily", Tables.orders(spark, dir),
-      day2, "day", cents, base + "/daily")
+      Seq(day2 -> "day"), cents, base + "/daily")
     try {
       def q: DataFrame = Tables.orders(spark, dir)
         .groupBy(day2.as("day"))
@@ -510,7 +510,7 @@ class MvRewriteSpec extends SparkSpec {
     MvCatalog.create(spark, "aaa_cost_fine", Tables.orders(spark, dir),
       Seq(day -> "day", col("o_custkey") -> "o_custkey"), cents, pFine)
     MvCatalog.create(spark, "zzz_cost_coarse", Tables.orders(spark, dir),
-      day, "day", cents, pCoarse)
+      Seq(day -> "day"), cents, pCoarse)
     try {
       def q: DataFrame = Tables.orders(spark, dir)
         .groupBy(day.as("day"))
@@ -536,7 +536,7 @@ class MvRewriteSpec extends SparkSpec {
     MvCatalog.create(spark, "aaa_cost_fine2", Tables.orders(spark, dir),
       Seq(day -> "day", col("o_custkey") -> "o_custkey"), cents, pFine)
     MvCatalog.create(spark, "zzz_cost_coarse2", Tables.orders(spark, dir),
-      day, "day", cents, pCoarse)
+      Seq(day -> "day"), cents, pCoarse)
     try {
       def q: DataFrame = Tables.orders(spark, dir)
         .filter(col("o_custkey") % 3 === 1)
@@ -654,6 +654,53 @@ class MvRewriteSpec extends SparkSpec {
         "drifted fact files must keep the fact scan")
       assert(withMvRule { rows(q) } == rows(q), "post-drift answer stays correct")
     } finally NdvCatalog.unregister("law_ndv_stale")
+  }
+
+  test("MV definition is point-in-time: a fact file appended after create keeps the fact scan") {
+    val base = graft.ops.Sink.scratchDir("mv_stale_law")
+    Seq((1L, "a"), (2L, "a"), (5L, "b")).toDF("m", "g")
+      .write.mode("overwrite").parquet(base + "/fact")
+    def fact = spark.read.parquet(base + "/fact")
+    MvCatalog.create(spark, "law_mv_stale", fact, Seq(col("g") -> "g"), col("m"), base + "/mv")
+    try {
+      def q: DataFrame = fact.groupBy(col("g"))
+        .agg(count(lit(1)).as("n"), sum(col("m")).as("s"))
+      assert(withMvRule { !scans(q).exists(_.endsWith("/fact")) },
+        "fresh snapshot should rewrite")
+      Seq((9L, "a")).toDF("m", "g").write.mode("append").parquet(base + "/fact")
+      val (rewritten, paths) = withMvRule { (rows(q), scans(q)) }
+      assert(paths.exists(_.endsWith("/fact")),
+        s"a drifted fact must keep the fact scan, not serve the stale rollup; scans: $paths")
+      assert(rewritten == rows(q))
+      assert(rewritten == Seq(Seq("a", 3L, 12L), Seq("b", 1L, 5L)))
+    } finally MvCatalog.unregister("law_mv_stale")
+  }
+
+  test("joined MV definition is point-in-time: a dim file appended after create keeps the join") {
+    val base = graft.ops.Sink.scratchDir("mv_joined_stale_law")
+    // fk 3 has no dim row yet: the inner join drops it
+    Seq((1L, 10L), (2L, 20L), (2L, 30L), (3L, 40L)).toDF("fk", "m")
+      .write.mode("overwrite").parquet(base + "/fact")
+    Seq((1L, "x"), (2L, "y")).toDF("dk", "seg")
+      .write.mode("overwrite").parquet(base + "/dim")
+    def fact = spark.read.parquet(base + "/fact")
+    def dim = spark.read.parquet(base + "/dim")
+    MvCatalog.createJoined(spark, "law_mv_joined_stale", fact, dim,
+      col("fk"), col("dk"), Seq(col("seg") -> "seg"), col("m"), base + "/mv")
+    try {
+      def q: DataFrame = fact.join(dim, col("fk") === col("dk"))
+        .groupBy(col("seg")).agg(count(lit(1)).as("n"), sum(col("m")).as("s"))
+      assert(withMvRule { !scans(q).exists(_.endsWith("/dim")) },
+        "fresh snapshot should rewrite")
+      // only the DIM drifts: its new row joins an existing fact row, so
+      // the stored rollup is stale although the fact files are unchanged
+      Seq((3L, "x")).toDF("dk", "seg").write.mode("append").parquet(base + "/dim")
+      val (rewritten, paths) = withMvRule { (rows(q), scans(q)) }
+      assert(paths.exists(_.endsWith("/dim")) && paths.exists(_.endsWith("/fact")),
+        s"a drifted dim must keep the join, not serve the stale rollup; scans: $paths")
+      assert(rewritten == rows(q))
+      assert(rewritten == Seq(Seq("x", 2L, 50L), Seq("y", 2L, 50L)))
+    } finally MvCatalog.unregister("law_mv_joined_stale")
   }
 
   test("NDV rewrite: NULL-keyed groups and all-NULL-id groups stay exact") {

@@ -115,7 +115,7 @@ class PlanGuardSpec extends SparkSpec {
     val p = q.queryExecution.executedPlan.toString
     // the scanned path is read off the relation: the plan string
     // truncates a long scan location before its last segment
-    val scans = graft.plans.MvRewriteRule.scanPaths(q.queryExecution.optimizedPlan)
+    val scans = graft.plans.DefCatalog.scanPaths(q.queryExecution.optimizedPlan)
     assert(p.contains("FileScan parquet") && scans.exists(_.contains("/edges")), s"$scans\n$p")
     assert(!p.contains("Exchange") && !p.contains("Window") && !p.contains("Join"), p)
     // the BUILD (what writeKnnGraph executes) keeps the guarded shape:

@@ -444,7 +444,7 @@ class SparkLawsSpec extends SparkSpec {
           try {
             val d = q
             (d.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq,
-              graft.plans.MvRewriteRule.scanPaths(d.queryExecution.optimizedPlan))
+              graft.plans.DefCatalog.scanPaths(d.queryExecution.optimizedPlan))
           } finally spark.conf.unset(JoinEliminationRule.EnabledKey)
         }
         assert(!scans.exists(_.contains("/parent")),
@@ -459,7 +459,7 @@ class SparkLawsSpec extends SparkSpec {
   }
 
   test("law: MV rewrite equals the plain aggregate for random agg subsets and key filters") {
-    import graft.plans.{MvCatalog, MvRewriteRule}
+    import graft.plans.{DefCatalog, MvCatalog, MvRewriteRule}
     // random fact written to parquet (the rewrite matches on scan
     // paths, so the fact must be a real file relation)
     val factDir = graft.ops.Sink.scratchDir("mv_law_fact")
@@ -468,7 +468,7 @@ class SparkLawsSpec extends SparkSpec {
       .toDF("k", "m").write.mode("overwrite").parquet(factDir)
     def fact = spark.read.parquet(factDir)
     val mvPath = graft.ops.Sink.scratchDir("mv_law_rollup")
-    MvCatalog.create(spark, "law_mv", fact, col("k"), "k", col("m"), mvPath)
+    MvCatalog.create(spark, "law_mv", fact, Seq(col("k") -> "k"), col("m"), mvPath)
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations :+ MvRewriteRule
     try {
@@ -489,7 +489,7 @@ class SparkLawsSpec extends SparkSpec {
           try {
             val d = q
             (d.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq,
-              MvRewriteRule.scanPaths(d.queryExecution.optimizedPlan))
+              DefCatalog.scanPaths(d.queryExecution.optimizedPlan))
           } finally spark.conf.unset(MvRewriteRule.EnabledKey)
         }
         assert(scans.exists(_.contains("mv_law_rollup")), s"seed=$seed did not rewrite: $scans")
