@@ -2120,7 +2120,8 @@ object ParityQueries {
   // anyway by swapping exact NDV for its mergeable sketch
   // ([[graft.ops.Materialize.ndvSketch]]): the stored rollup keeps
   // the k smallest distinct key hashes per month (a ≤ k-element
-  // array column), a delta slice merges in O(k) per key, and the
+  // array column, one min-k aggregate), a delta slice merges in O(k)
+  // per key, and the
   // estimator finishes bit-exactly on both engines (a25's md5 + min-k
   // discipline, per group). Same storage round-trip as s19; the
   // oracle is the full per-month recompute.
@@ -3845,9 +3846,10 @@ object ParityQueries {
   // hashes ([[graft.ops.Materialize.ndvSketchExact]]), and when every
   // group is UNSATURATED (|hashes| < k) the sketch IS the complete
   // per-group hash set, so size(hs) is the exact distinct count —
-  // registration validates unsaturation AND hash collision-freedom
-  // (one pass each, the FkCatalog discipline) and snapshots the fact's
-  // file list, so a drifted fact disqualifies instead of estimating.
+  // registration PROVES per group that size(hs) equals count(DISTINCT
+  // id) (one proof, observed on the build's own write) and snapshots
+  // the fact's file list, so a drifted fact disqualifies instead of
+  // estimating.
   // The in-query requires prove the substitution fired (fact scan
   // gone); the oracle computes the REAL count(DISTINCT), so the row is
   // green only because the exactness gate is sound. At 100 TB the tile
@@ -3869,11 +3871,11 @@ object ParityQueries {
   // ---- S51: NDV metastore round-trip -----------------------------------------
   // s43's survival story for the NDV tier: definitions die with the
   // JVM, artifacts don't. save() persists the canonical definition;
-  // load() replays the FULL registration — both exactness validations
-  // (unsaturation + collision-freedom) and a fresh fact-file snapshot
-  // run again, so a reload never trusts a proof from before the
-  // outage. The requires prove dead-then-alive-again; the oracle is
-  // s50's true count(DISTINCT).
+  // load() replays the FULL registration — the one exactness proof
+  // (one join-free aggregate over fact ∪ artifact) and a fresh
+  // fact-file snapshot run again, so a reload never trusts a proof
+  // from before the outage. The requires prove dead-then-alive-again;
+  // the oracle is s50's true count(DISTINCT).
   private val S51K = 8192 // sf0.1 densest quarter holds 4 878 distinct custkeys
   def s51NdvMetastore(s: SparkSession, dir: String): DataFrame = {
     val base = Sink.scratchDir(s"ndv_meta_${Sink.pathTag(dir)}")
@@ -3960,12 +3962,13 @@ object ParityQueries {
   // disqualify itself. The gate stages exactly that contrast — the
   // PRIORITY grain packs ~every customer into each of 5 groups, far
   // past any reasonable k: a k=64 KMV definition registers with
-  // exactOk=false (validation refuses, in-query require proves the
+  // exactOk=false (the proof refuses, in-query require proves the
   // fact scan SURVIVES), then the bitmap definition registers on the
   // same fact and the same query plans against the bitmap artifact
   // with the fact scan GONE (sum of a 1-row-group graft_bitmap_card
-  // per group — plan shape preserved). Exactness needs no collision
-  // argument: the artifact stores the ids themselves.
+  // per group — plan shape preserved). Both kinds face the same one
+  // proof (stored count = count(DISTINCT id) per group); the bitmap
+  // passes it at any cardinality because it stores the ids themselves.
   def s53BitmapRewrite(s: SparkSession, dir: String): DataFrame = {
     val base = Sink.scratchDir(s"s53_bm_${Sink.pathTag(dir)}")
     val ps = GraftSession.scoped(s, MvRewrite)
@@ -3985,7 +3988,7 @@ object ParityQueries {
     // its write: its definitions are gone once it returns, and a
     // returned lazy frame would re-plan against the fact scan.
     try {
-      // KMV at k=64 SATURATES on this grain: registration's validation
+      // KMV at k=64 SATURATES on this grain: registration's proof
       // refuses exactness and the rewrite must leave the fact scan alone
       graft.plans.NdvCatalog.create(
         ps, s"s53_kmv_${Sink.pathTag(dir)}", fact, keys,

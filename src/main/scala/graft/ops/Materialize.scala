@@ -86,91 +86,70 @@ object Materialize {
     * key set). Same hash + estimator as [[Aggregates.kmvDistinct]],
     * so the DuckDB oracle replays estimates bit-exactly.
     *
-    * Scale shape: the (key, hash) frame reduces map-side via
-    * distinct; per-key min-k goes through the rank-window
-    * (WindowGroupLimit prunes to k rows per key BEFORE the exchange);
-    * the sketch column is ≤ k BIGINTs per key however large the
-    * slice.
+    * Scale shape: one aggregate ([[graft.functions.MinKDistinct]]);
+    * its map-side partial keeps ≤ k hashes per key BEFORE the
+    * exchange, so the shuffle and the stored sketch are ≤ k BIGINTs
+    * per key however large the slice. Null ids are filtered first,
+    * so a key whose ids are all NULL has no sketch row.
     */
   def ndvSketch(df: DataFrame, keyCol: String, idCol: String, k: Int): DataFrame =
-    minK(
-      df.filter(col(idCol).isNotNull)
-        .select(col(keyCol),
-          graft.ext.TextOps.md5Int32(
-            concat(lit("kmv_"), col(idCol).cast("string"))).as("h"))
-        .distinct(),
-      Seq(keyCol), k)
+    hashSketch(df.filter(col(idCol).isNotNull), Seq(keyCol),
+      graft.ext.TextOps.md5Int32(concat(lit("kmv_"), col(idCol).cast("string"))), k)
 
-  /** Merge two NDV sketch tables ([[ndvSketch]] schema): explode,
-    * distinct (the same key in both slices yields the same hash),
-    * re-take min-k. Work is bounded by 2k hashes per key — never the
-    * underlying key population.
+  /** Merge two NDV sketch tables ([[ndvSketch]] schema): explode and
+    * re-take min-k (the aggregate dedups: the same id in both slices
+    * yields the same hash). Work is bounded by 2k hashes per key —
+    * never the underlying key population.
     */
   def mergeNdv(base: DataFrame, delta: DataFrame, keyCol: String, k: Int): DataFrame =
-    minK(
-      base.unionByName(delta)
-        .select(col(keyCol), explode(col("hs")).as("h"))
-        .distinct(),
-      Seq(keyCol), k)
+    mergeHashSketch(base, delta, Seq(keyCol), k)
 
-  private def minK(hs: DataFrame, keyCols: Seq[String], k: Int): DataFrame =
-    Ranking.topKPerGroup(hs, keyCols, Seq(col("h").asc), k)
-      .groupBy(keyCols.map(col): _*)
-      .agg(sort_array(collect_list(col("h"))).as("hs"))
+  /** `hs`: min-k of the distinct `h` per key tuple. */
+  private def hashSketch(df: DataFrame, keyCols: Seq[String], h: Column, k: Int): DataFrame =
+    df.groupBy(keyCols.map(col): _*).agg(minKDistinct(h, k).as("hs"))
+
+  /** explode_outer keeps a key whose stored array is empty: its one
+    * NULL hash is skipped by the aggregate, which yields `[]` again.
+    */
+  private def mergeHashSketch(base: DataFrame, delta: DataFrame, keyCols: Seq[String], k: Int): DataFrame =
+    hashSketch(base.unionByName(delta).select(keyCols.map(col) :+ explode_outer(col("hs")).as("h"): _*),
+      keyCols, col("h"), k)
 
   /** The EXACTNESS-GATED variant of [[ndvSketch]], built for
     * [[graft.plans.NdvCatalog]]'s count-DISTINCT rewrite; three
     * differences, each load-bearing for the prove-equal contract:
     *
     *  - 60-bit hashes (15 hex chars of md5), not [[ndvSketch]]'s
-    *    32-bit: when every group is unsaturated the sketch IS the
-    *    group's complete distinct-hash set, so `size(hs)` equals
-    *    `count(DISTINCT id)` exactly iff the hash is collision-free
-    *    over the live id domain — 2⁻⁶¹-scale birthday odds instead of
-    *    2⁻³³ (and registration VALIDATES collision-freedom anyway,
-    *    this just makes the validation essentially never fail).
+    *    32-bit: a group's `size(hs)` equals its `count(DISTINCT id)`
+    *    only if the hash is collision-free over the group's ids —
+    *    2⁻⁶¹-scale birthday odds instead of 2⁻³³ (registration
+    *    PROVES the equality anyway, this just makes the proof
+    *    essentially never fail).
     *  - the GROUP UNIVERSE is preserved: a group whose ids are all
     *    NULL has `count(DISTINCT id) = 0` but still appears in the
-    *    query's output, so it must appear here (empty array) — the
-    *    plain sketch drops it with the null ids. Null-safe join keys:
-    *    groupBy keeps NULL-keyed groups, so the universe join must
-    *    match them.
+    *    query's output, so it appears here (empty array). groupBy
+    *    keeps NULL-keyed groups.
     *  - multi-key, because the rewrite tier's MVs are.
     *
-    * Scale shape is [[ndvSketch]]'s: WindowGroupLimit prunes to k
-    * hashes per key before the exchange; both join sides are
-    * rollup-sized (one row per group), never the fact.
+    * `distinctAs` names an optional extra column: each group's
+    * `count(DISTINCT id)`, computed in the same aggregate (the catalog
+    * proves the build's own output with it).
+    *
+    * Scale shape is [[ndvSketch]]'s: one aggregate, ≤ k hashes per
+    * key before the exchange, one fact scan.
     */
-  def ndvSketchExact(df: DataFrame, keyCols: Seq[String], idCol: String, k: Int): DataFrame = {
-    val sk = minK(
-      df.filter(col(idCol).isNotNull)
-        .select(keyCols.map(col) :+ ndvHash(col(idCol)).as("h"): _*)
-        .distinct(),
-      keyCols, k)
-    val uni = df.select(keyCols.map(col): _*).distinct()
-    uni.join(sk, keyCols.map(c => uni(c) <=> sk(c)).reduce(_ && _), "left")
-      .select(keyCols.map(uni(_)) :+
-        coalesce(sk("hs"), array().cast("array<long>")).as("hs"): _*)
-  }
+  def ndvSketchExact(
+      df: DataFrame, keyCols: Seq[String], idCol: String, k: Int,
+      distinctAs: Option[String] = None): DataFrame =
+    df.groupBy(keyCols.map(col): _*).agg(minKDistinct(ndvHash(col(idCol)), k).as("hs"),
+      distinctAs.map(countDistinct(col(idCol)).as(_)).toSeq: _*)
 
-  /** [[mergeNdv]] for [[ndvSketchExact]] tables: distinct-union the
-    * exploded hashes, re-take min-k, and re-attach the merged group
-    * UNIVERSE (explode of an empty array drops the row, so all-null
-    * groups must be joined back — merge ≡ rebuild must hold for them
-    * too). Work stays bounded by 2k hashes per key.
+  /** [[mergeNdv]] for [[ndvSketchExact]] tables: the same
+    * explode-and-re-take, multi-key; all-null groups keep their empty
+    * array, so merge ≡ rebuild holds for them too.
     */
-  def mergeNdvExact(base: DataFrame, delta: DataFrame, keyCols: Seq[String], k: Int): DataFrame = {
-    val uni = base.select(keyCols.map(col): _*)
-      .unionByName(delta.select(keyCols.map(col): _*)).distinct()
-    val sk = minK(
-      base.unionByName(delta)
-        .select(keyCols.map(col) :+ explode(col("hs")).as("h"): _*)
-        .distinct(),
-      keyCols, k)
-    uni.join(sk, keyCols.map(c => uni(c) <=> sk(c)).reduce(_ && _), "left")
-      .select(keyCols.map(uni(_)) :+
-        coalesce(sk("hs"), array().cast("array<long>")).as("hs"): _*)
-  }
+  def mergeNdvExact(base: DataFrame, delta: DataFrame, keyCols: Seq[String], k: Int): DataFrame =
+    mergeHashSketch(base, delta, keyCols, k)
 
   /** Per-key EXACT distinct-id set as a compressed bitmap column
     * ([[graft.functions.Bitmap64]] sorted-delta varints over the ids
@@ -188,14 +167,19 @@ object Materialize {
     * never fact rows). (key, NULL) rows survive the distinct and
     * collect_list skips nulls, so an all-null-id group keeps its
     * (empty-bitmap) row — the group-universe discipline
-    * [[ndvSketchExact]] needs a join for falls out for free here.
+    * [[ndvSketchExact]] keeps falls out of the distinct here.
+    * `distinctAs` is [[ndvSketchExact]]'s: over the distinct (key, id)
+    * rows the group's distinct count is a plain non-null count.
     */
-  def bitmapSketch(df: DataFrame, keyCols: Seq[String], idCol: String): DataFrame = {
+  def bitmapSketch(
+      df: DataFrame, keyCols: Seq[String], idCol: String,
+      distinctAs: Option[String] = None): DataFrame = {
     requireIntegralId(df, idCol)
     df.select(keyCols.map(col) :+ col(idCol).cast("long").as("__graft_bm_id"): _*)
       .distinct()
       .groupBy(keyCols.map(col): _*)
-      .agg(bitmapOf(sort_array(collect_list(col("__graft_bm_id")))).as("bm"))
+      .agg(bitmapOf(sort_array(collect_list(col("__graft_bm_id")))).as("bm"),
+        distinctAs.map(count(col("__graft_bm_id")).as(_)).toSeq: _*)
   }
 
   /** Merge two [[bitmapSketch]] tables: null-safe full-outer join on
@@ -252,6 +236,8 @@ object Materialize {
     toCol(graft.functions.BitmapIntersectCard(toExpr(a), toExpr(b)))
   private[graft] def bitmapUnionAgg(c: Column): Column =
     toCol(graft.functions.BitmapUnionAgg(toExpr(c)).toAggregateExpression())
+  private[graft] def minKDistinct(h: Column, k: Int): Column =
+    toCol(graft.functions.MinKDistinct(toExpr(h), k).toAggregateExpression())
 
   /** The 60-bit id hash [[ndvSketchExact]] stores: 15 hex chars of
     * md5 (never negative, fits a BIGINT), distinct "ndv_" domain

@@ -77,12 +77,12 @@ private[graft] case class MvDef(
   * that can answer `count(DISTINCT id) GROUP BY key…` EXACTLY — the
   * one dashboard tile shape the mergeable count/sum/min/max rollup
   * can never serve (exact NDV does not merge). The sketch does merge,
-  * and it becomes an exact answer precisely when it is everywhere
-  * UNSATURATED: a group holding fewer than k distinct id hashes keeps
-  * ALL of them, so `size(hs)` is the group's hash NDV, which equals
-  * `count(DISTINCT id)` when the hash is collision-free over the live
-  * ids. Both conditions are VALIDATED at registration (one pass each,
-  * the [[FkCatalog]] discipline).
+  * and it is an exact answer precisely where each group's stored
+  * count equals its distinct id count: a group holding fewer than k
+  * distinct id hashes keeps ALL of them, and a collision-free hash
+  * makes that count the group's `count(DISTINCT id)`. `exactOk` is
+  * the verdict of [[NdvCatalog]]'s one proof of that equality, made
+  * at registration.
   */
 private[graft] case class NdvDef(
     name: String,
@@ -94,7 +94,7 @@ private[graft] case class NdvDef(
     mvPath: String,
     mv: LogicalRelation,
     // "kmv": ndvSketchExact artifact (`hs` array column, exact only
-    // while unsaturated + collision-free); "bitmap": bitmapSketch
+    // where unsaturated and collision-free); "bitmap": bitmapSketch
     // artifact (`bm` compressed exact id set — no saturation concept,
     // no hash, exact at any cardinality; see Materialize.bitmapSketch)
     kind: String = "kmv") extends StoredDef
@@ -520,37 +520,40 @@ object MvCatalog {
 /** Registry of NDV-sketch rollups for [[MvRewriteRule]]'s
   * count-DISTINCT leg; the rewrite stays opt-in per session under the
   * same [[MvRewriteRule.EnabledKey]].
+  *
+  * Both kinds of artifact share ONE exactness proof, which is the
+  * rewrite's own contract: per key group, over the exact group
+  * universe, the stored count (`size(hs)` for the KMV kind,
+  * `bitmap_card(bm)` for the bitmap kind) equals the fact's
+  * `count(DISTINCT id)`, and the artifact holds exactly one row for
+  * each key the fact holds and none for any other. At the exact grain
+  * the rewrite sums one stored count per group, so this is precisely
+  * when it answers right. It also covers what the KMV sketch needs: a
+  * saturated group, or one with a hash collision, stores fewer hashes
+  * than it has ids and fails the proof.
+  *
+  * The proof runs once per registration. `create*` evaluates it as an
+  * observation on the build's own write: the definition's fact
+  * snapshot comes from the same frame, so it names exactly the files
+  * the build read. `register*`, and so every metastore [[load]],
+  * evaluates it as one join-free aggregate over fact ∪ artifact. A
+  * failed proof registers with `exactOk = false`: the definition is
+  * visible (a law test can see that it refuses) but never rewrites.
   */
 object NdvCatalog {
+  import org.apache.spark.sql.functions.{count, countDistinct, lit, size, sum, when}
 
   private val defs = new DefCatalog.Kind[NdvDef]("ndv")
+  private val Id = "__graft_ndv_id"
 
-  /** The sketch builders' input: the named keys and the id. */
-  private def sketchInput(fact: DataFrame, keys: Seq[(Column, String)], id: Column): DataFrame =
-    fact.select(keys.map { case (c, n) => c.as(n) } :+ id.as("__graft_ndv_id"): _*)
-
-  /** The EXTENSIONAL artifact check both kinds run: per group, over the
-    * exact group universe (a full outer join on the keys, null-safe),
-    * the artifact's stored count `stored` against the fact's distinct
-    * count `distinct` of the probe's id. One row if any group differs.
-    */
-  private def mismatch(
-      probe: DataFrame, keys: Seq[(Column, String)], artifact: DataFrame,
-      stored: Column, distinct: Column): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, lit}
-    val keyNames = keys.indices.map(i => s"__graft_k$i")
-    val factNdv = probe.groupBy(keyNames.map(col): _*).agg(distinct.as("d"))
-    val art = artifact.select(
-      keys.map(_._2).zip(keyNames).map { case (n, kn) => col(n).as(kn) } :+ stored.as("sz"): _*)
-    art.join(factNdv, keyNames.map(kn => art(kn) <=> factNdv(kn)).reduce(_ && _), "full_outer")
-      .filter(!(coalesce(col("sz"), lit(-1L)) <=> coalesce(col("d"), lit(-1L))))
-      .limit(1)
-  }
+  /** What the rewrite sums per artifact row, by kind. */
+  private def stored(kind: String): Column =
+    if (kind == "bitmap") Materialize.bitmapCard(col("bm")) else size(col("hs")).cast("long")
 
   /** Materialize `ndvSketchExact(fact, keys, id, k)` at `path` and
-    * register it. The one-time build cost is the same bootstrap scan
-    * every rollup pays; refreshes ride
-    * [[graft.ops.Materialize.mergeNdvExact]] (delta-only).
+    * register it, proven on the build's write: one fact scan in all.
+    * Refreshes ride [[graft.ops.Materialize.mergeNdvExact]]
+    * (delta-only) and re-register.
     */
   def create(
       spark: SparkSession,
@@ -560,33 +563,16 @@ object NdvCatalog {
       id: Column,
       k: Int,
       path: String): Unit =
-    DefCatalog.rebuild(path,
-      Materialize.ndvSketchExact(sketchInput(fact, keys, id), keys.map(_._2), "__graft_ndv_id", k)) {
-      register(spark, name, fact, keys, id, k, path)
-    }
+    build(spark, name, fact, keys, id, k, "kmv", path)(
+      Materialize.ndvSketchExact(_, keys.map(_._2), Id, k, _))
 
-  /** Register an ALREADY-materialized exact-NDV sketch. Validation
-    * happens HERE, every time: the rewrite substitutes an exact
-    * count(DISTINCT), so both exactness preconditions are re-proven
-    * against the artifact and fact as they stand —
-    *
-    *  - UNSATURATION: `max(size(hs)) < k` over the stored sketch
-    *    (a saturated group truncated its hash set; `size` is then an
-    *    underestimate and the rewrite must never fire);
-    *  - COLLISION-FREEDOM: `count(DISTINCT id) = count(DISTINCT
-    *    hash(id))` over the fact (global equality implies per-group
-    *    equality — a restriction of an injective map is injective);
-    *  - ARTIFACT ≡ FACT (extensional): per group, `size(hs)` equals
-    *    the fact's true distinct hash count over the exact group
-    *    universe — the check that catches a STALE artifact whose fact
-    *    drifted before a re-register/metastore reload snapshotted the
-    *    new files (law-tested in MvRewriteSpec).
-    *
-    * A failed condition registers with `exactOk = false`: the
-    * definition is visible (and a law test can see WHY it refuses)
-    * but the rewrite is disqualified. The fact's concrete file list
-    * is snapshotted; any append/compaction under the same directory
-    * disqualifies until re-registration re-validates.
+  /** Register an ALREADY-materialized exact-NDV sketch, proving it
+    * against the fact as it stands now (see [[NdvCatalog]]): an
+    * artifact that does not match the fact — a foreign one, or one
+    * whose fact drifted before a re-register or a metastore reload
+    * snapshotted today's files — registers with `exactOk = false`. The fact's concrete file list is snapshotted;
+    * any later append or compaction under the same directory
+    * disqualifies until a re-registration proves it again.
     */
   def register(
       spark: SparkSession,
@@ -595,52 +581,8 @@ object NdvCatalog {
       keys: Seq[(Column, String)],
       id: Column,
       k: Int,
-      path: String): Unit = {
-    require(keys.nonEmpty, s"NDV MV '$name': at least one grouping key required")
-    val what = s"NDV MV '$name'"
-    val probe = fact.select(DefCatalog.keyCols(keys) :+ id.as("__graft_ndv_id"): _*)
-    val p = DefCatalog.probe(what, probe)
-    // one read of the artifact serves the stored relation and every
-    // validation below
-    val (sketch, mvRel) = DefCatalog.artifact(spark, what, path)
-    import org.apache.spark.sql.functions.{countDistinct, max, size}
-    // EXTENSIONAL artifact check (third job below) — the validation
-    // that catches a STALE artifact (fact drifted after the sketch was
-    // built, then the definition re-registered or metastore-reloaded
-    // against today's files): per group, size(hs) must equal the
-    // fact's true distinct hash count, over the exact group universe
-    // (countDistinct skips nulls, so an all-null-id group validates
-    // against its empty array). With collision-freedom this IS the
-    // exactness proof — unsaturation stops being load-bearing (a
-    // truncated group can't match its true count) but stays for the
-    // diagnostic.
-    val stale = mismatch(probe, keys, sketch, size(col("hs")).cast("long"),
-      countDistinct(Materialize.ndvHash(col("__graft_ndv_id"))))
-    // The three validation actions are INDEPENDENT Spark jobs (two
-    // fact-side aggregates, one sketch-side max) that each leave most
-    // of the cluster idle — submitted concurrently on the bounded job
-    // pool (guide §2.6) so the registration pays max(job) instead of
-    // Σ(job). Every definition pays validation on register AND again
-    // on metastore load, so this fan-in is on s51/s53's hot path.
-    val idNn = probe.select(col("__graft_ndv_id")).filter(col("__graft_ndv_id").isNotNull)
-    val checks = graft.ops.Jobs.runConcurrently(spark, Seq[() => Any](
-      () => sketch
-        .agg(max(size(col("hs"))).as("mx")).collect()(0) match {
-        case r if r.isNullAt(0) => false // empty sketch: trivially complete
-        case r => r.getInt(0) >= k
-      },
-      () => idNn
-        .agg(
-          countDistinct(col("__graft_ndv_id")).as("d_id"),
-          countDistinct(Materialize.ndvHash(col("__graft_ndv_id"))).as("d_h"))
-        .collect()(0) match { case r => r.getLong(0) != r.getLong(1) },
-      () => stale.count()))
-    val saturated = checks(0).asInstanceOf[Boolean]
-    val collided = checks(1).asInstanceOf[Boolean]
-    val mismatches = checks(2).asInstanceOf[Long]
-    defs.put(NdvDef(name, p.scans.head, DefCatalog.mvKeys(keys, p), p.canon.last,
-      k, exactOk = !saturated && !collided && mismatches == 0, path, mvRel))
-  }
+      path: String): Unit =
+    define(spark, name, fact, keys, id, k, "kmv", path)(proof)
 
   /** Materialize `Materialize.bitmapSketch(fact, keys, id)` at `path`
     * and register it — the EXACT-id-set variant of [[create]]: no k,
@@ -656,22 +598,13 @@ object NdvCatalog {
       keys: Seq[(Column, String)],
       id: Column,
       path: String): Unit =
-    DefCatalog.rebuild(path,
-      Materialize.bitmapSketch(sketchInput(fact, keys, id), keys.map(_._2), "__graft_ndv_id")) {
-      registerBitmap(spark, name, fact, keys, id, path)
-    }
+    build(spark, name, fact, keys, id, 0, "bitmap", path)(
+      Materialize.bitmapSketch(_, keys.map(_._2), Id, _))
 
-  /** Register an ALREADY-materialized bitmap NDV artifact. The
-    * exactness story is SHORTER than [[register]]'s, by construction:
-    * the bitmap stores the group's distinct ids themselves, so there
-    * is no saturation condition and no collision condition — the one
-    * thing to prove is the EXTENSIONAL check, per group
-    * `bitmap_card(bm) = count(DISTINCT id)` over the exact group
-    * universe, which both re-proves the artifact against today's fact
-    * (stale-artifact fence, same as [[register]]) and IS the rewrite's
-    * prove-equal contract. Ids must be integral ([[graft.ops
-    * .Materialize.bitmapSketch]] enforces it at build; re-checked here
-    * because registration accepts foreign artifacts).
+  /** Register an ALREADY-materialized bitmap NDV artifact under the
+    * same proof as [[register]]. Ids must be integral
+    * ([[graft.ops.Materialize.bitmapSketch]] enforces it at build;
+    * re-checked here because registration accepts foreign artifacts).
     */
   def registerBitmap(
       spark: SparkSession,
@@ -679,28 +612,72 @@ object NdvCatalog {
       fact: DataFrame,
       keys: Seq[(Column, String)],
       id: Column,
-      path: String): Unit = {
+      path: String): Unit =
+    define(spark, name, fact, keys, id, 0, "bitmap", path)(proof)
+
+  /** Build the artifact with each group's distinct id count beside it,
+    * observe the proof on those rows as they are written, and register
+    * with its verdict. The build's groupBy makes one row per fact key.
+    */
+  private def build(
+      spark: SparkSession, name: String, fact: DataFrame, keys: Seq[(Column, String)],
+      id: Column, k: Int, kind: String, path: String)(
+      sketch: (DataFrame, Option[String]) => DataFrame): Unit = {
+    val proven = org.apache.spark.sql.Observation()
+    DefCatalog.rebuild(path,
+      sketch(fact.select(keys.map { case (c, n) => c.as(n) } :+ id.as(Id): _*), Some("__graft_ndv_d"))
+        .observe(proven, count(when(!(stored(kind) <=> col("__graft_ndv_d")), 1)).as("bad"))
+        .drop("__graft_ndv_d")) {
+      define(spark, name, fact, keys, id, k, kind, path)((_, _) => proven.get("bad") == 0L)
+    }
+  }
+
+  /** Probe the definition and store it with the verdict `exact` gives
+    * for (the probe, the artifact's keys and stored counts).
+    */
+  private def define(
+      spark: SparkSession, name: String, fact: DataFrame, keys: Seq[(Column, String)],
+      id: Column, k: Int, kind: String, path: String)(
+      exact: (DataFrame, DataFrame) => Boolean): Unit = {
     require(keys.nonEmpty, s"NDV MV '$name': at least one grouping key required")
     val what = s"NDV MV '$name'"
-    val probe = fact.select(DefCatalog.keyCols(keys) :+ id.as("__graft_ndv_id"): _*)
+    val probe = fact.select(DefCatalog.keyCols(keys) :+ id.as(Id): _*)
     val p = DefCatalog.probe(what, probe)
-    require(Seq("tinyint", "smallint", "int", "bigint").contains(p.defs.last.dataType.simpleString),
+    require(kind != "bitmap" ||
+      Seq("tinyint", "smallint", "int", "bigint").contains(p.defs.last.dataType.simpleString),
       s"$what: bitmap artifacts store ids exactly; id must be integral")
-    val (bitmaps, mvRel) = DefCatalog.artifact(spark, what, path)
-    val mismatches = mismatch(probe, keys, bitmaps, Materialize.bitmapCard(col("bm")),
-      org.apache.spark.sql.functions.countDistinct(col("__graft_ndv_id"))).count()
+    val (artifact, mvRel) = DefCatalog.artifact(spark, what, path)
+    val ok = exact(probe, artifact.select(keys.map(k => col(k._2)) :+ stored(kind): _*))
     defs.put(NdvDef(name, p.scans.head, DefCatalog.mvKeys(keys, p), p.canon.last,
-      k = 0, exactOk = mismatches == 0, path, mvRel, kind = "bitmap"))
+      k, exactOk = ok, path, mvRel, kind))
+  }
+
+  /** The proof over stored rows: fact rows and artifact rows in one
+    * union, grouped by key (a NULL key groups like any other), one
+    * verdict per group, folded to one. `probe` is (keys…, id),
+    * `counts` is (keys…, stored count), by position.
+    */
+  private def proof(probe: DataFrame, counts: DataFrame): Boolean = {
+    val keyNames = probe.columns.toSeq.init
+    val fromFact = probe.select(keyNames.map(col) ++
+      Seq(col(Id), lit(null).cast("long").as("st"), lit(false).as("art")): _*)
+    val fromArtifact = counts.toDF(keyNames :+ "st": _*).select(keyNames.map(col) ++
+      Seq(lit(null).cast(probe.schema(Id).dataType).as(Id), col("st"), lit(true).as("art")): _*)
+    val groups = fromFact.union(fromArtifact).groupBy(keyNames.map(col): _*)
+      .agg(countDistinct(col(Id)).as("d"), sum(col("st")).as("st"),
+        count(when(col("art"), 1)).as("a"), count(when(!col("art"), 1)).as("f"))
+    groups
+      .agg(count(when(!(col("a") === 1 && col("f") > 0 && (col("st") <=> col("d"))), 1)))
+      .head().getLong(0) == 0L
   }
 
   /** Persist every registered NDV definition to a parquet "metastore"
     * table ([[MvCatalog.save]]'s recipe): canonical key/id expressions
     * as SQL text, kind, k and artifact path alongside. [[load]]
-    * replays the FULL registration — including the exactness
-    * validations and a fresh fact-file snapshot — so a definition
-    * whose fact drifted while the JVM was down re-registers against
-    * today's files and re-proves (or refuses) exactness, never trusts
-    * yesterday's.
+    * replays the FULL registration — the proof and a fresh fact-file
+    * snapshot — so a definition whose fact drifted while the JVM was
+    * down re-registers against today's files and re-proves (or
+    * refuses) exactness, never trusts yesterday's.
     */
   def save(spark: SparkSession, path: String): Unit = {
     val sp = spark
@@ -715,8 +692,8 @@ object NdvCatalog {
   }
 
   /** Re-register every definition saved by [[save]]. Additive and
-    * idempotent, like [[MvCatalog.load]]; each definition pays its
-    * validation scans again — that is the point, see [[save]].
+    * idempotent, like [[MvCatalog.load]]; each definition's one proof
+    * runs again — that is the point, see [[save]].
     */
   def load(spark: SparkSession, path: String): Unit =
     DefCatalog.load(spark, path) { (r, fact, keys) =>

@@ -147,9 +147,10 @@ object MvRewriteRule extends Rule[LogicalPlan] {
     * over the stored exact-NDV sketch — one row per group in, one per
     * group out, so the Sum is a 1-row-group reduce that preserves the
     * Aggregate plan shape (parents never notice). Fires only when the
-    * definition's exactness proof is LIVE: `exactOk` (unsaturated +
-    * collision-free, validated at registration) AND the fact scan
-    * still holds exactly the validated files. The grouping must cover
+    * definition's exactness proof is LIVE: `exactOk` (one stored row
+    * per group whose count equals the group's count(DISTINCT id),
+    * proven at registration) AND the fact scan still holds exactly the
+    * proven files. The grouping must cover
     * the registered key tuple EXACTLY — coarsening a count-distinct
     * needs the union of per-group id sets, not a sum, so a subset
     * grouping is not provable from per-group sizes and disqualifies.

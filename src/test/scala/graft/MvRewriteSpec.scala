@@ -763,6 +763,35 @@ class MvRewriteSpec extends SparkSpec {
     } finally NdvCatalog.unregister("law_ndv_meta")
   }
 
+  test("NDV proof: a foreign artifact with every row written twice never answers (KMV and bitmap)") {
+    // each stored count still equals its group's distinct count, but
+    // the rewrite sums two rows per group: the proof's one-row-per-key
+    // clause must refuse it
+    val base = graft.ops.Sink.scratchDir("ndv_doubled_law")
+    Seq((1L, "a"), (2L, "a"), (3L, "b")).toDF("id", "g")
+      .write.mode("overwrite").parquet(base + "/fact")
+    def fact = spark.read.parquet(base + "/fact")
+    def q: DataFrame = fact.groupBy(col("g")).agg(countDistinct(col("id")).as("nd"))
+    val plain = rows(q)
+    val keys = Seq(col("g") -> "g")
+    val kinds: Seq[(String, String => Unit, String => Unit)] = Seq(
+      ("kmv", p => NdvCatalog.create(spark, "law_ndv_doubled", fact, keys, col("id"), 64, p),
+        p => NdvCatalog.register(spark, "law_ndv_doubled", fact, keys, col("id"), 64, p)),
+      ("bitmap", p => NdvCatalog.createBitmap(spark, "law_ndv_doubled", fact, keys, col("id"), p),
+        p => NdvCatalog.registerBitmap(spark, "law_ndv_doubled", fact, keys, col("id"), p)))
+    for ((kind, create, register) <- kinds) try {
+      create(s"$base/$kind")
+      assert(withMvRule { !scans(q).exists(_.endsWith("/fact")) }, s"$kind: the built artifact rewrites")
+      val once = spark.read.parquet(s"$base/$kind")
+      once.union(once).write.mode("overwrite").parquet(s"$base/${kind}_twice")
+      register(s"$base/${kind}_twice")
+      val (got, paths) = withMvRule { (rows(q), scans(q)) }
+      assert(paths.exists(_.endsWith("/fact")),
+        s"$kind: a doubled artifact must keep the fact scan; scans: $paths")
+      assert(got == plain)
+    } finally NdvCatalog.unregister("law_ndv_doubled")
+  }
+
   test("ndvSketchExact merge law: base ⊕ delta ≡ whole-table rebuild, empty groups kept") {
     val df = Seq[(java.lang.Long, String)](
       (1L, "a"), (2L, "a"), (3L, "a"), (1L, "b"), (null, "c"), (2L, null), (4L, "b"))
