@@ -122,13 +122,18 @@ object ExtQueries {
        |${pfx}bands AS (SELECT doc_id, sig, unnest(range($Bands)) bidx, unnest([$bandExprs]) bkey FROM ${pfx}sigs)""".stripMargin
   }
   private val e2Ctes: String = "WITH " + e2CtesBodyFrom("documents")
+  /** The banding pair join over those CTEs' `bands`: every candidate
+    * pair sharing a band, lower doc_id on the left.
+    */
+  private val e2BandPairs =
+    "FROM bands a JOIN bands b ON a.bidx = b.bidx AND a.bkey = b.bkey AND a.doc_id < b.doc_id"
 
   val e2Sql: String = {
     import MinHash._
     s"""$e2Ctes
        |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
        |  CAST(list_sum(list_transform(range(1, ${NumHashes + 1}), i -> CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END)) AS DOUBLE) / $NumHashes.0 AS jaccard_est
-       |FROM bands a JOIN bands b ON a.bidx = b.bidx AND a.bkey = b.bkey AND a.doc_id < b.doc_id""".stripMargin
+       |$e2BandPairs""".stripMargin
   }
 
   // ---- E2i: incremental near-dup — new batch vs standing corpus ------------
@@ -209,7 +214,7 @@ object ExtQueries {
        |    CAST(i AS DOUBLE) / (CAST(sa.n + sb.n AS DOUBLE) - CAST(i AS DOUBLE)) AS jac
        |  FROM iw JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b),
        |cd AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b ON a.bidx = b.bidx AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
+       |  $e2BandPairs),
        |bk AS (SELECT CAST(least(floor(jac * 10.0), 9) AS BIGINT) AS bucket,
        |    CASE WHEN cd.doc_a IS NOT NULL THEN 1 ELSE 0 END AS hit
        |  FROM tr LEFT JOIN cd USING (doc_a, doc_b))
@@ -225,7 +230,7 @@ object ExtQueries {
     val inter = "CAST(len(list_intersect(ma.msd, mb.msd)) AS DOUBLE)"
     s"""$e2Ctes,
        |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b ON a.bidx = b.bidx AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
+       |  $e2BandPairs),
        |msd AS (SELECT doc_id, list_distinct(ms) msd FROM hashed)
        |SELECT p.doc_a, p.doc_b,
        |  $inter / (CAST(len(ma.msd) + len(mb.msd) AS DOUBLE) - $inter) AS jaccard
@@ -261,7 +266,7 @@ object ExtQueries {
     s"""${e2Ctes.replaceFirst("^WITH ", "WITH RECURSIVE ")},
        |prs AS (SELECT DISTINCT a.doc_id AS a, b.doc_id AS b,
        |  CAST(list_sum(list_transform(range(1, ${NumHashes + 1}), i -> CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END)) AS DOUBLE) / $NumHashes.0 AS est
-       |  FROM bands a JOIN bands b ON a.bidx = b.bidx AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
+       |  $e2BandPairs),
        |edges AS (SELECT a, b FROM prs WHERE est >= $ClusterMinEst UNION ALL SELECT b, a FROM prs WHERE est >= $ClusterMinEst),
        |reach(src, dst) AS (SELECT doc_id, doc_id FROM documents UNION SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a),
        |comp AS (SELECT src AS doc_id, min(dst) AS component FROM reach GROUP BY src)""".stripMargin
@@ -313,7 +318,7 @@ object ExtQueries {
     s"""${e2Ctes.replaceFirst("^WITH ", "WITH RECURSIVE ")},
        |prs AS (SELECT DISTINCT a.doc_id AS a, b.doc_id AS b,
        |  CAST(list_sum(list_transform(range(1, ${NumHashes + 1}), i -> CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END)) AS DOUBLE) / $NumHashes.0 AS est
-       |  FROM bands a JOIN bands b ON a.bidx = b.bidx AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
+       |  $e2BandPairs),
        |edges AS (SELECT a, b FROM prs WHERE est >= $ClusterMinEst UNION ALL SELECT b, a FROM prs WHERE est >= $ClusterMinEst),
        |nodes AS (SELECT DISTINCT a AS doc_id FROM edges),
        |reach(src, dst) AS (SELECT doc_id, doc_id FROM nodes UNION SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a),
@@ -362,7 +367,7 @@ object ExtQueries {
     s"""$e2Ctes,
        |prs AS (SELECT DISTINCT a.doc_id AS a, b.doc_id AS b,
        |  CAST(list_sum(list_transform(range(1, ${NumHashes + 1}), i -> CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END)) AS DOUBLE) / $NumHashes.0 AS est
-       |  FROM bands a JOIN bands b ON a.bidx = b.bidx AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
+       |  $e2BandPairs),
        |edg AS (SELECT a AS src, b AS dst FROM prs WHERE est >= $ClusterMinEst
        |  UNION ALL SELECT b, a FROM prs WHERE est >= $ClusterMinEst),
        |degs AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM edg GROUP BY src),
@@ -547,7 +552,7 @@ object ExtQueries {
   val e2fSql: String =
     s"""$e2Ctes,
        |prs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b ON a.bidx = b.bidx AND a.bkey = b.bkey AND a.doc_id < b.doc_id)
+       |  $e2BandPairs)
        |SELECT p.doc_a, p.doc_b,
        |  CAST(levenshtein(da.text, db.text) AS BIGINT) AS lev,
        |  CAST(levenshtein(da.text, db.text) AS DOUBLE) / CAST(greatest(length(da.text), length(db.text)) AS DOUBLE) AS lev_norm
@@ -607,9 +612,8 @@ object ExtQueries {
   // SparkSessionExtensions.injectFunction path LOAD-BEARING in the
   // driver gate (the j8_range_auto precedent for injectOptimizerRule):
   // if registration or the expression's SQL binding breaks, this row
-  // goes red. GraftExtensions.register covers plain sessions.
+  // goes red. Every runner's session is built with GraftExtensions.
   def e3CosineSql(s: SparkSession, dir: String): DataFrame = {
-    GraftExtensions.register(s)
     // Per-call unique view name (r8 ADVICE): a fixed "emb_sql" would let
     // two concurrent invocations on one session silently read each
     // other's table. s.sql() analyzes eagerly, so the view reference is
@@ -1451,7 +1455,7 @@ object ExtQueries {
        |${e2CtesBodyFrom("exact")},
        |prs AS (SELECT DISTINCT a.doc_id AS a, b.doc_id AS b,
        |  CAST(list_sum(list_transform(range(1, ${NumHashes + 1}), i -> CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END)) AS DOUBLE) / $NumHashes.0 AS est
-       |  FROM bands a JOIN bands b ON a.bidx = b.bidx AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
+       |  $e2BandPairs),
        |edges AS (SELECT a, b FROM prs WHERE est >= $ClusterMinEst UNION ALL SELECT b, a FROM prs WHERE est >= $ClusterMinEst),
        |reach(src, dst) AS (SELECT doc_id, doc_id FROM exact UNION SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a),
        |comp AS (SELECT src AS doc_id, min(dst) AS component FROM reach GROUP BY src)""".stripMargin
@@ -2829,7 +2833,7 @@ object ExtQueries {
     s"""${e2Ctes.replaceFirst("^WITH ", "WITH RECURSIVE ")},
        |prs AS (SELECT DISTINCT a.doc_id AS a, b.doc_id AS b,
        |  CAST(list_sum(list_transform(range(1, ${NumHashes + 1}), i -> CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END)) AS DOUBLE) / $NumHashes.0 AS est
-       |  FROM bands a JOIN bands b ON a.bidx = b.bidx AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
+       |  $e2BandPairs),
        |edges AS (SELECT a, b FROM prs WHERE est >= $ClusterMinEst UNION ALL SELECT b, a FROM prs WHERE est >= $ClusterMinEst),
        |nodes AS (SELECT DISTINCT a AS doc_id FROM edges),
        |reach(src, dst) AS (SELECT doc_id, doc_id FROM nodes UNION SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a),

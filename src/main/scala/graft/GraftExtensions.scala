@@ -19,9 +19,10 @@ import graft.functions.{DecodeImageStats, FloatDotProduct, GrayPngAHash, MinHash
   *                                  engine's banding constants
   *
   * The DataFrame API (`ext.Similarity`, `ext.MinHash`, `ext.TextOps`)
-  * does NOT require the extension — it builds the expressions
-  * directly — so the driver contract works on any plain session;
-  * this registration is for SQL-first users.
+  * builds the expressions directly; the SQL names are for SQL-first
+  * users and rows like e3_cosine_sql. Sessions get them only at build
+  * ([[GraftSession.create]]): `getOrCreate` drops `withExtensions`
+  * when a session already exists.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -115,11 +116,4 @@ object GraftExtensions {
       case other => throw new IllegalArgumentException(s"$name must be an integer, got $other")
     }
   }
-
-  /** Register the same functions on an already-running session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    builders.foreach { case (name, _, builder) =>
-      org.apache.spark.sql.graftshim.ColumnBridge
-        .registerTempFunction(spark, name, builder)
-    }
 }

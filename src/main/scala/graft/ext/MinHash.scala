@@ -99,8 +99,7 @@ object MinHash {
   /** MinHash signature: for each of the H affine permutations, the
     * minimum permuted hash over the doc's shingles. Native codegen'd
     * Expression ([[graft.functions.MinHashSignature]]) — one fused
-    * loop over (shingle × permutation); [[signatureHof]] is the
-    * built-in-only formulation with identical results.
+    * loop over (shingle × permutation).
     */
   def signature(ms: Column): Column = {
     import org.apache.spark.sql.graftshim.ColumnBridge
@@ -109,18 +108,6 @@ object MinHash {
       (0 until NumHashes).map(aConst),
       (0 until NumHashes).map(bConst), P))
   }
-
-  /** Reference formulation of [[signature]] on pure built-ins (the
-    * hash array is let-bound: it is referenced H times, and without
-    * the binding CollapseProject would inline — and re-evaluate —
-    * the shingle hashing once per permutation).
-    */
-  def signatureHof(ms: Column): Column =
-    TextOps.let1(ms) { msv =>
-      array((0 until NumHashes).map { i =>
-        array_min(transform(msv, m => (lit(aConst(i)) * m + lit(bConst(i))) % P))
-      }: _*)
-    }
 
   /** Band keys: the signature cut into `Bands` contiguous slices,
     * each rendered "v1_v2_v3" (bucket identity within a band).

@@ -241,23 +241,17 @@ object Unigram {
       .collect().map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1).toSeq
 
   /** SCORE-ONLY Viterbi fold: the final packed dp value for `word`
-    * under the model — same recurrence as [[viterbiSegs]] with the
-    * piece lists dropped, so the carried state is K flat longs
-    * instead of K growing string arrays (the count path needs no
-    * segmentation: `least` over candidate scores is tie-agnostic
-    * because tied candidates share the score by definition).
-    */
-  def viterbiScore(word: Column, vocab: Seq[(String, Long)], maxPieceLen: Int): Column =
-    viterbiScoreWith(word,
-      map_from_arrays(typedlit(vocab.map(_._1)), typedlit(vocab.map(_._2))),
-      maxPieceLen, vocab.map(_._2).max)
-
-  /** [[viterbiScore]] against an already-bound model map column —
-    * lets a per-document fold [[TextOps.let1]]-bind the map once per
-    * row instead of reconstructing the literal inside the innermost
-    * lambda. `maxCnt` is the model's largest count, passed by the
-    * vocab-holding caller so the per-word radix guard covers this
-    * path too (the map column cannot be inspected at plan time).
+    * under the model map column `vm` — same recurrence as
+    * [[viterbiSegs]] with the piece lists dropped, so the carried
+    * state is K flat longs instead of K growing string arrays (the
+    * count path needs no segmentation: `least` over candidate scores
+    * is tie-agnostic because tied candidates share the score by
+    * definition). Taking the map as a column lets a per-document fold
+    * [[TextOps.let1]]-bind it once per row instead of reconstructing
+    * the literal inside the innermost lambda. `maxCnt` is the model's
+    * largest count, passed by the vocab-holding caller so the
+    * per-word radix guard covers this path too (the map column cannot
+    * be inspected at plan time).
     */
   def viterbiScoreWith(word: Column, vm: Column, maxPieceLen: Int,
       maxCnt: Long): Column = {
@@ -282,7 +276,7 @@ object Unigram {
     * count. The piece count is recovered from the packed score alone
     * (score = p·2⁴¹ − Σcnt with 0 ≤ Σcnt < 2⁴¹ ⟹
     * p = (score + 2⁴¹ − 1) >> 41), so the nested fold is
-    * [[viterbiScore]]'s flat-long version — no string lists ride the
+    * [[viterbiScoreWith]]'s flat-long version — no string lists ride the
     * loop. Zero state, zero shuffle: the form a streaming ingest
     * computes once per arriving document. The batch path
     * ([[segment]] on the distinct-word frame + a join) is cheaper

@@ -530,7 +530,9 @@ object MvCatalog {
   * the rewrite sums one stored count per group, so this is precisely
   * when it answers right. It also covers what the KMV sketch needs: a
   * saturated group, or one with a hash collision, stores fewer hashes
-  * than it has ids and fails the proof.
+  * than it has ids and fails the proof. A registered bitmap artifact
+  * is also checked id by id, since a coarser grouping unions its sets
+  * (see [[proof]]); a built one holds the fact's own ids.
   *
   * The proof runs once per registration. `create*` evaluates it as an
   * observation on the build's own write: the definition's fact
@@ -541,10 +543,13 @@ object MvCatalog {
   * visible (a law test can see that it refuses) but never rewrites.
   */
 object NdvCatalog {
-  import org.apache.spark.sql.functions.{count, countDistinct, lit, size, sum, when}
+  import org.apache.spark.sql.functions.{array, count, countDistinct, lit, size, sum, when}
 
   private val defs = new DefCatalog.Kind[NdvDef]("ndv")
   private val Id = "__graft_ndv_id"
+
+  /** The artifact's stored column, by kind. */
+  private def setCol(kind: String): String = if (kind == "bitmap") "bm" else "hs"
 
   /** What the rewrite sums per artifact row, by kind. */
   private def stored(kind: String): Column =
@@ -582,7 +587,7 @@ object NdvCatalog {
       id: Column,
       k: Int,
       path: String): Unit =
-    define(spark, name, fact, keys, id, k, "kmv", path)(proof)
+    define(spark, name, fact, keys, id, k, "kmv", path)(proof("kmv"))
 
   /** Materialize `Materialize.bitmapSketch(fact, keys, id)` at `path`
     * and register it — the EXACT-id-set variant of [[create]]: no k,
@@ -613,7 +618,7 @@ object NdvCatalog {
       keys: Seq[(Column, String)],
       id: Column,
       path: String): Unit =
-    define(spark, name, fact, keys, id, 0, "bitmap", path)(proof)
+    define(spark, name, fact, keys, id, 0, "bitmap", path)(proof("bitmap"))
 
   /** Build the artifact with each group's distinct id count beside it,
     * observe the proof on those rows as they are written, and register
@@ -633,7 +638,7 @@ object NdvCatalog {
   }
 
   /** Probe the definition and store it with the verdict `exact` gives
-    * for (the probe, the artifact's keys and stored counts).
+    * for (the probe, the artifact's keys and stored column).
     */
   private def define(
       spark: SparkSession, name: String, fact: DataFrame, keys: Seq[(Column, String)],
@@ -647,7 +652,7 @@ object NdvCatalog {
       Seq("tinyint", "smallint", "int", "bigint").contains(p.defs.last.dataType.simpleString),
       s"$what: bitmap artifacts store ids exactly; id must be integral")
     val (artifact, mvRel) = DefCatalog.artifact(spark, what, path)
-    val ok = exact(probe, artifact.select(keys.map(k => col(k._2)) :+ stored(kind): _*))
+    val ok = exact(probe, artifact.select(keys.map(k => col(k._2)) :+ col(setCol(kind)): _*))
     defs.put(NdvDef(name, p.scans.head, DefCatalog.mvKeys(keys, p), p.canon.last,
       k, exactOk = ok, path, mvRel, kind))
   }
@@ -655,19 +660,30 @@ object NdvCatalog {
   /** The proof over stored rows: fact rows and artifact rows in one
     * union, grouped by key (a NULL key groups like any other), one
     * verdict per group, folded to one. `probe` is (keys…, id),
-    * `counts` is (keys…, stored count), by position.
+    * `artifact` is (keys…, stored column), by position.
+    *
+    * A bitmap artifact stores the ids themselves, and a coarser
+    * grouping unions them, so for that kind the proof also checks the
+    * ids: with A the stored set and F the fact's non-null ids (each a
+    * singleton set in the union), card(A ∪ F) = card(A) = |F|, which
+    * holds exactly when A = F.
     */
-  private def proof(probe: DataFrame, counts: DataFrame): Boolean = {
+  private def proof(kind: String)(probe: DataFrame, artifact: DataFrame): Boolean = {
     val keyNames = probe.columns.toSeq.init
+    def ids(set: => Column): Seq[Column] = if (kind == "bitmap") Seq(set.as("ids")) else Nil
     val fromFact = probe.select(keyNames.map(col) ++
-      Seq(col(Id), lit(null).cast("long").as("st"), lit(false).as("art")): _*)
-    val fromArtifact = counts.toDF(keyNames :+ "st": _*).select(keyNames.map(col) ++
-      Seq(lit(null).cast(probe.schema(Id).dataType).as(Id), col("st"), lit(true).as("art")): _*)
+      Seq(col(Id), lit(null).cast("long").as("st"), lit(false).as("art")) ++
+      ids(when(col(Id).isNotNull, Materialize.bitmapOf(array(col(Id).cast("long"))))): _*)
+    val fromArtifact = artifact.toDF(keyNames :+ setCol(kind): _*).select(keyNames.map(col) ++
+      Seq(lit(null).cast(probe.schema(Id).dataType).as(Id), stored(kind).as("st"),
+        lit(true).as("art")) ++ ids(col("bm")): _*)
     val groups = fromFact.union(fromArtifact).groupBy(keyNames.map(col): _*)
-      .agg(countDistinct(col(Id)).as("d"), sum(col("st")).as("st"),
-        count(when(col("art"), 1)).as("a"), count(when(!col("art"), 1)).as("f"))
+      .agg(countDistinct(col(Id)).as("d"), (Seq(sum(col("st")).as("st"),
+        count(when(col("art"), 1)).as("a"), count(when(!col("art"), 1)).as("f")) ++
+        ids(Materialize.bitmapCard(Materialize.bitmapUnionAgg(col("ids"))))): _*)
+    val sameIds = if (kind == "bitmap") col("ids") <=> col("st") else lit(true)
     groups
-      .agg(count(when(!(col("a") === 1 && col("f") > 0 && (col("st") <=> col("d"))), 1)))
+      .agg(count(when(!(col("a") === 1 && col("f") > 0 && (col("st") <=> col("d")) && sameIds), 1)))
       .head().getLong(0) == 0L
   }
 

@@ -28,18 +28,6 @@ object ColumnBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Register a temp SQL function on a LIVE session (the
-    * SparkSessionExtensions route only applies at session build;
-    * getOrCreate silently ignores withExtensions when a session
-    * already exists).
-    */
-  def registerTempFunction(
-      spark: SparkSession,
-      name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
-
   /** The query-execution listeners registered on a session now. */
   def queryListeners(spark: SparkSession): Seq[org.apache.spark.sql.util.QueryExecutionListener] =
     spark.listenerManager.listListeners().toSeq

@@ -1,21 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
-/** The native functions must be reachable from pure SQL when the
-  * extension is installed (SQL-first users; the DataFrame API never
+/** The native functions must be reachable from pure SQL on a session
+  * built with the extension (SQL-first users; the DataFrame API never
   * needs it).
   */
-class ExtensionsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    // live-session route (getOrCreate ignores withExtensions once a
-    // session exists, so the registrar is the reliable path)
-    val s = TestSpark.spark
-    GraftExtensions.register(s)
-    s
-  }
+class ExtensionsSpec extends SparkSpec {
 
   test("graft_dot and graft_simhash32 are callable from SQL") {
     val dot = spark.sql(

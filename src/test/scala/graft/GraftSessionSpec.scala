@@ -5,7 +5,7 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{JobResult, JobSucceeded, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -14,7 +14,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.ext.Dedup
 import graft.ops.Jobs
-import graft.plans.{DefCatalog, MvRewriteRule}
+import graft.plans.DefCatalog
 import graft.streaming.StreamDrive
 import graft.streaming.StreamDrive.fresh
 
@@ -48,18 +48,13 @@ class GraftSessionSpec extends SparkSpec {
   }
 
   test("profile confs never reach the parent: s30's query on the parent still scans the fact") {
-    // the rule is attached to the parent, so a leaked enable key would fire it there
-    val had = spark.experimental.extraOptimizations
-    if (!had.exists(_ eq MvRewriteRule))
-      spark.experimental.extraOptimizations = had :+ MvRewriteRule
-    try {
-      val before = spark.conf.getAll
-      assert(ParityQueries.s30MvRewrite(spark, dir).collect().nonEmpty)
-      assert(spark.conf.getAll == before)
-      val scans = DefCatalog.scanPaths(
-        ParityQueries.s30UserQuery(spark, dir).queryExecution.optimizedPlan)
-      assert(scans.exists(_.contains("orders.parquet")), scans)
-    } finally spark.experimental.extraOptimizations = had
+    // the product session carries the rule, so a leaked enable key would fire it there
+    val before = spark.conf.getAll
+    assert(ParityQueries.s30MvRewrite(spark, dir).collect().nonEmpty)
+    assert(spark.conf.getAll == before)
+    val scans = DefCatalog.scanPaths(
+      ParityQueries.s30UserQuery(spark, dir).queryExecution.optimizedPlan)
+    assert(scans.exists(_.contains("orders.parquet")), scans)
   }
 
   test("a rule attached to the parent after the first scoped call runs in the profile session") {
@@ -132,19 +127,60 @@ class GraftSessionSpec extends SparkSpec {
     assert(spark.conf.getAll == before)
   }
 
-  test("src/main sets confs only in GraftSession; no conf window survives anywhere") {
+  test("a sibling that throws in runConcurrently cancels the running sibling's job and returns nothing") {
+    val tag = java.util.UUID.randomUUID().toString
+    val started = new CountDownLatch(1)
+    val ended = new CountDownLatch(1)
+    val result = new java.util.concurrent.atomic.AtomicReference[JobResult]()
+    val jobId = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val probe = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("law.running") == tag)) {
+          jobId.set(e.jobId); started.countDown()
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == jobId.get) { result.set(e.jobResult); ended.countDown() }
+    }
+    val boom = new IllegalStateException("sibling failed")
+    spark.sparkContext.addSparkListener(probe)
+    try {
+      // one task per core, each sleeping a minute unless cancelled
+      val got = scala.util.Try(Jobs.runConcurrently(spark, Seq[() => Long](
+        () => {
+          spark.sparkContext.setLocalProperty("law.running", tag)
+          spark.sparkContext.parallelize(1 to 4, 4).map { i => Thread.sleep(60000L); i.toLong }.sum().toLong
+        },
+        () => { assert(started.await(2, TimeUnit.MINUTES)); throw boom })))
+      assert(got.failed.toOption.exists(_ eq boom), got)
+      assert(ended.await(2, TimeUnit.MINUTES), "the running sibling's job never ended")
+      // JobFailed is private to Spark: read the cancellation from its text
+      val r = result.get
+      assert(r != JobSucceeded && r.toString.contains("cancelled"), r)
+    } finally spark.sparkContext.removeSparkListener(probe)
+  }
+
+  /** Each source line under `src` outside this file, as (file, line,
+    * "path:number: line").
+    */
+  private def sourceLines(): Seq[(java.io.File, String, String)] = {
     val root = new java.io.File("src")
     assert(root.isDirectory, s"run from the repository root (no ${root.getAbsolutePath})")
     def files(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    def comment(line: String): Boolean =
-      Seq("*", "/*", "//").exists(line.trim.startsWith)
-    val setsConf = """conf\s*\.\s*(set|unset)""".r
-    val lines = for {
+    for {
       f <- files(root) if f.getName != "GraftSessionSpec.scala"
       (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines().toSeq.zipWithIndex
     } yield (f, line, s"${f.getPath}:${i + 1}: ${line.trim}")
+  }
+
+  private def comment(line: String): Boolean =
+    Seq("*", "/*", "//").exists(line.trim.startsWith)
+
+  private val setsConf = """conf\s*\.\s*(set|unset)""".r
+
+  test("src/main sets confs only in GraftSession; no conf window survives anywhere") {
+    val lines = sourceLines()
     val setters = lines.collect {
       case (f, line, at) if f.getPath.startsWith("src/main") &&
         f.getName != "GraftSession.scala" && !comment(line) &&
@@ -153,6 +189,16 @@ class GraftSessionSpec extends SparkSpec {
     assert(setters.isEmpty, setters.mkString("\n"))
     val windows = lines.collect { case (_, line, at) if line.contains("withConfs") => at }
     assert(windows.isEmpty, windows.mkString("\n"))
+  }
+
+  test("src/test runs on TestSpark's product session: no conf set, no rule attached, no builder") {
+    // a spec that needs other confs or a rule off takes GraftSession.scoped
+    val mutates = Seq(setsConf, """extra(Optimizations|Strategies)\s*=(?!=)""".r, """SparkSession\s*\.\s*builder""".r)
+    val found = sourceLines().collect {
+      case (f, line, at) if f.getPath.startsWith("src/test") && !comment(line) &&
+        mutates.exists(_.findFirstIn(line).isDefined) => at
+    }
+    assert(found.isEmpty, found.mkString("\n"))
   }
 }
 

@@ -23,18 +23,6 @@ class IdempotenceSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  // the shared test session is a PLAIN session (no GraftExtensions);
-  // the gates under test need the conf-gated optimizer rules present
-  // (each query enables them only on its own profile session,
-  // GraftSession.scoped, so the rules stay inert for every other
-  // suite in this JVM)
-  private def ensureRules(): Unit = {
-    val have = spark.experimental.extraOptimizations
-    val want = Seq(graft.plans.MvRewriteRule, graft.plans.JoinEliminationRule)
-      .filterNot(r => have.exists(_ eq r))
-    if (want.nonEmpty) spark.experimental.extraOptimizations = have ++ want
-  }
-
   /** Every registry entry that registers catalog definitions or
     * asserts plan shape via scanPaths — the queries whose first
     * execution can poison their second.
@@ -53,7 +41,6 @@ class IdempotenceSpec extends SparkSpec {
 
   rewriteGates.foreach { name =>
     test(s"$name survives re-execution in one session") {
-      ensureRules()
       val q = SparkEntry.queries(name)
       val first = q(spark, dir).count()
       // the second execution is the regression: any definition the

@@ -14,35 +14,11 @@ class MvRewriteSpec extends SparkSpec {
 
   import spark.implicits._
 
-  // The sf0.001 tables behind a private symlinked path: the registry's
-  // standing MV/NDV definitions on the real path (left by any suite that
-  // ran the registry earlier in this JVM) then never compete with this
-  // spec's own definitions in the rewrite's cost choice.
-  private val dir = {
-    val tmp = java.nio.file.Files.createTempDirectory("mv_rewrite_spec")
-    val link = java.nio.file.Files.createSymbolicLink(
-      tmp.resolve("sf0.001"), java.nio.file.Paths.get("/root/testdata/sf0.001"))
-    tmp.toFile.deleteOnExit()
-    link.toFile.deleteOnExit()
-    link.toString
-  }
+  private val dir = privateSf0001()
   private val cents = floor(col("o_totalprice") * 100).cast("long")
 
-  /** The test session has no GraftExtensions, so attach the rule the
-    * way RangeJoinRuleSpec does (extraOptimizations) and open the
-    * opt-in conf window for the body.
-    */
-  private def withMvRule[T](body: => T): T = {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ MvRewriteRule
-    spark.conf.set(MvRewriteRule.EnabledKey, "true")
-    try body
-    finally {
-      spark.conf.unset(MvRewriteRule.EnabledKey)
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ eq MvRewriteRule)
-    }
-  }
+  /** `df` with the rule's opt-in conf on. */
+  private def mv(df: DataFrame): DataFrame = under(Seq(MvRewriteRule.EnabledKey -> "true"))(df)
 
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
@@ -55,8 +31,8 @@ class MvRewriteSpec extends SparkSpec {
   test("s30 MV rewrite: rollup scan substituted, results bit-identical") {
     mvReady()
     val unrewritten = rows(ParityQueries.s30UserQuery(spark, dir))
-    val (rewritten, paths) = withMvRule {
-      val q = ParityQueries.s30UserQuery(spark, dir)
+    val (rewritten, paths) = {
+      val q = mv(ParityQueries.s30UserQuery(spark, dir))
       (rows(q), scans(q))
     }
     assert(paths.exists(_.contains("mv_orders")), paths)
@@ -71,7 +47,7 @@ class MvRewriteSpec extends SparkSpec {
       .groupBy(col("o_custkey"))
       .agg(count(lit(1)).as("n_orders"), sum(cents).as("sum_cents"))
     val plain = rows(q)
-    val (rewritten, paths) = withMvRule { (rows(q), scans(q)) }
+    val (rewritten, paths) = (rows(mv(q)), scans(mv(q)))
     assert(paths.exists(_.contains("mv_orders")), paths)
     assert(!paths.exists(_.contains("orders.parquet")), paths)
     assert(rewritten == plain)
@@ -82,7 +58,7 @@ class MvRewriteSpec extends SparkSpec {
     val q = Tables.orders(spark, dir)
       .groupBy(col("o_custkey"))
       .agg(countDistinct(col("o_orderpriority")).as("nd"))
-    val paths = withMvRule { scans(q) }
+    val paths = scans(mv(q))
     assert(paths.exists(_.contains("orders.parquet")), paths)
   }
 
@@ -91,7 +67,7 @@ class MvRewriteSpec extends SparkSpec {
     val q = Tables.orders(spark, dir)
       .groupBy(col("o_custkey"))
       .agg(sum(floor(col("o_totalprice") * 200).cast("long")).as("x"))
-    val paths = withMvRule { scans(q) }
+    val paths = scans(mv(q))
     assert(paths.exists(_.contains("orders.parquet")), paths)
   }
 
@@ -101,7 +77,7 @@ class MvRewriteSpec extends SparkSpec {
       .filter(col("o_orderpriority") === "1-URGENT")
       .groupBy(col("o_custkey"))
       .agg(count(lit(1)).as("n"), sum(cents).as("s"))
-    val paths = withMvRule { scans(q) }
+    val paths = scans(mv(q))
     assert(paths.exists(_.contains("orders.parquet")), paths)
   }
 
@@ -116,7 +92,7 @@ class MvRewriteSpec extends SparkSpec {
         .agg(count(lit(1)).as("n_orders"),
           min(cents).as("min_cents"), max(cents).as("max_cents"))
       val plain = rows(q)
-      val (rewritten, paths) = withMvRule { (rows(q), scans(q)) }
+      val (rewritten, paths) = (rows(mv(q)), scans(mv(q)))
       assert(paths.exists(_.contains("mv_orders_day_test")), paths)
       assert(!paths.exists(_.contains("orders.parquet")), paths)
       assert(rewritten == plain)
@@ -142,7 +118,7 @@ class MvRewriteSpec extends SparkSpec {
         .agg(count(lit(1)).as("n"), sum(cents).as("s"),
           min(cents).as("lo"), max(cents).as("hi"))
       val plain = rows(q)
-      val (rewritten, paths) = withMvRule { (rows(q), scans(q)) }
+      val (rewritten, paths) = (rows(mv(q)), scans(mv(q)))
       assert(paths.exists(_.contains("mv_tuple_test")), paths)
       assert(!paths.exists(_.contains("orders.parquet")), paths)
       assert(rewritten == plain)
@@ -158,7 +134,7 @@ class MvRewriteSpec extends SparkSpec {
         .agg(count(lit(1)).as("n"), sum(cents).as("s"),
           min(cents).as("lo"), max(cents).as("hi"))
       val plain = rows(q)
-      val (rewritten, paths) = withMvRule { (rows(q), scans(q)) }
+      val (rewritten, paths) = (rows(mv(q)), scans(mv(q)))
       assert(paths.exists(_.contains("mv_tuple_test")), paths)
       assert(!paths.exists(_.contains("orders.parquet")), paths)
       assert(rewritten == plain)
@@ -171,7 +147,7 @@ class MvRewriteSpec extends SparkSpec {
         .agg(count(lit(1)).as("n"), sum(cents).as("s"),
           min(cents).as("lo"), max(cents).as("hi"))
       val plain = rows(q)
-      val (rewritten, paths) = withMvRule { (rows(q), scans(q)) }
+      val (rewritten, paths) = (rows(mv(q)), scans(mv(q)))
       // ANY registered rollup over this fact can answer the lattice
       // bottom (the cheapest stored one wins when several are live) —
       // the law is that the FACT scan is gone and the result is
@@ -193,7 +169,7 @@ class MvRewriteSpec extends SparkSpec {
         .agg(count(lit(1)).as("n"), count(cents).as("n_m"),
           sum(cents).as("s"), min(cents).as("lo"))
       val plain = rows(q)
-      val (rewritten, paths) = withMvRule { (rows(q), scans(q)) }
+      val (rewritten, paths) = (rows(mv(q)), scans(mv(q)))
       assert(!paths.exists(_.contains("orders.parquet")), paths)
       assert(rewritten == plain)
       assert(rewritten == Seq(Seq(0L, 0L, null, null)), rewritten)
@@ -207,7 +183,7 @@ class MvRewriteSpec extends SparkSpec {
         .groupBy(day.as("day"))
         .agg(count(lit(1)).as("n"), sum(cents).as("s"))
       val plain = rows(q)
-      val (rewritten, paths) = withMvRule { (rows(q), scans(q)) }
+      val (rewritten, paths) = (rows(mv(q)), scans(mv(q)))
       assert(paths.exists(_.contains("mv_tuple_test")), paths)
       assert(!paths.exists(_.contains("orders.parquet")), paths)
       assert(rewritten == plain)
@@ -219,7 +195,7 @@ class MvRewriteSpec extends SparkSpec {
       val q = Tables.orders(spark, dir)
         .groupBy(day.as("day"), col("o_orderpriority"))
         .agg(count(lit(1)).as("n"), sum(cents).as("s"))
-      val paths = withMvRule { scans(q) }
+      val paths = scans(mv(q))
       assert(paths.exists(_.contains("orders.parquet")), paths)
     }
   }
@@ -244,7 +220,7 @@ class MvRewriteSpec extends SparkSpec {
       .groupBy(col("o_custkey"))
       .agg(avg(cents).as("a"), count(cents).as("nm"), sum(cents).as("s"))
     val plain = rows(q)
-    val (rewritten, paths) = withMvRule { (rows(q), scans(q)) }
+    val (rewritten, paths) = (rows(mv(q)), scans(mv(q)))
     assert(paths.exists(_.contains("mv_orders")), paths)
     assert(!paths.exists(_.contains("orders.parquet")), paths)
     assert(rewritten == plain)
@@ -273,7 +249,7 @@ class MvRewriteSpec extends SparkSpec {
         .agg(avg(col("m")).as("a"), count(col("m")).as("nm"),
           count(lit(1)).as("n"), sum(col("m")).as("s"))
       val plain = rows(q)
-      val (rewritten, paths) = withMvRule { (rows(q), scans(q)) }
+      val (rewritten, paths) = (rows(mv(q)), scans(mv(q)))
       assert(paths.exists(p => p.contains("mv_nulls_test") && p.endsWith("/mv")), paths)
       assert(!paths.exists(_.endsWith("/fact")), paths)
       assert(rewritten == plain)
@@ -289,7 +265,7 @@ class MvRewriteSpec extends SparkSpec {
         .groupBy(day.as("day"))
         .agg(avg(cents).as("a"), count(lit(1)).as("n"))
       val plain = rows(q)
-      val (rewritten, paths) = withMvRule { (rows(q), scans(q)) }
+      val (rewritten, paths) = (rows(mv(q)), scans(mv(q)))
       assert(paths.exists(_.contains("mv_tuple_test")), paths)
       assert(!paths.exists(_.contains("orders.parquet")), paths)
       assert(rewritten == plain)
@@ -301,7 +277,7 @@ class MvRewriteSpec extends SparkSpec {
     val q = Tables.orders(spark, dir)
       .groupBy(col("o_custkey"))
       .agg(expr("avg(DISTINCT CAST(floor(o_totalprice * 100) AS LONG))").as("a"))
-    val paths = withMvRule { scans(q) }
+    val paths = scans(mv(q))
     assert(paths.exists(_.contains("orders.parquet")), paths)
   }
 
@@ -325,7 +301,7 @@ class MvRewriteSpec extends SparkSpec {
         .agg(count(lit(1)).as("n"), sum(cents).as("s"),
           min(cents).as("lo"), max(cents).as("hi"), avg(cents).as("a"))
       val plain = rows(q)
-      val (rewritten, paths) = withMvRule { (rows(q), scans(q)) }
+      val (rewritten, paths) = (rows(mv(q)), scans(mv(q)))
       assert(paths.exists(_.contains("mv_joined_law")), paths)
       assert(!paths.exists(p =>
         p.contains("orders.parquet") || p.contains("customer.parquet")), paths)
@@ -340,7 +316,7 @@ class MvRewriteSpec extends SparkSpec {
         .groupBy(col("c_nationkey"))
         .agg(count(lit(1)).as("n"), sum(cents).as("s"))
       val plain = rows(q)
-      val (rewritten, paths) = withMvRule { (rows(q), scans(q)) }
+      val (rewritten, paths) = (rows(mv(q)), scans(mv(q)))
       assert(paths.exists(_.contains("mv_joined_law")), paths)
       assert(!paths.exists(p =>
         p.contains("orders.parquet") || p.contains("customer.parquet")), paths)
@@ -355,7 +331,7 @@ class MvRewriteSpec extends SparkSpec {
         .filter(col("c_nationkey") % 5 === 2)
         .agg(count(lit(1)).as("n"), sum(cents).as("s"))
       val plain = rows(q)
-      val (rewritten, paths) = withMvRule { (rows(q), scans(q)) }
+      val (rewritten, paths) = (rows(mv(q)), scans(mv(q)))
       assert(paths.exists(_.contains("mv_joined_law")), paths)
       assert(!paths.exists(p =>
         p.contains("orders.parquet") || p.contains("customer.parquet")), paths)
@@ -371,7 +347,7 @@ class MvRewriteSpec extends SparkSpec {
         .join(Tables.customer(spark, dir), col("o_custkey") === col("c_nationkey"))
         .groupBy(col("c_nationkey"))
         .agg(count(lit(1)).as("n"))
-      val paths = withMvRule { scans(q) }
+      val paths = scans(mv(q))
       assert(paths.exists(_.contains("orders.parquet")), paths)
     }
   }
@@ -383,7 +359,7 @@ class MvRewriteSpec extends SparkSpec {
           col("o_custkey") === col("c_custkey"), "left")
         .groupBy(col("c_nationkey"))
         .agg(count(lit(1)).as("n"))
-      val paths = withMvRule { scans(q) }
+      val paths = scans(mv(q))
       assert(paths.exists(_.contains("orders.parquet")), paths)
     }
   }
@@ -395,13 +371,13 @@ class MvRewriteSpec extends SparkSpec {
         .join(Tables.customer(spark, dir), col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_nationkey"))
         .agg(count(lit(1)).as("n"))
-      assert(withMvRule(scans(q1)).exists(_.contains("orders.parquet")))
+      assert(scans(mv(q1)).exists(_.contains("orders.parquet")))
       val q2 = Tables.orders(spark, dir)
         .join(Tables.customer(spark, dir).filter(col("c_acctbal") > 0),
           col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_nationkey"))
         .agg(count(lit(1)).as("n"))
-      assert(withMvRule(scans(q2)).exists(_.contains("orders.parquet")))
+      assert(scans(mv(q2)).exists(_.contains("orders.parquet")))
     }
   }
 
@@ -413,7 +389,7 @@ class MvRewriteSpec extends SparkSpec {
       val q = Tables.orders(spark, dir)
         .groupBy(col("o_custkey"))
         .agg(sum(cents).as("s"))
-      val paths = withMvRule { scans(q) }
+      val paths = scans(mv(q))
       // an earlier-registered SINGLE-table MV (s30's, JVM-global) may
       // legitimately answer this — the law is only that the JOINED
       // rollup never does
@@ -430,7 +406,7 @@ class MvRewriteSpec extends SparkSpec {
       .agg(count(lit(1)).as("n_orders"), sum(cents).as("s"))
       .filter(col("n_orders") >= 2 && col("s") > 0)
     val plain = rows(q)
-    val (rewritten, paths) = withMvRule { (rows(q), scans(q)) }
+    val (rewritten, paths) = (rows(mv(q)), scans(mv(q)))
     assert(paths.exists(_.contains("mv_orders")), paths)
     assert(!paths.exists(_.contains("orders.parquet")), paths)
     assert(rewritten == plain)
@@ -469,10 +445,10 @@ class MvRewriteSpec extends SparkSpec {
       val plain = rows(q)
       MvCatalog.save(spark, base + "/catalog")
       MvCatalog.unregister("test_meta_daily")
-      val dead = withMvRule { scans(q) }
+      val dead = scans(mv(q))
       assert(dead.exists(_.contains("orders.parquet")), dead)
       MvCatalog.load(spark, base + "/catalog")
-      val (rewritten, paths) = withMvRule { (rows(q), scans(q)) }
+      val (rewritten, paths) = (rows(mv(q)), scans(mv(q)))
       assert(paths.exists(_.contains("mv_meta_law")), paths)
       assert(!paths.exists(_.contains("orders.parquet")), paths)
       assert(rewritten == plain)
@@ -489,9 +465,9 @@ class MvRewriteSpec extends SparkSpec {
       val plain = rows(q)
       MvCatalog.save(spark, base + "/catalog")
       MvCatalog.unregister("test_joined_mv")
-      assert(withMvRule { scans(q) }.exists(_.contains("orders.parquet")))
+      assert(scans(mv(q)).exists(_.contains("orders.parquet")))
       MvCatalog.load(spark, base + "/catalog")
-      val (rewritten, paths) = withMvRule { (rows(q), scans(q)) }
+      val (rewritten, paths) = (rows(mv(q)), scans(mv(q)))
       assert(paths.exists(_.contains("mv_joined_law")), paths)
       assert(!paths.exists(p =>
         p.contains("orders.parquet") || p.contains("customer.parquet")), paths)
@@ -517,7 +493,7 @@ class MvRewriteSpec extends SparkSpec {
         .agg(count(lit(1)).as("n"), sum(cents).as("s"),
           min(cents).as("lo"), max(cents).as("hi"))
       val plain = rows(q)
-      val (rewritten, paths) = withMvRule { (rows(q), scans(q)) }
+      val (rewritten, paths) = (rows(mv(q)), scans(mv(q)))
       assert(paths.exists(_.contains("mv_cost_coarse")), paths)
       assert(!paths.exists(_.contains("mv_cost_fine")), paths)
       assert(!paths.exists(_.contains("orders.parquet")), paths)
@@ -543,7 +519,7 @@ class MvRewriteSpec extends SparkSpec {
         .groupBy(day.as("day"))
         .agg(count(lit(1)).as("n"), sum(cents).as("s"))
       val plain = rows(q)
-      val (rewritten, paths) = withMvRule { (rows(q), scans(q)) }
+      val (rewritten, paths) = (rows(mv(q)), scans(mv(q)))
       assert(paths.exists(_.contains("mv_cost_fine2")), paths)
       assert(!paths.exists(_.contains("mv_cost_coarse2")), paths)
       assert(!paths.exists(_.contains("orders.parquet")), paths)
@@ -556,14 +532,9 @@ class MvRewriteSpec extends SparkSpec {
 
   test("disabled conf leaves every plan untouched even with MVs registered") {
     mvReady()
-    // rule attached but conf NOT set: EnabledKey defaults to false
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ MvRewriteRule
-    try {
-      val paths = scans(ParityQueries.s30UserQuery(spark, dir))
-      assert(paths.exists(_.contains("orders.parquet")), paths)
-    } finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ eq MvRewriteRule)
+    // the product session carries the rule; EnabledKey defaults to false
+    val paths = scans(ParityQueries.s30UserQuery(spark, dir))
+    assert(paths.exists(_.contains("orders.parquet")), paths)
   }
 
   // ---- the exactness-gated count-DISTINCT leg (s50, r15 VERDICT #2) ----
@@ -585,7 +556,7 @@ class MvRewriteSpec extends SparkSpec {
   test("NDV rewrite: sketch scan substituted, count(DISTINCT) bit-identical") {
     withNdvMv(4096) { _ =>
       val plain = rows(ndvQuery)
-      val (rewritten, paths) = withMvRule { (rows(ndvQuery), scans(ndvQuery)) }
+      val (rewritten, paths) = (rows(mv(ndvQuery)), scans(mv(ndvQuery)))
       assert(paths.exists(_.contains("ndv_mv_test")), paths)
       assert(!paths.exists(_.contains("orders.parquet")), paths)
       assert(rewritten == plain)
@@ -600,7 +571,7 @@ class MvRewriteSpec extends SparkSpec {
         .groupBy(date_trunc("MONTH", col("o_orderdate")).as("month"))
         .agg(countDistinct(col("o_custkey")).as("n_cust"))
       val plain = rows(q)
-      val (rewritten, paths) = withMvRule { (rows(q), scans(q)) }
+      val (rewritten, paths) = (rows(mv(q)), scans(mv(q)))
       assert(paths.exists(_.contains("ndv_mv_test")), paths)
       assert(!paths.exists(_.contains("orders.parquet")), paths)
       assert(rewritten == plain)
@@ -611,7 +582,7 @@ class MvRewriteSpec extends SparkSpec {
     // k = 2 saturates every month at sf0.001; register must flag it
     // and the rewrite must leave the fact scan rather than estimate
     withNdvMv(2) { _ =>
-      val paths = withMvRule { scans(ndvQuery) }
+      val paths = scans(mv(ndvQuery))
       assert(paths.exists(_.contains("orders.parquet")), paths)
     }
   }
@@ -622,7 +593,7 @@ class MvRewriteSpec extends SparkSpec {
     withNdvMv(4096) { _ =>
       val q = Tables.orders(spark, dir)
         .agg(countDistinct(col("o_custkey")).as("n_cust"))
-      val paths = withMvRule { scans(q) }
+      val paths = scans(mv(q))
       assert(paths.exists(_.contains("orders.parquet")), paths)
     }
   }
@@ -632,7 +603,7 @@ class MvRewriteSpec extends SparkSpec {
       val q = Tables.orders(spark, dir)
         .groupBy(date_trunc("MONTH", col("o_orderdate")).as("month"))
         .agg(countDistinct(col("o_orderpriority")).as("nd"))
-      val paths = withMvRule { scans(q) }
+      val paths = scans(mv(q))
       assert(paths.exists(_.contains("orders.parquet")), paths)
     }
   }
@@ -647,12 +618,12 @@ class MvRewriteSpec extends SparkSpec {
     try {
       def q: DataFrame = fact.groupBy(col("g"))
         .agg(countDistinct(col("id")).as("nd"))
-      assert(withMvRule { !scans(q).exists(_.contains("/fact")) },
+      assert(!scans(mv(q)).exists(_.contains("/fact")),
         "fresh snapshot should rewrite")
       Seq((9L, "a")).toDF("id", "g").write.mode("append").parquet(base + "/fact")
-      assert(withMvRule { scans(q).exists(_.contains("/fact")) },
+      assert(scans(mv(q)).exists(_.contains("/fact")),
         "drifted fact files must keep the fact scan")
-      assert(withMvRule { rows(q) } == rows(q), "post-drift answer stays correct")
+      assert(rows(mv(q)) == rows(q), "post-drift answer stays correct")
     } finally NdvCatalog.unregister("law_ndv_stale")
   }
 
@@ -665,10 +636,10 @@ class MvRewriteSpec extends SparkSpec {
     try {
       def q: DataFrame = fact.groupBy(col("g"))
         .agg(count(lit(1)).as("n"), sum(col("m")).as("s"))
-      assert(withMvRule { !scans(q).exists(_.endsWith("/fact")) },
+      assert(!scans(mv(q)).exists(_.endsWith("/fact")),
         "fresh snapshot should rewrite")
       Seq((9L, "a")).toDF("m", "g").write.mode("append").parquet(base + "/fact")
-      val (rewritten, paths) = withMvRule { (rows(q), scans(q)) }
+      val (rewritten, paths) = (rows(mv(q)), scans(mv(q)))
       assert(paths.exists(_.endsWith("/fact")),
         s"a drifted fact must keep the fact scan, not serve the stale rollup; scans: $paths")
       assert(rewritten == rows(q))
@@ -690,12 +661,12 @@ class MvRewriteSpec extends SparkSpec {
     try {
       def q: DataFrame = fact.join(dim, col("fk") === col("dk"))
         .groupBy(col("seg")).agg(count(lit(1)).as("n"), sum(col("m")).as("s"))
-      assert(withMvRule { !scans(q).exists(_.endsWith("/dim")) },
+      assert(!scans(mv(q)).exists(_.endsWith("/dim")),
         "fresh snapshot should rewrite")
       // only the DIM drifts: its new row joins an existing fact row, so
       // the stored rollup is stale although the fact files are unchanged
       Seq((3L, "x")).toDF("dk", "seg").write.mode("append").parquet(base + "/dim")
-      val (rewritten, paths) = withMvRule { (rows(q), scans(q)) }
+      val (rewritten, paths) = (rows(mv(q)), scans(mv(q)))
       assert(paths.exists(_.endsWith("/dim")) && paths.exists(_.endsWith("/fact")),
         s"a drifted dim must keep the join, not serve the stale rollup; scans: $paths")
       assert(rewritten == rows(q))
@@ -720,7 +691,7 @@ class MvRewriteSpec extends SparkSpec {
       def q: DataFrame = fact.groupBy(col("g"))
         .agg(countDistinct(col("id")).as("nd"))
       val plain = rows(q)
-      val (rewritten, paths) = withMvRule { (rows(q), scans(q)) }
+      val (rewritten, paths) = (rows(mv(q)), scans(mv(q)))
       assert(!paths.exists(_.contains("/fact")), paths)
       assert(rewritten == plain)
       // the law is not vacuous: a NULL-key group and a zero-NDV group
@@ -751,14 +722,14 @@ class MvRewriteSpec extends SparkSpec {
       // drift while "down": a new distinct id lands in group a
       Seq((9L, "a")).toDF("id", "g").write.mode("append").parquet(base + "/fact")
       NdvCatalog.load(spark, base + "/catalog")
-      val (rewritten, paths) = withMvRule { (rows(q), scans(q)) }
+      val (rewritten, paths) = (rows(mv(q)), scans(mv(q)))
       assert(paths.exists(_.contains("/fact")),
         "a stale NDV artifact must never answer the query")
       assert(rewritten == rows(q))
       // and a REBUILD over the drifted fact restores the rewrite
       NdvCatalog.create(spark, "law_ndv_meta", fact,
         Seq(col("g") -> "g"), col("id"), 64, base + "/mv")
-      val paths2 = withMvRule { scans(q) }
+      val paths2 = scans(mv(q))
       assert(!paths2.exists(_.contains("/fact")), paths2)
     } finally NdvCatalog.unregister("law_ndv_meta")
   }
@@ -781,15 +752,38 @@ class MvRewriteSpec extends SparkSpec {
         p => NdvCatalog.registerBitmap(spark, "law_ndv_doubled", fact, keys, col("id"), p)))
     for ((kind, create, register) <- kinds) try {
       create(s"$base/$kind")
-      assert(withMvRule { !scans(q).exists(_.endsWith("/fact")) }, s"$kind: the built artifact rewrites")
+      assert(!scans(mv(q)).exists(_.endsWith("/fact")), s"$kind: the built artifact rewrites")
       val once = spark.read.parquet(s"$base/$kind")
       once.union(once).write.mode("overwrite").parquet(s"$base/${kind}_twice")
       register(s"$base/${kind}_twice")
-      val (got, paths) = withMvRule { (rows(q), scans(q)) }
+      val (got, paths) = (rows(mv(q)), scans(mv(q)))
       assert(paths.exists(_.endsWith("/fact")),
         s"$kind: a doubled artifact must keep the fact scan; scans: $paths")
       assert(got == plain)
     } finally NdvCatalog.unregister("law_ndv_doubled")
+  }
+
+  test("NDV proof: a foreign bitmap artifact with the right counts but other ids never answers") {
+    // per group the stored cardinality equals the fact's distinct count
+    // (a: 3, b: 1), but the ids differ (99 for 5), so the coarsened
+    // global count(DISTINCT) would union to 3 where the fact holds 4
+    val base = graft.ops.Sink.scratchDir("ndv_foreign_ids_law")
+    Seq((1L, "a"), (2L, "a"), (5L, "a"), (99L, "b")).toDF("id", "g")
+      .write.mode("overwrite").parquet(base + "/fact")
+    graft.ops.Materialize.bitmapSketch(
+      Seq((1L, "a"), (2L, "a"), (99L, "a"), (99L, "b")).toDF("id", "g"), Seq("g"), "id")
+      .write.mode("overwrite").parquet(base + "/bm")
+    def fact = spark.read.parquet(base + "/fact")
+    NdvCatalog.registerBitmap(spark, "law_ndv_foreign_ids", fact,
+      Seq(col("g") -> "g"), col("id"), base + "/bm")
+    try {
+      def q: DataFrame = fact.agg(countDistinct(col("id")).as("nd"))
+      val (got, paths) = (rows(mv(q)), scans(mv(q)))
+      assert(paths.exists(_.endsWith("/fact")),
+        s"a bitmap artifact holding other ids must keep the fact scan; scans: $paths")
+      assert(got == rows(q))
+      assert(got == Seq(Seq(4L)))
+    } finally NdvCatalog.unregister("law_ndv_foreign_ids")
   }
 
   test("ndvSketchExact merge law: base ⊕ delta ≡ whole-table rebuild, empty groups kept") {
@@ -821,14 +815,14 @@ class MvRewriteSpec extends SparkSpec {
     NdvCatalog.create(spark, "test_bm_kmv", Tables.orders(spark, dir),
       Seq(col("o_orderpriority") -> "prio"), col("o_custkey"), 64, base + "/kmv")
     try {
-      assert(withMvRule { scans(q).exists(_.contains("orders.parquet")) },
+      assert(scans(mv(q)).exists(_.contains("orders.parquet")),
         "saturated KMV must leave the fact scan")
     } finally NdvCatalog.unregister("test_bm_kmv")
     NdvCatalog.createBitmap(spark, "test_bm", Tables.orders(spark, dir),
       Seq(col("o_orderpriority") -> "prio"), col("o_custkey"), base + "/bm")
     try {
       val plain = rows(q)
-      val (rewritten, paths) = withMvRule { (rows(q), scans(q)) }
+      val (rewritten, paths) = (rows(mv(q)), scans(mv(q)))
       assert(paths.exists(_.contains("bm_mv_test")), paths)
       assert(!paths.exists(_.contains("orders.parquet")), paths)
       assert(rewritten == plain)
@@ -845,18 +839,18 @@ class MvRewriteSpec extends SparkSpec {
     try {
       def q: DataFrame = fact.groupBy(col("g"))
         .agg(countDistinct(col("id")).as("nd"))
-      assert(withMvRule { !scans(q).exists(_.contains("/fact")) },
+      assert(!scans(mv(q)).exists(_.contains("/fact")),
         "fresh snapshot should rewrite")
       // drift the fact under the same directory: snapshot mismatch
       Seq((9L, "a")).toDF("id", "g").write.mode("append").parquet(base + "/fact")
-      val paths = withMvRule { scans(q) }
+      val paths = scans(mv(q))
       assert(paths.exists(_.contains("/fact")),
         s"drifted fact must disqualify the bitmap rewrite; scans: $paths")
       // re-create against today's files: validation re-proves, rewrite
       // returns, and the answer includes the appended row
       NdvCatalog.createBitmap(spark, "law_bm_stale", fact,
         Seq(col("g") -> "g"), col("id"), base + "/mv")
-      val (vals, paths2) = withMvRule { (rows(q), scans(q)) }
+      val (vals, paths2) = (rows(mv(q)), scans(mv(q)))
       assert(!paths2.exists(_.contains("/fact")), paths2)
       assert(vals == Seq(Seq("a", 3L), Seq("b", 1L)))
     } finally NdvCatalog.unregister("law_bm_stale")
@@ -876,11 +870,11 @@ class MvRewriteSpec extends SparkSpec {
         .agg(countDistinct(col("o_custkey")).as("n_total"))
       val plainP = rows(byPrio)
       val plainG = rows(global)
-      val (gotP, pathsP) = withMvRule { (rows(byPrio), scans(byPrio)) }
+      val (gotP, pathsP) = (rows(mv(byPrio)), scans(mv(byPrio)))
       assert(pathsP.exists(_.contains("bm_coarsen_test")), pathsP)
       assert(!pathsP.exists(_.contains("orders.parquet")), pathsP)
       assert(gotP == plainP)
-      val (gotG, pathsG) = withMvRule { (rows(global), scans(global)) }
+      val (gotG, pathsG) = (rows(mv(global)), scans(mv(global)))
       assert(!pathsG.exists(_.contains("orders.parquet")), pathsG)
       assert(gotG == plainG)
       // the EXACT grain still takes the cheap per-row path and agrees
@@ -889,7 +883,7 @@ class MvRewriteSpec extends SparkSpec {
           col("o_orderpriority").as("prio"))
         .agg(countDistinct(col("o_custkey")).as("n_cust"))
       val plainE = rows(exactGrain)
-      val (gotE, pathsE) = withMvRule { (rows(exactGrain), scans(exactGrain)) }
+      val (gotE, pathsE) = (rows(mv(exactGrain)), scans(mv(exactGrain)))
       assert(!pathsE.exists(_.contains("orders.parquet")), pathsE)
       assert(gotE == plainE)
     } finally NdvCatalog.unregister("test_bm_coarsen")
@@ -905,7 +899,7 @@ class MvRewriteSpec extends SparkSpec {
       val q = Tables.orders(spark, dir)
         .groupBy(col("o_orderpriority").as("prio"))
         .agg(countDistinct(col("o_custkey")).as("n_cust"))
-      val paths = withMvRule { scans(q) }
+      val paths = scans(mv(q))
       assert(paths.exists(_.contains("orders.parquet")), paths)
     } finally NdvCatalog.unregister("test_kmv_lock")
   }
@@ -922,10 +916,10 @@ class MvRewriteSpec extends SparkSpec {
     try {
       def q: DataFrame = fact.groupBy(col("g"))
         .agg(countDistinct(col("id")).as("nd"))
-      assert(withMvRule { scans(q).exists(_.contains("/fact")) },
+      assert(scans(mv(q)).exists(_.contains("/fact")),
         "unregistered definition must not rewrite")
       NdvCatalog.load(spark, base + "/catalog")
-      val (vals, paths) = withMvRule { (rows(q), scans(q)) }
+      val (vals, paths) = (rows(mv(q)), scans(mv(q)))
       assert(!paths.exists(_.contains("/fact")), paths)
       assert(vals == Seq(Seq("a", 2L), Seq("b", 1L)))
     } finally NdvCatalog.unregister("law_bm_meta")

@@ -366,19 +366,16 @@ class OpsSpec extends SparkSpec {
     Sink.writeBucketed(right, "bkt_right", Seq("k"), 4)
     // disable tiny-table auto-broadcast so the test exercises the
     // SortMergeJoin path bucketing exists for
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table("bkt_left").join(spark.table("bkt_right"), Seq("k"))
-      assert(joined.count() == 1000)
-      // AQE's toString appends the pre-optimization "Initial Plan" —
-      // judge only the Final Plan section
-      val planStr = joined.queryExecution.executedPlan.toString
-      val finalSection = planStr.split("== Initial Plan ==").head
-      assert(finalSection.contains("SortMergeJoin"), s"expected SMJ:\n$planStr")
-      assert(!finalSection.contains("Exchange"),
-        s"bucketed join should not shuffle:\n$planStr")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    val s = GraftSession.scoped(spark, Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1"))
+    val joined = s.table("bkt_left").join(s.table("bkt_right"), Seq("k"))
+    assert(joined.count() == 1000)
+    // AQE's toString appends the pre-optimization "Initial Plan" —
+    // judge only the Final Plan section
+    val planStr = joined.queryExecution.executedPlan.toString
+    val finalSection = planStr.split("== Initial Plan ==").head
+    assert(finalSection.contains("SortMergeJoin"), s"expected SMJ:\n$planStr")
+    assert(!finalSection.contains("Exchange"),
+      s"bucketed join should not shuffle:\n$planStr")
   }
 
   // ---- J6: binned range join semantics ----------------------------------

@@ -104,8 +104,7 @@ class ParquetReadSpec extends SparkSpec {
       "spark.sql.legacy.parquet.nanosAsLong" -> "false",
       "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
       "spark.sql.parquet.binaryAsString" -> "true")) {
-      val s = spark.newSession()
-      s.conf.set(k, v)
+      val s = GraftSession.scoped(spark, Seq(k -> v))
       for (d <- sfDirs; t <- tables) agree(s, s"$d/$t.parquet")
       dirs.foreach(agree(s, _))
     }
@@ -113,8 +112,7 @@ class ParquetReadSpec extends SparkSpec {
     // (TIMESTAMP(MICROS), not adjusted to UTC) reads as NTZ only while
     // NTZ inference is on
     val events = s"${sfDirs.head}/events.parquet"
-    val s = spark.newSession()
-    s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    val s = GraftSession.scoped(spark, Seq("spark.sql.parquet.inferTimestampNTZ.enabled" -> "false"))
     assert(Ingest.parquet(spark, events).schema("ts").dataType.simpleString === "timestamp_ntz")
     assert(Ingest.parquet(s, events).schema("ts").dataType.simpleString === "timestamp")
   }

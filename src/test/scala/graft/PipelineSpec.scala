@@ -154,8 +154,7 @@ class PipelineSpec extends SparkSpec {
     }
     // with the threshold off, the cache keeps the scan's partitioning
     // and the shuffled interactions keep their Exchanges
-    val unbounded = spark.newSession()
-    unbounded.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val unbounded = GraftSession.scoped(spark, Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1"))
     val partitioned = session(unbounded)
     for (name <- Seq("total", "avg", "by_state", "by_ownership"))
       assert(partitioned(name)._1 > 0, s"$name lost its Exchange with the threshold off")

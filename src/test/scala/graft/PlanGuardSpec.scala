@@ -90,22 +90,20 @@ class PlanGuardSpec extends SparkSpec {
   }
 
   test("j8_range_auto: RangeJoinRule rewrites the bare theta-join") {
-    // the registered query is a bare BETWEEN theta-join; with the rule
-    // installed (as the Verify/Bench driver sessions install it via
-    // GraftExtensions) it must plan as the binned equi-join, and the
-    // result must be identical to the un-rewritten nested-loop plan
-    val naive = SparkEntry.queries("j8_range_auto")(spark, dir)
-      .collect().map(_.toString).sorted.toSeq
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.RangeJoinRule
-    try {
-      val df = SparkEntry.queries("j8_range_auto")(spark, dir)
-      val p = df.queryExecution.executedPlan.toString
-      assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
-      assert(p.contains("Generate"), p) // the interval bin explode
-      assert(df.collect().map(_.toString).sorted.toSeq == naive)
-    } finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ eq graft.plans.RangeJoinRule)
+    // the registered query is a bare BETWEEN theta-join; the product
+    // session's rule (GraftExtensions) must plan it as the binned
+    // equi-join, and the result must be identical to the un-rewritten
+    // nested-loop plan
+    val theta = SparkEntry.queries("j8_range_auto")(
+      GraftSession.scoped(spark, TestSpark.naiveRangeJoin), dir)
+    val thetaPlan = theta.queryExecution.executedPlan.toString
+    assert(thetaPlan.contains("BroadcastNestedLoopJoin"), thetaPlan)
+    val naive = theta.collect().map(_.toString).sorted.toSeq
+    val df = SparkEntry.queries("j8_range_auto")(spark, dir)
+    val p = df.queryExecution.executedPlan.toString
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
+    assert(p.contains("Generate"), p) // the interval bin explode
+    assert(df.collect().map(_.toString).sorted.toSeq == naive)
   }
 
   test("e3_knn_graph: probe is a bare edge-table scan; build scores inside LSH buckets") {
@@ -344,31 +342,21 @@ class PlanGuardSpec extends SparkSpec {
     // to fire on test data; broadcast must be off or the join never
     // shuffles at all.
     import org.apache.spark.sql.functions.col
-    val saved = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.optimizer.runtime.bloomFilter.enabled",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-      .map(k => k -> spark.conf.getOption(k))
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100MB")
-      spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-      val fact = Tables.lineitem(spark, dir)
-      val dim = Tables.orders(spark, dir)
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_orderkey").as("l_orderkey"), col("o_totalprice"))
-      val p = fact.join(dim, Seq("l_orderkey"))
-        .queryExecution.executedPlan.toString
-      // creation side: bloom_filter_agg over the filtered dim keys;
-      // application side: might_contain(...) as a fact-side filter
-      assert(p.contains("bloom_filter_agg"), p)
-      assert(p.contains("might_contain"), p)
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+    val s = GraftSession.scoped(spark, Seq(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0"))
+    val fact = Tables.lineitem(s, dir)
+    val dim = Tables.orders(s, dir)
+      .filter(col("o_orderpriority") === "1-URGENT")
+      .select(col("o_orderkey").as("l_orderkey"), col("o_totalprice"))
+    val p = fact.join(dim, Seq("l_orderkey"))
+      .queryExecution.executedPlan.toString
+    // creation side: bloom_filter_agg over the filtered dim keys;
+    // application side: might_contain(...) as a fact-side filter
+    assert(p.contains("bloom_filter_agg"), p)
+    assert(p.contains("might_contain"), p)
   }
 
   test("e7_reservoir: WindowGroupLimit prunes each map task to k before the shuffle") {
@@ -415,31 +403,22 @@ class PlanGuardSpec extends SparkSpec {
     // matching build side — the remedy a 100 TB deployment relies on
     // when the hot key isn't known at write time.
     import org.apache.spark.sql.functions.{col, lit, when}
-    val conf = spark.conf
-    val prev = conf.get("spark.sql.autoBroadcastJoinThreshold")
-    conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-    conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32KB")
-    conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16KB")
-    conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try {
-      // 8k rows on ONE key vs 2k spread over 200 keys
-      val left = spark.range(10000).select(
-        when(col("id") < 8000, lit(0L)).otherwise(col("id") % 200 + 1).as("k"),
-        col("id").as("lv"))
-      val right = spark.range(1000).select((col("id") % 201).as("k"), col("id").as("rv"))
-      val joined = left.join(right, Seq("k"))
-      joined.collect() // adaptive re-plan happens during execution
-      val p = joined.queryExecution.executedPlan.toString
-      assert(p.contains("isFinalPlan=true"), p)
-      assert(p.contains("skew=true"), s"AQE did not mark the skewed join:\n$p")
-    } finally {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      conf.unset("spark.sql.adaptive.skewJoin.skewedPartitionFactor")
-      conf.unset("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes")
-      conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-      conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
-    }
+    val s = GraftSession.scoped(spark, Seq(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false"))
+    // 8k rows on ONE key vs 2k spread over 200 keys
+    val left = s.range(10000).select(
+      when(col("id") < 8000, lit(0L)).otherwise(col("id") % 200 + 1).as("k"),
+      col("id").as("lv"))
+    val right = s.range(1000).select((col("id") % 201).as("k"), col("id").as("rv"))
+    val joined = left.join(right, Seq("k"))
+    joined.collect() // adaptive re-plan happens during execution
+    val p = joined.queryExecution.executedPlan.toString
+    assert(p.contains("isFinalPlan=true"), p)
+    assert(p.contains("skew=true"), s"AQE did not mark the skewed join:\n$p")
   }
 
   test("AQE converts a statically-planned SortMergeJoin to broadcast at runtime") {
@@ -448,26 +427,21 @@ class PlanGuardSpec extends SparkSpec {
     // small build side and convert. This is the adaptivity a 100 TB
     // deployment leans on when filter selectivity is unknowable at
     // plan time.
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     // the runtime threshold FALLS BACK to the static one unless set:
     // leave static off, allow adaptive
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "10MB")
-    try {
-      val fact = Tables.lineitem(spark, dir)
-      val dim = Tables.orders(spark, dir)
-        .filter(org.apache.spark.sql.functions.col("o_orderpriority") === "1-URGENT")
-        .select(org.apache.spark.sql.functions.col("o_orderkey").as("l_orderkey"),
-          org.apache.spark.sql.functions.col("o_totalprice"))
-      val joined = fact.join(dim, Seq("l_orderkey"))
-      joined.collect() // adaptive re-plan happens during execution
-      val p = joined.queryExecution.executedPlan.toString
-      assert(p.contains("AdaptiveSparkPlan isFinalPlan=true"), p)
-      assert(p.contains("BroadcastHashJoin"), s"AQE did not convert to broadcast:\n$p")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    }
+    val s = GraftSession.scoped(spark, Seq(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "10MB"))
+    val fact = Tables.lineitem(s, dir)
+    val dim = Tables.orders(s, dir)
+      .filter(org.apache.spark.sql.functions.col("o_orderpriority") === "1-URGENT")
+      .select(org.apache.spark.sql.functions.col("o_orderkey").as("l_orderkey"),
+        org.apache.spark.sql.functions.col("o_totalprice"))
+    val joined = fact.join(dim, Seq("l_orderkey"))
+    joined.collect() // adaptive re-plan happens during execution
+    val p = joined.queryExecution.executedPlan.toString
+    assert(p.contains("AdaptiveSparkPlan isFinalPlan=true"), p)
+    assert(p.contains("BroadcastHashJoin"), s"AQE did not convert to broadcast:\n$p")
   }
 
   test("e5_bpe_apply: the returned frame tokenizes the corpus ONCE; vocab comes from cache") {

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import scala.util.Random
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.plans.RangeJoinRule
@@ -29,21 +30,23 @@ class RangeJoinRuleSpec extends SparkSpec {
     (points, intervals)
   }
 
-  private def withRule[T](body: => T): T = {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ RangeJoinRule
-    try body
-    finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ eq RangeJoinRule)
+  /** The un-rewritten join of `q`: the rule off, planned as the
+    * nested-loop join the rule replaces.
+    */
+  private def unbinned(q: DataFrame): Seq[(Long, Long)] = {
+    val df = under(TestSpark.naiveRangeJoin)(q)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastNestedLoopJoin"), s"the naive side was rewritten:\n$plan")
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
   }
 
   test("rule rewrites the range theta-join and preserves the result set") {
     val (points, intervals) = mkData(8)
     def q = points.join(intervals, col("ts") >= col("lo") && col("ts") <= col("hi"))
       .select("iid", "pid")
-    val naive = q.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val naive = unbinned(q)
     assert(naive.nonEmpty)
-    val (rewritten, plan) = withRule {
+    val (rewritten, plan) = {
       val df = q
       (df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq,
         df.queryExecution.executedPlan.toString)
@@ -56,19 +59,14 @@ class RangeJoinRuleSpec extends SparkSpec {
 
   test("rule respects the binSeconds conf and both join orientations") {
     val (points, intervals) = mkData(21)
-    val naive = points
+    val naive = unbinned(points
       .join(intervals, col("ts") >= col("lo") && col("ts") <= col("hi"))
-      .select("iid", "pid").collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    withRule {
-      spark.conf.set(RangeJoinRule.BinConfKey, "60")
-      try {
-        // intervals on the LEFT (flipped orientation)
-        val flipped = intervals
-          .join(points, col("ts") >= col("lo") && col("ts") <= col("hi"))
-          .select("iid", "pid").collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-        assert(flipped == naive)
-      } finally spark.conf.unset(RangeJoinRule.BinConfKey)
-    }
+      .select("iid", "pid"))
+    // intervals on the LEFT (flipped orientation)
+    val flipped = under(Seq(RangeJoinRule.BinConfKey -> "60"))(intervals
+      .join(points, col("ts") >= col("lo") && col("ts") <= col("hi"))
+      .select("iid", "pid")).collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    assert(flipped == naive)
   }
 
   test("rule fires on TIMESTAMP_NTZ attributes (the parquet-without-UTC read type)") {
@@ -82,9 +80,9 @@ class RangeJoinRuleSpec extends SparkSpec {
       .withColumn("hi", to_timestamp_ntz(col("hi")))
     def q = pNtz.join(iNtz, col("ts") >= col("lo") && col("ts") <= col("hi"))
       .select("iid", "pid")
-    val naive = q.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val naive = unbinned(q)
     assert(naive.nonEmpty)
-    val (rewritten, plan) = withRule {
+    val (rewritten, plan) = {
       val df = q
       (df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq,
         df.queryExecution.executedPlan.toString)
@@ -97,15 +95,13 @@ class RangeJoinRuleSpec extends SparkSpec {
 
   test("rule does not fire on joins outside the canonical shape") {
     val (points, intervals) = mkData(33)
-    withRule {
-      // extra conjunct -> whole condition is not the pure range shape
-      val df = points.join(intervals,
-        col("ts") >= col("lo") && col("ts") <= col("hi") && col("pid") =!= col("iid"))
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("BroadcastNestedLoopJoin")) // untouched
-      // left join -> untouched (rewrite is only proven for inner)
-      val lj = points.join(intervals, col("ts") >= col("lo") && col("ts") <= col("hi"), "left")
-      assert(lj.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"))
-    }
+    // extra conjunct -> whole condition is not the pure range shape
+    val df = points.join(intervals,
+      col("ts") >= col("lo") && col("ts") <= col("hi") && col("pid") =!= col("iid"))
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastNestedLoopJoin")) // untouched
+    // left join -> untouched (rewrite is only proven for inner)
+    val lj = points.join(intervals, col("ts") >= col("lo") && col("ts") <= col("hi"), "left")
+    assert(lj.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"))
   }
 }

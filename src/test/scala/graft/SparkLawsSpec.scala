@@ -99,8 +99,12 @@ class SparkLawsSpec extends SparkSpec {
       }.toDF("iid", "lo", "hi")
       val got = RangeJoin.pointInInterval(points, "ts", intervals, "lo", "hi", binSec)
         .select("iid", "pid").collect().map(x => (x.getLong(0), x.getLong(1))).sorted.toSeq
-      val naive = points.join(intervals, col("ts") >= col("lo") && col("ts") <= col("hi"))
-        .select("iid", "pid").collect().map(x => (x.getLong(0), x.getLong(1))).sorted.toSeq
+      // the rule off: the product session would bin this join too
+      val theta = under(TestSpark.naiveRangeJoin)(
+        points.join(intervals, col("ts") >= col("lo") && col("ts") <= col("hi")).select("iid", "pid"))
+      val plan = theta.queryExecution.executedPlan.toString
+      assert(plan.contains("BroadcastNestedLoopJoin"), plan)
+      val naive = theta.collect().map(x => (x.getLong(0), x.getLong(1))).sorted.toSeq
       assert(got == naive)
     }
   }
@@ -416,8 +420,6 @@ class SparkLawsSpec extends SparkSpec {
     def child = spark.read.parquet(base + "/child")
     def parent = spark.read.parquet(base + "/parent")
     FkCatalog.register(spark, "law_rand_fk", child, col("ck"), parent, col("pk"))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ JoinEliminationRule
     try {
       for (seed <- 1 to 10) {
         val r = new Random(seed)
@@ -440,22 +442,15 @@ class SparkLawsSpec extends SparkSpec {
         }
         val plain = q.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
         val (rewritten, scans) = {
-          spark.conf.set(JoinEliminationRule.EnabledKey, "true")
-          try {
-            val d = q
-            (d.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq,
-              graft.plans.DefCatalog.scanPaths(d.queryExecution.optimizedPlan))
-          } finally spark.conf.unset(JoinEliminationRule.EnabledKey)
+          val d = under(Seq(JoinEliminationRule.EnabledKey -> "true"))(q)
+          (d.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq,
+            graft.plans.DefCatalog.scanPaths(d.queryExecution.optimizedPlan))
         }
         assert(!scans.exists(_.contains("/parent")),
           s"seed=$seed leftJoin=$leftJoin shape=$shape did not eliminate: $scans")
         assert(rewritten == plain, s"seed=$seed leftJoin=$leftJoin shape=$shape")
       }
-    } finally {
-      FkCatalog.unregister("law_rand_fk")
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ eq JoinEliminationRule)
-    }
+    } finally FkCatalog.unregister("law_rand_fk")
   }
 
   test("law: MV rewrite equals the plain aggregate for random agg subsets and key filters") {
@@ -469,8 +464,6 @@ class SparkLawsSpec extends SparkSpec {
     def fact = spark.read.parquet(factDir)
     val mvPath = graft.ops.Sink.scratchDir("mv_law_rollup")
     MvCatalog.create(spark, "law_mv", fact, Seq(col("k") -> "k"), col("m"), mvPath)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ MvRewriteRule
     try {
       val allAggs = Seq(
         "n" -> count(lit(1)), "s" -> sum(col("m")),
@@ -485,20 +478,13 @@ class SparkLawsSpec extends SparkSpec {
         def q = base.groupBy(col("k")).agg(aggs.head, aggs.tail: _*)
         val plain = q.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
         val (rewritten, scans) = {
-          spark.conf.set(MvRewriteRule.EnabledKey, "true")
-          try {
-            val d = q
-            (d.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq,
-              DefCatalog.scanPaths(d.queryExecution.optimizedPlan))
-          } finally spark.conf.unset(MvRewriteRule.EnabledKey)
+          val d = under(Seq(MvRewriteRule.EnabledKey -> "true"))(q)
+          (d.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq,
+            DefCatalog.scanPaths(d.queryExecution.optimizedPlan))
         }
         assert(scans.exists(_.contains("mv_law_rollup")), s"seed=$seed did not rewrite: $scans")
         assert(rewritten == plain, s"seed=$seed")
       }
-    } finally {
-      MvCatalog.unregister("law_mv")
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ eq MvRewriteRule)
-    }
+    } finally MvCatalog.unregister("law_mv")
   }
 }

@@ -22,8 +22,12 @@ class NdvCatalogSpec extends SparkSpec {
       assert(exactOk, "the guard must time a registration that proves exactness")
       assert(created <= 3, s"NdvCatalog.create started $created jobs")
       NdvCatalog.save(spark, base + "/catalog")
+      // save writes every live definition, also those registry rows of
+      // an earlier suite left in this JVM: load this one alone
+      spark.read.parquet(base + "/catalog").filter(col("name") === name)
+        .write.mode("overwrite").parquet(base + "/one")
       NdvCatalog.unregister(name)
-      val (loaded, _) = jobsStarted(NdvCatalog.load(spark, base + "/catalog"))
+      val (loaded, _) = jobsStarted(NdvCatalog.load(spark, base + "/one"))
       assert(exactOk, "load must re-prove the definition")
       assert(loaded <= 5, s"NdvCatalog.load of one definition started $loaded jobs")
     } finally NdvCatalog.unregister(name)
