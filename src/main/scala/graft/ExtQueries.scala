@@ -111,13 +111,13 @@ object ExtQueries {
     val bandExprs = (0 until Bands).map { b =>
       s"array_to_string(sig[${b * RowsPerBand + 1}:${b * RowsPerBand + RowsPerBand}], '_')"
     }.mkString(", ")
-    // position-weighted sum of per-token md5 hashes over each 3-window
-    // (mirrors shingleHashesFromTokens)
-    val window = (0 until 3)
+    // position-weighted sum of per-token md5 hashes over each
+    // ShingleLen-window (mirrors shingleHashesFromTokens)
+    val window = (0 until ShingleLen)
       .map(j => s"((hs[i+$j] * ${mixConst(j)}) % $P)")
       .mkString("(", " + ", s") % $P")
     s"""${pfx}toks AS (SELECT doc_id, list_transform(string_split_regex(trim(text), '\\s+'), t -> ${md5IntTight("t")} % $P) hs FROM $rel),
-       |${pfx}hashed AS (SELECT doc_id, [$window for i in range(1, len(hs)-1)] ms FROM ${pfx}toks WHERE len(hs) >= 3),
+       |${pfx}hashed AS (SELECT doc_id, [$window for i in range(1, len(hs)-${ShingleLen - 2})] ms FROM ${pfx}toks WHERE len(hs) >= $ShingleLen),
        |${pfx}sigs AS (SELECT doc_id, [$sigElems] sig FROM ${pfx}hashed),
        |${pfx}bands AS (SELECT doc_id, sig, unnest(range($Bands)) bidx, unnest([$bandExprs]) bkey FROM ${pfx}sigs)""".stripMargin
   }
@@ -127,14 +127,19 @@ object ExtQueries {
     */
   private val e2BandPairs =
     "FROM bands a JOIN bands b ON a.bidx = b.bidx AND a.bkey = b.bkey AND a.doc_id < b.doc_id"
-
-  val e2Sql: String = {
+  /** The banded pair's Jaccard estimate: the share of agreeing
+    * signature positions of `a.sig` and `b.sig`, named `alias`.
+    */
+  private def e2JaccardEst(alias: String): String = {
     import MinHash._
+    s"CAST(list_sum(list_transform(range(1, ${NumHashes + 1}), i -> CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END)) AS DOUBLE) / $NumHashes.0 AS $alias"
+  }
+
+  val e2Sql: String =
     s"""$e2Ctes
        |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       |  CAST(list_sum(list_transform(range(1, ${NumHashes + 1}), i -> CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END)) AS DOUBLE) / $NumHashes.0 AS jaccard_est
+       |  ${e2JaccardEst("jaccard_est")}
        |$e2BandPairs""".stripMargin
-  }
 
   // ---- E2i: incremental near-dup — new batch vs standing corpus ------------
   // The corpus-growth shape: docs with id % 10 == 0 play the freshly
@@ -145,16 +150,14 @@ object ExtQueries {
   def e2Incremental(s: SparkSession, dir: String): DataFrame =
     MinHash.candidatePairsIncremental(
       Tables.documents(s, dir), col("doc_id") % 10 === 0, "doc_id", "text")
-  val e2iSql: String = {
-    import MinHash._
+  val e2iSql: String =
     s"""$e2Ctes
        |SELECT DISTINCT least(a.doc_id, b.doc_id) AS doc_a,
        |  greatest(a.doc_id, b.doc_id) AS doc_b,
-       |  CAST(list_sum(list_transform(range(1, ${NumHashes + 1}), i -> CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END)) AS DOUBLE) / $NumHashes.0 AS jaccard_est
+       |  ${e2JaccardEst("jaccard_est")}
        |FROM bands a JOIN bands b
        |  ON a.bidx = b.bidx AND a.bkey = b.bkey AND a.doc_id <> b.doc_id
        |WHERE b.doc_id % 10 = 0""".stripMargin
-  }
 
   // ---- E2s: persisted band-index lifecycle ---------------------------------
   // The near-dup index as a saved ARTIFACT ([[MinHash.writeBands]] /
@@ -262,10 +265,9 @@ object ExtQueries {
     * and e7_cluster_split both check against.
     */
   private val ccCompCtes: String = {
-    import MinHash.NumHashes
     s"""${e2Ctes.replaceFirst("^WITH ", "WITH RECURSIVE ")},
        |prs AS (SELECT DISTINCT a.doc_id AS a, b.doc_id AS b,
-       |  CAST(list_sum(list_transform(range(1, ${NumHashes + 1}), i -> CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END)) AS DOUBLE) / $NumHashes.0 AS est
+       |  ${e2JaccardEst("est")}
        |  $e2BandPairs),
        |edges AS (SELECT a, b FROM prs WHERE est >= $ClusterMinEst UNION ALL SELECT b, a FROM prs WHERE est >= $ClusterMinEst),
        |reach(src, dst) AS (SELECT doc_id, doc_id FROM documents UNION SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a),
@@ -314,10 +316,9 @@ object ExtQueries {
           .as("chars_removed"))
   }
   val e2nSql: String = {
-    import MinHash.NumHashes
     s"""${e2Ctes.replaceFirst("^WITH ", "WITH RECURSIVE ")},
        |prs AS (SELECT DISTINCT a.doc_id AS a, b.doc_id AS b,
-       |  CAST(list_sum(list_transform(range(1, ${NumHashes + 1}), i -> CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END)) AS DOUBLE) / $NumHashes.0 AS est
+       |  ${e2JaccardEst("est")}
        |  $e2BandPairs),
        |edges AS (SELECT a, b FROM prs WHERE est >= $ClusterMinEst UNION ALL SELECT b, a FROM prs WHERE est >= $ClusterMinEst),
        |nodes AS (SELECT DISTINCT a AS doc_id FROM edges),
@@ -353,7 +354,6 @@ object ExtQueries {
       .select(col("id").as("doc_id"), col("pr"))
   }
   lazy val e2pSql: String = {
-    import MinHash.NumHashes
     def iter(r: Int) =
       s"""c$r AS (SELECT e.dst AS id,
          |    ${toDec("p.pr / CAST(e.deg AS DOUBLE)")} AS cd
@@ -366,7 +366,7 @@ object ExtQueries {
     val iters = (1 to PrIters).map(r => "," + iter(r)).mkString("\n")
     s"""$e2Ctes,
        |prs AS (SELECT DISTINCT a.doc_id AS a, b.doc_id AS b,
-       |  CAST(list_sum(list_transform(range(1, ${NumHashes + 1}), i -> CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END)) AS DOUBLE) / $NumHashes.0 AS est
+       |  ${e2JaccardEst("est")}
        |  $e2BandPairs),
        |edg AS (SELECT a AS src, b AS dst FROM prs WHERE est >= $ClusterMinEst
        |  UNION ALL SELECT b, a FROM prs WHERE est >= $ClusterMinEst),
@@ -1440,7 +1440,6 @@ object ExtQueries {
     * survivors directly, the composed `e6_full_prep` keeps composing.
     */
   private lazy val e6CleanCtes: String = {
-    import MinHash.NumHashes
     def inList(xs: Seq[String]) = xs.map(w => s"'$w'").mkString("(", ", ", ")")
     val tk = "string_split_regex(trim(text), '\\s+')"
     def mc(xs: Seq[String]) = s"len(list_filter($tk, t -> t IN ${inList(xs)}))"
@@ -1454,7 +1453,7 @@ object ExtQueries {
        |  SELECT *, row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn FROM filt) WHERE rn = 1),
        |${e2CtesBodyFrom("exact")},
        |prs AS (SELECT DISTINCT a.doc_id AS a, b.doc_id AS b,
-       |  CAST(list_sum(list_transform(range(1, ${NumHashes + 1}), i -> CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END)) AS DOUBLE) / $NumHashes.0 AS est
+       |  ${e2JaccardEst("est")}
        |  $e2BandPairs),
        |edges AS (SELECT a, b FROM prs WHERE est >= $ClusterMinEst UNION ALL SELECT b, a FROM prs WHERE est >= $ClusterMinEst),
        |reach(src, dst) AS (SELECT doc_id, doc_id FROM exact UNION SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a),
@@ -1754,7 +1753,7 @@ object ExtQueries {
   // e5_bpe_train verifies the learned merge table and e5_bpe_tokens a
   // fixed pre-tokenizer; this is what a tokenizer pipeline actually
   // ships — the merges learned from THIS corpus applied back to it
-  // (Bpe.applyMerges), emitting per-document whitespace-token and
+  // (Bpe.applyMergesToWords), emitting per-document whitespace-token and
   // BPE-symbol counts. Encoding runs on the distinct-word frame
   // (merge application is frequency-independent), then the corpus
   // joins the word->symbol-count vocab on the word key — vocabulary-
@@ -2829,10 +2828,9 @@ object ExtQueries {
         col("n_chars"), col("cluster_size"))
   }
   val e2gSql: String = {
-    import MinHash.NumHashes
     s"""${e2Ctes.replaceFirst("^WITH ", "WITH RECURSIVE ")},
        |prs AS (SELECT DISTINCT a.doc_id AS a, b.doc_id AS b,
-       |  CAST(list_sum(list_transform(range(1, ${NumHashes + 1}), i -> CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END)) AS DOUBLE) / $NumHashes.0 AS est
+       |  ${e2JaccardEst("est")}
        |  $e2BandPairs),
        |edges AS (SELECT a, b FROM prs WHERE est >= $ClusterMinEst UNION ALL SELECT b, a FROM prs WHERE est >= $ClusterMinEst),
        |nodes AS (SELECT DISTINCT a AS doc_id FROM edges),
@@ -2851,7 +2849,7 @@ object ExtQueries {
   // d+1 when both pass a token-count gate) form long CHAINS — maximal
   // runs of consecutive qualifying ids — where min-label needs
   // O(chain length) rounds but alternating star contraction
-  // ([[Dedup.connectedComponentsStar]], Kiveris et al. SoCC'14)
+  // ([[Dedup.connectedComponentsStarWithRounds]], Kiveris et al. SoCC'14)
   // converges in O(log n). This registers the star path as a
   // driver-verified oracle query (the [[plans.RangeJoinRule]] →
   // j8_range_auto precedent): DuckDB computes the same components
@@ -3026,7 +3024,7 @@ object ExtQueries {
     val ssh = Tables.documents(s, dir)
       .select(col("source"),
         explode(MinHash.shingleHashesFromTokens(
-          TextOps.tokens(col("text")), 3)).as("sh"))
+          TextOps.tokens(col("text")), MinHash.ShingleLen)).as("sh"))
       .distinct()
     val cnt = ssh.groupBy(col("source")).agg(count(lit(1)).as("n"))
     val ix = ssh.select(col("source").as("src_a"), col("sh"))
@@ -3878,7 +3876,7 @@ object ExtQueries {
   // intersection-by-equi-join, and the identical double divisions.
   private val ContainTau = 0.5
   def e2Containment(s: SparkSession, dir: String): DataFrame =
-    MinHash.containmentPairs(Tables.documents(s, dir), "doc_id", "text", 3, ContainTau)
+    MinHash.containmentPairs(Tables.documents(s, dir), "doc_id", "text", ContainTau)
   val e2ctSql: String =
     s"""$e2Ctes,
        |msd AS (SELECT doc_id, list_distinct(ms) AS msd FROM hashed),

@@ -1333,8 +1333,7 @@ object ParityQueries {
   // ---- P8: data-profiling intake report ------------------------------------
   // One row per column: null + exact distinct counts over orders —
   // the feed-trust gate before any ETL run. Exact distincts use one
-  // pass with an Expand (rows × columns); Cleanse.profileApprox is
-  // the no-Expand HLL form for 100 TB (accuracy-asserted in OpsSpec).
+  // pass with an Expand (rows × columns).
   private val ProfileCols = Seq(
     "o_orderkey", "o_custkey", "o_orderstatus",
     "o_totalprice", "o_orderdate", "o_orderpriority")
@@ -2880,10 +2879,9 @@ object ParityQueries {
   // built-in bit ops ([[graft.ops.Layout]]). The registered query is
   // the locality profile itself: per coarse Z-bucket, the bounding
   // rectangle in (partkey, suppkey) — each bucket's min-max spans
-  // stay small, which is exactly the file-skipping contract. The
-  // physical write + per-file bounding-box evidence (Z-clustered
-  // files vs natural order) is asserted in LayoutSpec; the oracle
-  // replays the mask-shift ladder bit for bit.
+  // stay small, which is exactly the file-skipping contract.
+  // LayoutSpec pins `zorder2` against a per-bit reference Morton
+  // code; the oracle replays the mask-shift ladder bit for bit.
   def s10Zorder(s: SparkSession, dir: String): DataFrame = {
     import graft.ops.Layout
     Tables.lineitem(s, dir)
@@ -2998,7 +2996,7 @@ object ParityQueries {
 
   // ---- S18: bucketed tables — the shuffle-free co-located join ---------------
   // The third leg of the layout story (s9 prunes directories, s10
-  // orders within files): BUCKETING pre-shuffles a table ONCE at
+  // measures Z-order locality): BUCKETING pre-shuffles a table ONCE at
   // write into N hash buckets of the join key, so every later join
   // or aggregation on that key reads co-located buckets and skips
   // the exchange entirely — at 100 TB the difference between one
@@ -3028,14 +3026,12 @@ object ParityQueries {
       Sink.clearLocalPath(s"$wh/$t")
       Sink.cleanupAtExit(s"$wh/$t")
     }
-    Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_extendedprice"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable(lt)
-    Tables.orders(s, dir)
-      .select(col("o_orderkey"), col("o_custkey"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable(ot)
+    Sink.writeBucketed(
+      Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_extendedprice")),
+      lt, Seq("l_orderkey"), 8)
+    Sink.writeBucketed(
+      Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
+      ot, Seq("o_orderkey"), 8)
     s.table(lt).hint("merge")
       .join(s.table(ot), col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_custkey"))
@@ -3051,7 +3047,7 @@ object ParityQueries {
 
   // ---- S22: zone-map (min/max manifest) file skipping ------------------------
   // The FOURTH leg of the layout story (s9 prunes partition DIRS, s10
-  // orders rows WITHIN files, s18 co-locates joins): a standing
+  // measures Z-order locality, s18 co-locates joins): a standing
   // per-file min/max MANIFEST — the Delta/Iceberg "data skipping"
   // structure — lets a range predicate select files from METADATA
   // alone, never touching the data. Build: range-partition orders by

@@ -19,8 +19,7 @@ object Verify {
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
       // coalesce(1) is a VERIFY-ONLY convenience (one file per query for
       // the DuckDB compare) — never copy it into a production sink: it
-      // caps the parallelism of everything fused upstream of the write
-      // (Sink.writeCompacted's repartition is the scale-safe shape).
+      // caps the parallelism of everything fused upstream of the write.
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

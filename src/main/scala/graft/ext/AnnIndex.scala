@@ -109,16 +109,6 @@ object AnnIndex {
     swapIn(indexDir, "cells", tmp)
   }
 
-  /** Compact a flat codes table (SQ8/PQ) to `targetFiles` files —
-    * same rewrite-then-swap recipe, no partition clustering needed.
-    */
-  def compactCodes(spark: SparkSession, indexDir: String, targetFiles: Int = 4): Unit = {
-    val tmp = s"$indexDir/codes_compacting"
-    Ingest.parquet(spark, s"$indexDir/codes").coalesce(targetFiles)
-      .write.mode("overwrite").parquet(tmp)
-    swapIn(indexDir, "codes", tmp)
-  }
-
   /** Swap `tmp` in as `<indexDir>/<name>` via two atomic renames:
     * the live directory is renamed ASIDE first (never deleted while
     * it is the only copy), then tmp renamed in; on a failed swap the

@@ -156,31 +156,18 @@ object Bpe {
   }
 
   /** ENCODE with a learned merge table: apply `merges` in training
-    * order to the corpus VOCABULARY (distinct words), returning
-    * (word, syms) — each word's final symbol segmentation. This is
-    * the composition a tokenizer pipeline ships: [[train]] produces
-    * the merge list, this replays it over any corpus.
+    * order to a distinct-word frame (a `word` column; any `f` is
+    * ignored and reset to a constant), returning (word, syms) — each
+    * word's final symbol segmentation. This is the composition a
+    * tokenizer pipeline ships: [[train]] produces the merge list, this
+    * replays it over any vocabulary, and paired with
+    * [[trainFromWords]] train→encode shares ONE corpus tokenize.
     *
-    * Per-word merge application is frequency-independent, so encoding
-    * runs on the distinct-word frame with a constant weight — cost
-    * scales with vocabulary × |merges|, never corpus × |merges|; the
-    * corpus is touched once (the distinct). Each merge is the same
-    * single-(word,pos)-sort positional pass as training
-    * ([[applyMerge]]), and the merge list itself is rounds×2 strings
-    * — driver-local by construction.
-    */
-  def applyMerges(docs: DataFrame, textCol: String,
-      merges: Seq[(String, String)]): DataFrame =
-    applyMergesToWords(
-      docs.select(explode(TextOps.tokens(col(textCol))).as("word"))
-        .filter(length(col("word")) > 0)
-        .distinct(),
-      merges)
-
-  /** [[applyMerges]] but starting from an already-distinct word frame
-    * (a `word` column; any `f` is ignored and reset to a constant —
-    * merge application is frequency-independent). Pairs with
-    * [[trainFromWords]] so train→encode shares ONE corpus tokenize.
+    * Per-word merge application is frequency-independent, so cost
+    * scales with vocabulary × |merges|, never corpus × |merges|. Each
+    * merge is the same single-(word,pos)-sort positional pass as
+    * training ([[applyMerge]]), and the merge list itself is
+    * rounds×2 strings — driver-local by construction.
     */
   def applyMergesToWords(words: DataFrame,
       merges: Seq[(String, String)]): DataFrame = {

@@ -44,15 +44,11 @@ object CorpusPipeline {
       idCol: String,
       textCol: String,
       benchmark: DataFrame,
-      shingleLen: Int = 3,
       minOverlap: Int = 5): DataFrame = {
-    def shingles(df: DataFrame) =
-      array_distinct(MinHash.shingleHashesFromTokens(
-        TextOps.tokens(df(textCol)), shingleLen))
     val benchSh = benchmark
-      .select(explode(shingles(benchmark)).as("sh")).distinct()
+      .select(explode(distinctShingles(benchmark, textCol)).as("sh")).distinct()
     docs
-      .select(docs(idCol).as("doc_id"), explode(shingles(docs)).as("sh"))
+      .select(docs(idCol).as("doc_id"), explode(distinctShingles(docs, textCol)).as("sh"))
       .join(benchSh, Seq("sh"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_overlap"))
@@ -90,19 +86,18 @@ object CorpusPipeline {
       idCol: String,
       textCol: String,
       benchmark: DataFrame,
-      shingleLen: Int = 3,
       minOverlap: Int = 5,
       bits: Int = 1 << 16,
       hashes: Int = 4): DataFrame = {
     val (benchSh, mask) =
-      buildBenchmarkBloom(benchmark, textCol, shingleLen, bits, hashes)
+      buildBenchmarkBloom(benchmark, textCol, bits, hashes)
     bloomDecontaminatedWith(docs, idCol, textCol, benchSh, mask,
-      shingleLen, minOverlap, bits, hashes)
+      minOverlap, bits, hashes)
   }
 
-  private def bloomShingles(df: DataFrame, textCol: String, shingleLen: Int) =
+  private def distinctShingles(df: DataFrame, textCol: String) =
     array_distinct(MinHash.shingleHashesFromTokens(
-      TextOps.tokens(df(textCol)), shingleLen))
+      TextOps.tokens(df(textCol)), MinHash.ShingleLen))
 
   private def bloomPos(i: Int, sh: org.apache.spark.sql.Column, bits: Int) =
     TextOps.md5Int32(concat(lit(s"bl${i}_"), sh.cast("string"))) % bits
@@ -119,12 +114,11 @@ object CorpusPipeline {
   def buildBenchmarkBloom(
       benchmark: DataFrame,
       textCol: String,
-      shingleLen: Int = 3,
       bits: Int = 1 << 16,
       hashes: Int = 4): (DataFrame, Array[Long]) = {
     require(bits % 64 == 0, s"bits must be a multiple of 64, got $bits")
     val benchSh = benchmark
-      .select(explode(bloomShingles(benchmark, textCol, shingleLen)).as("sh"))
+      .select(explode(distinctShingles(benchmark, textCol)).as("sh"))
       .distinct()
     val words = benchSh
       .select(explode(array(
@@ -150,7 +144,6 @@ object CorpusPipeline {
       textCol: String,
       benchSh: DataFrame,
       mask: Array[Long],
-      shingleLen: Int = 3,
       minOverlap: Int = 5,
       bits: Int = 1 << 16,
       hashes: Int = 4): DataFrame = {
@@ -164,7 +157,7 @@ object CorpusPipeline {
     }.reduce(_ && _)
     val contaminatedIds = docs
       .select(docs(idCol).as("doc_id"),
-        explode(bloomShingles(docs, textCol, shingleLen)).as("sh"))
+        explode(distinctShingles(docs, textCol)).as("sh"))
       .filter(pass)
       .join(benchSh, Seq("sh"))
       .groupBy(col("doc_id"))

@@ -38,6 +38,11 @@ object MinHash {
   val RowsPerBand: Int = 3
   require(Bands * RowsPerBand == NumHashes)
 
+  /** Word-shingle length of every near-dup, containment and
+    * contamination operator (and of their DuckDB oracles).
+    */
+  val ShingleLen: Int = 3
+
   /** Fixed affine constants (classic LCG mixes; any fixed values
     * work — they only need to be identical in Spark and the oracle).
     */
@@ -134,7 +139,7 @@ object MinHash {
     * precision on the (small) candidate set — so the exact O(|A|+|B|)
     * set comparison runs per candidate pair, never per corpus pair.
     */
-  def exactJaccardPairs(docs: DataFrame, idCol: String, textCol: String, shingleLen: Int = 3): DataFrame = {
+  def exactJaccardPairs(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     // ONE eagerly-persisted shingle-hash base feeds BOTH the
     // signature/banding chain and the exact-verification sets — the
     // corpus is tokenized and hashed exactly once (a separate
@@ -143,7 +148,7 @@ object MinHash {
     // race (see graft.ops.Sink.cachedEager).
     val ms = graft.ops.Sink.cachedEager(docs
       .select(col(idCol).as("doc_id"),
-        shingleHashesFromTokens(TextOps.tokens(col(textCol)), shingleLen).as("ms"))
+        shingleHashesFromTokens(TextOps.tokens(col(textCol)), ShingleLen).as("ms"))
       .filter(size(col("ms")) > 0))
     val msd = ms.select(col("doc_id"), array_distinct(col("ms")).as("msd"))
     val sigs = graft.ops.Sink.cachedEager(
@@ -169,7 +174,7 @@ object MinHash {
     * the shape that scales (bucket-key cardinality grows with the
     * corpus, so the shuffle spreads evenly).
     */
-  def candidatePairs(docs: DataFrame, idCol: String, textCol: String, shingleLen: Int = 3): DataFrame = {
+  def candidatePairs(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     // Persist the signatures EAGERLY (graft.ops.Sink.cachedEager): the
     // band self-join consumes them twice within one job, and without
     // the persist both join sides re-tokenize, re-shingle and re-hash
@@ -180,7 +185,7 @@ object MinHash {
     // per-query clearCache.
     val sigs = graft.ops.Sink.cachedEager(docs
       .select(col(idCol).as("doc_id"),
-        shingleHashesFromTokens(TextOps.tokens(col(textCol)), shingleLen).as("ms"))
+        shingleHashesFromTokens(TextOps.tokens(col(textCol)), ShingleLen).as("ms"))
       .filter(size(col("ms")) > 0)
       .select(col("doc_id"), signature(col("ms")).as("sig")))
     candidatePairsFromSigs(sigs)
@@ -198,10 +203,10 @@ object MinHash {
     * base-only pairs.
     */
   def candidatePairsIncremental(docs: DataFrame, isDelta: Column,
-      idCol: String, textCol: String, shingleLen: Int = 3): DataFrame = {
+      idCol: String, textCol: String): DataFrame = {
     val sigs = graft.ops.Sink.cachedEager(docs
       .select(col(idCol).as("doc_id"), isDelta.as("is_delta"),
-        shingleHashesFromTokens(TextOps.tokens(col(textCol)), shingleLen).as("ms"))
+        shingleHashesFromTokens(TextOps.tokens(col(textCol)), ShingleLen).as("ms"))
       .filter(size(col("ms")) > 0)
       .select(col("doc_id"), col("is_delta"), signature(col("ms")).as("sig")))
     val bands = sigs.select(col("doc_id"), col("sig"),
@@ -218,11 +223,6 @@ object MinHash {
       .distinct()
   }
 
-  /** Band-bucket self-join over an (already materialized) signature
-    * table — the join stage shared by [[candidatePairs]] and
-    * [[exactJaccardPairs]]. `sigs` must be persisted/checkpointed:
-    * both self-join sides read it within one job.
-    */
   /** Empirical banding S-curve: per true-Jaccard decile, the fraction
     * of document pairs the (Bands × RowsPerBand) banding actually
     * catches — the measured version of the 1−(1−j^r)^b curve that
@@ -238,11 +238,10 @@ object MinHash {
     * One eagerly-persisted hash base feeds the truth side AND the
     * signature/banding side (the exactJaccardPairs discipline).
     */
-  def lshScurve(docs: DataFrame, idCol: String, textCol: String,
-      shingleLen: Int = 3): DataFrame = {
+  def lshScurve(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val ms = graft.ops.Sink.cachedEager(docs
       .select(col(idCol).as("doc_id"),
-        shingleHashesFromTokens(TextOps.tokens(col(textCol)), shingleLen).as("ms"))
+        shingleHashesFromTokens(TextOps.tokens(col(textCol)), ShingleLen).as("ms"))
       .filter(size(col("ms")) > 0))
     val msd = ms.select(col("doc_id"), array_distinct(col("ms")).as("msd"))
     val ex = msd.select(col("doc_id"), explode(col("msd")).as("h"))
@@ -299,11 +298,11 @@ object MinHash {
     * put two more joins on the pair table.
     */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
-      shingleLen: Int = 3, tau: Double = 0.5): DataFrame = {
+      tau: Double = 0.5): DataFrame = {
     val msd = docs
       .select(col(idCol).as("doc_id"),
         array_distinct(
-          shingleHashesFromTokens(TextOps.tokens(col(textCol)), shingleLen)).as("msd"))
+          shingleHashesFromTokens(TextOps.tokens(col(textCol)), ShingleLen)).as("msd"))
       .filter(size(col("msd")) > 0)
     val ex = msd.select(col("doc_id"), size(col("msd")).cast("long").as("n"),
       explode(col("msd")).as("h"))
@@ -339,11 +338,10 @@ object MinHash {
   /** The (doc_id, sig) signature table of a corpus — the artifact
     * [[writeBands]] persists (no cache: this is a write-once input).
     */
-  def signatureTable(docs: DataFrame, idCol: String, textCol: String,
-      shingleLen: Int = 3): DataFrame =
+  def signatureTable(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs
       .select(col(idCol).as("doc_id"),
-        shingleHashesFromTokens(TextOps.tokens(col(textCol)), shingleLen).as("ms"))
+        shingleHashesFromTokens(TextOps.tokens(col(textCol)), ShingleLen).as("ms"))
       .filter(size(col("ms")) > 0)
       .select(col("doc_id"), signature(col("ms")).as("sig"))
 
@@ -357,8 +355,8 @@ object MinHash {
     * by construction rather than round-trip luck).
     */
   def writeBands(docs: DataFrame, idCol: String, textCol: String,
-      indexDir: String, shingleLen: Int = 3): Unit = {
-    signatureTable(docs, idCol, textCol, shingleLen)
+      indexDir: String): Unit = {
+    signatureTable(docs, idCol, textCol)
       .write.mode("overwrite").parquet(s"$indexDir/sigs")
     bandRows(Ingest.parquet(docs.sparkSession, s"$indexDir/sigs"))
       .write.mode("overwrite").partitionBy("bidx").parquet(s"$indexDir/bands")
@@ -371,8 +369,8 @@ object MinHash {
     * corpus is never rescanned: ingest cost is O(|delta| × Bands).
     */
   def appendBands(delta: DataFrame, idCol: String, textCol: String,
-      indexDir: String, shingleLen: Int = 3): Unit = {
-    val sigs = signatureTable(delta, idCol, textCol, shingleLen)
+      indexDir: String): Unit = {
+    val sigs = signatureTable(delta, idCol, textCol)
     sigs.write.mode("append").parquet(s"$indexDir/sigs")
     bandRows(sigs)
       .write.mode("append").partitionBy("bidx").parquet(s"$indexDir/bands")
@@ -439,6 +437,11 @@ object MinHash {
       .distinct()
   }
 
+  /** Band-bucket self-join over an (already materialized) signature
+    * table — the join stage shared by [[candidatePairs]] and
+    * [[exactJaccardPairs]]. `sigs` must be persisted/checkpointed:
+    * both self-join sides read it within one job.
+    */
   private def candidatePairsFromSigs(sigs: DataFrame): DataFrame = {
     val bands = sigs.select(
       col("doc_id"), col("sig"),

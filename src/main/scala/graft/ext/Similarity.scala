@@ -664,10 +664,6 @@ object Similarity {
   def probeKnnGraph(spark: org.apache.spark.sql.SparkSession, indexDir: String): DataFrame =
     Ingest.parquet(spark, s"$indexDir/edges")
 
-  /** The saved directed lists (for diagnostics and the append law). */
-  def probeKnnLists(spark: org.apache.spark.sql.SparkSession, indexDir: String): DataFrame =
-    Ingest.parquet(spark, s"$indexDir/knn")
-
   /** Incrementally ingest `delta` (ids disjoint from the base) into a
     * saved graph — EXACT, by top-k mergeability:
     *   1. delta lists: delta queries score against base ∪ delta

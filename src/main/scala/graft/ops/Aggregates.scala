@@ -77,40 +77,12 @@ object Aggregates {
           (col("n1").cast("double") * col("n2").cast("double"))).as("chi2"))
   }
 
-  /** A1: scalar row count (reference `len(df)`). */
-  def rowCount(df: DataFrame): Long = df.count()
-
   /** A2: exact distinct count, null-excluding — matches pandas
-    * `nunique` (dashboard_app/app.py:47). At 100 TB prefer
-    * `approxDistinctCount` unless exactness is contractual: exact
-    * distinct is a full shuffle of the distinct keys.
+    * `nunique` (dashboard_app/app.py:47). Exact distinct is a full
+    * shuffle of the distinct keys.
     */
   def distinctCount(df: DataFrame, column: String): DataFrame =
     df.agg(count_distinct(col(column)).as(s"n_$column"))
-
-  /** A2 scale variant: HyperLogLog++, no exact-distinct shuffle. */
-  def approxDistinctCount(df: DataFrame, column: String, rsd: Double = 0.01): DataFrame =
-    df.agg(approx_count_distinct(col(column), rsd).as(s"approx_n_$column"))
-
-  /** O6 scale variant: grouped approximate percentiles via Spark's
-    * mergeable one-pass quantile sketch (`approx_percentile`,
-    * Greenwald-Khanna). Exact `percentile` buffers every value of a
-    * group; the sketch holds O(accuracy · log n) state per group
-    * regardless of group size, with rank error ≤ n / accuracy — the
-    * form that survives a 100 TB group. Output: one array column of
-    * the requested quantiles per group.
-    */
-  def approxPercentiles(
-      df: DataFrame,
-      key: String,
-      valueCol: String,
-      quantiles: Seq[Double],
-      accuracy: Int = 10000): DataFrame =
-    df.groupBy(col(key)).agg(
-      percentile_approx(
-        col(valueCol),
-        array(quantiles.map(lit): _*),
-        lit(accuracy)).as(s"approx_q_$valueCol"))
 
   /** Two-sample Kolmogorov–Smirnov statistic between the `valueCol`
     * distributions of two populations — the classic data-drift gate a

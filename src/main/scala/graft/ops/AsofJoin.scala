@@ -77,8 +77,8 @@ object AsofJoin {
     * gets its own exchange + (key, ts) sort and the merge is one
     * forward pass with a single buffered right row, instead of
     * unioning both tables through one window. Requires the
-    * [[graft.plans.AsOfJoinStrategy]] planner strategy; this helper
-    * installs it on the session if the extension didn't.
+    * [[graft.plans.AsOfJoinStrategy]] planner strategy, which
+    * [[graft.GraftExtensions]] injects on every session it builds.
     */
   def asofJoinNative(
       left: DataFrame,
@@ -92,17 +92,6 @@ object AsofJoin {
     require(rightValCols.intersect(left.columns.toSeq).isEmpty,
       "right value columns must not collide with left columns")
     val spark = left.sparkSession
-    // The check-then-append on the session-global extraStrategies is not
-    // atomic; two concurrent callers could both pass the check and
-    // double-register (r8 ADVICE). Harmless in effect (the strategy is a
-    // pure function) but still session-state mutation from what looks
-    // like a pure combinator — serialize it on the experimental holder
-    // itself so registration happens at most once per session.
-    spark.experimental.synchronized {
-      if (!spark.experimental.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy
-    }
     ColumnBridge.ofRows(spark, graft.plans.AsOfJoinNode(
       ColumnBridge.analyzed(left), ColumnBridge.analyzed(right),
       keys, leftTs, rightTs, rightValCols))

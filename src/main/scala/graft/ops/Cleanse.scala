@@ -40,29 +40,13 @@ object Cleanse {
     * first-class distributed op). Exact distincts compile to ONE pass
     * with an Expand: the input is replicated per profiled column into
     * the distinct aggregate, so cost is rows × columns — acceptable
-    * for a scheduled intake gate. [[profileApprox]] is the 100 TB
-    * default: HyperLogLog distincts, single pass, NO Expand, ~2%
-    * error (accuracy-asserted in OpsSpec).
+    * for a scheduled intake gate.
     */
-  def profile(df: DataFrame, cols: Seq[String]): DataFrame =
-    profileWith(df, cols, c => countDistinct(col(c)))
-
-  /** [[profile]] with approx_count_distinct: one scan, no row
-    * replication, mergeable sketch state — the shape that survives
-    * 100 TB.
-    */
-  def profileApprox(
-      df: DataFrame, cols: Seq[String], rsd: Double = 0.02): DataFrame =
-    profileWith(df, cols, c => approx_count_distinct(col(c), rsd))
-
-  private def profileWith(
-      df: DataFrame,
-      cols: Seq[String],
-      distinct: String => org.apache.spark.sql.Column): DataFrame = {
+  def profile(df: DataFrame, cols: Seq[String]): DataFrame = {
     val aggs = cols.flatMap { c =>
       Seq(
         count(col(c)).as(s"__cnt_$c"),
-        distinct(c).as(s"__dst_$c"))
+        countDistinct(col(c)).as(s"__dst_$c"))
     } :+ count(lit(1)).as("__rows")
     val onerow = df.agg(aggs.head, aggs.tail: _*)
     val stacked = cols.map { c =>
@@ -94,10 +78,9 @@ object Cleanse {
   /** Evaluate `checks` over `df`. Metrics: Complete → the non-null
     * ratio; Unique → duplicate count; InRange/InSet → violation
     * count. One agg (plus the Expand a Unique's exact distinct
-    * introduces — swap `countDistinct` for `approx_count_distinct`
-    * at 100 TB exactly as [[profileApprox]] does for [[profile]]);
-    * the report explodes from the 1-row frame, so the table is
-    * scanned once no matter how many constraints.
+    * introduces, as in [[profile]]); the report explodes from the
+    * 1-row frame, so the table is scanned once no matter how many
+    * constraints.
     */
   def expectations(df: DataFrame, checks: Seq[Expectation]): DataFrame = {
     val aggs = checks.zipWithIndex.flatMap { case (e, i) =>

@@ -154,17 +154,4 @@ object Ingest {
     */
   def xml(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).option("rowTag", "row").xml(path)
-
-  /** S2 (malformed-records variant): PERMISSIVE JSON scan that lands
-    * undecodable lines in `_corrupt_record` instead of failing the
-    * job (FAILFAST) or silently dropping rows (DROPMALFORMED) — the
-    * audit-friendly choice: bad records stay countable and
-    * quarantine-able downstream.
-    */
-  def jsonPermissive(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read
-      .schema(schema.add("_corrupt_record", org.apache.spark.sql.types.StringType))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(path)
 }

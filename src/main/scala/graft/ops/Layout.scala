@@ -3,7 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Multi-dimensional data layout: Z-order (Morton) clustering keys.
+/** Data layout: Z-order (Morton) clustering keys, small-file
+  * compaction, and per-file zone-map and bloom manifests.
   *
   * At 100 TB the scan you avoid matters more than the scan you run:
   * parquet readers skip whole files / row groups whose column min-max
@@ -41,26 +42,6 @@ object Layout {
     */
   def zorder2(x: Column, y: Column): Column =
     spread16(x).bitwiseOR(shiftleft(spread16(y), 1))
-
-  /** Write `df` clustered by the Z-order of two key columns:
-    * range-partition on the Z-value into `nFiles` output files, sort
-    * within each, drop the helper column. Every output file then
-    * covers a contiguous Z-range — a small bounding rectangle in
-    * (x, y) — which is exactly what min-max file skipping consumes.
-    * The range partitioning samples the Z-distribution, so skew in
-    * either raw key does not skew file sizes.
-    */
-  def writeZOrdered(
-      df: DataFrame,
-      path: String,
-      nFiles: Int,
-      x: Column,
-      y: Column): Unit =
-    df.withColumn("_z", zorder2(x, y))
-      .repartitionByRange(nFiles, col("_z"))
-      .sortWithinPartitions(col("_z"))
-      .drop("_z")
-      .write.mode("overwrite").parquet(path)
 
   /** Small-file compaction — the lake-maintenance chore every
     * streaming/incremental sink accumulates into (a 100 TB table fed

@@ -102,18 +102,12 @@ object Materialize {
     * never the underlying key population.
     */
   def mergeNdv(base: DataFrame, delta: DataFrame, keyCol: String, k: Int): DataFrame =
-    mergeHashSketch(base, delta, Seq(keyCol), k)
+    hashSketch(base.unionByName(delta).select(col(keyCol), explode_outer(col("hs")).as("h")),
+      Seq(keyCol), col("h"), k)
 
   /** `hs`: min-k of the distinct `h` per key tuple. */
   private def hashSketch(df: DataFrame, keyCols: Seq[String], h: Column, k: Int): DataFrame =
     df.groupBy(keyCols.map(col): _*).agg(minKDistinct(h, k).as("hs"))
-
-  /** explode_outer keeps a key whose stored array is empty: its one
-    * NULL hash is skipped by the aggregate, which yields `[]` again.
-    */
-  private def mergeHashSketch(base: DataFrame, delta: DataFrame, keyCols: Seq[String], k: Int): DataFrame =
-    hashSketch(base.unionByName(delta).select(keyCols.map(col) :+ explode_outer(col("hs")).as("h"): _*),
-      keyCols, col("h"), k)
 
   /** The EXACTNESS-GATED variant of [[ndvSketch]], built for
     * [[graft.plans.NdvCatalog]]'s count-DISTINCT rewrite; three
@@ -143,13 +137,6 @@ object Materialize {
       distinctAs: Option[String] = None): DataFrame =
     df.groupBy(keyCols.map(col): _*).agg(minKDistinct(ndvHash(col(idCol)), k).as("hs"),
       distinctAs.map(countDistinct(col(idCol)).as(_)).toSeq: _*)
-
-  /** [[mergeNdv]] for [[ndvSketchExact]] tables: the same
-    * explode-and-re-take, multi-key; all-null groups keep their empty
-    * array, so merge ≡ rebuild holds for them too.
-    */
-  def mergeNdvExact(base: DataFrame, delta: DataFrame, keyCols: Seq[String], k: Int): DataFrame =
-    mergeHashSketch(base, delta, keyCols, k)
 
   /** Per-key EXACT distinct-id set as a compressed bitmap column
     * ([[graft.functions.Bitmap64]] sorted-delta varints over the ids
@@ -185,7 +172,7 @@ object Materialize {
   /** Merge two [[bitmapSketch]] tables: null-safe full-outer join on
     * the key tuple, per-row streaming set union of the two encoded
     * bitmaps. O(|keys| + bytes) with NO explode — the merge never
-    * rematerializes ids, unlike [[mergeNdvExact]]'s
+    * rematerializes ids, unlike [[mergeNdv]]'s
     * explode-distinct-recollect. Keys on one side pass through with
     * their bitmap unchanged (union with empty).
     */
@@ -204,19 +191,6 @@ object Materialize {
     */
   def bitmapCounts(sketch: DataFrame, keyCols: Seq[String]): DataFrame =
     sketch.select(keyCols.map(col) :+ bitmapCard(col("bm")).as("n_distinct"): _*)
-
-  /** Re-aggregate a [[bitmapSketch]] to a COARSER key subset by
-    * per-group set union ([[graft.functions.BitmapUnionAgg]]) — the
-    * lattice step no size- or hash-based NDV statistic supports: id
-    * sets union losslessly where per-group counts double-count
-    * shared ids. `coarsenBitmap(sketch(K), K') ≡ sketch(K')` for any
-    * K' ⊆ K (law-tested), so ONE fine-grained rollup serves every
-    * coarser count-distinct tile. Cost: one shuffle of rollup-sized
-    * rows with map-side partial union (associative/commutative/
-    * idempotent fold).
-    */
-  def coarsenBitmap(sketch: DataFrame, keyCols: Seq[String]): DataFrame =
-    sketch.groupBy(keyCols.map(col): _*).agg(bitmapUnionAgg(col("bm")).as("bm"))
 
   private def requireIntegralId(df: DataFrame, idCol: String): Unit = {
     val dt = df.schema(idCol).dataType

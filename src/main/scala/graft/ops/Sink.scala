@@ -107,18 +107,6 @@ object Sink {
       .format("parquet")
       .saveAsTable(table)
 
-  /** Small-files control: rewrite into ~`numFiles` output files —
-    * the compaction step every long-lived table needs (a stream or
-    * fine-partitioned job writing N-per-micro-batch eventually makes
-    * metadata, not data, the scan bottleneck). `repartition` (a
-    * shuffle) rather than `coalesce`: coalesce(n) caps the
-    * PARALLELISM of everything fused upstream of the write and can
-    * yield skewed files; compaction jobs are scan→write only, so the
-    * one balanced shuffle is the cost of evenly-sized output.
-    */
-  def writeCompacted(df: DataFrame, path: String, numFiles: Int): Unit =
-    df.repartition(numFiles).write.mode(SaveMode.Overwrite).parquet(path)
-
   /** S7: cache before multi-query fan-out (dashboard `@st.cache_data`
     * equivalent). MEMORY_AND_DISK so a too-big dataset degrades to
     * spill instead of recompute-per-action.

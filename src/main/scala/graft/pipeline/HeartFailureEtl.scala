@@ -60,45 +60,15 @@ object HeartFailureEtl {
     *  105 project · 112 drop · 119 inner join.
     */
   def transform(readmissionsRaw: DataFrame, hospitalRaw: DataFrame,
-      measure: String = HfMeasure): DataFrame =
-    chain(readmissionsRaw, hospitalRaw, measure, (df, _) => df)
-
-  /** [[transform]] with the reference's stage-count logging
-    * (etl_script.py:100 "Filtered down to N records", :120/:169 final
-    * and loaded row counts) re-expressed as [[Observe.rowCount]]
-    * probes: the counts ride the pipeline's single write action as
-    * accumulator metrics — zero extra jobs, where the eager original
-    * got them free from materialized frames. Read each Observation
-    * after the terminal action.
-    */
-  def transformObserved(readmissionsRaw: DataFrame, hospitalRaw: DataFrame,
-      measure: String = HfMeasure): (DataFrame, Map[String, org.apache.spark.sql.Observation]) = {
-    val probes = scala.collection.mutable.Map.empty[String, org.apache.spark.sql.Observation]
-    val out = chain(readmissionsRaw, hospitalRaw, measure, { (df, name) =>
-      val (observed, obs) = Observe.rowCount(df, name)
-      probes(name) = obs
-      observed
-    })
-    (out, probes.toMap)
-  }
-
-  /** The shared stage chain; `probe` is identity for the plain
-    * transform and an observe()-inserter for the logged one, keeping
-    * ONE definition of the reference's statement order.
-    */
-  private def chain(readmissionsRaw: DataFrame, hospitalRaw: DataFrame,
-      measure: String, probe: (DataFrame, String) => DataFrame): DataFrame = {
+      measure: String = HfMeasure): DataFrame = {
     val readm = Ingest.normalizeColumnNames(readmissionsRaw)
     val hosp = Ingest.normalizeColumnNames(hospitalRaw)
     val coerced = Cleanse.coerceToDouble(readm, MetricCols)
     val nonNull = Cleanse.dropNullRows(coerced, MetricCols)
-    val hf = probe(
-      Relational.filterEq(nonNull, "measure_name", measure), "hf_filtered")
+    val hf = Relational.filterEq(nonNull, "measure_name", measure)
     val hospSel = Relational.project(hosp, HospitalCols)
     val readmClean = Relational.dropCols(hf, Seq("state", "facility_name"))
-    probe(
-      Relational.innerJoin(readmClean, hospSel, Seq("facility_id"), broadcastRight = true),
-      "final")
+    Relational.innerJoin(readmClean, hospSel, Seq("facility_id"), broadcastRight = true)
   }
 
   /** Full pipeline: CSV extract (fail-fast on missing inputs, S3) →

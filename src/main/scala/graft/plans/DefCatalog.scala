@@ -557,8 +557,6 @@ object NdvCatalog {
 
   /** Materialize `ndvSketchExact(fact, keys, id, k)` at `path` and
     * register it, proven on the build's write: one fact scan in all.
-    * Refreshes ride [[graft.ops.Materialize.mergeNdvExact]]
-    * (delta-only) and re-register.
     */
   def create(
       spark: SparkSession,

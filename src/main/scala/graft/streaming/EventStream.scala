@@ -162,43 +162,6 @@ object EventStream {
   private[streaming] def epochMicros(t: Timestamp): Long =
     Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
 
-  /** The inverse of [[epochMicros]]: a Timestamp with full micros. */
-  private[streaming] def microsTimestamp(us: Long): Timestamp = {
-    val sec = Math.floorDiv(us, 1000000L)
-    val ts = new Timestamp(sec * 1000L)
-    ts.setNanos(((us - sec * 1000000L) * 1000L).toInt)
-    ts
-  }
-
-  /** Per-key running state for [[runningCounts]]. */
-  case class KeyCount(key: String, n: Long)
-
-  /** Stateful per-key running counts via mapGroupsWithState — the
-    * minimal template for custom streaming state (sessionization,
-    * streaming dedup, CDC merge all specialize this shape). State is
-    * per-key in the state store.
-    *
-    * NoTimeout keeps the example deterministic under test drivers: a
-    * processing-time timeout makes the engine schedule continuous
-    * no-data micro-batches for state eviction, which starves
-    * `processAllAvailable`-style synchronization. A production
-    * deployment with unbounded key space should switch to
-    * `EventTimeTimeout` + `state.setTimeoutTimestamp` so idle keys
-    * are evicted as the watermark advances.
-    */
-  def runningCounts(
-      events: Dataset[(String, Long)]): Dataset[KeyCount] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_._1)
-      .mapGroupsWithState[Long, KeyCount](GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[(String, Long)], state: GroupState[Long]) =>
-          val prev = state.getOption.getOrElse(0L)
-          val next = prev + rows.size
-          state.update(next)
-          KeyCount(key, next)
-      }
-  }
-
   /** Streaming exact dedup on a key column: first arrival wins,
     * duplicates within the watermark horizon are dropped — the
     * streaming counterpart of ext.Dedup.
@@ -214,16 +177,6 @@ object EventStream {
     */
   def streamingDedup(events: DataFrame, keyCols: Seq[String], lateness: String = "2 hours"): DataFrame =
     events.withWatermark("ts", lateness).dropDuplicatesWithinWatermark(keyCols)
-
-  /** Stream-static enrichment join: each micro-batch inner-joins the
-    * stream against a STATIC dimension (re-read per batch, so slowly
-    * changing dims pick up updates). Catalyst broadcasts the static
-    * side under the auto threshold — the streaming side never
-    * shuffles, which is the only sustainable shape for a hot path.
-    * No watermark needed: stream-static joins are stateless.
-    */
-  def enrich(stream: DataFrame, dim: DataFrame, keys: Seq[String]): DataFrame =
-    stream.join(dim, keys, "inner")
 
   /** Native streaming sessionization: `session_window` + watermark —
     * the streaming twin of the batch `w3_session_window` query.
@@ -242,54 +195,13 @@ object EventStream {
         col("user_id"), col("w.start").as("session_start"),
         col("w.end").as("session_end"), col("n_events"), col("avg_value"))
 
-  /** One closed session for [[sessionize]]. */
-  case class Session(user_id: String, start: Timestamp, end: Timestamp, n_events: Long)
-
-  /** Internal per-user state for [[sessionize]] (public: the state
-    * encoder's generated code must reach the constructor).
-    */
-  case class SessionState(start: Long, last: Long, n: Long)
-
-  /** Stream-STREAM inner join with event-time range correlation:
-    * right events matched to left events on a key within `horizon`
-    * after the left event (attribution: click within N minutes of a
-    * view). Both sides are watermarked AND the join condition bounds
-    * the event-time skew between them — together these let the engine
-    * evict join state older than watermark + horizon, so state holds
-    * only the correlation window per key. Without the time-range
-    * conjunct a stream-stream join must retain EVERY row forever;
-    * this is the only bounded-state shape.
-    *
-    * Column names are caller-supplied and must be disjoint across the
-    * two sides (stream-stream joins cannot dedup like-named keys).
-    */
-  def correlate(
-      left: DataFrame, leftTs: String, leftKey: String,
-      right: DataFrame, rightTs: String, rightKey: String,
-      horizon: String,
-      lateness: String = "1 hour",
-      joinType: String = "inner"): DataFrame = {
-    val l = left.withWatermark(leftTs, lateness)
-    val r = right.withWatermark(rightTs, lateness)
-    // joinType "leftOuter": unmatched left rows are emitted with null
-    // right columns — but only once the watermark passes leftTs +
-    // horizon, because until then a matching right row could still
-    // arrive. Same bounded state as the inner form; the time-range
-    // conjunct is what makes the outer semantics decidable at all.
-    l.join(r,
-      col(leftKey) === col(rightKey) &&
-        col(rightTs) >= col(leftTs) &&
-        col(rightTs) <= col(leftTs) + expr(s"INTERVAL $horizon"),
-      joinType)
-  }
-
   /** Stream-STREAM as-of enrichment — the streaming twin of the batch
     * `j5_asof_join` query ([[graft.ops.AsofJoin]]): each left event is
     * enriched with the LATEST right row at-or-before its event time on
     * the same key, looking back at most `horizon`.
     *
     * Two chained stateful operators, both watermark-bounded:
-    * 1. the [[correlate]]-shaped range join — `rightTs ∈ [leftTs −
+    * 1. a watermarked stream-stream range join — `rightTs ∈ [leftTs −
     *    horizon, leftTs]` is the time-range conjunct that lets the
     *    engine evict join state (without it a stream-stream join
     *    retains every row forever), and `leftOuter` preserves left
@@ -359,63 +271,6 @@ object EventStream {
       .partitionBy("batch_id")
       .parquet(path)
 
-  /** Custom-state sessionization via `flatMapGroupsWithState` — the
-    * template for session logic `session_window` cannot express
-    * (e.g. emit-on-close with per-session payloads, cross-session
-    * chaining). State: one (start, last, count) per user; events
-    * within `gap` of the last seen extend the session, a later event
-    * closes and emits it; `EventTimeTimeout` closes and emits idle
-    * sessions when the watermark passes last + gap, so state is
-    * watermark-bounded exactly like the native operator.
-    *
-    * Late events (before the current session's start) are folded into
-    * the current session rather than reopening closed ones —
-    * at-most-one-state-per-key is the memory bound that matters.
-    */
-  def sessionize(
-      events: Dataset[(String, Timestamp)],
-      gapMs: Long,
-      lateness: String = "0 seconds"): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    events
-      .toDF("user_id", "ts")
-      .withWatermark("ts", lateness)
-      .as[(String, Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[SessionState, Session](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: String, rows: Iterator[(String, Timestamp)], state: GroupState[SessionState]) =>
-          // state carries epoch MICROS (not getTime millis): the
-          // events fixture has sub-millisecond components, and session
-          // boundaries must round-trip them exactly (r11).
-          val gapUs = gapMs * 1000L
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(Session(user, microsTimestamp(s.start), microsTimestamp(s.last), s.n))
-          } else {
-            val times = rows.map(r => epochMicros(r._2)).toSeq.sorted
-            var closed = List.empty[Session]
-            var cur = state.getOption
-            times.foreach { t =>
-              cur = cur match {
-                case None => Some(SessionState(t, t, 1L))
-                case Some(s) if t - s.last <= gapUs =>
-                  Some(SessionState(s.start, math.max(s.last, t), s.n + 1))
-                case Some(s) =>
-                  closed ::= Session(user, microsTimestamp(s.start), microsTimestamp(s.last), s.n)
-                  Some(SessionState(t, t, 1L))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(s.last / 1000L + gapMs)
-            }
-            closed.reverseIterator
-          }
-      }
-  }
-
   /** One completed funnel for [[funnel]]: the streaming twin of the
     * registered batch `w5_funnel` query (Queries.scala) — stage
     * timestamps as epoch-micros, `stage` = how deep the user got.
@@ -440,11 +295,11 @@ object EventStream {
     * later stage depends on it. Cross-batch out-of-order events
     * within the watermark therefore converge to the batch answer for
     * in-order-by-type arrival; an earlier view arriving after a click
-    * already locked does NOT rewind downstream stages (the same
-    * at-most-one-state-per-key memory bound as [[sessionize]]'s
-    * late-event fold). `EventTimeTimeout` emits the completed funnel
-    * and evicts the state once the watermark passes the user's last
-    * activity + `horizonMs`, so state size is watermark-bounded.
+    * already locked does NOT rewind downstream stages: at most one
+    * state per key is the memory bound that matters. `EventTimeTimeout`
+    * emits the completed funnel and evicts the state once the
+    * watermark passes the user's last activity + `horizonMs`, so state
+    * size is watermark-bounded.
     */
   def funnel(
       events: Dataset[(String, String, Timestamp)],

@@ -55,6 +55,20 @@ class AsOfJoinNativeSpec extends SparkSpec {
     compare(left, right, Seq("k1", "k2"))
   }
 
+  test("a native as-of join leaves the session's strategies and profile sessions unchanged") {
+    // GraftExtensions plans AsOfJoinNode on every session; the join
+    // registers nothing of its own
+    val profile = Seq("spark.sql.shuffle.partitions" -> "3")
+    val strategies = spark.experimental.extraStrategies
+    val scoped = GraftSession.scoped(spark, profile)
+    val left = Seq((1L, 10L, "a")).toDF("k", "ts", "lv")
+    val right = Seq((1L, 5L, 1.0)).toDF("k", "ts", "rv")
+    assert(AsofJoin.asofJoinNative(left, right, Seq("k"), "ts", "ts", Seq("rv")).collect().length == 1)
+    assert(spark.experimental.extraStrategies == strategies)
+    assert(!strategies.contains(graft.plans.AsOfJoinStrategy))
+    assert(GraftSession.scoped(spark, profile) eq scoped)
+  }
+
   test("mismatched key/ts types fail at planning with a clear error") {
     val left = Seq((1L, 10L, "a")).toDF("k", "ts", "lv")
     val rightBadKey = Seq((1, 5L, 1.0)).toDF("k", "ts", "rv")   // k is int

@@ -107,27 +107,6 @@ class BitmapSpec extends SparkSpec {
     assert(got == want)
   }
 
-  test("coarsenBitmap lattice law: coarsen(sketch(K), K') ≡ sketch(K') for K' ⊆ K") {
-    val df = Seq(
-      (1L, "a", "x"), (2L, "a", "x"), (1L, "a", "y"), (3L, "b", "x"),
-      (1L, "b", "y"), (2L, "b", "y"))
-      .toDF("id", "g1", "g2")
-    def norm(sk: org.apache.spark.sql.DataFrame, keys: Int): Set[(String, Seq[Long])] =
-      sk.collect().map(r =>
-        ((0 until keys).map(r.getString).mkString("|"),
-          Bitmap64.decode(r.getAs[Array[Byte]](keys)).toSeq)).toSet
-    val fine = Materialize.bitmapSketch(df, Seq("g1", "g2"), "id")
-    assert(norm(Materialize.coarsenBitmap(fine, Seq("g1")), 1) ==
-      norm(Materialize.bitmapSketch(df, Seq("g1"), "id"), 1))
-    // the count off the union dedups ids shared across fine groups
-    // (id 1 lives in both (a,x) and (a,y)) — the thing per-group
-    // SIZES can never recover
-    val counts = Materialize.bitmapCounts(
-      Materialize.coarsenBitmap(fine, Seq("g1")), Seq("g1"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(counts == Map("a" -> 2L, "b" -> 3L))
-  }
-
   test("bitmapSketch refuses non-integral ids (exactness stores ids, never hashes)") {
     val df = Seq(("x", "a")).toDF("id", "g")
     intercept[IllegalArgumentException](Materialize.bitmapSketch(df, Seq("g"), "id"))

@@ -58,12 +58,12 @@ class BpeSpec extends SparkSpec {
     assert(merges(2) == (3L, "e", "r", 1L))
   }
 
-  test("applyMerges encodes with the learned table; unseen words segment too") {
+  test("applyMergesToWords encodes with the learned table; unseen words segment too") {
     val docs = Seq((1L, "low low low"), (2L, "lower newest")).toDF("doc_id", "text")
     val merges = Bpe.train(docs, "text", 3)
       .as[(Long, String, String, Long)].collect().sortBy(_._1)
       .map(m => (m._2, m._3)).toSeq // (l,o), (lo,w), (e,r)
-    val got = Bpe.applyMerges(docs, "text", merges)
+    val got = Bpe.applyMergesToWords(Bpe.wordFreqs(docs, "text"), merges)
       .as[(String, Seq[String])].collect().toMap
     assert(got("low") == Seq("low"))
     // ALL THREE learned merges apply in order during encoding:
@@ -74,7 +74,7 @@ class BpeSpec extends SparkSpec {
     // a different corpus through the same learned merges: "slower"
     // shares the (l,o)->(lo,w)->(e,r) structure, "lot" only (l,o)
     val other = Seq((1L, "slower lot")).toDF("doc_id", "text")
-    val got2 = Bpe.applyMerges(other, "text", merges)
+    val got2 = Bpe.applyMergesToWords(Bpe.wordFreqs(other, "text"), merges)
       .as[(String, Seq[String])].collect().toMap
     // s l o w e r → s lo w e r → s low e r → (e,r) → s low er
     assert(got2("slower") == Seq("s", "low", "er"))

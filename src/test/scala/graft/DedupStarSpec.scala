@@ -27,7 +27,7 @@ class DedupStarSpec extends SparkSpec {
       val edges = Seq.fill(50)((r.nextInt(n).toLong, r.nextInt(n).toLong))
         .filter(e => e._1 != e._2)
       val (verts, pairs) = vertsAndPairs(edges, extraVerts = Seq(900L, 901L))
-      val star = labelsOf(Dedup.connectedComponentsStar(verts, pairs))
+      val star = labelsOf(Dedup.connectedComponentsStarWithRounds(verts, pairs)._1)
       val prop = labelsOf(Dedup.connectedComponents(verts, pairs))
       assert(star == prop, s"trial $trial diverged")
     }
@@ -53,7 +53,7 @@ class DedupStarSpec extends SparkSpec {
     val chainA = (20L until 25L).map(i => (i, i + 1))
     val chainB = (30L until 33L).map(i => (i + 1, i)) // reversed orientation
     val (verts, pairs) = vertsAndPairs(clique ++ chainA ++ chainB, extraVerts = Seq(99L))
-    val star = labelsOf(Dedup.connectedComponentsStar(verts, pairs))
+    val star = labelsOf(Dedup.connectedComponentsStarWithRounds(verts, pairs)._1)
     assert((10L to 14L).forall(star(_) == 10L))
     assert((20L to 25L).forall(star(_) == 20L))
     assert((30L to 33L).forall(star(_) == 30L))
@@ -74,7 +74,7 @@ class DedupStarSpec extends SparkSpec {
   test("duplicate and self-loop edges are tolerated") {
     val verts = Seq(1L, 2L, 3L).toDF("id")
     val pairs = Seq((1L, 2L), (2L, 1L), (1L, 1L), (2L, 3L), (2L, 3L)).toDF("a", "b")
-    val star = labelsOf(Dedup.connectedComponentsStar(verts, pairs))
+    val star = labelsOf(Dedup.connectedComponentsStarWithRounds(verts, pairs)._1)
     assert(star == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
   }
 

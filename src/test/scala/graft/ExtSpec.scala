@@ -155,13 +155,10 @@ class ExtSpec extends SparkSpec {
     val viaAppend = Similarity.probeKnnGraph(spark, incIx)
       .as[(Long, Long, Double)].collect().toSet
     assert(viaAppend == probed)
-    val listsAppend = Similarity.probeKnnLists(spark, incIx)
+    def lists(dir: String) = graft.ops.Ingest.parquet(spark, s"$dir/knn")
       .select(col("query_id"), col("vec_id"), col("cos_sim"), col("rk"))
       .as[(Long, Long, Double, Long)].collect().toSet
-    val listsFull = Similarity.probeKnnLists(spark, ix)
-      .select(col("query_id"), col("vec_id"), col("cos_sim"), col("rk"))
-      .as[(Long, Long, Double, Long)].collect().toSet
-    assert(listsAppend == listsFull)
+    assert(lists(incIx) == lists(ix))
     // compaction: probe bit-identical, edge files at the target
     val filesBefore = parquetFiles(s"$incIx/edges")
     Similarity.compactKnnGraph(spark, incIx, targetFiles = 2)
@@ -275,18 +272,6 @@ class ExtSpec extends SparkSpec {
     assert(before.nonEmpty)
     val filesAfter = parquetFiles(s"$ix/cells")
     assert(filesAfter < filesBefore, s"$filesAfter vs $filesBefore")
-
-    // flat codes table (SQ8): same law through compactCodes
-    val sq8Ix = graft.ops.Sink.scratchDir("ext_sq8_comp")
-    AnnIndex.writeSq8(emb.filter(col("vec_id") % 7 =!= 3), sq8Ix)
-    AnnIndex.appendSq8(emb.filter(col("vec_id") % 7 === 3), sq8Ix)
-    val b2 = AnnIndex.probeSq8(emb.filter(col("vec_id") < 8), sq8Ix, 3)
-      .as[(Long, Long, Double, Long)].collect().toSet
-    AnnIndex.compactCodes(spark, sq8Ix, targetFiles = 2)
-    val a2 = AnnIndex.probeSq8(emb.filter(col("vec_id") < 8), sq8Ix, 3)
-      .as[(Long, Long, Double, Long)].collect().toSet
-    assert(a2 == b2)
-    assert(parquetFiles(s"$sq8Ix/codes") <= 2)
 
     // E2 band index: same law through MinHash.compactBands
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
@@ -914,7 +899,7 @@ class ExtSpec extends SparkSpec {
       (1L, "a b c d e"),
       (2L, "z y x a b c d e w v"),
       (3L, "p q r s t u")).toDF("id", "body")
-    val out = MinHash.containmentPairs(docs, "id", "body", 3, 0.5)
+    val out = MinHash.containmentPairs(docs, "id", "body", 0.5)
       .as[(Long, Long, Long, Long, Long, Double, Double)].collect()
     assert(out.length == 1)
     val (a, b, common, na, nb, ca, cb) = out.head

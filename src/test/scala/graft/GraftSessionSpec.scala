@@ -159,11 +159,11 @@ class GraftSessionSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(probe)
   }
 
-  /** Each source line under `src` outside this file, as (file, line,
+  /** Each source line under `dir` outside this file, as (file, line,
     * "path:number: line").
     */
-  private def sourceLines(): Seq[(java.io.File, String, String)] = {
-    val root = new java.io.File("src")
+  private def sourceLines(dir: String = "src"): Seq[(java.io.File, String, String)] = {
+    val root = new java.io.File(dir)
     assert(root.isDirectory, s"run from the repository root (no ${root.getAbsolutePath})")
     def files(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
@@ -199,6 +199,47 @@ class GraftSessionSpec extends SparkSpec {
         mutates.exists(_.findFirstIn(line).isDefined) => at
     }
     assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  /** Members only a spec reaches, each kept for the reason given. */
+  private val specOnly = Map(
+    "o16Unbinned" -> "reference twin: OpsSpec compares the binned o16 row against it",
+    "tokensBeforeSerial" -> "reference twin: PackingSpec compares the native packing against it",
+    "scrubSpans" -> "reference twin: SuffixArraySpec and StreamingSpec compare the scrub against it",
+    "mutualKnnGraph" -> "reference twin: the kNN-graph artifact laws compare the probe against it",
+    "segmentFold" -> "fold twin pinning the native segmentation expression (UnigramSpec)",
+    "tokenizeCountsFold" -> "fold twin pinning the native token-count expression (UnigramSpec)",
+    "unregisterUnique" -> "the only way a spec removes a uniqueness definition",
+    "writeJdbc" -> "the reference's own to_sql sink (README), tested on Derby",
+    "readJdbc" -> "the reference's own read_sql source (README), tested on Derby")
+
+  private val topObject = """^(?:(?:private|protected)(?:\[\w+\])? |final |case )*object +(\w+)""".r
+  private val member =
+    """^  ((?:(?:private|protected)(?:\[\w+\])? |final |implicit |lazy |sealed |abstract |override |case )*)(?:def|val|var|class|object|trait|type) +([A-Za-z_]\w*)""".r
+  private val ident = """[A-Za-z_]\w*""".r
+
+  test("every top-level object member in src/main is reached from src/main or perfbench") {
+    val main = sourceLines().filter(_._1.getPath.startsWith("src/main"))
+    val code = (main ++ sourceLines("perfbench/src")).filterNot(l => comment(l._2))
+    // (file, line) positions of each identifier on non-comment lines
+    val seen = code.flatMap { case (_, line, at) => ident.findAllIn(line).distinct.map(_ -> at) }
+      .groupMap(_._1)(_._2)
+    var obj: Option[String] = None
+    val unreached = main.flatMap { case (_, line, at) =>
+      topObject.findFirstMatchIn(line) match {
+        case Some(m) => obj = Some(m.group(1)); Nil
+        case None =>
+          if (line.startsWith("}")) obj = None
+          for {
+            o <- obj.toSeq
+            m <- member.findFirstMatchIn(line).toSeq
+            name = m.group(2) if !m.group(1).contains("override") && !specOnly.contains(name)
+            if seen.getOrElse(name, Nil).forall(_ == at)
+          } yield s"$at  ($o.$name)"
+      }
+    }
+    if (unreached.nonEmpty)
+      fail(s"reached by nothing but its own definition (delete it, or say why a spec needs it):\n${unreached.mkString("\n")}")
   }
 }
 

@@ -1,13 +1,12 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Layout, Sink}
 
-/** Z-order layout: bit-exactness of the Morton code and the physical
-  * file-skipping evidence — Z-clustered files bound BOTH key
-  * dimensions, a single-key sort bounds only its own.
+/** Layout: bit-exactness of the Morton code, shuffle-free
+  * compaction, drift statistics, and the zone-map and bloom
+  * manifests' file-skipping soundness.
   */
 class LayoutSpec extends SparkSpec {
   import spark.implicits._
@@ -33,67 +32,6 @@ class LayoutSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect()
     for ((x, y, z) <- out)
       assert(z == mortonRef(x & 0xFFFFL, y & 0xFFFFL), s"($x, $y)")
-  }
-
-  /** Per-file bounding boxes of a written layout: for each output
-    * file, the x-span and y-span its min-max stats bound.
-    */
-  private def fileSpans(df: DataFrame): Seq[(Long, Long)] =
-    df.groupBy(input_file_name())
-      .agg(
-        (max(col("x")) - min(col("x"))).as("xs"),
-        (max(col("y")) - min(col("y"))).as("ys"))
-      .select(col("xs"), col("ys"))
-      .as[(Long, Long)].collect().toSeq
-
-  test("writeZOrdered: every file bounds BOTH dimensions; single-key sort leaves y unbounded") {
-    // a 64×64 grid — every (x, y) combination, so any layout's file
-    // bounds are fully determined by its clustering
-    val grid = for { x <- 0 until 64; y <- 0 until 64 } yield (x.toLong, y.toLong)
-    val df = grid.toDF("x", "y")
-    val zPath = Sink.scratchDir("layout_z")
-    val sPath = Sink.scratchDir("layout_s")
-    Layout.writeZOrdered(df, zPath, 16, col("x"), col("y"))
-    // the contender: perfect single-key sort, same file count
-    df.repartitionByRange(16, col("x")).sortWithinPartitions(col("x"))
-      .write.mode("overwrite").parquet(sPath)
-    val zSpans = fileSpans(spark.read.parquet(zPath))
-    val sSpans = fileSpans(spark.read.parquet(sPath))
-    assert(zSpans.size == 16 && sSpans.size == 16)
-    // The skipping contract is per-dimension: a predicate on y alone
-    // prunes z-files (each bounds y) but can never prune an x-sorted
-    // file (each spans ALL of y). 16 z-tiles of a 64×64 grid are
-    // 16×16 squares → worst span 15; x-sorted files span y fully.
-    val zWorst = zSpans.map { case (xs, ys) => math.max(xs, ys) }.max
-    val sWorst = sSpans.map { case (xs, ys) => math.max(xs, ys) }.min
-    assert(zWorst <= 15, s"z worst-dimension span $zWorst")
-    assert(sWorst == 63, s"x-sort files should span all of y, got $sWorst")
-  }
-
-  test("z-ordered files are actually SKIPPED: scan row metrics under a y-predicate") {
-    // The end-to-end proof the bounding boxes exist for: a predicate
-    // on y alone must let the reader skip most z-clustered row
-    // groups, while the x-sorted layout (y unbounded per file) reads
-    // every row. numOutputRows on the scan node counts rows the
-    // reader DELIVERED (post row-group/page pruning, pre-Filter).
-    val grid = for { x <- 0 until 64; y <- 0 until 64 } yield (x.toLong, y.toLong)
-    val df = grid.toDF("x", "y")
-    val zPath = Sink.scratchDir("layout_skip_z")
-    val sPath = Sink.scratchDir("layout_skip_s")
-    Layout.writeZOrdered(df, zPath, 16, col("x"), col("y"))
-    df.repartitionByRange(16, col("x")).sortWithinPartitions(col("x"))
-      .write.mode("overwrite").parquet(sPath)
-    def scanRows(path: String): Long = {
-      val q = spark.read.parquet(path).filter(col("y") >= 60)
-      q.collect()
-      q.queryExecution.executedPlan.collectLeaves()
-        .map(_.metrics("numOutputRows").value).sum
-    }
-    val zRows = scanRows(zPath)
-    val sRows = scanRows(sPath)
-    assert(sRows == 4096L, s"x-sorted layout cannot skip, read $sRows")
-    // y>=60 touches only the top row of 16x16 z-tiles: 4 of 16 files
-    assert(zRows <= 1024L, s"z layout should skip ~3/4 of rows, read $zRows")
   }
 
   test("compact: 64 fragments become 4 files, shuffle-free, content identical") {

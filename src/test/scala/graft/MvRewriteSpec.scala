@@ -786,23 +786,6 @@ class MvRewriteSpec extends SparkSpec {
     } finally NdvCatalog.unregister("law_ndv_foreign_ids")
   }
 
-  test("ndvSketchExact merge law: base ⊕ delta ≡ whole-table rebuild, empty groups kept") {
-    val df = Seq[(java.lang.Long, String)](
-      (1L, "a"), (2L, "a"), (3L, "a"), (1L, "b"), (null, "c"), (2L, null), (4L, "b"))
-      .toDF("id", "g")
-    val k = 2 // deliberately SATURATING: the merge law must hold for sketches too
-    val base = graft.ops.Materialize.ndvSketchExact(
-      df.filter(col("id").isNotNull && col("id") <= 2 || col("id").isNull), Seq("g"), "id", k)
-    val delta = graft.ops.Materialize.ndvSketchExact(
-      df.filter(col("id") > 2), Seq("g"), "id", k)
-    val merged = graft.ops.Materialize.mergeNdvExact(base, delta, Seq("g"), k)
-      .collect().map(r => (r.getString(0), r.getSeq[Long](1))).toSet
-    val whole = graft.ops.Materialize.ndvSketchExact(df, Seq("g"), "id", k)
-      .collect().map(r => (r.getString(0), r.getSeq[Long](1))).toSet
-    assert(merged == whole)
-    assert(whole.exists { case (g, hs) => g == "c" && hs.isEmpty })
-  }
-
   // ---- the bitmap count-DISTINCT leg (s52/s53): exact at ANY grain ----
 
   test("bitmap NDV rewrite: fires where KMV saturates, results bit-identical") {

@@ -230,66 +230,6 @@ class OpsSpec extends SparkSpec {
     assert(byId(1L).isEmpty && byId(2L).contains(9.5))
   }
 
-  // ---- S2 malformed records ---------------------------------------------
-  test("jsonPermissive quarantines corrupt lines instead of dropping them") {
-    val path = Sink.scratchDir("badjson")
-    Seq(
-      """{"id": 1, "v": "ok"}""",
-      """{"id": oops not json""",
-      """{"id": 3, "v": "fine"}""").toDF("value").coalesce(1)
-      .write.mode("overwrite").text(path)
-    // one collect of the full row set: Spark disallows plans that read
-    // ONLY the internal corrupt-record column from raw JSON
-    val rows = Ingest.jsonPermissive(spark, path, StructType(Seq(
-      StructField("id", LongType), StructField("v", StringType))))
-      .select("id", "_corrupt_record").as[(Option[Long], Option[String])].collect()
-    assert(rows.collect { case (Some(id), None) => id }.toSet == Set(1L, 3L))
-    assert(rows.count(_._2.isDefined) == 1)
-  }
-
-  // ---- compaction ---------------------------------------------------------
-  test("writeCompacted lands exactly the requested number of data files") {
-    val path = Sink.scratchDir("compact")
-    Sink.writeCompacted(spark.range(1000).toDF("id"), path, 3)
-    val files = new java.io.File(path).listFiles
-      .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-    assert(files == 3)
-    assert(spark.read.parquet(path).count() == 1000L)
-  }
-
-  // ---- A2 scale variant: HLL++ approx distinct --------------------------
-  test("approxDistinctCount is within rsd bounds of the exact count") {
-    val n = 3571L
-    val df = spark.range(50000).select((col("id") % n).as("k"))
-    val approx = Aggregates.approxDistinctCount(df, "k", rsd = 0.02)
-      .as[Long].head()
-    val relErr = math.abs(approx - n).toDouble / n
-    assert(relErr < 0.06, s"approx=$approx exact=$n relErr=$relErr") // 3σ of rsd=0.02
-  }
-
-  // ---- O6 scale variant: approx percentiles -----------------------------
-  test("approxPercentiles is within rank-error bounds of the exact quantiles") {
-    // two groups with different sizes and ranges; values are a known
-    // permutation-free ramp so the exact quantile is computable in
-    // closed form: for 1..n, quantile_cont(p) = 1 + p·(n−1)
-    val n = 40000L
-    val df = spark.range(2 * n).select(
-      when(col("id") < n, "g1").otherwise("g2").as("k"),
-      when(col("id") < n, col("id") + 1).otherwise(col("id") - n + 1).cast("double").as("v"))
-    val ps = Seq(0.1, 0.5, 0.9)
-    val accuracy = 10000
-    val got = Aggregates.approxPercentiles(df, "k", "v", ps, accuracy)
-      .as[(String, Seq[Double])].collect().toMap
-    assert(got.keySet == Set("g1", "g2"))
-    for ((_, qs) <- got; (p, q) <- ps.zip(qs)) {
-      val exact = 1 + p * (n - 1)
-      // GK bound: rank error ≤ n/accuracy; allow 2x slack for the
-      // per-partition merge
-      val tol = 2.0 * n / accuracy
-      assert(math.abs(q - exact) <= tol, s"p=$p approx=$q exact=$exact tol=$tol")
-    }
-  }
-
   // ---- J5: as-of join semantics -----------------------------------------
   test("asofJoin matches the latest right row at-or-before each left ts") {
     val left = Seq((1L, 10L, "p1"), (1L, 20L, "p2"), (1L, 5L, "p0"), (2L, 50L, "q1"))
@@ -391,28 +331,16 @@ class OpsSpec extends SparkSpec {
     assert(got == Seq((100L, 2L), (100L, 3L), (100L, 4L))) // inclusive both ends, no dups
   }
 
-  // ---- P8 profiling: approx (HLL, no Expand) tracks exact ----------------
-  test("profileApprox stays within 5% of exact distincts and shares null counts") {
+  // ---- P8 profiling: exact nulls and distincts --------------------------
+  test("profile counts nulls and exact distincts per column in one Expand pass") {
     val df = (1 to 5000)
       .map(i => (i.toLong, i % 137, if (i % 10 == 0) null else s"v${i % 903}"))
       .toDF("id", "m", "s")
-    val exact = graft.ops.Cleanse.profile(df, Seq("id", "m", "s"))
-      .as[(String, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
-    val approx = graft.ops.Cleanse.profileApprox(df, Seq("id", "m", "s"))
-      .as[(String, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
+    val prof = graft.ops.Cleanse.profile(df, Seq("id", "m", "s"))
+    val exact = prof.as[(String, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
     assert(exact("id")._4 == 5000 && exact("m")._4 == 137 && exact("s")._4 == 903)
     assert(exact("s")._3 == 500) // the planted nulls
-    for (c <- Seq("id", "m", "s")) {
-      assert(approx(c)._3 == exact(c)._3) // null counts are exact in both
-      val (e, a) = (exact(c)._4.toDouble, approx(c)._4.toDouble)
-      assert(math.abs(a - e) / e < 0.05, s"$c: approx $a vs exact $e")
-    }
-    // the scale property itself: approx plans with NO Expand operator
-    val p = graft.ops.Cleanse.profileApprox(df, Seq("id", "m", "s"))
-      .queryExecution.executedPlan.toString
-    assert(!p.contains("Expand"), p)
-    assert(graft.ops.Cleanse.profile(df, Seq("id", "m", "s"))
-      .queryExecution.executedPlan.toString.contains("Expand"))
+    assert(prof.queryExecution.executedPlan.toString.contains("Expand"))
   }
 
   // ---- filter∘join ≡ join∘filter (Catalyst pushes the predicate) --------

@@ -172,24 +172,4 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
-  test("observed pipeline: stage counts ride the write action, no extra jobs") {
-    val (readmCsv, hospCsv) = fixtures
-    val (result, probes) = HeartFailureEtl.transformObserved(
-      graft.ops.Ingest.csvChecked(spark, readmCsv, HeartFailureEtl.readmissionsSchema),
-      graft.ops.Ingest.csvChecked(spark, hospCsv, HeartFailureEtl.hospitalInfoSchema))
-    val out = Files.createTempDirectory("graft_golden_obs").resolve("hf").toString
-    graft.ops.Sink.writeParquet(result, out)
-    // the reference's logged counts (etl_script.py:100,120), collected
-    // by the ONE write job above: 3 records survive coerce+dropna+
-    // measure filter (010001, 050002, 070004); 070004 then drops in
-    // the join (no hospital match) -> 2 final rows
-    // reading the metrics must run NO job — the accumulators were
-    // filled by the write action
-    val (jobs, _) = jobsStarted {
-      assert(probes.keySet == Set("hf_filtered", "final"))
-      assert(probes("hf_filtered").get("n_rows") == 3L)
-      assert(probes("final").get("n_rows") == 2L)
-    }
-    assert(jobs == 0, s"Observation.get triggered $jobs Spark job(s)")
-  }
 }

@@ -90,40 +90,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("runningCounts accumulates per-key state across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(String, Long)]
-    val q = EventStream.runningCounts(in.toDS())
-      .writeStream.format("memory").queryName("rc_out")
-      .outputMode(OutputMode.Update).start()
-    try {
-      in.addData(("a", 1L), ("a", 1L), ("b", 1L))
-      q.processAllAvailable()
-      in.addData(("a", 1L))
-      q.processAllAvailable()
-      val last = spark.table("rc_out").as[(String, Long)].collect()
-        .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).max }
-      assert(last == Map("a" -> 3L, "b" -> 1L))
-    } finally q.stop()
-  }
-
-  test("enrich joins each micro-batch against a static dimension") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(String, Double)]
-    val dim = Seq(("a", "alpha"), ("b", "beta")).toDF("k", "name")
-    val q = EventStream.enrich(in.toDF().toDF("k", "v"), dim, Seq("k"))
-      .writeStream.format("memory").queryName("en_out")
-      .outputMode(OutputMode.Append).start()
-    try {
-      in.addData(("a", 1.0), ("c", 2.0))
-      q.processAllAvailable()
-      in.addData(("b", 3.0))
-      q.processAllAvailable()
-      val rows = spark.table("en_out").as[(String, Double, String)].collect().toSet
-      assert(rows == Set(("a", 1.0, "alpha"), ("b", 3.0, "beta"))) // "c": no dim row
-    } finally q.stop()
-  }
-
   test("sessionStats closes session_window sessions as the watermark passes") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Timestamp, String, Double)]
@@ -145,33 +111,6 @@ class StreamingSpec extends SparkSpec {
       assert(rows.take(2) == Seq(
         ("u1", ts("10:00"), ts("10:40"), 2L, 3.0),   // end = last + gap
         ("u1", ts("12:30"), ts("13:00"), 1L, 8.0)))
-    } finally q.stop()
-  }
-
-  test("sessionize (flatMapGroupsWithState) emits closed sessions with counts") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(String, Timestamp)]
-    val q = EventStream.sessionize(in.toDS(), gapMs = 30 * 60 * 1000L)
-      .writeStream.format("memory").queryName("fs_out")
-      .outputMode(OutputMode.Append).start()
-    try {
-      in.addData(("u1", ts("10:00")), ("u1", ts("10:10")), ("u2", ts("10:05")))
-      q.processAllAvailable()
-      // u1's next event is past the gap → closes session 1 in-stream
-      in.addData(("u1", ts("12:00")))
-      q.processAllAvailable()
-      // watermark far ahead → timeout closes the remaining open sessions
-      in.addData(("u3", ts("15:00")))
-      q.processAllAvailable()
-      in.addData(("u3", ts("18:00")))
-      q.processAllAvailable()
-      val rows = spark.table("fs_out")
-        .as[(String, Timestamp, Timestamp, Long)].collect()
-        .filter(r => r._1 == "u1" || r._1 == "u2").sortBy(r => (r._1, r._2.getTime)).toSeq
-      assert(rows == Seq(
-        ("u1", ts("10:00"), ts("10:10"), 2L),
-        ("u1", ts("12:00"), ts("12:00"), 1L),
-        ("u2", ts("10:05"), ts("10:05"), 1L)))
     } finally q.stop()
   }
 
@@ -200,60 +139,6 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       assert(spark.table("dd_out").select("k").as[String].collect().sorted.toSeq ==
         Seq("x", "x", "y", "z"))
-    } finally q.stop()
-  }
-
-  test("correlate joins streams within the horizon and drops late matches") {
-    implicit val sqlCtx = spark.sqlContext
-    val views = MemoryStream[(Timestamp, String)]
-    val clicks = MemoryStream[(Timestamp, String)]
-    val q = EventStream.correlate(
-      views.toDF().toDF("v_ts", "v_user"), "v_ts", "v_user",
-      clicks.toDF().toDF("c_ts", "c_user"), "c_ts", "c_user",
-      horizon = "30 minutes")
-      .writeStream.format("memory").queryName("corr_out")
-      .outputMode(OutputMode.Append).start()
-    try {
-      views.addData((ts("10:00"), "x"), (ts("10:00"), "y"))
-      clicks.addData(
-        (ts("10:10"), "x"), // within horizon -> match
-        (ts("11:00"), "x"), // past horizon -> no match
-        (ts("09:50"), "y")) // before the view -> no match
-      q.processAllAvailable()
-      val out = spark.table("corr_out")
-        .select("v_user", "c_ts").as[(String, Timestamp)].collect().toSeq
-      assert(out == Seq(("x", ts("10:10"))))
-    } finally q.stop()
-  }
-
-  test("correlate leftOuter: unmatched left emits nulls only after the watermark closes the horizon") {
-    implicit val sqlCtx = spark.sqlContext
-    val views = MemoryStream[(Timestamp, String)]
-    val clicks = MemoryStream[(Timestamp, String)]
-    val q = EventStream.correlate(
-      views.toDF().toDF("v_ts", "v_user"), "v_ts", "v_user",
-      clicks.toDF().toDF("c_ts", "c_user"), "c_ts", "c_user",
-      horizon = "30 minutes", lateness = "10 minutes",
-      joinType = "leftOuter")
-      .writeStream.format("memory").queryName("corr_outer_out")
-      .outputMode(OutputMode.Append).start()
-    try {
-      views.addData((ts("10:00"), "x"), (ts("10:00"), "z"))
-      clicks.addData((ts("10:10"), "x")) // x matches; z has no click
-      q.processAllAvailable()
-      // z's outer row must NOT have been emitted yet: a click could
-      // still arrive until the watermark passes 10:30 + lateness
-      val early = spark.table("corr_outer_out")
-        .select("v_user").as[String].collect().toSeq
-      assert(early == Seq("x"))
-      // advance both watermarks far past the horizon -> z emits with nulls
-      views.addData((ts("12:00"), "w1"))
-      clicks.addData((ts("12:00"), "w2"))
-      q.processAllAvailable()
-      val out = spark.table("corr_outer_out")
-        .select("v_user", "c_user").as[(String, Option[String])].collect().toSet
-      assert(out.contains(("z", None)), out.toString)
-      assert(out.contains(("x", Some("x"))))
     } finally q.stop()
   }
 
@@ -560,45 +445,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("CorpusStream.admitBatch: near-dup admission across batches; replay is idempotent") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_corpus_stream")
-    val indexPath = dir.resolve("index").toString
-    val outPath = dir.resolve("corpus").toString
-    val tA = "the quick brown fox jumps over the lazy dog again and again"
-    val tB = "completely different content about spark structured streaming watermarks"
-    val tC = "unrelated third document discussing byte pair encoding merge tables"
-    val in = MemoryStream[(Long, String)]
-    val q = in.toDF().toDF("doc_id", "text").writeStream
-      .foreachBatch((b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        CorpusStream.admitBatch(b, id, "doc_id", "text", indexPath, outPath, 0.9))
-      .start()
-    try {
-      in.addData((1L, tA), (2L, tB))
-      q.processAllAvailable()
-      in.addData(
-        (3L, tA), // near-dup of ADMITTED doc 1 (previous batch) -> dropped
-        (4L, tC), // new -> admitted
-        (5L, tC)) // intra-batch dup of 4 -> dropped
-      q.processAllAvailable()
-      val admitted = spark.read.parquet(outPath)
-        .select("doc_id").as[Long].collect().sorted.toSeq
-      assert(admitted == Seq(1L, 2L, 4L))
-      // at-least-once replay of batch 1 with the same content: the
-      // index read excludes batch_id >= 1, so the decisions repeat and
-      // the dynamic partition overwrite replaces rather than appends
-      CorpusStream.admitBatch(
-        Seq((3L, tA), (4L, tC), (5L, tC)).toDF("doc_id", "text"),
-        1L, "doc_id", "text", indexPath, outPath, 0.9)
-      val after = spark.read.parquet(outPath)
-        .select("doc_id").as[Long].collect().sorted.toSeq
-      assert(after == Seq(1L, 2L, 4L))
-      // the index holds bands for exactly the admitted docs
-      val indexed = spark.read.parquet(indexPath)
-        .select("doc_id").distinct().as[Long].collect().sorted.toSeq
-      assert(indexed == Seq(1L, 2L, 4L))
-    } finally q.stop()
-  }
   test("s24 manifest stream: forced-split incremental manifest yields the exact filtered truth") {
     import org.apache.spark.sql.functions.col
     val dir = "/root/testdata/sf0.001"
